@@ -419,7 +419,8 @@ def run_determine_change_entities(
     )
 
     final = out_store.current()
-    assert final is not None
+    if final is None:
+        raise RuntimeError("determine_change: store empty after the run")
     return final
 
 
@@ -472,5 +473,6 @@ def run_determine_change(
                 spark.conf.set(provider_key, old_provider)
 
     final = store.current()
-    assert final is not None
+    if final is None:
+        raise RuntimeError("determine_change: store empty after the run")
     return final

@@ -121,7 +121,8 @@ def run_get_entity(
     )
 
     final = store.current()
-    assert final is not None
+    if final is None:
+        raise RuntimeError("get_entity: store empty after the run")
     dead = dead_store.current()
     if dead is None:
         dead = spark.createDataFrame(

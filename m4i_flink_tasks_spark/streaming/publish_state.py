@@ -146,7 +146,8 @@ def run_publish_state(
     )
 
     final = store.current()
-    assert final is not None
+    if final is None:
+        raise RuntimeError("publish_state: store empty after the run")
     dead = dead_store.current()
     if dead is None:
         dead = spark.createDataFrame(

@@ -51,19 +51,30 @@ the store snapshot with broadcast joins; nothing rescans stream
 history. The store is hash-bucketed (``BucketedParquetUpsertStore``),
 so the version publish rewrites only buckets holding the batch's
 upserted or deleted guids — the Delta/Iceberg MERGE file-pruning
-posture, not an O(store) rewrite.
+posture, not an O(store) rewrite. The sink step
+(:func:`publish_doc_batch`) materializes three batch-sized frames per
+micro-batch: the messages, and the dispatcher's upserts and deletes.
+The merge reads its batch twice (touched-bucket collect, then the
+bucket write, whose combine reads the upserts twice more), so without
+them every read re-runs the dispatcher's 12-branch union. The store
+snapshot is not materialized: it is a flat scan, and a copy would cost
+O(store) per batch. A replayed batch is skipped on
+``store.last_batch_id()`` before any of this is planned.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hierarchy import supertype_closure_df
 from ..operators.docstore import create_docs
+from ..operators.materialize import materialize
 from ..plans.synchronize_plan import (
+    apply_batch,
     synchronize_batch,
     synchronize_batch_to_fixpoint,
 )
@@ -223,6 +234,40 @@ def batch_entity_messages(batch: DataFrame) -> DataFrame:
     )
 
 
+def publish_doc_batch(
+    store: BucketedParquetUpsertStore,
+    messages: DataFrame,
+    batch_id: int,
+    closure: DataFrame,
+    dispatch: Callable[..., tuple[DataFrame, DataFrame]],
+) -> None:
+    """Job 4's ``foreachBatch`` step: run ``dispatch`` once over this
+    micro-batch's EntityMessages and publish its (upserts, deletes) as
+    ONE store version recording ``batch_id``. A batch the store already
+    applied returns before anything is planned. ``dispatch`` receives
+    the materialized messages and returns a lazy plan; both of its
+    outputs are materialized before the merge, and all three frames are
+    released after it (why: the module docstring's "Scale" paragraph).
+    """
+    last = store.last_batch_id()
+    if last is not None and batch_id <= last:
+        return
+    frames = [materialize(messages)]
+    try:
+        lazy = dispatch(frames[0], store.current(), closure)
+        frames += [materialize(df) for df in lazy]
+        upserts, deletes = frames[1:]
+        store.merge(
+            upserts,
+            combine=lambda cur, ups: apply_batch(cur, ups, deletes),
+            batch_id=batch_id,
+            touch_keys=deletes,
+        )
+    finally:
+        for frame in reversed(frames):
+            frame.unpersist()
+
+
 def run_synchronize_appsearch(
     spark: SparkSession,
     sf_dir: str,
@@ -264,20 +309,9 @@ def run_synchronize_appsearch(
     )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        msgs = batch_entity_messages(batch)
-        snapshot = store.current()
-        upserts, deletes = dispatch(msgs, snapshot, closure)
-
-        def apply(cur: DataFrame, ups: DataFrame) -> DataFrame:
-            # upserts + deletes in ONE atomic version publish: replace
-            # upserted keys, drop deleted keys, keep the rest. ``cur``
-            # is the touched buckets only; ``touch_keys`` below widens
-            # the touched set to cover delete-only keys.
-            gone = ups.select("guid").unionByName(deletes).distinct()
-            kept = cur.join(F.broadcast(gone), "guid", "left_anti")
-            return kept.unionByName(ups)
-
-        store.merge(upserts, combine=apply, batch_id=batch_id, touch_keys=deletes)
+        publish_doc_batch(
+            store, batch_entity_messages(batch), batch_id, closure, dispatch
+        )
 
     replay(
         events_file_stream(spark, staging, max_files_per_trigger),
@@ -286,5 +320,6 @@ def run_synchronize_appsearch(
     )
 
     final = store.current()
-    assert final is not None
+    if final is None:
+        raise RuntimeError("synchronize_docs: doc store empty after the run")
     return final

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from m4i_flink_tasks_spark.functions.hierarchy import supertype_closure_df
 from m4i_flink_tasks_spark.plans import synchronize_batch
+from m4i_flink_tasks_spark.plans.synchronize_plan import apply_batch
 from m4i_flink_tasks_spark.schemas import ENTITY_MESSAGE
+from m4i_flink_tasks_spark.streaming.store import BucketedParquetUpsertStore
+from m4i_flink_tasks_spark.streaming.synchronize_docs import publish_doc_batch
 
 from .test_docstore import make_docs
 
@@ -229,12 +232,7 @@ def test_indirect_changes_are_gated_out(spark, seeded_store):
 
 
 def _apply(store, upserts, deletes):
-    gone = upserts.select("guid").unionByName(deletes).distinct()
-    return (
-        store.join(F.broadcast(gone), "guid", "left_anti")
-        .unionByName(upserts.select(store.columns))
-        .localCheckpoint()
-    )
+    return apply_batch(store, upserts, deletes).localCheckpoint()
 
 
 def _rows(store):
@@ -432,18 +430,23 @@ def test_three_level_cascade_single_pass_vs_fixpoint(spark):
     assert fix["f1"].breadcrumbname == ["Sys", "Coll", "Dset"]
 
 
+def _doc_store(spark, root, docs):
+    """A 16-bucket doc store (the sink's layout) holding ``docs``."""
+    store = BucketedParquetUpsertStore(spark, str(root), key_cols=["guid"], n_buckets=16)
+    store.merge(docs)
+    return store
+
+
 def test_doc_store_sink_rewrites_only_touched_buckets(spark, seeded_store):
     """The App Search doc-store sink contract at scale: a micro-batch
-    merge (upserts + deletes in one combine, exactly the
-    ``run_synchronize_appsearch`` sink shape) must leave every bucket
+    merge through ``publish_doc_batch``, the ``run_synchronize_appsearch``
+    sink step (upserts + deletes in one combine), must leave every bucket
     not holding a touched guid byte-for-byte untouched — the reference
     grows this store unboundedly (synchronize_app_search/elastic.py:43-93),
     so O(touched buckets) merges are what survive 100x state growth."""
     import glob
     import os
     import tempfile
-
-    from m4i_flink_tasks_spark.streaming.store import BucketedParquetUpsertStore
 
     filler = make_docs(
         spark,
@@ -454,8 +457,7 @@ def test_doc_store_sink_rewrites_only_touched_buckets(spark, seeded_store):
         ],
     )
     root = tempfile.mkdtemp(prefix="m4i_docsink_")
-    store = BucketedParquetUpsertStore(spark, root, key_cols=["guid"], n_buckets=16)
-    store.merge(seeded_store.unionByName(filler))
+    store = _doc_store(spark, root, seeded_store.unionByName(filler))
     state0 = store._state()
     files_before = {
         p: os.path.getmtime(p)
@@ -474,14 +476,14 @@ def test_doc_store_sink_rewrites_only_touched_buckets(spark, seeded_store):
         ),
         dict(guid="z7", type_name="m4i_dataset", event_type="EntityDeleted"),
     )
-    snapshot = store.current()
-    upserts, deletes = synchronize_batch(msgs, snapshot, closure)
+    dispatched = []
 
-    def apply(cur, ups):
-        gone = ups.select("guid").unionByName(deletes).distinct()
-        return cur.join(F.broadcast(gone), "guid", "left_anti").unionByName(ups)
+    def dispatch(*args):
+        dispatched.append(synchronize_batch(*args))
+        return dispatched[-1]
 
-    store.merge(upserts, combine=apply, batch_id=0, touch_keys=deletes)
+    publish_doc_batch(store, msgs, 0, closure, dispatch)
+    [(upserts, deletes)] = dispatched
 
     # Which buckets were legitimately touched?
     bucket_of = lambda df: {
@@ -505,6 +507,79 @@ def test_doc_store_sink_rewrites_only_touched_buckets(spark, seeded_store):
     got = {r.guid: r for r in store.current().collect()}
     assert got["x9"].name == "Renamed" and "z7" not in got
     assert len(got) == 6 + 48 - 1  # seeded + filler - deleted
+
+
+def _plan_nodes(plan):
+    """Node names of a Catalyst plan tree, root first."""
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+
+
+def test_doc_sink_dispatches_once_and_skips_replays(spark, seeded_store, tmp_path):
+    """``publish_doc_batch`` runs the dispatcher once per micro-batch and
+    hands the merge a materialized frame, so the merge's reads scan rows
+    instead of re-running the dispatcher's joins and unions. A replayed
+    batch id neither dispatches nor runs a Spark job."""
+    store = _doc_store(spark, tmp_path, seeded_store)
+    closure = supertype_closure_df(spark)
+    msgs = make_messages(spark, _DISJOINT_MSGS[0])
+    calls, merged = [], []
+
+    def dispatch(*args):
+        calls.append(args)
+        return synchronize_batch(*args)
+
+    merge = store.merge
+
+    def recording_merge(batch, **kwargs):
+        merged.append(batch)
+        merge(batch, **kwargs)
+
+    store.merge = recording_merge
+    publish_doc_batch(store, msgs, 0, closure, dispatch)
+    assert len(calls) == 1
+    [upserts] = merged
+    nodes = _plan_nodes(upserts._jdf.queryExecution().optimizedPlan())
+    assert not {"Join", "Union"} & set(nodes), nodes
+    assert {r.guid: r.name for r in store.current().collect()}["x9"] == "Renamed"
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.nextJobId()
+    publish_doc_batch(store, msgs, 0, closure, dispatch)
+    assert len(calls) == 1 and len(merged) == 1
+    assert scheduler.nextJobId() == jobs
+
+
+def test_doc_sink_releases_persisted_frames(spark, seeded_store, tmp_path):
+    """Under ``strategy=persist`` the sink step caches three frames per
+    micro-batch; it must release them once the merge is done, or the
+    CacheManager holds three more for every batch of the stream. The
+    stand-in dispatcher (rename the messaged docs, delete nothing)
+    keeps the test on the sink's own caching."""
+
+    def rename(msgs, docs, closure):
+        keys = msgs.select("guid")
+        ups = docs.join(keys, "guid", "left_semi").withColumn("name", F.lit("R"))
+        return ups, keys.limit(0)
+
+    store = _doc_store(spark, tmp_path, seeded_store)
+    msgs = make_messages(spark, _DISJOINT_MSGS[0])
+    persisted = lambda: set(
+        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    )
+    before = persisted()
+    spark.conf.set("spark.m4i.materialize.strategy", "persist")
+    try:
+        for batch_id in (0, 1):
+            publish_doc_batch(store, msgs, batch_id, None, rename)
+    finally:
+        spark.conf.unset("spark.m4i.materialize.strategy")
+    assert store.last_batch_id() == 1
+    assert not persisted() - before
 
 
 def test_governance_role_delete_clears_and_propagates(spark, seeded_store):
