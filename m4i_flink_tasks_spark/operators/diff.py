@@ -111,7 +111,3 @@ def has_attribute_diff(diff: Column) -> Column:
         | (F.size(diff.changed_attributes) > 0)
         | (F.size(diff.deleted_attributes) > 0)
     )
-
-
-def has_relationship_diff(inserted: Column, deleted: Column) -> Column:
-    return (F.size(F.map_keys(inserted)) > 0) | (F.size(F.map_keys(deleted)) > 0)

@@ -973,7 +973,7 @@ def synchronize_rel_cascades(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-batch form admits an exact batch oracle.
     """
     from ..functions.hierarchy import supertype_closure_df
-    from ..plans.synchronize_plan import synchronize_batch
+    from ..plans.synchronize_plan import apply_batch, synchronize_batch
     from ..schemas import DQ_SCORE_FIELDS, ENTITY, RELATIONSHIP_ATTRIBUTES
     from ..sources import load_table
 
@@ -1132,18 +1132,13 @@ def synchronize_rel_cascades(spark: SparkSession, sf_dir: str) -> DataFrame:
     upserts, deletes = synchronize_batch(
         msgs, docs, supertype_closure_df(spark)
     )
-    # ``final`` consumes upserts twice (anti-join key set + union rows)
-    # and deletes once more after the in-batch anti-join — materialize
-    # the batch-sized outputs so the 12-branch union + D9 collapse
-    # executes once, not per consumer.
+    # ``apply_batch`` reads upserts twice (key set + rows) and deletes
+    # once more beside the dispatcher's own in-batch anti-join —
+    # materialize the batch-sized outputs so the 12-branch union + D9
+    # collapse executes once, not per consumer.
     upserts = materialize(upserts)
     deletes = materialize(deletes)
-    final = (
-        docs.join(F.broadcast(upserts.select("guid")), "guid", "left_anti")
-        .unionByName(upserts.select(docs.columns))
-        .join(F.broadcast(deletes), "guid", "left_anti")
-    )
-    return final.select(
+    return apply_batch(docs, upserts, deletes).select(
         "guid",
         "typename",
         "name",

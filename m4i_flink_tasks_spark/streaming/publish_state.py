@@ -16,10 +16,10 @@ updateTime, ``props`` the attribute payload):
 - validation (P4) and doc-id synthesis (P12) are codegen'd column
   expressions applied to whole micro-batches, not per-record Python;
 - the sink is one idempotent keyed merge per micro-batch
-  (``ParquetUpsertStore``, Delta-MERGE contract) instead of a per-record
-  HTTP index call — re-delivery of a batch converges to the same store,
-  which is the reference's idempotency argument (doc id = guid+time) made
-  transactional.
+  (``BucketedParquetUpsertStore``, Delta-MERGE contract) instead of a
+  per-record HTTP index call — re-delivery of a batch converges to the
+  same store, which is the reference's idempotency argument (doc id =
+  guid+time) made transactional.
 
 Versions that share ``(guid, update_time)`` collapse to the highest
 event_id — deterministic last-writer-wins, where the reference would

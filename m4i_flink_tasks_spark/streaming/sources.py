@@ -3,9 +3,9 @@
 The Kafka sink (S2, FlinkKafkaProducer, get_entity_job.py:121-123,
 determine_change_job.py:472-474) maps to
 ``df.writeStream.format("kafka").option("topic", ...)`` with
-``kafka.max.request.size`` for the reference's 14999999-byte cap; in
-this container the staged-file stream plus ``ParquetUpsertStore`` plays
-both broker and sink, and the debug ``data_stream.print()`` (S9, every
+``kafka.max.request.size`` for the reference's 14999999-byte cap; here
+the staged-file stream plus ``BucketedParquetUpsertStore`` plays both
+broker and sink, and the debug ``data_stream.print()`` (S9, every
 job, e.g. get_entity_job.py:119) is ``writeStream.format("console")`` —
 both swap in without touching pipeline logic.
 

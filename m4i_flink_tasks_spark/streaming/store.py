@@ -20,6 +20,11 @@ file-level pruning so a merge touches only matching files. The
 pipeline code depends only on ``merge``/``delete``/``current``, so
 that swap is a one-class change.
 
+The bucketed store has ONE writer: ``merge``, ``merge_many``,
+``delete`` and compaction write segments through ``_write_segments``
+and commit through ``_commit_written``, so every crash point has the
+same recovery — the replay of the batch id overwrites what it left.
+
 Filesystem assumption: every store (and all stores of one
 ``merge_many`` call) lives on ONE local filesystem. Commits are
 ``os.replace``/``os.rename`` of files and directories, which is atomic
@@ -438,37 +443,6 @@ class BucketedParquetUpsertStore:
             .collect()
         )
 
-    def _write_buckets(self, df: DataFrame, version: int) -> dict[str, int]:
-        """Write df partitioned by bucket under the version dir; return
-        the bucket -> version entries for buckets that got data.
-
-        The repartition clusters rows by bucket BEFORE the partitioned
-        write, so each touched bucket gets ~1 file instead of (upstream
-        tasks x buckets) — without it a 32-task micro-batch writing 16
-        buckets creates up to 512 files per version, and the per-file
-        open/commit cost dominates streaming replay (sf0.1 near-dedup:
-        1116 files -> 100, bench-style min 10.2s -> 6.7s on the same
-        container). This is exactly
-        Delta's optimized-write / AQE-coalesce behavior: one small
-        shuffle of batch-sized data buys bounded file counts, which at
-        100 TB is the difference between a healthy table and millions
-        of KB-sized files. Write parallelism equals n_buckets, which is
-        sized to the state (thousands of buckets on a real cluster), so
-        clustering caps files without capping cores."""
-        (
-            df.withColumn("_bucket", self._bucket_col())
-            .repartition(self.n_buckets, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(self._version_path(version))
-        )
-        written = {}
-        vpath = self._version_path(version)
-        for name in os.listdir(vpath):
-            if name.startswith("_bucket="):
-                written[name.split("=", 1)[1]] = version
-        return written
-
     def _compact_overflow(
         self, buckets: dict[str, list[int]], version: int, schema_json: str
     ) -> tuple[int, dict[str, list[int]]]:
@@ -483,9 +457,8 @@ class BucketedParquetUpsertStore:
         paths = [
             self._bucket_path(v, int(b)) for b in overflow for v in buckets[b]
         ]
-        compacted = self._write_buckets(
-            self._read_segments({"schema": schema_json}, paths), cver
-        )
+        rows = self._read_segments({"schema": schema_json}, paths)
+        (compacted,) = _write_segments([(self, rows, cver)])
         for b in overflow:
             buckets.pop(b, None)
         for b in compacted:
@@ -503,7 +476,9 @@ class BucketedParquetUpsertStore:
     ) -> None:
         """Keyed upsert rewriting only buckets containing batch keys —
         or, with ``insert_only``, appending one O(batch) segment and
-        rewriting nothing at all.
+        rewriting nothing at all. The one-store case of
+        :func:`merge_many`, so it writes and commits through the same
+        code.
 
         ``touched_buckets``: precomputed result of
         ``touched_buckets(batch-and-touch-keys)`` — skips this merge's
@@ -511,37 +486,30 @@ class BucketedParquetUpsertStore:
         paired read. The caller must pass the buckets of exactly the
         batch (plus touch_keys) key set; a superset only widens the
         rewrite, a subset would corrupt the store."""
-        planned = self._plan_merge(
-            batch, combine, batch_id, insert_only, touch_keys, touched_buckets
-        )
-        if planned is None:
-            return
-        state, new_data, touched = planned
-        schema_json = new_data.schema.json()
-        if state is None:
-            buckets = {b: [0] for b in self._write_buckets(new_data, 0)}
-            self._commit(buckets, 0, batch_id, schema_json)
-            return
-        version = state["version"] + 1
-        written = self._write_buckets(new_data, version)
-        self._commit_written(
-            state, written, version, touched, batch_id, schema_json
-        )
+        merge_many([{
+            "store": self, "batch": batch, "combine": combine,
+            "batch_id": batch_id, "insert_only": insert_only,
+            "touch_keys": touch_keys, "touched_buckets": touched_buckets,
+        }])
 
     def _commit_written(
         self,
-        state: dict,
+        state: dict | None,
         written: dict[str, int],
         version: int,
         touched: list[int] | None,
         batch_id: int | None,
         schema_json: str,
     ) -> None:
-        """Bucket-map bookkeeping + pointer commit for a non-initial
-        merge whose segments are already written. ``touched`` None means
-        the append path (segment lists grow, overflow compacts);
-        otherwise the touched buckets' lists are replaced."""
-        buckets = {b: list(v) for b, v in state["buckets"].items()}
+        """Bucket-map bookkeeping + pointer commit for segments already
+        written into ``version``. ``touched`` None means the append path
+        (segment lists grow, overflow compacts); a first commit
+        (``state`` None) is an append to an empty map. Otherwise the
+        touched buckets' lists are replaced."""
+        buckets = (
+            {} if state is None
+            else {b: list(v) for b, v in state["buckets"].items()}
+        )
         if touched is None:
             # Append path: caller guarantees batch keys are not in the
             # store, so no read, no rewrite — new segments only. Buckets
@@ -569,12 +537,10 @@ class BucketedParquetUpsertStore:
         touch_keys: DataFrame | None,
         touched_buckets: list[int] | None,
     ) -> tuple[dict | None, DataFrame, list[int] | None] | None:
-        """Everything :meth:`merge` does BEFORE its write job: batch-id
+        """Everything a merge does BEFORE its write job: batch-id
         screening and new-data construction. Returns ``(state, new_data,
         touched)`` (``touched`` is None on append/first-commit paths), or
-        None when the batch id is already applied. Shared by ``merge``
-        and its sibling :func:`merge_many`, which substitutes one
-        combined write for the per-store writes."""
+        None when the batch id is already applied."""
         if insert_only and (combine is not None or touch_keys is not None):
             raise ValueError("insert_only excludes combine/touch_keys")
         if batch_id is not None:
@@ -664,13 +630,104 @@ class BucketedParquetUpsertStore:
             F.broadcast(keys.distinct()), on=self.key_cols, how="left_anti"
         )
         version = state["version"] + 1
-        written = self._write_buckets(remaining, version)
-        buckets = {b: list(v) for b, v in state["buckets"].items()}
-        for b in touched:
-            buckets.pop(str(b), None)
-        for b in written:
-            buckets[b] = [version]
-        self._commit(buckets, version, batch_id, remaining.schema.json())
+        (written,) = _write_segments([(self, remaining, version)])
+        self._commit_written(
+            state, written, version, touched, batch_id, remaining.schema.json()
+        )
+
+
+def _write_segments(
+    parts: Sequence[tuple[BucketedParquetUpsertStore, DataFrame, int]],
+) -> list[dict[str, int]]:
+    """The one segment writer of the bucketed store: every merge,
+    delete, compaction and :func:`merge_many` call writes through it.
+
+    Each ``(store, rows, version)`` part is tagged with its index and
+    its rows' key bucket; the parts are unioned into ONE frame (columns
+    missing from a part padded with typed nulls — parquet null columns
+    cost only the definition levels), written by ONE Spark job
+    partitioned by ``(_store, _bucket)`` into a per-call temp dir in the
+    first store's root, and each bucket dir is then renamed into its
+    store's version dir. Returns, per part, the ``bucket -> version``
+    entries of the buckets that got rows; committing them is the
+    caller's step.
+
+    The repartition clusters rows by bucket BEFORE the partitioned
+    write, so each touched bucket gets ~1 file instead of (upstream
+    tasks x buckets) — without it a 32-task micro-batch writing 16
+    buckets creates up to 512 files per version, and the per-file
+    open/commit cost dominates streaming replay (sf0.1 near-dedup: 1116
+    files -> 100, bench-style min 10.2s -> 6.7s on the same container).
+    This is exactly Delta's optimized-write / AQE-coalesce behavior: one
+    small shuffle of batch-sized data buys bounded file counts, which at
+    100 TB is the difference between a healthy table and millions of
+    KB-sized files. Write parallelism equals the stores' summed
+    n_buckets, which is sized to the state (thousands of buckets on a
+    real cluster), so clustering caps files without capping cores.
+    """
+    # Superset schema: first-appearance column order; shared names must
+    # agree on type (same-name columns land in the same parquet column).
+    fields: dict[str, object] = {}
+    for _, rows, _ in parts:
+        for f in rows.schema.fields:
+            if f.name in fields:
+                if fields[f.name].simpleString() != f.dataType.simpleString():
+                    raise ValueError(
+                        f"merge_many: column {f.name!r} has conflicting types "
+                        f"{fields[f.name].simpleString()} vs "
+                        f"{f.dataType.simpleString()}"
+                    )
+            else:
+                fields[f.name] = f.dataType
+    names = list(fields)
+    tagged = None
+    for i, (store, rows, _) in enumerate(parts):
+        present = set(rows.columns)
+        part = rows.select(
+            F.lit(i).alias("_store"),
+            store._bucket_col().alias("_bucket"),
+            *[
+                F.col(n) if n in present else F.lit(None).cast(fields[n]).alias(n)
+                for n in names
+            ],
+        )
+        tagged = part if tagged is None else tagged.unionByName(part)
+
+    tmp = os.path.join(
+        parts[0][0].root, f"_write.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+    )
+    try:
+        (
+            tagged.repartition(
+                sum(store.n_buckets for store, _, _ in parts),
+                F.col("_store"),
+                F.col("_bucket"),
+            )
+            .write.mode("overwrite")
+            .partitionBy("_store", "_bucket")
+            .parquet(tmp)
+        )
+        out = []
+        for i, (store, _, version) in enumerate(parts):
+            vpath = store._version_path(version)
+            # A crash after an earlier attempt's renames left this
+            # version dir behind; it is above the pointer, so nothing
+            # reads it, and renaming buckets into it would fail.
+            shutil.rmtree(vpath, ignore_errors=True)
+            os.makedirs(vpath)
+            written: dict[str, int] = {}
+            src = os.path.join(tmp, f"_store={i}")
+            if os.path.isdir(src):
+                for name in os.listdir(src):
+                    if name.startswith("_bucket="):
+                        os.rename(
+                            os.path.join(src, name), os.path.join(vpath, name)
+                        )
+                        written[name.split("=", 1)[1]] = version
+            out.append(written)
+        return out
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def merge_many(merges: Sequence[dict]) -> None:
@@ -680,15 +737,15 @@ def merge_many(merges: Sequence[dict]) -> None:
     A ``foreachBatch`` sink that maintains K bucketed stores pays K
     write jobs per micro-batch even when the jobs are overlapped from a
     thread pool (guide §2.6) — each job still schedules, shuffles and
-    commits on its own. Here the per-store ``new_data`` relations are
-    tagged and unioned into ONE frame (missing columns padded with
-    typed nulls — parquet null columns cost only the definition
-    levels), written once partitioned by ``(_store, _bucket)``, and the
-    resulting bucket directories are renamed into each store's version
-    directory — after which every store runs exactly the bucket-map
-    bookkeeping and atomic pointer swap ``merge`` would have run. Reads
-    clip shared-file segments back to the store's own columns via the
-    schema recorded in the commit (see ``_read_segments``).
+    commits on its own. Here every store plans its merge, the planned
+    ``new_data`` relations go through the store's one segment writer
+    (:func:`_write_segments`) together, and every store then runs the
+    same bucket-map bookkeeping and atomic pointer swap
+    (``_commit_written``) a single merge runs —
+    :meth:`BucketedParquetUpsertStore.merge` is this function with one
+    entry. Reads clip shared-file segments back to the store's own
+    columns via the schema recorded in the commit (see
+    ``_read_segments``).
 
     Each entry is a dict of :meth:`BucketedParquetUpsertStore.merge`
     kwargs plus the store itself::
@@ -719,86 +776,24 @@ def merge_many(merges: Sequence[dict]) -> None:
         )
         if planned is not None:
             state, new_data, touched = planned
-            plans.append((store, state, new_data, touched, m.get("batch_id")))
+            version = 0 if state is None else state["version"] + 1
+            plans.append(
+                (store, state, new_data, touched, m.get("batch_id"), version)
+            )
     if not plans:
         return
     roots = [p[0].root for p in plans]
     if len(set(roots)) != len(roots):
         raise ValueError("merge_many requires distinct stores")
-    spark = plans[0][0].spark
-
-    # Superset schema: first-appearance column order; shared names must
-    # agree on type (same-name columns land in the same parquet column).
-    fields: dict[str, object] = {}
-    for _, _, new_data, _, _ in plans:
-        for f in new_data.schema.fields:
-            if f.name in fields:
-                if fields[f.name].simpleString() != f.dataType.simpleString():
-                    raise ValueError(
-                        f"merge_many: column {f.name!r} has conflicting types "
-                        f"{fields[f.name].simpleString()} vs "
-                        f"{f.dataType.simpleString()}"
-                    )
-            else:
-                fields[f.name] = f.dataType
-    names = list(fields)
-    tagged = None
-    for i, (store, _, new_data, _, _) in enumerate(plans):
-        present = {f.name for f in new_data.schema.fields}
-        part = new_data.select(
-            F.lit(i).alias("_store"),
-            store._bucket_col().alias("_bucket"),
-            *[
-                F.col(n)
-                if n in present
-                else F.lit(None).cast(fields[n]).alias(n)
-                for n in names
-            ],
-        )
-        tagged = part if tagged is None else tagged.unionByName(part)
-
-    tmp = os.path.join(
-        os.path.dirname(plans[0][0].root.rstrip(os.sep)),
-        f"_multimerge.tmp.{os.getpid()}.{uuid.uuid4().hex}",
+    written = _write_segments(
+        [(store, new_data, version) for store, _, new_data, _, _, version in plans]
     )
-    (
-        tagged.repartition(
-            sum(p[0].n_buckets for p in plans), F.col("_store"), F.col("_bucket")
+    for (store, state, new_data, touched, batch_id, version), w in zip(
+        plans, written
+    ):
+        store._commit_written(
+            state, w, version, touched, batch_id, new_data.schema.json()
         )
-        .write.mode("overwrite")
-        .partitionBy("_store", "_bucket")
-        .parquet(tmp)
-    )
-    try:
-        for i, (store, state, new_data, touched, batch_id) in enumerate(plans):
-            schema_json = new_data.schema.json()
-            version = 0 if state is None else state["version"] + 1
-            vpath = store._version_path(version)
-            # A crash after an earlier attempt's renames left this
-            # version dir behind; it is above the pointer, so nothing
-            # reads it, and renaming buckets into it would fail.
-            shutil.rmtree(vpath, ignore_errors=True)
-            os.makedirs(vpath)
-            written: dict[str, int] = {}
-            src = os.path.join(tmp, f"_store={i}")
-            if os.path.isdir(src):
-                for name in os.listdir(src):
-                    if name.startswith("_bucket="):
-                        os.rename(
-                            os.path.join(src, name), os.path.join(vpath, name)
-                        )
-                        written[name.split("=", 1)[1]] = version
-            if state is None:
-                store._commit(
-                    {b: [version] for b in written}, version, batch_id,
-                    schema_json,
-                )
-            else:
-                store._commit_written(
-                    state, written, version, touched, batch_id, schema_json
-                )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _MONOID_OPS = ("sum", "min", "max", "union")

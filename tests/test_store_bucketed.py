@@ -10,6 +10,7 @@ MERGE file pruning gives at 100 TB).
 from __future__ import annotations
 
 import glob
+import json
 import os
 import tempfile
 from decimal import Decimal
@@ -418,3 +419,112 @@ def test_monoid_combine_folds_one_sided_keys_and_keeps_types(spark):
     }
     with pytest.raises(ValueError, match="unknown ops"):
         monoid_combine(["k"], {"s": "avg"})
+
+
+def _orphan_version_dirs(store):
+    """``vNNNNNN`` dirs that no snapshot left in the store references."""
+    names = os.listdir(store.root)
+    referenced = set()
+    for name in names:
+        if name.startswith("_SNAP.v") and name.endswith(".json"):
+            with open(os.path.join(store.root, name), encoding="utf-8") as fh:
+                for versions in json.load(fh)["buckets"].values():
+                    referenced.update(versions)
+    return sorted(
+        n for n in names
+        if n.startswith("v") and n[1:].isdigit() and int(n[1:]) not in referenced
+    )
+
+
+def test_every_write_path_survives_a_crash_and_replay(spark, monkeypatch):
+    """The crash matrix of the one segment writer: first commit, a
+    ``combine`` + ``touch_keys`` upsert, an ``insert_only`` append that
+    compacts (``max_segments=1``), ``delete`` and a two-store
+    ``merge_many`` (the second store's first commit), each crashed
+    after its segment renames (before the ``_SNAP`` write) and after
+    the ``_SNAP`` write (before the ``_CURRENT`` swap), then replayed
+    with the same batch id. The replay must not raise and must leave
+    ``current()`` and the history's batch ids equal to a clean run's,
+    and ``vacuum(keep_last=1)`` must leave no unreferenced version dir.
+    The combine is not idempotent, so a half-applied crash shows."""
+    from m4i_flink_tasks_spark.streaming import store as store_mod
+
+    dels = spark.createDataFrame([(5,), (6,)], "k long")
+
+    def append_and_drop(cur, batch):
+        merged = cur.join(
+            batch.select("k", F.col("v").alias("nv")), "k", "full_outer"
+        ).select("k", F.concat_ws("+", "v", "nv").alias("v"))
+        return merged.join(F.broadcast(dels), "k", "left_anti")
+
+    def ops(a, b):
+        return [
+            lambda: a.merge(
+                _mk(spark, [(i, f"v{i}") for i in range(8)]), batch_id=0
+            ),
+            lambda: a.merge(
+                _mk(spark, [(1, "c1"), (9, "c9")]),
+                combine=append_and_drop, touch_keys=dels, batch_id=1,
+            ),
+            lambda: a.merge(
+                _mk(spark, [(k, f"a{k}") for k in range(20, 24)]),
+                insert_only=True, batch_id=2,
+            ),
+            lambda: a.delete(
+                spark.createDataFrame([(2,), (21,)], "k long"), batch_id=3
+            ),
+            lambda: merge_many([
+                {"store": a, "batch": _mk(spark, [(3, "m3")]), "batch_id": 4},
+                {"store": b, "batch": _mk(spark, [(7, "b7")]), "batch_id": 4,
+                 "insert_only": True},
+            ]),
+        ]
+
+    def stores(tag):
+        root = tempfile.mkdtemp(prefix=f"m4i_bstore_matrix_{tag}_")
+        return (
+            BucketedParquetUpsertStore(
+                spark, os.path.join(root, "a"), ["k"], n_buckets=4,
+                max_segments=1,
+            ),
+            BucketedParquetUpsertStore(
+                spark, os.path.join(root, "b"), ["k"], n_buckets=2
+            ),
+        )
+
+    def observe(a, b):
+        """What the test compares after each step, then vacuum."""
+        seen = []
+        for s in (a, b):
+            cur = s.current()
+            rows = None if cur is None else sorted(map(tuple, cur.collect()))
+            seen.append((rows, [h["batch_id"] for h in s.history()]))
+        for s in (a, b):
+            s.vacuum(keep_last=1)
+            assert _orphan_version_dirs(s) == [], s.root
+        return seen
+
+    a, b = stores("clean")
+    clean = []
+    for op in ops(a, b):
+        op()
+        clean.append(observe(a, b))
+    # five commits (versions 0-4) plus the append step's compaction
+    assert a._state()["version"] == len(clean), "the append did not compact"
+
+    real = store_mod._replace_text
+    for fault in ("_SNAP.", "_CURRENT"):
+        a, b = stores(fault.strip("_."))
+
+        def crashing(path, text, _fault=fault):
+            if os.path.basename(path).startswith(_fault):
+                raise RuntimeError(f"injected crash before {_fault} write")
+            real(path, text)
+
+        for step, op in enumerate(ops(a, b)):
+            with monkeypatch.context() as m:
+                m.setattr(store_mod, "_replace_text", crashing)
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    op()
+            op()
+            assert observe(a, b) == clean[step], f"{fault} crash at step {step}"

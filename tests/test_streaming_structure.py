@@ -1,7 +1,8 @@
 """The streaming package keeps ONE copy of its transport: only
 ``replay.py`` starts streaming queries and only ``staging.py`` spaces
 staged-file mtimes. Every pipeline calls those, so a new twin cannot
-grow its own readStream/writeStream or staging block back."""
+grow its own readStream/writeStream or staging block back. Likewise
+the bucketed store keeps ONE segment writer."""
 
 from __future__ import annotations
 
@@ -46,3 +47,64 @@ def test_only_replay_and_staging_own_the_transport():
         for v in _violations(os.path.join(root, f))
     ]
     assert not found, "\n".join(found)
+
+
+def _writes_parquet(call: ast.Call) -> bool:
+    """A DataFrameWriter ``.parquet(...)``: the receiver chain passes
+    through ``.write`` (``spark.read...parquet`` does not)."""
+    func = call.func
+    if not (isinstance(func, ast.Attribute) and func.attr == "parquet"):
+        return False
+    node = func.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "write":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def _is_os_rename(call: ast.Call) -> bool:
+    func = call.func
+    return (
+        isinstance(func, ast.Attribute)
+        and func.attr == "rename"
+        and isinstance(func.value, ast.Name)
+        and func.value.id == "os"
+    )
+
+
+def test_bucketed_store_has_one_segment_writer():
+    """Outside the flat reference ``ParquetUpsertStore``, exactly one
+    function of ``store.py`` writes parquet and renames it into place:
+    every merge, delete and compaction reaches the same writer, so one
+    crash/replay argument covers them all."""
+    path = os.path.join(os.path.dirname(streaming.__file__), "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    writers: set[str] = set()
+    renamers: set[str] = set()
+
+    def visit(node: ast.AST, owner: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef) and child.name == "ParquetUpsertStore":
+                continue
+            name = owner
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name if owner is None else f"{owner}.{child.name}"
+            elif isinstance(child, ast.ClassDef):
+                name = child.name
+            if isinstance(child, ast.Call) and owner is not None:
+                if _writes_parquet(child):
+                    writers.add(owner)
+                if _is_os_rename(child):
+                    renamers.add(owner)
+            visit(child, name)
+
+    visit(tree, None)
+    assert len(writers) == 1 and writers == renamers, (
+        f"parquet writers {sorted(writers)}, os.rename callers "
+        f"{sorted(renamers)}: the store must keep one segment writer"
+    )
