@@ -25,8 +25,9 @@ land on the following batch. This matches the reference's behavior for
 distinct target docs and makes intra-batch collisions deterministic —
 the reference's outcome depends on event arrival order. The OTHER §7.5
 resolution — loop the dispatcher to fixpoint so same-batch cascades
-land immediately — is :func:`synchronize_batch_to_fixpoint` below,
-selectable per sink.
+land immediately — is :func:`synchronize_batch_to_fixpoint` below.
+Job 4's streaming sink runs the single pass; the fixpoint form is for
+callers that need multi-level cascades inside one batch.
 
 Parity notes: the ``direct_change`` gate (:74-76) is applied first;
 ``EntityDeleted`` produces store deletes (Q7, :111-113). All three

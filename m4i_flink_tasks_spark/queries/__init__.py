@@ -11,10 +11,13 @@ family, merged where several trivial proofs shared a family (e.g.
 ``row_transform_suite`` = P2+P3+P4+P12+P13+P14). Every declared query has
 an oracle and a CORRECTNESS row; nothing ships unverified.
 
-The remaining standalone forms stay registered via ``extra_queries()`` /
-``extra_oracles()`` — they are redundant proofs of operators already
-covered by a driver query, and are still pinned by the local pytest gate
-(tests/test_oracle_parity.py) and used by bench.py.
+The other registered queries are extras (``extra_queries()`` /
+``extra_oracles()``), pinned by the local pytest gate
+(tests/test_oracle_parity.py). An extra stays only while it proves a
+path no declared row runs, or is a bench.py HEADLINE/HEAVY member;
+COVERAGE.md's Proof cells map each operator to its proof, and
+tests/test_coverage_doc.py fails on an extra listed beside a kept row
+that its keep-list does not justify.
 """
 
 from __future__ import annotations
@@ -49,9 +52,7 @@ from . import (
     sketches,
     state_store,
     streaming_like,
-    subqueries,
     text_ranking,
-    tpch_tail,
     warehouse,
 )
 
@@ -59,8 +60,6 @@ from . import (
 _MODULES = (
     relational,
     extended_relational,
-    subqueries,
-    tpch_tail,
     cdc,
     state_store,
     graph,
@@ -232,8 +231,8 @@ def all_oracles() -> dict[str, str]:
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Redundant standalone proofs kept for pytest + bench, not declared
-    to the driver."""
+    """Registered queries outside ``DRIVER_QUERIES`` (pytest-pinned;
+    bench.py's HEADLINE/HEAVY rows draw on them too)."""
     merged = _merged_queries()
     return {n: fn for n, fn in merged.items() if n not in DRIVER_QUERIES}
 

@@ -6,19 +6,17 @@ entity ``guid``, ``ts`` plays ``updateTime``, ``props`` (a JSON object)
 plays the dynamic ``attributes`` payload, ``event_type`` plays the
 operation type. Each query exercises one operator family:
 
-- P2/P3/P4: null filter, op-type predicate, envelope validation
-  (reference: get_entity_job.py:40,117; publish_state_job.py:56-69)
+- P2/P3/P4 + P12 + P13/P14 in one row (``row_transform_suite``): null
+  filter, op-type predicate, envelope validation, doc-id synthesis and
+  the didactic example row transforms (get_entity_job.py:40,117;
+  publish_state_job.py:56-69,77; examples/batch_processing_example.py:19-24,
+  examples/stream_processing_example.py:24-27)
 - P5: flat_map/explode (determine_change_job.py:429-433)
 - P9/P10/P11: json_normalize flatten, prefixed-column drop, prefix
   strip (determine_change_job.py:41-51,67-83,96-108)
-- P12: doc-id synthesis (publish_state_job.py:77)
-- P13/P14: the didactic example row transforms
-  (examples/batch_processing_example.py:19-24,
-  examples/stream_processing_example.py:24-27)
 - D1-D4: attribute diff old-vs-new (determine_change_job.py:110-191)
 - D8: previous-version as-of lookup (determine_change_job.py:194-226)
 - D9: last-writer-wins collapse (synchronize_app_search.py:335...)
-- S3: dead-letter split (get_entity_job.py:60-82)
 
 All are pure column expressions — no Python UDFs — so they stay inside
 whole-stage codegen and scale linearly with partition count.
@@ -31,74 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import load_table
-
-
-def op_type_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3: keep only create/update/delete-analog event types, count each.
-    Reference: EntityAuditAction check, get_entity_job.py:40."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.filter(F.col("event_type").isin("signup", "purchase", "error"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("event_type")
-    )
-
-
-OP_TYPE_SQL = """
-SELECT event_type, count(*) AS n_events
-FROM events
-WHERE event_type IN ('signup', 'purchase', 'error')
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
-def envelope_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2+P4: parse the JSON payload, reject rows missing the required
-    key ('k' here; 'kafka_notification'/'atlas_entity' in the reference,
-    publish_state_job.py:56-69). Valid rows keep the extracted value."""
-    events = load_table(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        events.filter(F.col("props").isNotNull() & k.isNotNull())
-        .select("event_id", k.alias("payload_k"))
-        .orderBy("event_id")
-    )
-
-
-ENVELOPE_SQL = """
-SELECT event_id,
-       CAST(json_extract(props, '$.k') AS BIGINT) AS payload_k
-FROM events
-WHERE props IS NOT NULL
-  AND json_extract(props, '$.k') IS NOT NULL
-ORDER BY event_id
-"""
-
-
-def doc_id_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P12: deterministic versioned doc id ``{guid}_{updateTime}``.
-    Reference: publish_state_job.py:77. Millis epoch keeps the id stable
-    across engines and sortable as the reference relies on."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.select(
-            "event_id",
-            F.concat_ws(
-                "_", F.col("user_id"), F.unix_millis(F.col("ts"))
-            ).alias("doc_id"),
-        )
-        .orderBy("event_id")
-    )
-
-
-DOC_ID_SQL = """
-SELECT event_id,
-       user_id || '_' || epoch_ms(ts) AS doc_id
-FROM events
-ORDER BY event_id
-"""
 
 
 def asof_previous_version(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,61 +312,6 @@ ORDER BY event_id
 """
 
 
-def scalar_row_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P13/P14: the reference's two didactic row transforms — the Table
-    API row UDF ``Row(id, data*2)`` (examples/batch_processing_example.py:19-24)
-    and the DataStream scalar map ``value -> (value, value+2)``
-    (examples/stream_processing_example.py:24-27,46) — as native column
-    expressions over ``events`` (no UDF needed; both stay in codegen)."""
-    events = load_table(spark, sf_dir, "events")
-    return events.select(
-        F.col("event_id").alias("id"),
-        F.repeat(F.col("event_type"), 2).alias("data"),
-        (F.col("event_id") + 2).alias("plus_two"),
-    ).orderBy("id")
-
-
-SCALAR_ROW_TRANSFORMS_SQL = """
-SELECT event_id AS id,
-       repeat(event_type, 2) AS data,
-       event_id + 2 AS plus_two
-FROM events
-ORDER BY id
-"""
-
-
-def dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3: classify each record ok / dead-letter by a validation rule and
-    count both sides — the reference's per-failure Kafka side channel
-    (get_entity_job.py:60-82) as a single split plan. Sub-threshold
-    'error' events play the poison records (same rule as the streaming
-    pipeline's dead-letter channel, streaming/publish_state.py)."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.select(
-            F.when(
-                (F.col("event_type") == "error") & (F.col("value") < 1.0),
-                F.lit("dead_letter"),
-            )
-            .otherwise(F.lit("ok"))
-            .alias("channel")
-        )
-        .groupBy("channel")
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .orderBy("channel")
-    )
-
-
-DEAD_LETTER_SQL = """
-SELECT CASE WHEN event_type = 'error' AND value < 1.0
-            THEN 'dead_letter' ELSE 'ok' END AS channel,
-       count(*) AS n_records
-FROM events
-GROUP BY 1
-ORDER BY channel
-"""
-
-
 def row_transform_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2+P3+P4+P12+P13+P14 in one pass — the driver's correctness window
     is finite, so the six row-level transforms share one proof row; each
@@ -451,9 +326,7 @@ def row_transform_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       (examples/batch_processing_example.py:19-24,
       examples/stream_processing_example.py:24-27)
 
-    Single projection over one scan; all expressions stay in codegen.
-    The standalone forms remain registered after the window for the
-    bench suite and as redundant proofs."""
+    Single projection over one scan; all expressions stay in codegen."""
     events = load_table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
@@ -493,30 +366,20 @@ ORDER BY event_id
 
 QUERIES = {
     "row_transform_suite": row_transform_suite,
-    "op_type_filter": op_type_filter,
-    "envelope_validation": envelope_validation,
-    "doc_id_synthesis": doc_id_synthesis,
     "asof_previous_version": asof_previous_version,
     "latest_version_per_key": latest_version_per_key,
     "attribute_diff": attribute_diff,
     "diff_event_materialization": diff_event_materialization,
     "attribute_flattening": attribute_flattening,
-    "scalar_row_transforms": scalar_row_transforms,
-    "dead_letter_split": dead_letter_split,
 }
 
 ORACLES = {
     "row_transform_suite": ROW_TRANSFORM_SUITE_SQL,
-    "op_type_filter": OP_TYPE_SQL,
-    "envelope_validation": ENVELOPE_SQL,
-    "doc_id_synthesis": DOC_ID_SQL,
     "asof_previous_version": ASOF_SQL,
     "latest_version_per_key": LATEST_SQL,
     "attribute_diff": ATTR_DIFF_SQL,
     "diff_event_materialization": DIFF_EVENT_SQL,
     "attribute_flattening": ATTRIBUTE_FLATTENING_SQL,
-    "scalar_row_transforms": SCALAR_ROW_TRANSFORMS_SQL,
-    "dead_letter_split": DEAD_LETTER_SQL,
 }
 
 

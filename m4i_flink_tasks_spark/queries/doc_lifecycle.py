@@ -1,7 +1,9 @@
-"""Doc-lifecycle queries (SURVEY §2.5 G5-G6, G13, G15-G19, G22-G25 +
-§2.3 D9) run at data scale: each drives one ``operators.docstore``
-kernel over synthetic doc/update tables derived from the TPC-H-ish
-testdata, with a plain-SQL DuckDB oracle.
+"""Doc-lifecycle queries (SURVEY §2.5 G5-G6, G10-G19, G22-G23 + §2.3 D9)
+run at data scale: each drives ``operators.docstore`` kernels over
+synthetic doc/update tables derived from the TPC-H-ish testdata, with a
+plain-SQL DuckDB oracle. G24/G25 (attribute update/delete application)
+run inside job 4's dispatcher, proven by the declared
+``stream_synchronize_appsearch_docs`` row.
 
 The reference applies all of these doc-at-a-time inside
 ``SynchronizeAppsearch.map`` (synchronize_app_search.py); here each is a
@@ -19,7 +21,6 @@ from pyspark.sql import functions as F
 from ..functions.hierarchy import supertype_closure_df
 from ..operators.docstore import (
     apply_attribute_field_linkage,
-    apply_attribute_updates,
     apply_governance_role,
     classify_relationship,
     collapse_last_writer_wins,
@@ -173,7 +174,7 @@ ORDER BY guid
 
 
 # --------------------------------------------------------------------------
-# G15/G16: derived-field inherit / un-inherit
+# G15/G16: derived-field inherit / un-inherit fixtures
 # --------------------------------------------------------------------------
 
 def _derived_children(spark: SparkSession, sf_dir: str, *, equal_to_parent: bool):
@@ -222,76 +223,6 @@ def _derived_parents(spark: SparkSession, sf_dir: str):
             "derivedentitynames"
         ),
     )
-
-
-def derived_field_inherit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G15 update_derived_entiies (synchronize_app_search.py:284-289): on
-    a new parent link the parent's non-null derived fields overwrite the
-    child's; null parent fields leave the child untouched."""
-    children = _derived_children(spark, sf_dir, equal_to_parent=False)
-    out = inherit_derived_fields(children, _derived_parents(spark, sf_dir))
-    return out.select(
-        "guid",
-        "deriveddataownerguid",
-        "deriveddatastewardguid",
-        "deriveddomainleadguid",
-        F.array_join("derivedentityguids", "|").alias("derivedentityguids"),
-        F.array_join("derivedentitynames", "|").alias("derivedentitynames"),
-    ).orderBy("guid")
-
-
-DERIVED_FIELD_INHERIT_SQL = """
-SELECT 'C' || c_custkey AS guid,
-       CASE WHEN c_nationkey % 2 = 0 THEN 'NO' || c_nationkey
-            WHEN c_custkey % 2 = 0 THEN 'CO' || c_custkey END
-           AS deriveddataownerguid,
-       'NS' || c_nationkey AS deriveddatastewardguid,
-       'CL' || c_custkey AS deriveddomainleadguid,
-       CASE WHEN c_nationkey % 3 = 0 THEN 'NE' || c_nationkey
-            ELSE 'CE' || c_custkey END AS derivedentityguids,
-       CASE WHEN c_nationkey % 3 = 0 THEN 'NN' || c_nationkey
-            ELSE c_name END AS derivedentitynames
-FROM customer
-ORDER BY guid
-"""
-
-
-def derived_field_uninherit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G16 delete_derived_entities (synchronize_app_search.py:273-281):
-    on parent-link delete, child derived fields equal to the parent's
-    reset (scalars -> NULL, arrays -> []); differing values survive."""
-    children = _derived_children(spark, sf_dir, equal_to_parent=True)
-    out = uninherit_derived_fields(children, _derived_parents(spark, sf_dir))
-    # array_join([]) = '' distinguishes the reset-to-empty case from kept
-    # values; the oracle CASE emits the same exact strings.
-    return out.select(
-        "guid",
-        "deriveddataownerguid",
-        "deriveddatastewardguid",
-        "deriveddomainleadguid",
-        F.array_join("derivedentityguids", "|").alias("derivedentityguids"),
-        F.array_join("derivedentitynames", "|").alias("derivedentitynames"),
-    ).orderBy("guid")
-
-
-DERIVED_FIELD_UNINHERIT_SQL = """
-SELECT 'C' || c_custkey AS guid,
-       CASE WHEN c_custkey % 3 = 0 AND c_nationkey % 2 = 0 THEN NULL
-            WHEN c_custkey % 3 = 0 THEN 'NO' || c_nationkey
-            ELSE 'CO' || c_custkey END AS deriveddataownerguid,
-       NULL AS deriveddatastewardguid,
-       'CL' || c_custkey AS deriveddomainleadguid,
-       CASE WHEN c_custkey % 2 = 0 AND c_nationkey % 3 = 0
-            THEN ''
-            WHEN c_custkey % 2 = 0 THEN 'NE' || c_nationkey
-            ELSE 'CE' || c_custkey END AS derivedentityguids,
-       CASE WHEN c_custkey % 2 = 0 AND c_nationkey % 3 = 0
-            THEN ''
-            WHEN c_custkey % 2 = 0 THEN 'NN' || c_nationkey
-            ELSE c_name END AS derivedentitynames
-FROM customer
-ORDER BY guid
-"""
 
 
 # --------------------------------------------------------------------------
@@ -469,54 +400,6 @@ SELECT 'C' || c_custkey AS guid,
        NULL AS parentguid,
        CAST(0.0 AS DOUBLE) AS dq_score_overall
 FROM msg
-ORDER BY guid
-"""
-
-
-# --------------------------------------------------------------------------
-# G24/G25: attribute update / delete application
-# --------------------------------------------------------------------------
-
-def attribute_update_application(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G24/G25 handle_updated/deleted_attributes
-    (synchronize_app_search.py:491-562): whitelisted attrs copy onto the
-    doc; a deleted name falls back to the qualified name (delete wins
-    over a same-batch rename)."""
-    customer = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    docs = customer.select(
-        F.concat(F.lit("C"), ck).alias("guid"),
-        F.concat(F.lit("q.c"), ck).alias("referenceablequalifiedname"),
-        F.col("c_name").alias("name"),
-        F.lit("old").alias("definition"),
-        F.lit(None).cast("string").alias("email"),
-    )
-    updates = (
-        customer.filter((ck % 2 == 0) | (ck % 3 == 0) | (ck % 5 == 0))
-        .select(
-            F.concat(F.lit("C"), ck).alias("guid"),
-            F.when(ck % 3 == 0, F.concat(F.lit("NEW_"), ck)).alias("name"),
-            F.when(ck % 2 == 0, F.col("c_mktsegment")).alias("definition"),
-            F.when(ck % 7 == 0, F.concat(F.lit("e"), ck)).alias("email"),
-            (ck % 5 == 0).alias("name_deleted"),
-        )
-    )
-    out = apply_attribute_updates(docs, updates)
-    return out.select("guid", "name", "definition", "email").orderBy("guid")
-
-
-ATTRIBUTE_UPDATE_APPLICATION_SQL = """
-SELECT 'C' || c_custkey AS guid,
-       CASE WHEN c_custkey % 5 = 0 THEN 'q.c' || c_custkey
-            WHEN c_custkey % 3 = 0 THEN 'NEW_' || c_custkey
-            ELSE c_name END AS name,
-       CASE WHEN c_custkey % 2 = 0 THEN c_mktsegment ELSE 'old' END
-           AS definition,
-       CASE WHEN c_custkey % 7 = 0
-                 AND (c_custkey % 2 = 0 OR c_custkey % 3 = 0
-                      OR c_custkey % 5 = 0)
-            THEN 'e' || c_custkey END AS email
-FROM customer
 ORDER BY guid
 """
 
@@ -792,12 +675,9 @@ QUERIES = {
     "derived_field_lifecycle": derived_field_lifecycle,
     "relationship_classification": relationship_classification,
     "breadcrumb_prefix_delete": breadcrumb_prefix_delete,
-    "derived_field_inherit": derived_field_inherit,
-    "derived_field_uninherit": derived_field_uninherit,
     "governance_role_update": governance_role_update,
     "parent_guid_extraction": parent_guid_extraction,
     "doc_creation": doc_creation,
-    "attribute_update_application": attribute_update_application,
     "attribute_field_linkage": attribute_field_linkage,
     "doc_update_collapse": doc_update_collapse,
 }
@@ -807,12 +687,9 @@ ORACLES = {
     "derived_field_lifecycle": DERIVED_FIELD_LIFECYCLE_SQL,
     "relationship_classification": RELATIONSHIP_CLASSIFICATION_SQL,
     "breadcrumb_prefix_delete": BREADCRUMB_PREFIX_DELETE_SQL,
-    "derived_field_inherit": DERIVED_FIELD_INHERIT_SQL,
-    "derived_field_uninherit": DERIVED_FIELD_UNINHERIT_SQL,
     "governance_role_update": GOVERNANCE_ROLE_UPDATE_SQL,
     "parent_guid_extraction": PARENT_GUID_EXTRACTION_SQL,
     "doc_creation": DOC_CREATION_SQL,
-    "attribute_update_application": ATTRIBUTE_UPDATE_APPLICATION_SQL,
     "attribute_field_linkage": ATTRIBUTE_FIELD_LINKAGE_SQL,
     "doc_update_collapse": DOC_UPDATE_COLLAPSE_SQL,
 }

@@ -1,14 +1,13 @@
-"""Doc-store graph-maintenance queries (SURVEY §2.5 G9/G12/G20 + §2.4 Q2)
-run at data scale over the testdata's natural containment hierarchy
-region ⊃ nation ⊃ customer — the stand-in for system ⊃ collection ⊃
-dataset. Each query drives the same ``operators.docstore`` kernels the
-golden unit tests pin, so the DuckDB gate checks them against plain SQL
-on real table volumes.
+"""Doc-store graph-maintenance queries (SURVEY §2.5 G20/G21) run at data
+scale over the testdata's natural containment hierarchy region ⊃ nation
+⊃ customer — the stand-in for system ⊃ collection ⊃ dataset.
+``_customer_docs`` materializes the breadcrumbs (G9) that
+``rename_propagation`` here and the breadcrumb-prefix rows in
+``doc_lifecycle`` start from.
 
 Scale notes: breadcrumb materialization is two broadcast joins (nation
-and region are tiny dims); descendant selection is one
-``array_contains`` scan (no join); rename propagation is a codegen'd
-``zip_with`` — none of these shuffle the fact table.
+and region are tiny dims); rename propagation is a codegen'd
+``zip_with`` — neither shuffles the fact table.
 """
 
 from __future__ import annotations
@@ -16,11 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.docstore import (
-    descendants_of,
-    insert_breadcrumb_prefix,
-    rename_in_breadcrumbs,
-)
+from ..operators.docstore import rename_in_breadcrumbs
 from ..sources import load_table
 
 
@@ -44,64 +39,6 @@ def _customer_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(F.lit("region"), F.lit("nation")).alias("breadcrumbtype"),
         )
     )
-
-
-def breadcrumb_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Array columns are serialized with array_join at the query boundary:
-    # the driver's oracle canonicalizer hashes scalar cells only. The
-    # kernels themselves stay array-typed (pinned by tests/test_docstore.py).
-    docs = _customer_docs(spark, sf_dir)
-    return docs.select(
-        "guid",
-        "name",
-        F.array_join("breadcrumbguid", "|").alias("breadcrumbguid"),
-        F.array_join("breadcrumbname", "|").alias("breadcrumbname"),
-        F.array_join("breadcrumbtype", "|").alias("breadcrumbtype"),
-    ).orderBy("guid")
-
-
-BREADCRUMB_MATERIALIZATION_SQL = """
-SELECT 'C' || c_custkey AS guid,
-       c_name AS name,
-       'R' || r_regionkey || '|' || 'N' || n_nationkey AS breadcrumbguid,
-       r_name || '|' || n_name AS breadcrumbname,
-       'region|nation' AS breadcrumbtype
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-ORDER BY guid
-"""
-
-
-def descendant_prefix_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 + G12: select the descendants of nation N7 by breadcrumb
-    membership, then prepend a new root ancestor to each
-    (insert_prefix_to_breadcrumbs_of_child_entities,
-    synchronize_app_search.py:231-244)."""
-    docs = _customer_docs(spark, sf_dir)
-    desc = descendants_of(docs, "N7")
-    out = insert_breadcrumb_prefix(
-        desc, F.lit("ROOT"), F.lit("Root"), F.lit("m4i_system")
-    )
-    return out.select(
-        "guid",
-        F.array_join("breadcrumbguid", "|").alias("breadcrumbguid"),
-        F.array_join("breadcrumbname", "|").alias("breadcrumbname"),
-        F.array_join("breadcrumbtype", "|").alias("breadcrumbtype"),
-    ).orderBy("guid")
-
-
-DESCENDANT_PREFIX_SQL = """
-SELECT 'C' || c_custkey AS guid,
-       'ROOT|R' || r_regionkey || '|' || 'N' || n_nationkey AS breadcrumbguid,
-       'Root|' || r_name || '|' || n_name AS breadcrumbname,
-       'm4i_system|region|nation' AS breadcrumbtype
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE n_nationkey = 7
-ORDER BY guid
-"""
 
 
 def rename_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,13 +88,9 @@ ORDER BY guid
 
 
 QUERIES = {
-    "breadcrumb_materialization": breadcrumb_materialization,
-    "descendant_prefix_insert": descendant_prefix_insert,
     "rename_propagation": rename_propagation,
 }
 
 ORACLES = {
-    "breadcrumb_materialization": BREADCRUMB_MATERIALIZATION_SQL,
-    "descendant_prefix_insert": DESCENDANT_PREFIX_SQL,
     "rename_propagation": RENAME_PROPAGATION_SQL,
 }

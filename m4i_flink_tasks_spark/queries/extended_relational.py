@@ -346,302 +346,6 @@ ORDER BY event_type
 """
 
 
-def promo_revenue_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: lineitem x broadcast part dimension with a
-    conditional aggregate — the class-share-of-revenue pattern. The
-    part dimension broadcasts (SF x 2k rows; at 100 TB still a dim
-    table), so the fact table joins map-side and the only shuffle is
-    the month hash-aggregate, partial-combined per task."""
-    part = load_table(spark, sf_dir, "part")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        lineitem.join(
-            F.broadcast(part), lineitem.l_partkey == part.p_partkey
-        )
-        .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("p_type") == "ECONOMY", rev).otherwise(0.0)),
-                2,
-            ).alias("economy_revenue"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("ship_month")
-    )
-
-
-PROMO_REVENUE_SQL = """
-SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-       round(sum(CASE WHEN p_type = 'ECONOMY'
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END), 2)                          AS economy_revenue,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)         AS total_revenue,
-       count(*)                                                  AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-GROUP BY strftime(l_shipdate, '%Y-%m')
-ORDER BY ship_month
-"""
-
-
-def discounted_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: disjunctive multi-column predicates spanning the
-    fact and the broadcast dimension. The per-side conjuncts
-    (p_size/p_brand; l_quantity/l_discount) are pushable into their
-    respective scans before the join; only rows surviving BOTH local
-    prunes reach the OR evaluation."""
-    part = load_table(spark, sf_dir, "part")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = lineitem.join(
-        F.broadcast(part), lineitem.l_partkey == part.p_partkey
-    )
-    cond = (
-        (F.col("p_brand") == "Brand#2")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(5, 50)
-    ) | (
-        (F.col("p_brand") == "Brand#17")
-        & F.col("p_size").between(10, 30)
-        & F.col("l_discount").between(0.02, 0.08)
-    )
-    return (
-        joined.filter(cond)
-        .groupBy("p_brand")
-        .agg(
-            F.round(F.sum(rev), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-DISCOUNTED_PART_SQL = """
-SELECT p_brand,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*)                                          AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#2'  AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 5 AND 50)
-   OR (p_brand = 'Brand#17' AND p_size BETWEEN 10 AND 30
-       AND l_discount BETWEEN 0.02 AND 0.08)
-GROUP BY p_brand
-ORDER BY p_brand
-"""
-
-
-def nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: revenue flow between (supplier nation, customer
-    nation) pairs by ship year. Two fact tables meet once — lineitem ⋈
-    orders shuffles on orderkey — while supplier, customer and both
-    nation lookups ride as broadcast dims, so the plan has exactly one
-    wide join regardless of scale (at 100 TB AQE demotes customer to a
-    shuffle join if it outgrows the broadcast threshold; the
-    declarative plan is unchanged)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    supp_nation = nation.select(
-        F.col("n_nationkey").alias("s_nationkey"),
-        F.col("n_name").alias("supp_nation"),
-    )
-    cust_nation = nation.select(
-        F.col("n_nationkey").alias("c_nationkey"),
-        F.col("n_name").alias("cust_nation"),
-    )
-    # Integer cents PER ITEM before the sum: each item's double math is
-    # bit-identical on both engines (same op order), and the integer
-    # sum is then order-independent — immune to the partial-aggregation
-    # summation-order penny drift a round(sum(double)) has at this
-    # group count (4 of 4363 groups flipped a cent without this).
-    rev_cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
-    return (
-        lineitem.join(
-            orders, lineitem.l_orderkey == orders.o_orderkey
-        )
-        .join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(supp_nation), "s_nationkey")
-        .join(F.broadcast(cust_nation), "c_nationkey")
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("ship_year"),
-        )
-        .agg(
-            F.sum(rev_cents).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    )
-
-
-NATION_VOLUME_SQL = """
-SELECT sn.n_name AS supp_nation,
-       cn.n_name AS cust_nation,
-       year(l_shipdate) AS ship_year,
-       sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))::BIGINT
-           AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-GROUP BY 1, 2, 3
-ORDER BY supp_nation, cust_nation, ship_year
-"""
-
-
-def profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (no partsupp table in this corpus, so profit =
-    discounted revenue): per (supplier nation, year) for parts of the
-    PROMO/STANDARD classes. Part + supplier + nation broadcast; the
-    fact scans once, the part-type filter prunes BEFORE the aggregate
-    via the broadcast hash join."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        lineitem.join(
-            F.broadcast(part.filter(F.col("p_type").isin("PROMO", "STANDARD"))),
-            lineitem.l_partkey == part.p_partkey,
-        )
-        .join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
-        .join(
-            F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey
-        )
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("l_shipdate").alias("ship_year"),
-            "p_type",
-        )
-        .agg(
-            F.round(F.sum(rev), 2).alias("profit"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("nation", "ship_year", "p_type")
-    )
-
-
-PROFIT_NATION_SQL = """
-SELECT n_name AS nation,
-       year(l_shipdate) AS ship_year,
-       p_type,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS profit,
-       count(*) AS n_items
-FROM lineitem
-JOIN part     ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-WHERE p_type IN ('PROMO', 'STANDARD')
-GROUP BY 1, 2, 3
-ORDER BY nation, ship_year, p_type
-"""
-
-
-def returned_items_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: revenue lost to returns (l_returnflag = 'R')
-    per customer, top 20. One orderkey shuffle join, customer/nation
-    broadcast, TakeOrdered for the top-k (no global sort)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        lineitem.filter(F.col("l_returnflag") == "R")
-        .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(
-            F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-        )
-        .groupBy("c_custkey", "c_name", F.col("n_name").alias("nation"))
-        .agg(
-            F.round(F.sum(rev), 2).alias("returned_revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("returned_revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-RETURNED_ITEMS_SQL = """
-SELECT c_custkey, c_name, n_name AS nation,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS returned_revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY 1, 2, 3
-ORDER BY returned_revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a threshold
-    (group-HAVING), semi-joined back to their customers — the
-    aggregate-then-join pattern. The HAVING aggregate reuses the
-    orderkey shuffle; the qualifying-order set is small, so it
-    broadcasts into the enrichment join. Top 100 by totalprice."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    big = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 150)
-    )
-    return (
-        orders.join(
-            F.broadcast(big), orders.o_orderkey == big.l_orderkey
-        )
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").alias("order_date"),
-            F.round("o_totalprice", 2).alias("total_price"),
-            F.round("total_qty", 2).alias("total_qty"),
-        )
-        .orderBy(F.desc("total_price"), "o_orderkey")
-        .limit(100)
-    )
-
-
-LARGE_VOLUME_SQL = """
-WITH big AS (
-    SELECT l_orderkey, sum(l_quantity) AS total_qty
-    FROM lineitem
-    GROUP BY 1
-    HAVING sum(l_quantity) > 150
-)
-SELECT c_custkey, c_name, o_orderkey,
-       CAST(o_orderdate AS DATE) AS order_date,
-       round(o_totalprice, 2) AS total_price,
-       round(total_qty, 2) AS total_qty
-FROM orders
-JOIN big      ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY total_price DESC, o_orderkey
-LIMIT 100
-"""
-
-
 # Non-aligned tier bounds (dollars) so the banding demo is the GENERAL
 # case: a tier can span several bands and a band several tiers.
 _PRICE_TIERS = (
@@ -716,12 +420,6 @@ ORDER BY t.tier
 
 QUERIES = {
     "set_operations": set_operations,
-    "nation_volume_shipping": nation_volume_shipping,
-    "profit_by_nation_year": profit_by_nation_year,
-    "returned_items_top_customers": returned_items_top_customers,
-    "large_volume_customers": large_volume_customers,
-    "promo_revenue_by_month": promo_revenue_by_month,
-    "discounted_part_revenue": discounted_part_revenue,
     "rollup_order_totals": rollup_order_totals,
     "grouping_sets_revenue": grouping_sets_revenue,
     "cube_lineitem_stats": cube_lineitem_stats,
@@ -733,12 +431,6 @@ QUERIES = {
 
 ORACLES = {
     "set_operations": SET_OPERATIONS_SQL,
-    "nation_volume_shipping": NATION_VOLUME_SQL,
-    "profit_by_nation_year": PROFIT_NATION_SQL,
-    "returned_items_top_customers": RETURNED_ITEMS_SQL,
-    "large_volume_customers": LARGE_VOLUME_SQL,
-    "promo_revenue_by_month": PROMO_REVENUE_SQL,
-    "discounted_part_revenue": DISCOUNTED_PART_SQL,
     "rollup_order_totals": ROLLUP_SQL,
     "grouping_sets_revenue": GROUPING_SETS_SQL,
     "cube_lineitem_stats": CUBE_SQL,

@@ -18,7 +18,6 @@ from ..sources import load_table
 from ..sources.tables import table_num_rows
 
 _JACCARD_THRESHOLD = 0.5
-_SIMHASH_MAX_HAMMING = 3
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,45 +392,6 @@ ORDER BY t.doc_id
 """
 
 
-def top_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 20 most-repeated k-token spans (by occurrence count, hash
-    tie-break) with their spread across documents — the report a corpus
-    audit reads before choosing what to cut.
-
-    Aggregation shape: count(*) + count_distinct in ONE aggregate makes
-    Catalyst expand every input row (one copy per aggregate mode), which
-    measured 8.2x at the sf0.1→sf1 rehearsal. The two-level form —
-    pre-aggregate by (h, doc_id), then sum/count by h — is
-    expand-free and fully map-side combinable, and brought the scale
-    exponent back in line with the rest of the family (SCALE.md)."""
-    docs = load_table(spark, sf_dir, "documents")
-    wins = _span_windows(docs)
-    per_doc = wins.groupBy("h", "doc_id").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        per_doc.groupBy("h")
-        .agg(
-            F.sum("n").alias("n_occurrences"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-        .filter(F.col("n_docs") >= 2)
-        .orderBy(F.desc("n_occurrences"), F.desc("n_docs"), "h")
-        .limit(20)
-    )
-
-
-TOP_SPANS_SQL = rf"""
-WITH {_SPAN_WINS_SQL}, per_doc AS (
-    SELECT h, doc_id, count(*) AS n FROM wins GROUP BY h, doc_id
-)
-SELECT h, sum(n)::BIGINT AS n_occurrences, count(*) AS n_docs
-FROM per_doc
-GROUP BY h
-HAVING count(*) >= 2
-ORDER BY n_occurrences DESC, n_docs DESC, h
-LIMIT 20
-"""
-
-
 QUERIES = {
     "dedup_exact": dedup_exact,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
@@ -439,7 +399,6 @@ QUERIES = {
     "dedup_simhash": dedup_simhash,
     "dedup_minhash_signatures": dedup_minhash_signatures,
     "duplicate_span_stats": duplicate_span_stats,
-    "top_duplicate_spans": top_duplicate_spans,
 }
 
 ORACLES = {
@@ -449,7 +408,6 @@ ORACLES = {
     "dedup_simhash": SIMHASH_SQL,
     "dedup_minhash_signatures": MINHASH_SIG_SQL,
     "duplicate_span_stats": DUPLICATE_SPAN_SQL,
-    "top_duplicate_spans": TOP_SPANS_SQL,
 }
 
 

@@ -144,58 +144,6 @@ ORDER BY doc_id
 """
 
 
-def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + quality scoring in one proof row (one scan, one
-    projection): whitespace/BPE-ish token counts alongside the composite
-    quality heuristic. The standalone forms stay registered after the
-    driver window for the bench suite."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.token_count(F.col("text")).alias("n_tokens"),
-        F.size(T.regex_tokens(F.col("text"))).alias("n_regex_tokens"),
-        F.length("text").alias("n_chars_computed"),
-        F.round(T.quality_score(F.col("text")), 6).alias("quality"),
-        F.round(T.stopword_ratio(F.col("text")), 6).alias("stopword_ratio"),
-        F.round(T.distinct_token_ratio(F.col("text")), 6).alias("distinct_ratio"),
-    ).orderBy("doc_id")
-
-
-TEXT_METRICS_SQL = rf"""
-WITH feat AS (
-    SELECT doc_id,
-           string_split_regex(trim(text), '\s+')        AS toks,
-           string_split_regex(trim(lower(text)), '\s+') AS ltoks,
-           len(regexp_extract_all(text, '(\w+|[^\w\s])')) AS n_regex_tokens,
-           length(text)                                  AS n_chars,
-           length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct
-    FROM documents
-), ratios AS (
-    SELECT doc_id,
-           len(toks) AS n_tokens,
-           n_regex_tokens,
-           n_chars,
-           len(list_filter(ltoks, t -> list_contains({_ALL_STOPWORDS_SQL}, t)))::DOUBLE
-               / greatest(len(ltoks), 1) AS sw_ratio,
-           len(list_distinct(ltoks))::DOUBLE / greatest(len(ltoks), 1) AS d_ratio,
-           n_punct::DOUBLE / greatest(n_chars, 1) AS p_ratio
-    FROM feat
-)
-SELECT doc_id,
-       n_tokens,
-       n_regex_tokens,
-       n_chars AS n_chars_computed,
-       round(0.4 * least(n_tokens / 50.0, 1.0)
-           + 0.3 * d_ratio
-           + 0.3 * least(sw_ratio * 5, 1.0)
-           - 0.2 * least(p_ratio * 10, 1.0), 6) AS quality,
-       round(sw_ratio, 6) AS stopword_ratio,
-       round(d_ratio, 6)  AS distinct_ratio
-FROM ratios
-ORDER BY doc_id
-"""
-
-
 def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end selection pass a training-data pipeline runs over
     a raw corpus, composed from the already-proven kernels in ONE
@@ -400,7 +348,6 @@ ORDER BY doc_id
 
 
 QUERIES = {
-    "text_metrics": text_metrics,
     "token_stats": token_stats,
     "language_id": language_id,
     "quality_scores": quality_scores,
@@ -410,7 +357,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    "text_metrics": TEXT_METRICS_SQL,
     "token_stats": TOKEN_STATS_SQL,
     "language_id": LANGUAGE_ID_SQL,
     "quality_scores": QUALITY_SQL,

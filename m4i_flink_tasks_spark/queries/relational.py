@@ -229,108 +229,12 @@ ORDER BY o_custkey, rank_in_cust
 """
 
 
-def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: min-per-group then join back (correlated-subquery
-    flattened to an aggregation + join)."""
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    min_bal = supplier.groupBy(
-        F.col("s_nationkey").alias("mk")
-    ).agg(F.min("s_acctbal").alias("min_bal"))
-    return (
-        supplier.join(
-            F.broadcast(min_bal),
-            (supplier.s_nationkey == min_bal.mk)
-            & (supplier.s_acctbal == min_bal.min_bal),
-        )
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .select("n_name", "s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
-        .orderBy("n_name", "s_name")
-    )
-
-
-MIN_COST_SQL = """
-SELECT n_name, s_name, round(s_acctbal, 2) AS s_acctbal
-FROM supplier s
-JOIN (
-    SELECT s_nationkey AS mk, min(s_acctbal) AS min_bal
-    FROM supplier GROUP BY s_nationkey
-) m ON s.s_nationkey = m.mk AND s.s_acctbal = m.min_bal
-JOIN nation ON s.s_nationkey = n_nationkey
-ORDER BY n_name, s_name
-"""
-
-
-def order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: semi-join (EXISTS) + count by group. Date window
-    sits inside the synthetic data's 1995-2001 span so the proof is
-    non-vacuous (a 0-row match can't catch a wrong join)."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1995-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1995-10-01").cast("timestamp"))
-    )
-    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
-    return (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-ORDER_PRIORITY_SQL = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1995-07-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1995-10-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join (NOT EXISTS): customers with no orders since 1999, per
-    nation. Every synthetic customer has at least one all-time order, so
-    the recency predicate keeps the anti-join non-vacuous."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-        .select("o_custkey")
-        .distinct()
-    )
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("n_name")
-    )
-
-
-CUST_NO_ORDERS_SQL = """
-SELECT n_name, count(*) AS n_customers
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '1999-01-01 00:00:00')
-GROUP BY n_name
-ORDER BY n_name
-"""
-
-
 QUERIES = {
     "q1_pricing_summary": q1_pricing_summary,
     "q3_shipping_priority": q3_shipping_priority,
     "q5_region_revenue": q5_region_revenue,
     "q6_forecast_revenue": q6_forecast_revenue,
     "top_orders_per_customer": top_orders_per_customer,
-    "min_cost_supplier": min_cost_supplier,
-    "order_priority_counts": order_priority_counts,
-    "customers_without_orders": customers_without_orders,
 }
 
 ORACLES = {
@@ -339,7 +243,4 @@ ORACLES = {
     "q5_region_revenue": Q5_SQL,
     "q6_forecast_revenue": Q6_SQL,
     "top_orders_per_customer": TOP_ORDERS_SQL,
-    "min_cost_supplier": MIN_COST_SQL,
-    "order_priority_counts": ORDER_PRIORITY_SQL,
-    "customers_without_orders": CUST_NO_ORDERS_SQL,
 }

@@ -53,50 +53,6 @@ ORDER BY window_start_ms, event_type
 """
 
 
-def sliding_window_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding window as hourly buckets + a 3-bucket trailing frame per
-    user — the batch shape of a '3h window sliding 1h'."""
-    events = load_table(spark, sf_dir, "events")
-    hourly = (
-        events.groupBy(
-            F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("bucket_ms"),
-            "user_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("bucket_ms")
-        .rowsBetween(-2, 0)
-    )
-    return (
-        hourly.select(
-            "user_id",
-            "bucket_ms",
-            F.sum("n").over(w).alias("trailing_3bucket_events"),
-        )
-        .orderBy("user_id", "bucket_ms")
-    )
-
-
-SLIDING_SQL = """
-WITH hourly AS (
-    SELECT epoch_ms(date_trunc('hour', ts)) AS bucket_ms,
-           user_id,
-           count(*) AS n
-    FROM events
-    GROUP BY 1, 2
-)
-SELECT user_id,
-       bucket_ms,
-       CAST(sum(n) OVER (PARTITION BY user_id ORDER BY bucket_ms
-                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS trailing_3bucket_events
-FROM hourly
-ORDER BY user_id, bucket_ms
-"""
-
-
 def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-minute inactivity gap) per user —
     gaps-and-islands: new-session flag via lag, session id via running
@@ -154,13 +110,11 @@ ORDER BY user_id, session_seq
 
 QUERIES = {
     "tumbling_window_counts": tumbling_window_counts,
-    "sliding_window_activity": sliding_window_activity,
     "session_windows": session_windows,
 }
 
 ORACLES = {
     "tumbling_window_counts": TUMBLING_SQL,
-    "sliding_window_activity": SLIDING_SQL,
     "session_windows": SESSION_SQL,
 }
 

@@ -56,16 +56,11 @@ SECTION2_FAMILIES: dict[str, tuple[str, ...]] = {
         "stream_get_entity_enrichment",
         "direct_change_classifier",
         "type_hierarchy_ops",
-        "dead_letter_split",
         "stream_vacuum_plan",
     ),
     "P_row_transforms": (
         "row_transform_suite",
         "attribute_flattening",
-        "envelope_validation",
-        "op_type_filter",
-        "doc_id_synthesis",
-        "scalar_row_transforms",
         "diff_event_materialization",
         "direct_change_classifier",
         "orc_interchange_read",
@@ -84,7 +79,6 @@ SECTION2_FAMILIES: dict[str, tuple[str, ...]] = {
         "point_lookup",
         "store_filter_scan",
         "array_membership",
-        "descendant_prefix_insert",
         "multi_field_or",
         "rename_propagation",
         "batched_multiget",
@@ -98,19 +92,14 @@ SECTION2_FAMILIES: dict[str, tuple[str, ...]] = {
         "parent_type_lookup",
         "relationship_classification",
         "breadcrumb_paths",
-        "breadcrumb_materialization",
         "breadcrumb_prefix_ops",
-        "descendant_prefix_insert",
         "breadcrumb_prefix_delete",
         "derived_field_lifecycle",
-        "derived_field_inherit",
-        "derived_field_uninherit",
         "governance_role_update",
         "attribute_field_linkage",
         "rename_propagation",
         "parent_guid_extraction",
         "doc_creation",
-        "attribute_update_application",
         "synchronize_rel_cascades",
         "stream_synchronize_appsearch_docs",
     ),

@@ -99,6 +99,22 @@ def cluster_conf(executors: int = 1000, executor_cores: int = 4) -> dict[str, st
     }
 
 
+def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEM``
+    when set, else a quarter of the host's physical memory (``MemTotal``)
+    rounded up to whole GiB and clamped to [2g, 48g] — 4g on a 16 GB
+    host. The local driver JVM hosts the executors too, and a heap sized
+    past the host's memory gets the JVM OOM-killed mid-run instead of
+    spilling."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    if mem_total_bytes is None:
+        mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    quarter_gib = -(-mem_total_bytes // (4 * 1024**3))
+    return f"{min(48, max(2, quarter_gib))}g"
+
+
 def get_spark(
     app_name: str = "m4i_flink_tasks_spark",
     cpus: int | None = None,
@@ -129,7 +145,7 @@ def get_spark(
         # Arrow for every pandas_udf / applyInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -130,24 +130,11 @@ def _diff_group(
 def determine_change_stream(stream: DataFrame) -> DataFrame:
     """The keyed stateful diff operator (D1-D8 over the event stream).
 
-    API pin: ``applyInPandasWithState`` remains the DEFAULT engine.
-    ``determine_change_stream_tws`` below runs the identical kernel on
-    the newer ``transformWithStateInPandas`` operator (typed state +
-    timers, where Spark investment is going); the equality test in
-    tests/test_streaming_pipelines.py pins the two engines
-    output-identical. The default stays on the legacy API for two
-    reasons: (1) transformWithState requires the RocksDB state-store
-    provider — a deployment-level conf this library should not
-    silently impose (HDFS-backed state is the Spark default and what
-    every other stateful operator here uses). The provider itself is
-    TESTED, not assumed: test_determine_change_under_rocksdb_state_store
-    runs this very operator under RocksDBStateStoreProvider in-container
-    and pins the output identical, so RocksDB is NOT a technical
-    blocker; (2) the tws Python state server needs google.protobuf,
-    absent from this container — the one remaining hard blocker — so
-    the tws equality test is an environment-gated skip exactly like the
-    Kafka connector tests. Flip by passing ``use_tws=True`` to
-    ``run_determine_change`` on a cluster with protobuf installed.
+    Runs on ``applyInPandasWithState`` with the session's state-store
+    provider: HDFS-backed state is the Spark default and what every
+    other stateful operator here uses, and
+    test_determine_change_under_rocksdb_state_store pins the output
+    identical under RocksDBStateStoreProvider.
     """
     return (
         stream.filter(F.col("props").isNotNull())
@@ -158,53 +145,6 @@ def determine_change_stream(stream: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _make_diff_processor():
-    """Build the transformWithStateInPandas processor (import deferred:
-    the stateful_processor module exists on pyspark >= 4.0 only)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class DiffProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            pdf = pd.concat(list(rows), ignore_index=True)
-            prev = self._last.get() if self._last.exists() else None
-            out, new_last = _diff_slice(
-                user_id, pdf, tuple(prev) if prev is not None else None
-            )
-            self._last.update(new_last)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return DiffProcessor()
-
-
-def determine_change_stream_tws(stream: DataFrame) -> DataFrame:
-    """``determine_change_stream`` on ``transformWithStateInPandas``:
-    same filter, same grouping, same ``_diff_slice`` kernel held in a
-    typed ValueState. Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (set by ``run_determine_change`` when
-    ``use_tws=True``)."""
-    return (
-        stream.filter(F.col("props").isNotNull())
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_diff_processor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
         )
     )
 
@@ -424,25 +364,14 @@ def run_determine_change_entities(
     return final
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def run_determine_change(
     spark: SparkSession,
     sf_dir: str,
     workdir: str,
     n_files: int = 4,
     max_files_per_trigger: int | None = 2,
-    use_tws: bool = False,
 ) -> DataFrame:
-    """Run the bounded stream to completion; return all emitted diffs.
-
-    ``use_tws=True`` runs the transformWithStateInPandas engine (and
-    sets the RocksDB state-store provider it requires for the duration
-    of the query); the default runs applyInPandasWithState. Outputs are
-    pinned identical."""
+    """Run the bounded stream to completion; return all emitted diffs."""
     staging = stage_events(
         spark, sf_dir, os.path.join(workdir, "staging_events"), n_files
     )
@@ -454,23 +383,13 @@ def run_determine_change(
     def sink(batch: DataFrame, batch_id: int) -> None:
         store.merge(batch, batch_id=batch_id, insert_only=True)
 
-    operator = determine_change_stream_tws if use_tws else determine_change_stream
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
-    try:
-        replay(
-            operator(events_file_stream(spark, staging, max_files_per_trigger)),
-            sink,
-            os.path.join(workdir, "ckpt_determine_change"),
-        )
-    finally:
-        if use_tws:
-            if old_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, old_provider)
+    replay(
+        determine_change_stream(
+            events_file_stream(spark, staging, max_files_per_trigger)
+        ),
+        sink,
+        os.path.join(workdir, "ckpt_determine_change"),
+    )
 
     final = store.current()
     if final is None:

@@ -73,11 +73,7 @@ from pyspark.sql import functions as F
 from ..functions.hierarchy import supertype_closure_df
 from ..operators.docstore import create_docs
 from ..operators.materialize import materialize
-from ..plans.synchronize_plan import (
-    apply_batch,
-    synchronize_batch,
-    synchronize_batch_to_fixpoint,
-)
+from ..plans.synchronize_plan import apply_batch, synchronize_batch
 from ..schemas import RELATIONSHIP_ATTRIBUTES
 from .replay import replay
 from .sources import events_file_stream, stage_events
@@ -274,19 +270,17 @@ def run_synchronize_appsearch(
     workdir: str,
     n_files: int = 4,
     max_files_per_trigger: int | None = 2,
-    cascade_fixpoint: bool = False,
 ) -> DataFrame:
     """Run the bounded diff-event stream through the G26-G28 dispatcher;
     return the final App Search doc store.
 
-    ``cascade_fixpoint`` selects the SURVEY §7.5 intra-batch cascade
-    mode: False = single pass, same-batch cascades land next batch
-    (default, reference-equivalent); True = loop the dispatcher to
-    fixpoint inside each batch. The driver query's per-user message
-    synthesis never cascades across users, so both modes produce the
-    SAME final store here — the modes differ only for multi-level
-    link chains within one batch (``tests/test_synchronize_plan.py``
-    demonstrates both)."""
+    One dispatcher pass per micro-batch: a same-batch cascade lands in
+    the next batch, as in the reference (SURVEY §7.5). The per-user
+    message synthesis never cascades across users, so looping to a
+    fixpoint (``plans.synchronize_batch_to_fixpoint``) would give the
+    same store here. The sink looks ``synchronize_batch`` up in this
+    module's globals on every batch, so a wrapper installed on the
+    module name (a profiler span) sees each build."""
     closure = supertype_closure_df(spark).localCheckpoint()
     staging = stage_events(
         spark, sf_dir, os.path.join(workdir, "staging_events"), n_files
@@ -304,13 +298,13 @@ def run_synchronize_appsearch(
             )
         )
 
-    dispatch = (
-        synchronize_batch_to_fixpoint if cascade_fixpoint else synchronize_batch
-    )
-
     def sink(batch: DataFrame, batch_id: int) -> None:
         publish_doc_batch(
-            store, batch_entity_messages(batch), batch_id, closure, dispatch
+            store,
+            batch_entity_messages(batch),
+            batch_id,
+            closure,
+            synchronize_batch,
         )
 
     replay(

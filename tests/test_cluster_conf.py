@@ -4,7 +4,7 @@ master so an invalid key/value fails here, not on a real cluster)."""
 
 from __future__ import annotations
 
-from m4i_flink_tasks_spark.session import cluster_conf
+from m4i_flink_tasks_spark.session import cluster_conf, default_driver_memory
 
 
 def test_cluster_conf_is_self_consistent():
@@ -18,6 +18,19 @@ def test_cluster_conf_is_self_consistent():
     # centroids, type dims are all < 1 MB by construction)
     assert 1024**2 < int(conf["spark.sql.autoBroadcastJoinThreshold"]) <= 256 * 1024**2
     assert all(isinstance(v, str) for v in conf.values())
+
+
+def test_default_driver_memory_follows_the_host(monkeypatch):
+    """The local heap is a quarter of the host's memory, rounded up to
+    whole GiB and clamped to [2g, 48g]; ``SPARK_DRIVER_MEM`` overrides
+    it. Pure arithmetic — no JVM starts."""
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "7g")
+    assert default_driver_memory(16 * 10**9) == "7g"
+    monkeypatch.delenv("SPARK_DRIVER_MEM")
+    assert default_driver_memory(16 * 10**9) == "4g"
+    assert default_driver_memory(512 * 1024**2) == "2g"
+    assert default_driver_memory(1024 * 1024**3) == "48g"
+    assert default_driver_memory().endswith("g")
 
 
 def test_cluster_conf_boots_a_session(spark):

@@ -252,3 +252,55 @@ def test_attestation_debt_arithmetic():
             f"recomputed registered={len(registered)} never={len(never)} "
             f"after={len(after_this_round)}"
         )
+
+
+# Extras a COVERAGE.md Proof cell may still list beside a kept row (a
+# declared row or a bench.py HEADLINE/HEAVY member), one reason each.
+# Any other extra there is a second proof of an operator path a kept
+# row already runs: delete the query, or add it here with the path
+# that only it runs.
+_PROOF_KEEP = {
+    "asof_join_orders_events": (
+        "only registered caller of operators/asof.asof_join; the kept D8 "
+        "rows use a lag window"
+    ),
+    "breadcrumb_paths": "only caller of functions.hierarchy.breadcrumb_paths_df",
+    "dedup_minhash_signatures": (
+        "only caller of the expression forms operators/dedup.shingle_hashes "
+        "and minhash_signature; dedup_ngram_jaccard runs the Arrow kernel"
+    ),
+    "duplicate_span_stats": "the batch reference tests/test_span_state.py checks the stream against",
+    "lm_head_sample": (
+        "only row that gates the LM scorer with operators/text.scrambled_hash; "
+        "ngram_lm_perplexity never calls it"
+    ),
+    "stream_hdr_quantiles": "streaming twin; its kept row is batch",
+    "stream_ivfpq_probe": "streaming twin; its kept row is batch",
+    "stream_windowed_aggregation": "streaming twin; its kept rows are batch",
+}
+
+
+def test_no_redundant_proof_beside_a_kept_row():
+    """Each operator path keeps one proof: no Proof cell in COVERAGE.md's
+    §2 and extension tables lists an extra next to a kept row unless
+    the extra is on ``_PROOF_KEEP``."""
+    import bench
+    from m4i_flink_tasks_spark.queries import DRIVER_QUERIES
+
+    kept = set(DRIVER_QUERIES) | set(bench.HEADLINE) | set(bench.HEAVY)
+    extras = set(extra_queries()) - kept
+    assert set(_PROOF_KEEP) <= extras, "keep-list entries must be live extras"
+    text = open(_DOC).read()
+    redundant = []
+    for line in text[text.index("## §2.1"):].splitlines():
+        if not line.startswith("|") or line.startswith("|---"):
+            continue
+        proof = line.strip().strip("|").split("|")[-1]
+        names = re.findall(r"`([a-z][a-z0-9_]+)`", proof)
+        if kept & set(names):
+            redundant += [
+                n for n in names if n in extras and n not in _PROOF_KEEP
+            ]
+    assert not redundant, (
+        f"extras listed beside a kept row in a Proof cell: {sorted(redundant)}"
+    )

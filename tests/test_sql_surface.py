@@ -33,8 +33,6 @@ PORTABLE = (
     "q1_pricing_summary",
     "q5_region_revenue",
     "q6_forecast_revenue",
-    "q4_priority_exists",
-    "q12_shipclass_priority",
     "rollup_order_totals",
     "cube_lineitem_stats",
     "top_orders_per_customer",

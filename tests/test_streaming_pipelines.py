@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from m4i_flink_tasks_spark.queries.pipelines import (
@@ -166,19 +165,14 @@ def test_stream_dedup_drops_redelivery_before_the_store(spark, sf_dir):
 
 
 def test_determine_change_under_rocksdb_state_store(spark, sf_dir):
-    """The RocksDB state-store provider half of the tws pin, tested
-    rather than assumed (r4 verdict #6): run the DEFAULT engine
-    (applyInPandasWithState) with
-    spark.sql.streaming.stateStore.providerClass=RocksDBStateStoreProvider
-    — stock PySpark, no extra deps — and pin its output identical to
-    the HDFS-backed default provider. Result: RocksDB works fine in
-    this container, so the ONLY remaining blocker for flipping the tws
-    pin is the absent google.protobuf (the tws Python state server's
-    wire format), which the gated test below documents."""
+    """The state-store provider ``session.cluster_conf`` prescribes
+    for production (RocksDBStateStoreProvider) must give job 3's keyed
+    diff the same output as the HDFS-backed default provider — stock
+    PySpark, no extra deps."""
     import tempfile
 
+    from m4i_flink_tasks_spark.session import cluster_conf
     from m4i_flink_tasks_spark.streaming.determine_change import (
-        _ROCKSDB_PROVIDER,
         run_determine_change,
     )
 
@@ -191,8 +185,10 @@ def test_determine_change_under_rocksdb_state_store(spark, sf_dir):
         )
     )
     provider_key = "spark.sql.streaming.stateStore.providerClass"
+    rocksdb_provider = cluster_conf()[provider_key]
+    assert rocksdb_provider.endswith("RocksDBStateStoreProvider")
     old = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
+    spark.conf.set(provider_key, rocksdb_provider)
     try:
         rocksdb = sorted(
             map(
@@ -208,48 +204,3 @@ def test_determine_change_under_rocksdb_state_store(spark, sf_dir):
         else:
             spark.conf.set(provider_key, old)
     assert rocksdb == default and default
-
-
-def test_determine_change_tws_engine_matches_legacy(spark, sf_dir):
-    """The transformWithStateInPandas engine (typed ValueState, RocksDB
-    provider) must emit byte-identical diffs to the default
-    applyInPandasWithState engine — same _diff_slice kernel, two state
-    APIs. This is the migration proof the API pin in
-    determine_change_stream's docstring points at.
-
-    Gated like the Kafka connector tests: the TWS Python state server
-    speaks protobuf, and this container has no google.protobuf — the
-    operator crashes at worker init with STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE. The skip disappears on any environment
-    with protobuf installed (a standard Spark-4 cluster dependency)."""
-    import tempfile
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf",
-    )
-
-    from m4i_flink_tasks_spark.streaming.determine_change import (
-        run_determine_change,
-    )
-
-    legacy = sorted(
-        map(
-            tuple,
-            run_determine_change(
-                spark, sf_dir, tempfile.mkdtemp(prefix="m4i_dc_legacy_")
-            ).collect(),
-        )
-    )
-    tws = sorted(
-        map(
-            tuple,
-            run_determine_change(
-                spark,
-                sf_dir,
-                tempfile.mkdtemp(prefix="m4i_dc_tws_"),
-                use_tws=True,
-            ).collect(),
-        )
-    )
-    assert tws == legacy and legacy
