@@ -195,18 +195,15 @@ def sampled_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         % _SAMPLE_DENOM
         == 0
     )
-    # explode_outer + null-filter on the GENERATED column: the inner
-    # Generate's size()>0 guard re-evaluates the whole tokenize
-    # expression per row in a separate Filter operator (the r10 explode
-    # sweep's mechanism — this was its one deferred site). split()
-    # elements are never NULL, so dropping the outer form's NULL token
-    # row restores the inner relation exactly; ''-tokens (from
-    # empty-string text) are preserved by both forms.
-    tok = F.explode_outer(T.tokens(F.lower(F.col("text")))).alias("token")
+    # Inner explode: Catalyst infers no size()>0 guard for a Generate
+    # whose input is an expression rather than a column, so the
+    # explode_outer + null-filter rewrite of the r10 explode sweep buys
+    # nothing here; it only adds a Filter above each Generate
+    # (plans/r11/sampled_token_frequency_{before,after}.txt).
+    tok = F.explode(T.tokens(F.lower(F.col("text")))).alias("token")
     sampled = (
         docs.filter(gate)
         .select(tok)
-        .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("sampled_count"))
         .withColumn(
@@ -217,7 +214,6 @@ def sampled_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = (
         docs.select(tok)
-        .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_count"))
     )

@@ -281,7 +281,7 @@ def run_backfill_then_stream(
         os.path.join(workdir, "q1_view_kappa"),
         key_cols=["l_returnflag", "l_linestatus"],
     )
-    if store.current() is None:
+    if not store.has_state():
         # Batch bootstrap: ONE aggregate over history, one merge. The
         # negative batch_id keeps the stream's ids (0, 1, ...) strictly
         # above it so replay dedup stays monotone.

@@ -207,6 +207,16 @@ class BucketedParquetUpsertStore:
     one segment. Upserts/deletes restore it by compacting; callers of
     ``insert_only`` must not re-insert existing keys (replays are
     already screened by ``batch_id``).
+
+    Snapshot reuse: ``current()`` keeps the frame it last built and
+    returns it again while ``_CURRENT`` is unchanged (same inode, mtime
+    and state), the way Delta's log keeps one ``Snapshot`` until a new
+    commit lands — so repeat reads of one version list no files. It is
+    safe because committed version dirs are immutable, ``vacuum`` keeps
+    every dir the current bucket map references, and uncommitted
+    version dirs never appear in ``_CURRENT``. ``read_version`` and the
+    bucket-restricted reads stay uncached: ``vacuum`` can delete old
+    versions, and single-bucket reads rarely repeat.
     """
 
     def __init__(
@@ -226,6 +236,8 @@ class BucketedParquetUpsertStore:
         # max_segments appends, keeping reads O(n_buckets * max_segments)
         # files while appends stay O(batch).
         self.max_segments = max_segments
+        # (pointer key, frame) of the last ``current()`` — see there.
+        self._snapshot: tuple[tuple, DataFrame | None] | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- pointer bookkeeping -------------------------------------------
@@ -287,11 +299,38 @@ class BucketedParquetUpsertStore:
 
     # -- public API ----------------------------------------------------
     def current(self) -> DataFrame | None:
-        """Snapshot of the store, or None before the first merge."""
+        """Snapshot of the store, or None before the first merge.
+
+        Repeat calls on an unchanged committed version return the frame
+        built by the first one, so they list no segment files again.
+        The frame is reused only while ``_CURRENT`` has the same inode,
+        mtime and parsed state it had when the frame was built. The file
+        is stat'ed before it is read, and every commit replaces it
+        through ``_replace_text``'s ``os.replace``, so a new commit (or a
+        root rebuilt in place) always misses; a commit racing this read
+        can only cause a miss, never a stale hit. Reuse is safe because
+
+        - committed version directories are immutable: the one segment
+          writer only renames buckets into a version above the pointer;
+        - ``vacuum`` never deletes a directory the current bucket map
+          references, and a hit means the cached map IS the current one;
+        - uncommitted ``vNNNNNN`` directories (the only ones a replay
+          deletes and rewrites) never appear in ``_CURRENT``.
+        """
+        try:
+            st = os.stat(self._pointer)
+        except FileNotFoundError:
+            return None
         state = self._state()
         if state is None:
             return None
-        return self._state_df(state)
+        key = (st.st_ino, st.st_mtime_ns, state)
+        cached = self._snapshot  # one read: the (key, frame) pair stays whole
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        df = self._state_df(state)
+        self._snapshot = (key, df)
+        return df
 
     def _state_df(self, state: dict) -> DataFrame | None:
         paths = [

@@ -291,7 +291,7 @@ def run_synchronize_appsearch(
     store = BucketedParquetUpsertStore(
         spark, os.path.join(workdir, "appsearch_docs"), key_cols=["guid"]
     )
-    if store.current() is None:
+    if not store.has_state():
         store.merge(
             seed_domain_docs(spark, closure).unionByName(
                 seed_entity_docs(spark, sf_dir, closure)

@@ -248,9 +248,41 @@ def test_random_op_sequences_match_dict_model(spark):
                 )
                 for k in keys:
                     model.pop(k, None)
-        cur = store.current()
-        got = {} if cur is None else dict(map(tuple, cur.collect()))
-        assert got == model, f"trial {trial} (n_buckets={n_buckets}) diverged"
+            # Same store object every step: a stale reused snapshot fails.
+            cur = store.current()
+            got = {} if cur is None else dict(map(tuple, cur.collect()))
+            assert got == model, (
+                f"trial {trial} (n_buckets={n_buckets}) diverged at step {step}"
+            )
+
+
+def test_unchanged_store_reuses_its_snapshot(spark):
+    """A repeat ``current()`` of an unchanged version runs no Spark job:
+    48 segment dirs are above Spark's parallel-listing threshold, so
+    building a new file index would list them in a job. A commit must
+    still be seen by the next read of the same object."""
+    root = tempfile.mkdtemp(prefix="m4i_bstore_reuse_")
+    store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=16)
+    for i in range(3):
+        store.merge(
+            _mk(spark, [(i * 1000 + j, f"a{i}_{j}") for j in range(200)]),
+            batch_id=i,
+            insert_only=True,
+        )
+    state = store._state()
+    assert sum(len(v) for v in state["buckets"].values()) == 48
+
+    first = store.current()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.nextJobId()
+    second = store.current()
+    assert scheduler.nextJobId() == jobs and second is first
+    assert second.count() == 600
+
+    store.merge(_mk(spark, [(5, "x5"), (9999, "new")]), batch_id=3)
+    got = dict(map(tuple, store.current().collect()))
+    assert len(got) == 601 and got[5] == "x5" and got[9999] == "new"
+    assert first.count() == 600
 
 
 def test_delete_emptied_bucket_leaves_pointer_map(spark):
@@ -522,6 +554,10 @@ def test_every_write_path_survives_a_crash_and_replay(spark, monkeypatch):
             real(path, text)
 
         for step, op in enumerate(ops(a, b)):
+            # Warm each object's snapshot, so the replay is checked
+            # through a store that already holds one.
+            a.current()
+            b.current()
             with monkeypatch.context() as m:
                 m.setattr(store_mod, "_replace_text", crashing)
                 with pytest.raises(RuntimeError, match="injected crash"):
