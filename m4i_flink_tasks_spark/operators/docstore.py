@@ -5,8 +5,9 @@ The reference mutates its document store doc-at-a-time inside
 ``SynchronizeAppsearch.map`` (synchronize_app_search.py), issuing point
 reads per touched doc. Every kernel below is the same semantics as a
 whole-batch DataFrame transform: point lookups become joins, descendant
-walks become one ``array_contains`` scan, and repeated updates collapse
-last-writer-wins before a single keyed merge (D9).
+walks become exploded-edge hash joins (``synchronize_plan``), and
+repeated updates collapse last-writer-wins before a single keyed merge
+(D9). Each kernel sets its columns in one projection of its input row.
 
 Deliberate deviations from reference bugs (SURVEY §7.4), each noted at
 the operator:
@@ -26,6 +27,10 @@ reference-equivalent choice documented in SURVEY §7.5.
 """
 
 from __future__ import annotations
+
+import operator
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -107,47 +112,31 @@ def define_breadcrumb(children: DataFrame, parent_docs: DataFrame) -> DataFrame:
     per-child point read, :471)."""
     parents = parent_docs.select(
         F.col("guid").alias("parentguid"),
-        F.col("breadcrumbguid").alias("_p_bcg"),
-        F.col("breadcrumbname").alias("_p_bcn"),
-        F.col("breadcrumbtype").alias("_p_bct"),
+        *[F.col(c).alias(f"_p_{c}") for c in _BREADCRUMB_COLS],
         F.col("name").alias("_p_name"),
         F.col("typename").alias("_p_type"),
     )
-    joined = children.join(F.broadcast(parents), "parentguid", "left")
-    ext = lambda base, add: F.concat(  # noqa: E731
-        F.coalesce(base, F.array()), F.array(add)
-    )
+    # breadcrumb array -> the parent value appended to the parent's array
+    tail = dict(zip(_BREADCRUMB_COLS, ("parentguid", "_p_name", "_p_type")))
+    ext = {
+        c: F.when(
+            F.col("_p_name").isNotNull(),
+            F.concat(F.coalesce(F.col(f"_p_{c}"), F.array()), F.array(F.col(v))),
+        ).otherwise(F.col(c))
+        for c, v in tail.items()
+    }
     return (
-        joined.withColumn(
-            "breadcrumbguid",
-            F.when(
-                F.col("_p_name").isNotNull(),
-                ext(F.col("_p_bcg"), F.col("parentguid")),
-            ).otherwise(F.col("breadcrumbguid")),
-        )
-        .withColumn(
-            "breadcrumbname",
-            F.when(
-                F.col("_p_name").isNotNull(), ext(F.col("_p_bcn"), F.col("_p_name"))
-            ).otherwise(F.col("breadcrumbname")),
-        )
-        .withColumn(
-            "breadcrumbtype",
-            F.when(
-                F.col("_p_name").isNotNull(), ext(F.col("_p_bct"), F.col("_p_type"))
-            ).otherwise(F.col("breadcrumbtype")),
-        )
-        .drop("_p_bcg", "_p_bcn", "_p_bct", "_p_name", "_p_type")
+        children.join(F.broadcast(parents), "parentguid", "left")
+        .withColumns(ext)
+        .drop(*[f"_p_{c}" for c in _BREADCRUMB_COLS], "_p_name", "_p_type")
     )
 
 
 def clear_breadcrumb(docs: DataFrame) -> DataFrame:
     """G11 delete_breadcrumb (synchronize_app_search.py:325-331): all three
     arrays -> [] and parentguid -> NULL (G10 delete_parent_guid :319-322)."""
-    out = docs.withColumn("parentguid", F.lit(None).cast("string"))
-    for c in _BREADCRUMB_COLS:
-        out = out.withColumn(c, F.array().cast("array<string>"))
-    return out
+    cleared = dict.fromkeys(_BREADCRUMB_COLS, F.array().cast("array<string>"))
+    return docs.withColumns({"parentguid": F.lit(None).cast("string"), **cleared})
 
 
 def descendants_of(docs: DataFrame, ancestor_guid: Column | str) -> DataFrame:
@@ -167,12 +156,8 @@ def insert_breadcrumb_prefix(
     pre = lambda c, v: F.when(  # noqa: E731
         present, F.col(c)
     ).otherwise(F.concat(F.array(v), F.coalesce(F.col(c), F.array())))
-    return (
-        descendants.withColumn("_new_bcg", pre("breadcrumbguid", guid))
-        .withColumn("breadcrumbname", pre("breadcrumbname", name))
-        .withColumn("breadcrumbtype", pre("breadcrumbtype", typename))
-        .withColumn("breadcrumbguid", F.col("_new_bcg"))
-        .drop("_new_bcg")
+    return descendants.withColumns(
+        {c: pre(c, v) for c, v in zip(_BREADCRUMB_COLS, (guid, name, typename))}
     )
 
 
@@ -187,12 +172,7 @@ def delete_breadcrumb_prefix(descendants: DataFrame, guid: Column) -> DataFrame:
         pos > 0,
         F.slice(F.col(c), pos + 1, F.greatest(F.size(F.col(c)) - pos, F.lit(0))),
     ).otherwise(F.col(c))
-    out = descendants
-    for c in ("breadcrumbname", "breadcrumbtype", "breadcrumbguid"):
-        out = out.withColumn(f"_new_{c}", cut(c))
-    for c in ("breadcrumbname", "breadcrumbtype", "breadcrumbguid"):
-        out = out.withColumn(c, F.col(f"_new_{c}")).drop(f"_new_{c}")
-    return out
+    return descendants.withColumns({c: cut(c) for c in _BREADCRUMB_COLS})
 
 
 # --------------------------------------------------------------------------
@@ -211,59 +191,48 @@ DERIVED_SCALAR_FIELDS: tuple[str, ...] = (
     "deriveddomainleadguid",
 )
 
+# the fields G15 copies down a parent link and G16 takes back
+_INHERITED_FIELDS = (
+    *DERIVED_SCALAR_FIELDS,
+    *(c for pair in DERIVED_GUID_NAME_FIELDS for c in pair),
+)
+
+
+def _rewrite_from_parent(
+    children: DataFrame, parent_docs: DataFrame, rewrite: Callable[[str], Column]
+) -> DataFrame:
+    """Set each ``_INHERITED_FIELDS`` column ``c`` of ``children`` to
+    ``rewrite(c)``, which reads the parent doc's value as ``_p_<c>`` —
+    one broadcast left join on ``parentguid`` for the whole batch."""
+    parents = parent_docs.select(
+        F.col("guid").alias("parentguid"),
+        *[F.col(c).alias(f"_p_{c}") for c in _INHERITED_FIELDS],
+    )
+    return (
+        children.join(F.broadcast(parents), "parentguid", "left")
+        .withColumns({c: rewrite(c) for c in _INHERITED_FIELDS})
+        .drop(*[f"_p_{c}" for c in _INHERITED_FIELDS])
+    )
+
 
 def inherit_derived_fields(children: DataFrame, parent_docs: DataFrame) -> DataFrame:
     """G15 update_derived_entiies (synchronize_app_search.py:284-289): on a
     new parent link, copy the parent's non-null derived fields down."""
-    sel = [F.col("guid").alias("parentguid")]
-    sel += [F.col(c).alias(f"_p_{c}") for c in DERIVED_SCALAR_FIELDS]
-    sel += [
-        F.col(c).alias(f"_p_{c}")
-        for pair in DERIVED_GUID_NAME_FIELDS
-        for c in pair
-    ]
-    joined = children.join(F.broadcast(parent_docs.select(*sel)), "parentguid", "left")
-    out = joined
-    for c in DERIVED_SCALAR_FIELDS:
-        out = out.withColumn(c, F.coalesce(F.col(f"_p_{c}"), F.col(c))).drop(f"_p_{c}")
-    for gf, nf in DERIVED_GUID_NAME_FIELDS:
-        for c in (gf, nf):
-            out = out.withColumn(c, F.coalesce(F.col(f"_p_{c}"), F.col(c))).drop(
-                f"_p_{c}"
-            )
-    return out
+    return _rewrite_from_parent(
+        children, parent_docs, lambda c: F.coalesce(F.col(f"_p_{c}"), F.col(c))
+    )
 
 
 def uninherit_derived_fields(children: DataFrame, parent_docs: DataFrame) -> DataFrame:
     """G16 delete_derived_entities (synchronize_app_search.py:273-281): on
     parent-link delete, null out child fields that equal the parent's
     (arrays -> [], scalars -> NULL)."""
-    sel = [F.col("guid").alias("parentguid")]
-    sel += [F.col(c).alias(f"_p_{c}") for c in DERIVED_SCALAR_FIELDS]
-    sel += [
-        F.col(c).alias(f"_p_{c}")
-        for pair in DERIVED_GUID_NAME_FIELDS
-        for c in pair
-    ]
-    joined = children.join(F.broadcast(parent_docs.select(*sel)), "parentguid", "left")
-    out = joined
-    for c in DERIVED_SCALAR_FIELDS:
-        out = out.withColumn(
-            c,
-            F.when(F.col(c).eqNullSafe(F.col(f"_p_{c}")), F.lit(None)).otherwise(
-                F.col(c)
-            ),
-        ).drop(f"_p_{c}")
-    for gf, nf in DERIVED_GUID_NAME_FIELDS:
-        for c in (gf, nf):
-            out = out.withColumn(
-                c,
-                F.when(
-                    F.col(c).eqNullSafe(F.col(f"_p_{c}")),
-                    F.array().cast("array<string>"),
-                ).otherwise(F.col(c)),
-            ).drop(f"_p_{c}")
-    return out
+    def cleared(c: str) -> Column:
+        empty = F.array().cast("array<string>")
+        unset = F.lit(None) if c in DERIVED_SCALAR_FIELDS else empty
+        return F.when(F.col(c).eqNullSafe(F.col(f"_p_{c}")), unset).otherwise(F.col(c))
+
+    return _rewrite_from_parent(children, parent_docs, cleared)
 
 
 def propagate_derived_fields(
@@ -291,13 +260,12 @@ def propagate_derived_fields(
     joined = descendants.join(
         F.broadcast(source_docs.select(*sel)), ancestor_col, "left"
     )
-    out = joined
-    for c in derived_cols:
-        out = out.withColumn(
-            c,
-            F.when(F.col("_s_matched"), F.col(f"_s_{c}")).otherwise(F.col(c)),
-        ).drop(f"_s_{c}")
-    return out.drop("_s_matched")
+    return joined.withColumns(
+        {
+            c: F.when(F.col("_s_matched"), F.col(f"_s_{c}")).otherwise(F.col(c))
+            for c in derived_cols
+        }
+    ).drop("_s_matched", *[f"_s_{c}" for c in derived_cols])
 
 
 def apply_attribute_field_linkage(docs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -336,37 +304,53 @@ def apply_attribute_field_linkage(docs: DataFrame, pairs: DataFrame) -> DataFram
         )
     )
     linked = F.col("linked")
-    attr_updates = enriched.select(
-        F.col("attribute_guid").alias("guid"),
-        F.lit("attr").alias("_side"),
-        F.when(linked, F.array(F.col("field_guid"))).alias("_u_derivedfieldguid"),
-        F.when(linked, F.col("_field_name")).alias("_u_derivedfield"),
-        F.lit(None).cast("array<string>").alias("_u_deriveddataattributeguid"),
-        F.lit(None).cast("string").alias("_u_deriveddataattribute"),
+
+    def side(name: str, guid: str, other_guid: str, other_name: str) -> DataFrame:
+        return enriched.select(
+            F.col(guid).alias("guid"),
+            F.lit(name).alias("_side"),
+            F.when(linked, F.array(F.col(other_guid))).alias("_u_guids"),
+            F.when(linked, F.col(other_name)).alias("_u_name"),
+        )
+
+    updates = side("attr", "attribute_guid", "field_guid", "_field_name").unionByName(
+        side("field", "field_guid", "attribute_guid", "_attr_name")
     )
-    field_updates = enriched.select(
-        F.col("field_guid").alias("guid"),
-        F.lit("field").alias("_side"),
-        F.lit(None).cast("array<string>").alias("_u_derivedfieldguid"),
-        F.lit(None).cast("string").alias("_u_derivedfield"),
-        F.when(linked, F.array(F.col("attribute_guid"))).alias(
-            "_u_deriveddataattributeguid"
-        ),
-        F.when(linked, F.col("_attr_name")).alias("_u_deriveddataattribute"),
+    # doc field -> (the pair side that writes it, its update column)
+    writes = {
+        "derivedfieldguid": ("attr", "_u_guids"),
+        "derivedfield": ("attr", "_u_name"),
+        "deriveddataattributeguid": ("field", "_u_guids"),
+        "deriveddataattribute": ("field", "_u_name"),
+    }
+    return (
+        docs.join(F.broadcast(updates), "guid", "left")
+        .withColumns(
+            {
+                c: F.when(F.col("_side") == s, F.col(u)).otherwise(F.col(c))
+                for c, (s, u) in writes.items()
+            }
+        )
+        .drop("_side", "_u_guids", "_u_name")
     )
-    updates = attr_updates.unionByName(field_updates)
-    out = docs.join(F.broadcast(updates), "guid", "left")
-    for c in ("derivedfieldguid", "derivedfield"):
-        out = out.withColumn(
-            c,
-            F.when(F.col("_side") == "attr", F.col(f"_u_{c}")).otherwise(F.col(c)),
-        ).drop(f"_u_{c}")
-    for c in ("deriveddataattributeguid", "deriveddataattribute"):
-        out = out.withColumn(
-            c,
-            F.when(F.col("_side") == "field", F.col(f"_u_{c}")).otherwise(F.col(c)),
-        ).drop(f"_u_{c}")
-    return out.drop("_side")
+
+
+# G17 role key -> (derived field it sets, whether it applies to domains)
+_ROLE_FIELDS = {
+    "domainLead": ("deriveddomainleadguid", True),
+    "businessOwner": ("deriveddataownerguid", False),
+    "dataSteward": ("deriveddatastewardguid", False),
+}
+
+
+def _role_hits(role_key: Column) -> dict[str, Column]:
+    """Derived role field -> whether ``role_key`` names it on this doc:
+    domainLead only on a domain, owner/steward only on anything else."""
+    is_domain = F.col("typename") == "m4i_data_domain"
+    return {
+        field: (is_domain if on_domain else ~is_domain) & (role_key == key)
+        for key, (field, on_domain) in _ROLE_FIELDS.items()
+    }
 
 
 def apply_governance_role(
@@ -378,35 +362,19 @@ def apply_governance_role(
     set owner/steward; all add to derivedpersonguid. Deviation: the
     reference indexes a list with a string key (:309-314) — intended
     semantics implemented."""
-    is_domain = F.col("typename") == "m4i_data_domain"
-    return (
-        docs.withColumn(
-            "deriveddomainleadguid",
-            F.when(
-                is_domain & (role_key == "domainLead"), person_guid
-            ).otherwise(F.col("deriveddomainleadguid")),
-        )
-        .withColumn(
-            "deriveddataownerguid",
-            F.when(
-                ~is_domain & (role_key == "businessOwner"), person_guid
-            ).otherwise(F.col("deriveddataownerguid")),
-        )
-        .withColumn(
-            "deriveddatastewardguid",
-            F.when(
-                ~is_domain & (role_key == "dataSteward"), person_guid
-            ).otherwise(F.col("deriveddatastewardguid")),
-        )
-        .withColumn(
-            "derivedpersonguid",
-            F.array_sort(
+    return docs.withColumns(
+        {
+            **{
+                c: F.when(hit, person_guid).otherwise(F.col(c))
+                for c, hit in _role_hits(role_key).items()
+            },
+            "derivedpersonguid": F.array_sort(
                 F.array_union(
                     F.coalesce(F.col("derivedpersonguid"), F.array()),
                     F.array(person_guid),
                 )
             ),
-        )
+        }
     )
 
 
@@ -422,43 +390,28 @@ def remove_governance_role(
     stale person survives forever; the intended un-set semantics are
     implemented instead, guarded on the current value so an unrelated
     person in the same role is not clobbered."""
-    is_domain = F.col("typename") == "m4i_data_domain"
-
-    def cleared(col_name: str, cond: Column) -> Column:
-        hit = cond & F.col(col_name).eqNullSafe(person_guid)
-        return F.when(hit, F.lit(None).cast("string")).otherwise(F.col(col_name))
-
-    return (
-        docs.withColumn(
-            "deriveddomainleadguid",
-            cleared("deriveddomainleadguid", is_domain & (role_key == "domainLead")),
-        )
-        .withColumn(
-            "deriveddataownerguid",
-            cleared("deriveddataownerguid", ~is_domain & (role_key == "businessOwner")),
-        )
-        .withColumn(
-            "deriveddatastewardguid",
-            cleared(
-                "deriveddatastewardguid", ~is_domain & (role_key == "dataSteward")
-            ),
-        )
-        .withColumn(
-            # the person leaves derivedpersonguid only when no OTHER role
-            # still names them (these columns already reflect the clear
-            # above — withColumn chains see the updated values)
-            "derivedpersonguid",
-            F.when(
-                F.col("deriveddomainleadguid").eqNullSafe(person_guid)
-                | F.col("deriveddataownerguid").eqNullSafe(person_guid)
-                | F.col("deriveddatastewardguid").eqNullSafe(person_guid),
-                F.col("derivedpersonguid"),
+    roles = {
+        c: F.when(
+            hit & F.col(c).eqNullSafe(person_guid), F.lit(None).cast("string")
+        ).otherwise(F.col(c))
+        for c, hit in _role_hits(role_key).items()
+    }
+    # the person leaves derivedpersonguid only when no OTHER role still
+    # names them after the clear: test the cleared expressions themselves
+    still_named = reduce(
+        operator.or_, [r.eqNullSafe(person_guid) for r in roles.values()]
+    )
+    return docs.withColumns(
+        {
+            **roles,
+            "derivedpersonguid": F.when(
+                still_named, F.col("derivedpersonguid")
             ).otherwise(
                 F.array_remove(
                     F.coalesce(F.col("derivedpersonguid"), F.array()), person_guid
                 )
             ),
-        )
+        }
     )
 
 
@@ -493,20 +446,19 @@ def rename_in_derived_fields(
     name-array) derived pair, rewrite the name at the renamed guid's
     index. The reference's 104-line 8-way type dispatch collapses into a
     loop over the field-pair mapping table."""
-    out = docs
-    for gf, nf in DERIVED_GUID_NAME_FIELDS:
-        out = out.withColumn(
-            nf,
-            F.when(
+    return docs.withColumns(
+        {
+            nf: F.when(
                 F.array_contains(F.col(gf), guid),
                 F.zip_with(
                     F.col(gf),
                     F.col(nf),
                     lambda g, n: F.when(g == guid, new_name).otherwise(n),
                 ),
-            ).otherwise(F.col(nf)),
-        )
-    return out
+            ).otherwise(F.col(nf))
+            for gf, nf in DERIVED_GUID_NAME_FIELDS
+        }
+    )
 
 
 # --------------------------------------------------------------------------
@@ -552,7 +504,10 @@ def create_docs(messages: DataFrame, type_closure: DataFrame) -> DataFrame:
         )
     )
     attrs = F.col("new_value.attributes")  # NULL map -> NULL items, as intended
-    doc = enriched.select(
+    empty = F.array().cast("array<string>")
+    no_guids = F.lit(None).cast("array<string>")
+    no_name = F.lit(None).cast("string")
+    return enriched.select(
         F.col("guid").alias("id"),
         F.col("guid"),
         F.col("qualified_name").alias("referenceablequalifiedname"),
@@ -573,26 +528,18 @@ def create_docs(messages: DataFrame, type_closure: DataFrame) -> DataFrame:
         extract_parent_guid(
             F.col("new_value.relationship_attributes"), F.col("type_name")
         ).alias("parentguid"),
+        *[empty.alias(c) for c in _BREADCRUMB_COLS],
+        *[no_name.alias(c) for c in DERIVED_SCALAR_FIELDS],
+        empty.alias("derivedpersonguid"),
+        *[empty.alias(c) for pair in DERIVED_GUID_NAME_FIELDS for c in pair],
+        # linkage fields start unset — NULL is the kernel's unlinked state
+        # (apply_attribute_field_linkage writes NULL on G19 unlink)
+        no_guids.alias("derivedfieldguid"),
+        no_name.alias("derivedfield"),
+        no_guids.alias("deriveddataattributeguid"),
+        no_name.alias("deriveddataattribute"),
+        *[F.lit(0.0).alias(c) for c in DQ_SCORE_FIELDS],
     )
-    empty = F.array().cast("array<string>")
-    for c in _BREADCRUMB_COLS:
-        doc = doc.withColumn(c, empty)
-    for c in DERIVED_SCALAR_FIELDS:
-        doc = doc.withColumn(c, F.lit(None).cast("string"))
-    doc = doc.withColumn("derivedpersonguid", empty)
-    for gf, nf in DERIVED_GUID_NAME_FIELDS:
-        doc = doc.withColumn(gf, empty).withColumn(nf, empty)
-    # linkage fields start unset — NULL is the kernel's unlinked state
-    # (apply_attribute_field_linkage writes NULL on G19 unlink)
-    doc = (
-        doc.withColumn("derivedfieldguid", F.lit(None).cast("array<string>"))
-        .withColumn("derivedfield", F.lit(None).cast("string"))
-        .withColumn("deriveddataattributeguid", F.lit(None).cast("array<string>"))
-        .withColumn("deriveddataattribute", F.lit(None).cast("string"))
-    )
-    for c in DQ_SCORE_FIELDS:
-        doc = doc.withColumn(c, F.lit(0.0))
-    return doc
 
 
 def apply_attribute_updates(docs: DataFrame, updates: DataFrame) -> DataFrame:
@@ -605,28 +552,23 @@ def apply_attribute_updates(docs: DataFrame, updates: DataFrame) -> DataFrame:
     Deviation: exact key matching (the reference's ``name in
     deleted_attribute`` string-membership bug, :550) and qualified-name
     fallback on name delete (:553) kept as intended semantics."""
-    u = updates.select(
-        F.col("guid"),
-        F.col("name").alias("_u_name"),
-        F.col("definition").alias("_u_definition"),
-        F.col("email").alias("_u_email"),
-        F.col("name_deleted").alias("_u_name_deleted"),
-    )
-    joined = docs.join(F.broadcast(u), "guid", "left")
+    fields = ("name", "definition", "email", "name_deleted")
+    u = updates.select("guid", *[F.col(c).alias(f"_u_{c}") for c in fields])
     return (
-        joined.withColumn(
-            "name",
-            F.when(F.coalesce(F.col("_u_name_deleted"), F.lit(False)),
-                   F.col("referenceablequalifiedname"))
-            .when(F.col("_u_name").isNotNull(), F.col("_u_name"))
-            .otherwise(F.col("name")),
+        docs.join(F.broadcast(u), "guid", "left")
+        .withColumns(
+            {
+                "name": F.when(
+                    F.coalesce(F.col("_u_name_deleted"), F.lit(False)),
+                    F.col("referenceablequalifiedname"),
+                )
+                .when(F.col("_u_name").isNotNull(), F.col("_u_name"))
+                .otherwise(F.col("name")),
+                "definition": F.coalesce(F.col("_u_definition"), F.col("definition")),
+                "email": F.coalesce(F.col("_u_email"), F.col("email")),
+            }
         )
-        .withColumn(
-            "definition",
-            F.coalesce(F.col("_u_definition"), F.col("definition")),
-        )
-        .withColumn("email", F.coalesce(F.col("_u_email"), F.col("email")))
-        .drop("_u_name", "_u_definition", "_u_email", "_u_name_deleted")
+        .drop(*[f"_u_{c}" for c in fields])
     )
 
 

@@ -40,12 +40,16 @@ insert, G19 unset on delete, :387-397/:453-460), and governance roles
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.docstore import (
     apply_attribute_field_linkage,
     apply_attribute_updates,
+    apply_governance_role,
     classify_relationship,
     clear_breadcrumb,
     collapse_last_writer_wins,
@@ -64,10 +68,12 @@ from ..operators.docstore import (
 from ..schemas import APP_SEARCH_DOC, UPDATE_ATTRIBUTES
 
 _DOC_COLS = [f.name for f in APP_SEARCH_DOC.fields]
+# apply_governance_role / remove_governance_role: (docs, role_key, person_guid)
+_RoleKernel = Callable[[DataFrame, Column, Column], DataFrame]
 
 
 def _as_doc_rows(df: DataFrame, priority: int) -> DataFrame:
-    return df.select(*_DOC_COLS).withColumn("_prio", F.lit(priority))
+    return df.select(*_DOC_COLS, F.lit(priority).alias("_prio"))
 
 
 def _exploded_relationships(msgs: DataFrame, field: str) -> DataFrame:
@@ -93,20 +99,19 @@ def _exploded_relationships(msgs: DataFrame, field: str) -> DataFrame:
             F.col("t.type_name").alias("target_type"),
         )
     )
-    return exploded.withColumn(
-        "cls",
-        classify_relationship(
-            F.col("rel_key"), F.col("self_type"), F.col("target_type")
-        ),
-    ).withColumn(
-        "pc",
-        orient_parent_child(
-            F.col("rel_key"),
-            F.col("self_guid"),
-            F.col("self_type"),
-            F.col("target_guid"),
-            F.col("target_type"),
-        ),
+    return exploded.withColumns(
+        {
+            "cls": classify_relationship(
+                F.col("rel_key"), F.col("self_type"), F.col("target_type")
+            ),
+            "pc": orient_parent_child(
+                F.col("rel_key"),
+                F.col("self_guid"),
+                F.col("self_type"),
+                F.col("target_guid"),
+                F.col("target_type"),
+            ),
+        }
     )
 
 
@@ -134,6 +139,16 @@ def _breadcrumb_referrers(
     )
     matched = edges.join(F.broadcast(keyed), key_col)
     return docs.join(matched, "guid")
+
+
+def _relinked_children(docs: DataFrame, links: DataFrame) -> DataFrame:
+    """The docs named by ``links.child_guid``, with ``parentguid`` set to
+    the link's ``new_parentguid``."""
+    return (
+        docs.join(F.broadcast(links), docs["guid"] == links["child_guid"])
+        .withColumn("parentguid", F.col("new_parentguid"))
+        .drop("child_guid", "new_parentguid")
+    )
 
 
 def _parent_child_links(edges: DataFrame) -> DataFrame:
@@ -217,13 +232,7 @@ def synchronize_batch(
         "inserted_relationships",
     )
     links = _parent_child_links(rel_ins)
-    children = (
-        docs.join(F.broadcast(links), docs["guid"] == links["child_guid"])
-        .drop("child_guid")
-        .withColumn("parentguid", F.col("new_parentguid"))
-        .drop("new_parentguid")
-    )
-    children = define_breadcrumb(children, docs)
+    children = define_breadcrumb(_relinked_children(docs, links), docs)
     children = inherit_derived_fields(children, docs)
     branches.append(_as_doc_rows(children, 3))
 
@@ -246,34 +255,32 @@ def synchronize_batch(
     # derived fields (update_derived_entity_fields_of_child_entities,
     # synchronize_app_search.py:370-371), sourced from the child doc as
     # updated by this batch (post-G15 inherit).
-    desc_ins = propagate_derived_fields(
-        desc_ins.withColumn("ancestorguid", F.col("child_guid")), children
-    )
+    desc_ins = propagate_derived_fields(desc_ins, children, "child_guid")
     branches.append(_as_doc_rows(desc_ins, 4))
 
+    def governance(rels: DataFrame, kernel: _RoleKernel, prio: int) -> list[DataFrame]:
+        """G17 ``kernel`` on the self docs of ``rels``' governance-role
+        edges (``prio``), then G14: their descendants get the updated
+        doc's derived fields (``prio + 1``, synchronize_app_search.py
+        :378-380 on insert, :441-450 on delete)."""
+        roles = rels.filter(F.col("cls.governance_role")).select(
+            F.col("self_guid").alias("guid"),
+            F.col("rel_key").alias("role_key"),
+            F.col("target_guid").alias("person_guid"),
+        )
+        updated = kernel(
+            docs.join(F.broadcast(roles), "guid"),
+            F.col("role_key"),
+            F.col("person_guid"),
+        )
+        desc = _breadcrumb_referrers(
+            docs, roles.select(F.col("guid").alias("_anc")).distinct(), "_anc"
+        )
+        desc = propagate_derived_fields(desc, updated, "_anc")
+        return [_as_doc_rows(updated, prio), _as_doc_rows(desc, prio + 1)]
+
     # Governance roles (G8 -> G17).
-    gov = rel_ins.filter(F.col("cls.governance_role")).select(
-        F.col("self_guid").alias("guid"),
-        F.col("rel_key").alias("role_key"),
-        F.col("target_guid").alias("person_guid"),
-    )
-    gov_docs = docs.join(F.broadcast(gov), "guid")
-    from ..operators.docstore import apply_governance_role
-
-    gov_applied = apply_governance_role(
-        gov_docs, F.col("role_key"), F.col("person_guid")
-    )
-    branches.append(_as_doc_rows(gov_applied, 5))
-
-    # Gov descendants get the updated doc's derived fields (G14,
-    # synchronize_app_search.py:378-380).
-    desc_gov = _breadcrumb_referrers(
-        docs, gov.select(F.col("guid").alias("_anc")).distinct(), "_anc"
-    )
-    desc_gov = propagate_derived_fields(
-        desc_gov.withColumn("ancestorguid", F.col("_anc")), gov_applied
-    )
-    branches.append(_as_doc_rows(desc_gov, 6))
+    branches += governance(rel_ins, apply_governance_role, 5)
 
     # Attribute↔field linkage (G18 define on insert, G19 delete on
     # unlink — handle_inserted_relationships :387-397 /
@@ -319,39 +326,14 @@ def synchronize_batch(
         _as_doc_rows(apply_attribute_field_linkage(af_touched, af_pairs), 9)
     )
 
-    # Governance-role removal (G17 delete path,
-    # handle_deleted_relationships :441-450; intended un-set semantics —
-    # see remove_governance_role) + G14 propagation to descendants.
-    gov_del = rel_del.filter(F.col("cls.governance_role")).select(
-        F.col("self_guid").alias("guid"),
-        F.col("rel_key").alias("role_key"),
-        F.col("target_guid").alias("person_guid"),
-    )
-    gov_del_docs = docs.join(F.broadcast(gov_del), "guid")
-    gov_removed = remove_governance_role(
-        gov_del_docs, F.col("role_key"), F.col("person_guid")
-    )
-    branches.append(_as_doc_rows(gov_removed, 10))
-    desc_gov_del = _breadcrumb_referrers(
-        docs, gov_del.select(F.col("guid").alias("_anc")).distinct(), "_anc"
-    )
-    desc_gov_del = propagate_derived_fields(
-        desc_gov_del.withColumn("ancestorguid", F.col("_anc")), gov_removed
-    )
-    branches.append(_as_doc_rows(desc_gov_del, 11))
+    # Governance-role removal (G17 delete path; intended un-set
+    # semantics — see remove_governance_role).
+    branches += governance(rel_del, remove_governance_role, 10)
 
     # --- deleted relationships (G27, the path the reference's missing
     # awaits never ran) -----------------------------------------------------
     del_links = _parent_child_links(rel_del)
-    orphaned = docs.join(
-        F.broadcast(del_links), docs["guid"] == del_links["child_guid"]
-    ).drop("child_guid")
-    orphaned = uninherit_derived_fields(
-        orphaned.withColumn("parentguid", F.col("new_parentguid")).drop(
-            "new_parentguid"
-        ),
-        docs,
-    )
+    orphaned = uninherit_derived_fields(_relinked_children(docs, del_links), docs)
     orphaned = clear_breadcrumb(orphaned)
     branches.append(_as_doc_rows(orphaned, 7))
 
@@ -362,15 +344,11 @@ def synchronize_batch(
         docs, del_links.select("child_guid", "new_parentguid"), "child_guid"
     )
     desc_del = delete_breadcrumb_prefix(desc_del, F.col("new_parentguid"))
-    desc_del = propagate_derived_fields(
-        desc_del.withColumn("ancestorguid", F.col("child_guid")), orphaned
-    )
+    desc_del = propagate_derived_fields(desc_del, orphaned, "child_guid")
     branches.append(_as_doc_rows(desc_del, 8))
 
     # --- D9 collapse ------------------------------------------------------
-    all_updates = branches[0]
-    for b in branches[1:]:
-        all_updates = all_updates.unionByName(b)
+    all_updates = reduce(DataFrame.unionByName, branches)
     upserts = collapse_last_writer_wins(all_updates, "_prio")
     # drop docs that are also deleted in this batch
     upserts = upserts.join(F.broadcast(delete_keys), "guid", "left_anti")

@@ -26,6 +26,7 @@ from m4i_flink_tasks_spark.operators.docstore import (
     inherit_derived_fields,
     insert_breadcrumb_prefix,
     orient_parent_child,
+    remove_governance_role,
     rename_in_breadcrumbs,
     rename_in_derived_fields,
     uninherit_derived_fields,
@@ -166,6 +167,11 @@ def test_insert_prefix_touches_exactly_descendants(spark):
         out, F.lit("root1"), F.lit("Root"), F.lit("m4i_system")
     ).collect()
     assert all(r.breadcrumbguid.count("root1") == 1 for r in again)
+    # ... and the name/type arrays, which test presence on the input
+    # breadcrumbguid, are left alone as well
+    assert {r.guid: (r.breadcrumbname, r.breadcrumbtype) for r in again} == {
+        r.guid: (r.breadcrumbname, r.breadcrumbtype) for r in rows.values()
+    }
 
 
 def test_delete_prefix_drops_ancestor_and_everything_before(spark):
@@ -233,6 +239,33 @@ def test_apply_governance_role_dispatch(spark):
     rows = {r.guid: r for r in owned.collect()}
     assert rows["e1"].deriveddataownerguid == "p2"
     assert rows["d1"].deriveddataownerguid is None
+
+
+def test_remove_governance_role_keeps_a_person_another_role_names(spark):
+    # p1 is owner and steward: removing one role must keep p1 in
+    # derivedpersonguid, which reads the roles as cleared by this call.
+    docs = make_docs(
+        spark,
+        dict(guid="e1", typename="m4i_data_entity",
+             deriveddataownerguid="p1", deriveddatastewardguid="p1",
+             derivedpersonguid=["p1"]),
+    )
+
+    def remove(frame, role, person):
+        out = remove_governance_role(frame, F.lit(role), F.lit(person))
+        row = out.collect()[0]
+        return out, (
+            row.deriveddataownerguid, row.deriveddatastewardguid,
+            row.derivedpersonguid,
+        )
+
+    owner_gone, got = remove(docs, "businessOwner", "p1")
+    assert got == (None, "p1", ["p1"])
+    _, got = remove(owner_gone, "dataSteward", "p1")
+    assert got == (None, None, [])
+    # a person the role does not name: nothing changes
+    _, got = remove(docs, "businessOwner", "p2")
+    assert got == ("p1", "p1", ["p1"])
 
 
 # -- G20-G21 rename propagation --------------------------------------------

@@ -2,13 +2,16 @@
 ``replay.py`` starts streaming queries and only ``staging.py`` spaces
 staged-file mtimes. Every pipeline calls those, so a new twin cannot
 grow its own readStream/writeStream or staging block back. Likewise
-the bucketed store keeps ONE segment writer."""
+the bucketed store keeps ONE segment writer, and job 4's doc kernels
+set their columns in one projection each."""
 
 from __future__ import annotations
 
 import ast
 import os
 
+import m4i_flink_tasks_spark.operators.docstore as docstore
+import m4i_flink_tasks_spark.plans.synchronize_plan as synchronize_plan
 import m4i_flink_tasks_spark.streaming as streaming
 
 # ``sources.py`` holds the real Kafka writer, which is not a replay.
@@ -108,3 +111,44 @@ def test_bucketed_store_has_one_segment_writer():
         f"parquet writers {sorted(writers)}, os.rename callers "
         f"{sorted(renamers)}: the store must keep one segment writer"
     )
+
+
+_SET_COLUMNS = {"withColumn", "withColumns"}
+_LOOPS = (ast.For, ast.While, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _sets_columns(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in _SET_COLUMNS
+    )
+
+
+def test_doc_kernels_set_columns_in_one_projection():
+    """Job 4's kernels (``docstore``) and dispatcher (``synchronize_plan``)
+    rewrite a doc in one ``withColumns``/``select`` per step: no
+    ``withColumn``/``withColumns`` inside a loop or comprehension, and
+    none chained straight onto another. A column-at-a-time chain adds
+    one plan node per column and lets a result depend on the order its
+    columns are set in."""
+    found = []
+    for module in (docstore, synchronize_plan):
+        path = module.__file__
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        name = os.path.basename(path)
+
+        def visit(node: ast.AST, in_loop: bool) -> None:
+            for child in ast.iter_child_nodes(node):
+                if _sets_columns(child):
+                    if in_loop:
+                        found.append(f"{name}:{child.lineno} sets a column in a loop")
+                    if _sets_columns(child.func.value):
+                        found.append(
+                            f"{name}:{child.lineno} chains onto another withColumn"
+                        )
+                visit(child, in_loop or isinstance(child, _LOOPS))
+
+        visit(tree, False)
+    assert not found, "\n".join(found)
