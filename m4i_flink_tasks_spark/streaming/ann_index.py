@@ -1,13 +1,16 @@
 """Streaming ANN index maintenance: the LSH-bucketed similarity index
-kept up to date from an embedding stream, probed without a corpus scan.
+kept up to date from an embedding stream, probed by LSH bucket.
 
 Batch ANN (operators/similarity.py) computes sign-bit buckets on the
 fly; at scale the bucket assignment IS the index, so it should be
 maintained once at ingest and probed by bucket forever after. Each
 micro-batch assigns buckets map-side and merges (bucket, vec_id,
-embedding) rows into the keyed store; a probe reads ONLY the store
-buckets holding the query's LSH bucket (``current_for_keys`` — the
-Delta file-pruning analogue) and runs exact cosine on that sliver.
+embedding) rows into the keyed store; a probe reads the index through
+``current_for_keys`` and runs exact cosine on the query's LSH bucket
+only. A small index is served whole from driver memory; above
+``store._LOCAL_SNAPSHOT_MAX_BYTES`` the read touches ONLY the store
+buckets holding the query's LSH bucket (the Delta file-pruning
+analogue).
 
 The probe result is pinned EQUAL to the batch ``lsh_bucketed_topk``
 over the same corpus — the index is a materialization of the very
@@ -116,10 +119,12 @@ def probe_topk(
 ) -> DataFrame:
     """Top-k by exact cosine WITHIN the query's LSH bucket. The query
     VECTOR arrives with the request (as in any vector-search API); its
-    bucket is computed with the same expression the index used, and the
-    read touches only the store buckets holding that key
-    (``current_for_keys``) — no corpus scan. Same output shape (and
-    pinned same answer) as the batch ``lsh_bucketed_topk``."""
+    bucket is computed with the same expression the index used, and
+    cosine runs only on that bucket's vectors. The read
+    (``current_for_keys``) serves a small index whole from driver
+    memory and, above ``store._LOCAL_SNAPSHOT_MAX_BYTES``, touches only
+    the store buckets holding that key. Same output shape (and pinned
+    same answer) as the batch ``lsh_bucketed_topk``."""
     from ..operators.local_frame import local_frame
 
     qrow = local_frame(

@@ -10,7 +10,9 @@ as literal dimension frames via bounded collects (|cells| and m x k
 rows). Each arriving vector is assigned to its cell, residual-encoded
 map-side against the broadcast codebook, and merged into a store
 BUCKETED BY CELL — so a probe reads ONLY the probed cells' buckets
-(``current_for_keys``), never the index. The merge combine unions and
+(``current_for_keys``), never the index (an index under
+``store._LOCAL_SNAPSHOT_MAX_BYTES`` is read whole, once per committed
+version, from driver memory instead). The merge combine unions and
 dedups by (label, vec_id), the ``ann_index`` idempotency pattern,
 because a cell key holds many vectors.
 

@@ -149,13 +149,15 @@ def run_stream_distinct_sketch(
 
     final = store.current()
     assert final is not None
-    kth = F.element_at("sketch", k)
+    # A sketch with fewer than k hashes (a partial stream) has no k-th
+    # hash: NULL estimate, as the oracle's max(CASE WHEN rn = k ...).
+    kth = F.try_element_at("sketch", F.lit(k))
     return final.select(
         "priority",
         F.lit(k).alias("k"),
         F.size("sketch").alias("sketch_size"),
         kth.alias("kth_hash"),
-        F.expr(f"({k - 1} * {T.HASH_MOD}L) div element_at(sketch, {k})").alias(
+        F.expr(f"({k - 1} * {T.HASH_MOD}L) div try_element_at(sketch, {k})").alias(
             "est_distinct"
         ),
     )

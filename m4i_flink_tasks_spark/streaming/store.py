@@ -42,6 +42,56 @@ from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# A committed version whose segment files total at most this many bytes
+# is served from driver memory by ``current()``: pyarrow reads it once
+# and ``createDataFrame`` turns the rows into an Arrow-backed
+# ``LocalRelation`` (no file scan; filters or limits over it run no Spark
+# job). The bound caps what one snapshot pulls into the driver, so the
+# driver never holds O(store) at scale. It must also keep the Arrow
+# stream under Spark's 48 MB ``spark.sql.execution.arrow.localRelationThreshold``
+# (above it ``createDataFrame`` plans an RDD scan instead). The repo's
+# stores decode to 0.06-3.1x their parquet size in Arrow (the 2.3 MB
+# ``stream_duplicate_spans`` state of bench.py's sf0.1 run: 2.9x), so
+# 4 MiB of files comes to about 13 MB. A store whose rows still come
+# out too large for a ``LocalRelation`` keeps the file scan
+# (``isLocal()``).
+_LOCAL_SNAPSHOT_MAX_BYTES = 4 << 20
+
+# Column types whose pyarrow read equals Spark's parquet read (checked
+# per type by tests/test_store_bucketed.py); a store schema with any
+# other type keeps the file scan.
+_LOCAL_ATOMIC_TYPES = (
+    T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
+    T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _locally_readable(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _locally_readable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _locally_readable(dt.keyType) and _locally_readable(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return all(_locally_readable(f.dataType) for f in dt.fields)
+    return type(dt) in _LOCAL_ATOMIC_TYPES
+
+
+def _as_nullable(node):
+    """Spark's ``StructType.asNullable`` on a schema's JSON form: a
+    parquet scan reports every field, array element and map value as
+    nullable, whatever the recorded schema says."""
+    if isinstance(node, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _as_nullable(v)
+            for k, v in node.items()
+        }
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    return node
 
 
 def _replace_text(path: str, text: str) -> None:
@@ -211,12 +261,19 @@ class BucketedParquetUpsertStore:
     Snapshot reuse: ``current()`` keeps the frame it last built and
     returns it again while ``_CURRENT`` is unchanged (same inode, mtime
     and state), the way Delta's log keeps one ``Snapshot`` until a new
-    commit lands — so repeat reads of one version list no files. It is
-    safe because committed version dirs are immutable, ``vacuum`` keeps
-    every dir the current bucket map references, and uncommitted
-    version dirs never appear in ``_CURRENT``. ``read_version`` and the
-    bucket-restricted reads stay uncached: ``vacuum`` can delete old
-    versions, and single-bucket reads rarely repeat.
+    commit lands. For a small store (segment files of at most
+    ``_LOCAL_SNAPSHOT_MAX_BYTES``) that frame holds the DATA: the
+    segments are read once with pyarrow into an Arrow-backed
+    ``LocalRelation``, so point reads over it scan no files and mostly
+    run no Spark job, and ``current_for_keys`` returns it whole. A
+    larger store's frame is a file index over its segments, so repeat
+    reads list no files. Either is safe because committed version dirs
+    are immutable, ``vacuum`` keeps every dir the current bucket map
+    references, and uncommitted version dirs never appear in
+    ``_CURRENT``. Merges, ``delete``, compaction, ``read_version`` and
+    ``current_for_buckets`` read the files through Spark, uncached:
+    ``vacuum`` can delete old versions, and single-bucket reads rarely
+    repeat.
     """
 
     def __init__(
@@ -236,8 +293,9 @@ class BucketedParquetUpsertStore:
         # max_segments appends, keeping reads O(n_buckets * max_segments)
         # files while appends stay O(batch).
         self.max_segments = max_segments
-        # (pointer key, frame) of the last ``current()`` — see there.
-        self._snapshot: tuple[tuple, DataFrame | None] | None = None
+        # (pointer key, frame, frame holds the rows in driver memory) of
+        # the last snapshot built — see ``current()``.
+        self._snapshot: tuple[tuple, DataFrame | None, bool] | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- pointer bookkeeping -------------------------------------------
@@ -301,8 +359,25 @@ class BucketedParquetUpsertStore:
     def current(self) -> DataFrame | None:
         """Snapshot of the store, or None before the first merge.
 
-        Repeat calls on an unchanged committed version return the frame
-        built by the first one, so they list no segment files again.
+        The first call on a committed version builds the frame; repeat
+        calls return it. When the version's segment files total at most
+        ``_LOCAL_SNAPSHOT_MAX_BYTES`` (and its recorded schema has only
+        types pyarrow reads exactly as Spark does), the frame holds the
+        rows themselves: one pyarrow read of exactly the segments the
+        ``_CURRENT`` read lists, clipped to the recorded schema, handed
+        to ``createDataFrame`` as an Arrow-backed ``LocalRelation``. A
+        filter, limit or projection over it runs in the driver with no
+        Spark job. Otherwise the frame is a Spark file scan of those
+        segments, and a repeat call lists no segment files again.
+
+        Catalyst folds a projection or filter straight over a
+        ``LocalRelation`` by evaluating it on every row, before column
+        pruning or filter pushdown. So an ANSI-raising expression
+        (``element_at`` past the end, an overflowing cast) raises over
+        the local frame even in a column a later ``count`` never reads,
+        or on a row a later filter drops, where the file scan skips it:
+        guard such expressions with ``try_*`` or ``when``.
+
         The frame is reused only while ``_CURRENT`` has the same inode,
         mtime and parsed state it had when the frame was built. The file
         is stat'ed before it is read, and every commit replaces it
@@ -317,30 +392,97 @@ class BucketedParquetUpsertStore:
         - uncommitted ``vNNNNNN`` directories (the only ones a replay
           deletes and rewrites) never appear in ``_CURRENT``.
         """
+        key = self._pointer_key()
+        return None if key is None else self._snapshot_for(key, whole=True)[0]
+
+    def _pointer_key(self) -> tuple | None:
+        """``(inode, mtime_ns, state)`` of ``_CURRENT`` (stat'ed before
+        it is read), or None before the first commit."""
         try:
             st = os.stat(self._pointer)
         except FileNotFoundError:
             return None
         state = self._state()
-        if state is None:
-            return None
-        key = (st.st_ino, st.st_mtime_ns, state)
-        cached = self._snapshot  # one read: the (key, frame) pair stays whole
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        df = self._state_df(state)
-        self._snapshot = (key, df)
-        return df
+        return None if state is None else (st.st_ino, st.st_mtime_ns, state)
 
-    def _state_df(self, state: dict) -> DataFrame | None:
-        paths = [
+    def _snapshot_for(self, key: tuple, whole: bool) -> tuple[DataFrame | None, bool]:
+        """``(frame, frame holds the rows in driver memory)`` for pointer
+        ``key``. The first call on a committed version decides whether it
+        is served from driver memory, and the cache keeps that decision.
+        A store over the bound gets its file-scan frame only once a
+        caller asks for the ``whole`` store (``current_for_keys`` reads
+        touched buckets instead)."""
+        cached = self._snapshot  # one read: the (key, frame, local) triple stays whole
+        if cached is None or cached[0] != key:
+            cached = (key, *self._local_df(key[2]))
+        if whole and cached[1] is None:
+            cached = (key, self._state_df(key[2]), False)
+        self._snapshot = cached
+        return cached[1], cached[2]
+
+    def _local_df(self, state: dict) -> tuple[DataFrame | None, bool]:
+        """``(frame, True)`` when the committed rows are served from
+        driver memory: read with pyarrow into an Arrow-backed
+        ``LocalRelation``. ``(None, False)`` when they are not: no
+        recorded schema, a type outside ``_LOCAL_ATOMIC_TYPES``, no
+        segments, or segment files over ``_LOCAL_SNAPSHOT_MAX_BYTES``
+        (the size walk stops at the bound, so a large store stats only
+        a few segment dirs), or rows that decode too large for a
+        ``LocalRelation``."""
+        schema_json = state.get("schema")
+        if schema_json is None:
+            return None, False
+        schema = T.StructType.fromJson(_as_nullable(json.loads(schema_json)))
+        if not _locally_readable(schema):
+            return None, False
+        files, size = [], 0
+        for path in self._segment_paths(state):
+            for entry in os.scandir(path):
+                if entry.name.endswith(".parquet"):  # not Spark's .crc files
+                    size += entry.stat().st_size
+                    if size > _LOCAL_SNAPSHOT_MAX_BYTES:
+                        return None, False
+                    files.append(entry.path)
+        if not files:
+            return None, False
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # TimestampType maps to tz-aware UTC micros, so createDataFrame
+        # does not re-localize Spark's UTC-normalized INT96 values.
+        target = to_arrow_schema(schema)
+        tables = []
+        for path in files:
+            with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+                present = set(pf.schema_arrow.names)
+                # Clip to the recorded schema: merge_many's padding columns
+                # of sibling stores are never read, and a column this
+                # segment predates reads as nulls, as in Spark's scan.
+                t = pf.read(columns=[f.name for f in target if f.name in present])
+            tables.append(pa.Table.from_arrays(
+                [
+                    t.column(f.name).cast(f.type) if f.name in present
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in target
+                ],
+                schema=target,
+            ))
+        df = self.spark.createDataFrame(pa.concat_tables(tables), schema)
+        # Over spark.sql.execution.arrow.localRelationThreshold the frame
+        # is an RDD scan, not a LocalRelation: keep the file scan then.
+        return (df, True) if df.isLocal() else (None, False)
+
+    def _segment_paths(self, state: dict) -> list[str]:
+        return [
             self._bucket_path(v, int(b))
             for b, versions in state["buckets"].items()
             for v in versions
         ]
-        if not paths:
-            return None
-        return self._read_segments(state, paths)
+
+    def _state_df(self, state: dict) -> DataFrame | None:
+        paths = self._segment_paths(state)
+        return self._read_segments(state, paths) if paths else None
 
     def _read_segments(self, state: dict, paths: list[str]) -> DataFrame:
         """Read segment dirs, clipped to the store's recorded logical
@@ -350,9 +492,7 @@ class BucketedParquetUpsertStore:
         schema_json = state.get("schema")
         reader = self.spark.read
         if schema_json is not None:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema_json)))
         return reader.parquet(*paths)
 
     # -- time travel (the Delta DESCRIBE HISTORY / VERSION AS OF /
@@ -427,17 +567,23 @@ class BucketedParquetUpsertStore:
         return dropped
 
     def current_for_keys(self, keys: DataFrame) -> DataFrame | None:
-        """Snapshot restricted to the buckets containing ``keys``'
-        key-column values — the read plans only O(touched buckets)
-        parquet paths instead of the whole store, the point-lookup
-        analogue of Delta file pruning. Rows of OTHER keys sharing
-        those buckets are still present; callers filter/join as needed.
+        """Snapshot holding at least the rows of ``keys``' key-column
+        values; rows of OTHER keys are present too, so callers
+        filter/join as needed. A small store (at most
+        ``_LOCAL_SNAPSHOT_MAX_BYTES`` of segment files) is served whole
+        from driver memory (see ``current()``), without computing the
+        buckets. A larger store's read plans only the parquet paths of
+        the buckets containing ``keys``, the point-lookup analogue of
+        Delta file pruning.
         """
-        state = self._state()
-        if state is None:
+        key = self._pointer_key()
+        if key is None:
             return None
+        df, local = self._snapshot_for(key, whole=False)
+        if local:
+            return df
         touched = self._touched_buckets(keys.select(*self.key_cols))
-        return self._touched_current(state, touched)
+        return self._touched_current(key[2], touched)
 
     def has_state(self) -> bool:
         """True once a first merge has committed — lets callers skip

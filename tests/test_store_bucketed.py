@@ -18,6 +18,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from m4i_flink_tasks_spark.streaming import store as store_mod
 from m4i_flink_tasks_spark.streaming.store import (
     BucketedParquetUpsertStore,
     ParquetUpsertStore,
@@ -188,10 +189,12 @@ def test_touch_keys_widens_bucket_set_for_combine_deletes(spark):
     assert len(got) == 30  # 32 seeded - 2 deleted (key 3 updated in place)
 
 
-def test_current_for_keys_plans_only_touched_bucket_files(spark):
+def test_current_for_keys_plans_only_touched_bucket_files(spark, monkeypatch):
     """The pruned snapshot read must plan ONLY the parquet files of
     buckets containing the requested keys (df.inputFiles() is the
-    planned scan set) while still returning those buckets' full rows."""
+    planned scan set) while still returning those buckets' full rows.
+    A bound of 0 bytes keeps this small store on the file-scan path."""
+    monkeypatch.setattr(store_mod, "_LOCAL_SNAPSHOT_MAX_BYTES", 0)
     root = tempfile.mkdtemp(prefix="m4i_bstore_prune_")
     store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=8)
     store.merge(_mk(spark, [(i, f"v{i}") for i in range(64)]))
@@ -256,11 +259,13 @@ def test_random_op_sequences_match_dict_model(spark):
             )
 
 
-def test_unchanged_store_reuses_its_snapshot(spark):
+def test_unchanged_store_reuses_its_snapshot(spark, monkeypatch):
     """A repeat ``current()`` of an unchanged version runs no Spark job:
     48 segment dirs are above Spark's parallel-listing threshold, so
     building a new file index would list them in a job. A commit must
-    still be seen by the next read of the same object."""
+    still be seen by the next read of the same object. A bound of 0
+    bytes keeps this small store on the file-scan path."""
+    monkeypatch.setattr(store_mod, "_LOCAL_SNAPSHOT_MAX_BYTES", 0)
     root = tempfile.mkdtemp(prefix="m4i_bstore_reuse_")
     store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=16)
     for i in range(3):
@@ -283,6 +288,162 @@ def test_unchanged_store_reuses_its_snapshot(spark):
     got = dict(map(tuple, store.current().collect()))
     assert len(got) == 601 and got[5] == "x5" and got[9999] == "new"
     assert first.count() == 600
+
+
+def _canon(v):
+    """A collected value as a sortable, exactly comparable tuple tree
+    (floats by repr, so -0.0 and 0.0 differ)."""
+    if isinstance(v, tuple):  # Row
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, dict):
+        return ("map", tuple(sorted((k, _canon(x)) for k, x in v.items())))
+    if isinstance(v, list):
+        return ("list", tuple(_canon(x) for x in v))
+    return (type(v).__name__, repr(v))
+
+
+def test_local_snapshot_matches_file_scan_for_every_store_type(spark):
+    """The driver-memory snapshot ``current()`` serves for a small store
+    returns the same rows and schema as the Spark file scan of the same
+    segments: for every column type the local path accepts, with nulls,
+    through ``merge_many`` segments that physically carry a sibling
+    store's all-null padding columns, and for a column only the newer
+    segments have (older ones read it as null). Built under a non-UTC
+    session time zone too: timestamps must not be re-localized."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("bin", T.BinaryType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("i8", T.ByteType()),
+        T.StructField("i16", T.ShortType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(18, 4)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("crumbs", T.ArrayType(T.StringType())),
+        T.StructField("vec", T.ArrayType(T.DoubleType())),
+        T.StructField("s", T.StructType([
+            T.StructField("x", T.LongType()),
+            T.StructField("at", T.TimestampType()),
+            T.StructField("tags", T.ArrayType(T.StringType())),
+        ])),
+    ])
+    ts = dt.datetime(2024, 3, 10, 2, 30, 5, 123456)
+    full = (
+        b"\x00\xff", True, -128, 32767, -7, 2**53 + 1, 1.5, -0.0,
+        Decimal("12.3400"), dt.date(1999, 12, 31), ts, ts,
+        {"x": "1", "y": None}, ["p", None], [0.1, float("nan")],
+        (7, ts, ["t"]),
+    )
+    rows = [(f"k{n}",) + full for n in range(6)]
+    rows += [(f"n{n}",) + (None,) * len(full) for n in range(6)]
+    rows += [("e0", b"", False, 0, 0, 0, 0, 0.0, 0.0, Decimal("0"),
+              dt.date(1970, 1, 1), dt.datetime(1970, 1, 1),
+              dt.datetime(1970, 1, 1), {}, [], [], (None, None, []))]
+    batch = spark.createDataFrame(rows, schema)
+
+    root = tempfile.mkdtemp(prefix="m4i_bstore_local_")
+    store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=4)
+    sibling = BucketedParquetUpsertStore(
+        spark, tempfile.mkdtemp(prefix="m4i_bstore_sib_"), ["sk"], n_buckets=2
+    )
+    merge_many([
+        {"store": store, "batch": batch, "batch_id": 0},
+        {"store": sibling, "batch_id": 0, "batch": spark.createDataFrame(
+            [("s1", 1.0, {"a": 1})], "sk string, sv double, sm map<string,bigint>"
+        )},
+    ])
+    files = glob.glob(os.path.join(root, "v*", "_bucket=*", "*.parquet"))
+    assert "sv" in pq.read_schema(files[0]).names  # the sibling's padding
+    later = spark.createDataFrame(
+        [(f"z{n}",) + full for n in range(4)], schema
+    ).withColumn("late", F.lit("new"))
+    store.merge(later, batch_id=1, insert_only=True)
+
+    for tz in ("UTC", "America/Los_Angeles"):
+        before = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            fresh = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=4)
+            local = fresh.current()
+            assert fresh._snapshot[2], "a 17-row store must be served locally"
+            assert "LocalRelation" in local._jdf.queryExecution().analyzed().toString()
+            scan = fresh._state_df(fresh._state())
+            assert scan.inputFiles()
+            assert local.schema == scan.schema
+            assert local.columns[-1] == "late" and "sv" not in local.columns
+            got = sorted(map(_canon, local.collect()))
+            want = sorted(map(_canon, scan.collect()))
+            assert got == want and len(got) == 17
+            late = dict(local.select("k", "late").collect())
+            assert late["z0"] == "new" and late["k0"] is None
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", before)
+
+
+def test_small_store_point_reads_run_no_spark_job(spark, monkeypatch):
+    """Under the bound, a filtered read of ``current()`` and a
+    multi-row ``current_for_keys`` read fold into the LocalRelation and
+    run no Spark job (no bucket computation, no scan), the snapshot
+    build included. Over the bound the same reads still plan file
+    scans, the bound is checked once per committed version, and a
+    repeat ``current()`` reuses its file-scan frame without a job. Rows
+    too large for a ``LocalRelation`` (a 1-byte Arrow local-relation
+    threshold) keep the file scan too."""
+    from m4i_flink_tasks_spark.operators.local_frame import local_frame
+
+    root = tempfile.mkdtemp(prefix="m4i_bstore_local_jobs_")
+    store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=8)
+    store.merge(_mk(spark, [(i, f"v{i}") for i in range(64)]))
+    keys = local_frame(spark, [(3,), (7,), (60,)], "k long")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    jobs = scheduler.nextJobId()
+    one = store.current().filter(F.col("k") == 3).select("v").collect()
+    many = (
+        store.current_for_keys(keys)
+        .filter(F.col("k").isin(3, 7, 60))
+        .select("k", "v")
+        .collect()
+    )
+    assert scheduler.nextJobId() == jobs
+    assert [tuple(r) for r in one] == [("v3",)]
+    assert sorted(map(tuple, many)) == [(3, "v3"), (7, "v7"), (60, "v60")]
+
+    monkeypatch.setattr(store_mod, "_LOCAL_SNAPSHOT_MAX_BYTES", 0)
+    large = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=8)
+    sized = []
+    build = large._local_df
+    monkeypatch.setattr(large, "_local_df", lambda st: sized.append(1) or build(st))
+    assert large.current_for_keys(keys).inputFiles()
+    assert large.current_for_keys(keys).inputFiles() and large._snapshot[1] is None
+    first = large.current()
+    assert first.inputFiles() and not large._snapshot[2] and len(sized) == 1
+    jobs = scheduler.nextJobId()
+    assert large.current() is first and scheduler.nextJobId() == jobs
+    assert sorted(map(tuple, large.current_for_keys(keys)
+                      .filter(F.col("k").isin(3, 7, 60)).collect())) == sorted(
+        map(tuple, many)
+    )
+
+    monkeypatch.undo()
+    threshold = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(threshold, "1b")
+    try:
+        capped = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=8)
+        assert capped.current().inputFiles() and not capped._snapshot[2]
+    finally:
+        spark.conf.unset(threshold)
 
 
 def test_delete_emptied_bucket_leaves_pointer_map(spark):
