@@ -1153,7 +1153,8 @@ def demux_mp3(b: bytes) -> dict:
 
 
 def _ogg_page(htype: int, granule: int, serial: int, seq: int, payload: bytes) -> bytes:
-    assert len(payload) < 255
+    if len(payload) >= 255:
+        raise ValueError(f"Ogg page payload of {len(payload)} bytes needs lacing")
     return (
         b"OggS"
         + bytes([0, htype])
@@ -1396,7 +1397,8 @@ def _ebml_el(eid: int, payload: bytes) -> bytes:
     """Serialize an EBML element with a 2-byte size field (payloads here
     are < 2^14 bytes)."""
     id_bytes = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-    assert len(payload) < (1 << 14)
+    if len(payload) >= 1 << 14:
+        raise ValueError(f"EBML payload of {len(payload)} bytes needs a wider size field")
     return id_bytes + (0x4000 | len(payload)).to_bytes(2, "big") + payload
 
 

@@ -27,10 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import (
-    analytic_windows,
     behavior,
     cdc,
-    collocations,
     doc_lifecycle,
     doc_maintenance,
     entity_resolution,
@@ -52,7 +50,6 @@ from . import (
     sketches,
     state_store,
     streaming_like,
-    text_ranking,
     warehouse,
 )
 
@@ -74,14 +71,11 @@ _MODULES = (
     llm_similarity,
     llm_text,
     lm_scoring,
-    text_ranking,
-    collocations,
     llm_corpus,
     llm_decontam,
     llm_multimodal,
     sketches,
     warehouse,
-    analytic_windows,
     behavior,
     profiling,
     quality_classifier,

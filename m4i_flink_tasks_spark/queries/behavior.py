@@ -1,27 +1,11 @@
 """Behavioral / product analytics over the event stream.
 
 The reference's event surface is CDC plumbing (jobs 1-4); this module
-adds the product-analytics queries a platform team runs on the SAME
-event firehose once it lands: ordered conversion funnels, multi-touch
-marketing attribution, and a seasonal-naive forecast backtest. All
-three are pure DataFrame/SQL dataflows with DuckDB oracle twins.
-
-Scale posture (100 TB events):
-
-- ``funnel_conversion`` shuffles events ONCE on ``user_id`` and folds
-  each user's time-sorted step events with an expression-native
-  ``aggregate`` (no Python, no per-step re-join of the fact table).
-  Per-user event counts are bounded in practice (sessionized products);
-  the fold is O(events-per-user). The final report is 4 rows.
-- ``attribution_report`` is a bounded-range per-user join (touch within
-  7 days before the conversion) — both sides shuffle on ``user_id``
-  once, AQE handles user skew, and the credit arithmetic is integer
-  (cents / milli-cents) so the distributed sum is exact and
-  order-independent.
-- ``seasonal_naive_forecast`` aggregates to a dimension-sized daily
-  series first (map-side combinable), then the lag-7 comparison is a
-  calendar self-join on that tiny series — NOT a row-offset lag, so
-  missing days cannot silently shift the season.
+adds two product-analytics queries a platform team runs on the SAME
+event firehose once it lands: Markov removal-effect attribution and
+always-valid sequential A/B monitoring (mSPRT). Both are
+DataFrame/SQL dataflows with DuckDB oracle twins, and both have
+streaming twins in ``queries/pipelines.py``.
 """
 
 from __future__ import annotations
@@ -30,377 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.local_frame import local_frame
-from pyspark.sql.window import Window
 
 from ..operators import text as T
 from ..sources import load_table
 
-# Ordered funnel: a user converts step k only with an event strictly
-# AFTER their step-(k-1) time (ties broken: at equal ts the earlier
-# step wins, so a same-timestamp pair does not advance the funnel).
-_FUNNEL_STEPS = ("view", "click", "signup", "purchase")
 
+QUERIES = {}
 
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered 4-step funnel (view -> click -> signup -> purchase).
-
-    Single shuffle on ``user_id``; each user's step events are
-    time-sorted and folded left-to-right with ``F.aggregate`` — the
-    fold state is the (t1..t4) step-completion timestamps, and step k
-    fires on the first event of type k strictly after t(k-1). That is
-    exactly the chained ``min(ts) WHERE ts > prev`` formulation the
-    oracle uses, because the events are scanned in ascending time
-    order.
-    """
-    events = load_table(spark, sf_dir, "events")
-    step_idx = F.when(F.col("event_type") == _FUNNEL_STEPS[0], 1)
-    for i, s in enumerate(_FUNNEL_STEPS[1:], start=2):
-        step_idx = step_idx.when(F.col("event_type") == s, i)
-    evs = events.select(
-        "user_id", "ts", step_idx.alias("step")
-    ).filter(F.col("step").isNotNull())
-    per_user = evs.groupBy("user_id").agg(
-        F.sort_array(F.collect_list(F.struct("ts", "step"))).alias("seq")
-    )
-    init = F.struct(
-        *[
-            F.lit(None).cast("timestamp").alias(f"t{k}")
-            for k in range(1, 5)
-        ]
-    )
-
-    def _advance(acc, e):
-        # step 1 needs no predecessor; steps 2-4 need t(k-1) set and a
-        # strictly later timestamp.
-        upd = {
-            "t1": F.when(
-                acc.t1.isNull() & (e.step == 1), e.ts
-            ).otherwise(acc.t1)
-        }
-        prev = {2: acc.t1, 3: acc.t2, 4: acc.t3}
-        for k in (2, 3, 4):
-            upd[f"t{k}"] = F.when(
-                acc[f"t{k}"].isNull()
-                & (e.step == F.lit(k))
-                & prev[k].isNotNull()
-                & (e.ts > prev[k]),
-                e.ts,
-            ).otherwise(acc[f"t{k}"])
-        return F.struct(*[upd[f"t{k}"].alias(f"t{k}") for k in range(1, 5)])
-
-    folded = per_user.select(
-        F.aggregate(F.col("seq"), init, _advance).alias("st")
-    )
-    counts = folded.agg(
-        *[
-            F.count(F.col(f"st.t{k}")).alias(f"n{k}")
-            for k in range(1, 5)
-        ]
-    )
-    stack_args = ", ".join(
-        f"{k}, '{s}', n{k}" for k, s in enumerate(_FUNNEL_STEPS, start=1)
-    )
-    rows = counts.selectExpr(
-        f"stack(4, {stack_args}) AS (step_idx, step, n_users)"
-    )
-    first = counts.select(F.col("n1").alias("n_first"))
-    return (
-        rows.crossJoin(F.broadcast(first))
-        .select(
-            "step_idx",
-            "step",
-            "n_users",
-            F.round(F.col("n_users") / F.col("n_first"), 6).alias(
-                "pct_of_first"
-            ),
-            F.round(
-                F.col("n_users")
-                / F.lag("n_users", 1, None).over(
-                    Window.orderBy("step_idx")
-                ),
-                6,
-            ).alias("pct_of_prev"),
-        )
-        .orderBy("step_idx")
-    )
-
-
-FUNNEL_SQL = """
-WITH s1 AS (
-    SELECT user_id, min(ts) AS t1 FROM events
-    WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-    SELECT e.user_id, min(e.ts) AS t2
-    FROM events e JOIN s1 USING (user_id)
-    WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY e.user_id
-),
-s3 AS (
-    SELECT e.user_id, min(e.ts) AS t3
-    FROM events e JOIN s2 USING (user_id)
-    WHERE e.event_type = 'signup' AND e.ts > s2.t2 GROUP BY e.user_id
-),
-s4 AS (
-    SELECT e.user_id, min(e.ts) AS t4
-    FROM events e JOIN s3 USING (user_id)
-    WHERE e.event_type = 'purchase' AND e.ts > s3.t3 GROUP BY e.user_id
-),
-rows_ AS (
-    SELECT 1 AS step_idx, 'view' AS step,
-           (SELECT count(*) FROM s1) AS n_users
-    UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-    UNION ALL SELECT 3, 'signup', (SELECT count(*) FROM s3)
-    UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)
-)
-SELECT step_idx, step, n_users,
-       round(n_users::DOUBLE / (SELECT n_users FROM rows_
-                                WHERE step_idx = 1), 6) AS pct_of_first,
-       round(n_users::DOUBLE
-             / lag(n_users) OVER (ORDER BY step_idx), 6) AS pct_of_prev
-FROM rows_
-ORDER BY step_idx
-"""
-
-
-def attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-touch attribution: last-touch / first-touch / linear.
-
-    Conversions are ``purchase`` events; touches are ``view``/``click``
-    events by the same user in the 7 days up to (and including) the
-    conversion instant. Credit arithmetic is integer — revenue in
-    cents, linear credit in milli-cents via integer DIV — so the
-    distributed sums are exact and engine-order-independent.
-    Conversions with no touch in the window are reported under the
-    ``direct`` channel.
-    """
-    events = load_table(spark, sf_dir, "events")
-    convs = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("conv_id"),
-        F.col("user_id"),
-        F.col("ts").alias("conv_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("rev_cents"),
-    )
-    touches = events.filter(
-        F.col("event_type").isin("view", "click")
-    ).select(
-        "user_id",
-        F.col("event_id").alias("touch_id"),
-        F.col("ts").alias("touch_ts"),
-        F.col("event_type").alias("channel"),
-    )
-    joined = convs.join(touches, "user_id").filter(
-        (F.col("touch_ts") <= F.col("conv_ts"))
-        & (
-            F.col("touch_ts")
-            >= F.col("conv_ts") - F.expr("INTERVAL 7 DAYS")
-        )
-    )
-    w_last = Window.partitionBy("conv_id").orderBy(
-        F.desc("touch_ts"), F.desc("touch_id")
-    )
-    w_first = Window.partitionBy("conv_id").orderBy(
-        F.asc("touch_ts"), F.asc("touch_id")
-    )
-    ranked = joined.select(
-        "conv_id",
-        "channel",
-        "rev_cents",
-        F.row_number().over(w_last).alias("r_last"),
-        F.row_number().over(w_first).alias("r_first"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("conv_id"))
-        .alias("n_touches"),
-    )
-    credited = ranked.groupBy("channel").agg(
-        F.sum(F.when(F.col("r_last") == 1, 1).otherwise(0)).alias(
-            "last_touch_conversions"
-        ),
-        F.sum(
-            F.when(F.col("r_last") == 1, F.col("rev_cents")).otherwise(0)
-        ).alias("last_touch_revenue_cents"),
-        F.sum(F.when(F.col("r_first") == 1, 1).otherwise(0)).alias(
-            "first_touch_conversions"
-        ),
-        F.sum(
-            F.when(F.col("r_first") == 1, F.col("rev_cents")).otherwise(
-                0
-            )
-        ).alias("first_touch_revenue_cents"),
-        F.sum(
-            F.expr("rev_cents * 1000 DIV n_touches")
-        ).alias("linear_credit_millicents"),
-    )
-    touched_ids = joined.select("conv_id").distinct()
-    direct = (
-        convs.join(touched_ids, "conv_id", "left_anti")
-        .agg(
-            F.count(F.lit(1)).alias("last_touch_conversions"),
-            F.sum("rev_cents").alias("last_touch_revenue_cents"),
-        )
-        .select(
-            F.lit("direct").alias("channel"),
-            "last_touch_conversions",
-            F.coalesce("last_touch_revenue_cents", F.lit(0)).alias(
-                "last_touch_revenue_cents"
-            ),
-            F.col("last_touch_conversions").alias(
-                "first_touch_conversions"
-            ),
-            F.coalesce("last_touch_revenue_cents", F.lit(0)).alias(
-                "first_touch_revenue_cents"
-            ),
-            (
-                F.coalesce("last_touch_revenue_cents", F.lit(0)) * 1000
-            ).alias("linear_credit_millicents"),
-        )
-    )
-    return credited.unionByName(direct).orderBy("channel")
-
-
-ATTRIBUTION_SQL = """
-WITH convs AS (
-    SELECT event_id AS conv_id, user_id, ts AS conv_ts,
-           round(value * 100)::BIGINT AS rev_cents
-    FROM events WHERE event_type = 'purchase'
-),
-touches AS (
-    SELECT user_id, event_id AS touch_id, ts AS touch_ts,
-           event_type AS channel
-    FROM events WHERE event_type IN ('view', 'click')
-),
-joined AS (
-    SELECT c.conv_id, t.channel, c.rev_cents, t.touch_ts, t.touch_id
-    FROM convs c JOIN touches t USING (user_id)
-    WHERE t.touch_ts <= c.conv_ts
-      AND t.touch_ts >= c.conv_ts - INTERVAL 7 DAY
-),
-ranked AS (
-    SELECT conv_id, channel, rev_cents,
-           row_number() OVER (PARTITION BY conv_id
-                              ORDER BY touch_ts DESC, touch_id DESC)
-               AS r_last,
-           row_number() OVER (PARTITION BY conv_id
-                              ORDER BY touch_ts ASC, touch_id ASC)
-               AS r_first,
-           count(*) OVER (PARTITION BY conv_id) AS n_touches
-    FROM joined
-),
-credited AS (
-    SELECT channel,
-           sum(CASE WHEN r_last = 1 THEN 1 ELSE 0 END)::BIGINT
-               AS last_touch_conversions,
-           sum(CASE WHEN r_last = 1 THEN rev_cents ELSE 0 END)::BIGINT
-               AS last_touch_revenue_cents,
-           sum(CASE WHEN r_first = 1 THEN 1 ELSE 0 END)::BIGINT
-               AS first_touch_conversions,
-           sum(CASE WHEN r_first = 1 THEN rev_cents ELSE 0 END)::BIGINT
-               AS first_touch_revenue_cents,
-           sum((rev_cents * 1000) // n_touches)::BIGINT
-               AS linear_credit_millicents
-    FROM ranked GROUP BY channel
-),
-direct AS (
-    SELECT 'direct' AS channel,
-           count(*) AS last_touch_conversions,
-           coalesce(sum(rev_cents), 0)::BIGINT
-               AS last_touch_revenue_cents,
-           count(*) AS first_touch_conversions,
-           coalesce(sum(rev_cents), 0)::BIGINT
-               AS first_touch_revenue_cents,
-           coalesce(sum(rev_cents), 0)::BIGINT * 1000
-               AS linear_credit_millicents
-    FROM convs
-    WHERE conv_id NOT IN (SELECT conv_id FROM joined)
-)
-SELECT * FROM credited
-UNION ALL
-SELECT * FROM direct
-ORDER BY channel
-"""
-
-
-def seasonal_naive_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive (lag-7-days) forecast backtest on daily revenue.
-
-    The event stream is aggregated to an integer-cents daily revenue
-    series (dimension-sized), the forecast for day d is the actual of
-    day d-7 via a CALENDAR self-join (robust to missing days, unlike a
-    row-offset lag), and the error profile is reported per weekday with
-    integer error sums so the averages divide exactly once.
-    """
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("rev_cents")
-    )
-    fc = daily.select(
-        (F.col("day") + F.expr("INTERVAL 7 DAYS")).alias("day"),
-        F.col("rev_cents").alias("forecast_cents"),
-    )
-    scored = daily.join(fc, "day").select(
-        # Spark dayofweek: 1=Sunday..7=Saturday; report 0-based Sunday=0
-        # to match DuckDB's dayofweek().
-        (F.dayofweek("day") - 1).alias("dow"),
-        (F.col("rev_cents") - F.col("forecast_cents")).alias("err"),
-    )
-    return (
-        scored.groupBy("dow")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.sum(F.abs(F.col("err"))).alias("sum_abs_err_cents"),
-            F.sum("err").alias("sum_err_cents"),
-        )
-        .select(
-            "dow",
-            "n_days",
-            "sum_abs_err_cents",
-            "sum_err_cents",
-            F.round(
-                F.col("sum_abs_err_cents") / F.col("n_days") / 100, 4
-            ).alias("mae"),
-            F.round(
-                F.col("sum_err_cents") / F.col("n_days") / 100, 4
-            ).alias("bias"),
-        )
-        .orderBy("dow")
-    )
-
-
-SEASONAL_SQL = """
-WITH daily AS (
-    SELECT date_trunc('day', ts) AS day,
-           round(sum(value) * 100)::BIGINT AS rev_cents
-    FROM events GROUP BY 1
-),
-scored AS (
-    SELECT dayofweek(d.day) AS dow,
-           d.rev_cents - f.rev_cents AS err
-    FROM daily d
-    JOIN daily f ON f.day = d.day - INTERVAL 7 DAY
-)
-SELECT dow, count(*) AS n_days,
-       sum(abs(err))::BIGINT AS sum_abs_err_cents,
-       sum(err)::BIGINT AS sum_err_cents,
-       round(sum(abs(err))::DOUBLE / count(*) / 100, 4) AS mae,
-       round(sum(err)::DOUBLE / count(*) / 100, 4) AS bias
-FROM scored
-GROUP BY dow
-ORDER BY dow
-"""
-
-
-QUERIES = {
-    "funnel_conversion": funnel_conversion,
-    "attribution_report": attribution_report,
-    "seasonal_naive_forecast": seasonal_naive_forecast,
-}
-
-ORACLES = {
-    "funnel_conversion": FUNNEL_SQL,
-    "attribution_report": ATTRIBUTION_SQL,
-    "seasonal_naive_forecast": SEASONAL_SQL,
-}
+ORACLES = {}
 
 
 def _scrambled_hash_sql(expr: str) -> str:
@@ -414,937 +35,14 @@ def _scrambled_hash_sql(expr: str) -> str:
     )
 
 
-_AB_Z_CRIT = 1.96  # two-sided 5%
 # "Conversion" = a purchase above this value — keeps the rate interior
 # (any-purchase saturates at 100% on this firehose: ~13 purchases/user).
 _AB_CONV_VALUE = 150.0
 
 
-def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test of an A/B experiment on the event stream.
-
-    Variant assignment is the deterministic cross-engine scrambled hash
-    of the user id (``h % 2``) — exactly how a real experimentation
-    platform buckets users, and reproducible in the DuckDB oracle
-    token-for-token. A user converts if they have any ``purchase``
-    event. The report is one row per variant (exposed users, converted
-    users, conversion rate) plus the pooled two-proportion z statistic
-    and a significance verdict. The z-score is ROUNDED (4 dp) before
-    the ``|z| >= 1.96`` threshold so the cliff is engine-identical.
-
-    Scale posture: two map-side-combinable aggregates over a single
-    ``user_id``-keyed reduction of the event stream; the per-variant
-    table is 2 rows, so the z-computation joins one-row broadcasts.
-    """
-    events = load_table(spark, sf_dir, "events")
-    users = (
-        events.select("user_id", "event_type", "value")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                (
-                    (F.col("event_type") == "purchase")
-                    & (F.col("value") >= _AB_CONV_VALUE)
-                ).cast("int")
-            ).alias("converted")
-        )
-        .withColumn(
-            "variant",
-            F.when(
-                T.scrambled_hash(
-                    F.concat(F.lit("ab:"), F.col("user_id").cast("string"))
-                )
-                % 2
-                == 0,
-                F.lit("control"),
-            ).otherwise(F.lit("treatment")),
-        )
-    )
-    per_variant = users.groupBy("variant").agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("converted").alias("n_converted"),
-    )
-    a = per_variant.filter(F.col("variant") == "control").select(
-        F.col("n_users").alias("n_a"), F.col("n_converted").alias("c_a")
-    )
-    b = per_variant.filter(F.col("variant") == "treatment").select(
-        F.col("n_users").alias("n_b"), F.col("n_converted").alias("c_b")
-    )
-    zrow = (
-        a.crossJoin(F.broadcast(b))
-        .withColumn("p_pool", (F.col("c_a") + F.col("c_b")) / (F.col("n_a") + F.col("n_b")))
-        .withColumn(
-            "z",
-            # nullif guards the degenerate pools (everyone / no one
-            # converted): zero pooled variance reports z = 0.0 on both
-            # engines instead of a divide-by-zero.
-            F.coalesce(
-                F.round(
-                    (F.col("c_a") / F.col("n_a") - F.col("c_b") / F.col("n_b"))
-                    / F.nullif(
-                        F.sqrt(
-                            F.col("p_pool")
-                            * (1 - F.col("p_pool"))
-                            * (1 / F.col("n_a") + 1 / F.col("n_b"))
-                        ),
-                        F.lit(0.0),
-                    ),
-                    4,
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .select("z")
-    )
-    return (
-        per_variant.crossJoin(F.broadcast(zrow))
-        .select(
-            "variant",
-            "n_users",
-            "n_converted",
-            F.round(F.col("n_converted") / F.col("n_users"), 6).alias(
-                "conv_rate"
-            ),
-            F.col("z").alias("z_score"),
-            (F.abs(F.col("z")) >= _AB_Z_CRIT).alias("significant"),
-        )
-        .orderBy("variant")
-    )
-
-
-def _ab_test_sql() -> str:
-    h = _scrambled_hash_sql("'ab:' || user_id::VARCHAR")
-    return f"""
-WITH users AS (
-    SELECT user_id,
-           max(CASE WHEN event_type = 'purchase'
-                     AND value >= {_AB_CONV_VALUE} THEN 1 ELSE 0 END) AS converted,
-           CASE WHEN ({h}) % 2 = 0 THEN 'control' ELSE 'treatment' END AS variant
-    FROM events
-    GROUP BY user_id
-),
-per_variant AS (
-    SELECT variant, count(*) AS n_users,
-           sum(converted)::BIGINT AS n_converted
-    FROM users GROUP BY variant
-),
-z AS (
-    SELECT coalesce(round(
-        (a.n_converted::DOUBLE / a.n_users - b.n_converted::DOUBLE / b.n_users)
-        / nullif(sqrt(
-            ((a.n_converted + b.n_converted)::DOUBLE / (a.n_users + b.n_users))
-            * (1 - (a.n_converted + b.n_converted)::DOUBLE / (a.n_users + b.n_users))
-            * (1.0 / a.n_users + 1.0 / b.n_users)
-        ), 0.0), 4), 0.0) AS z_score
-    FROM (SELECT * FROM per_variant WHERE variant = 'control') a,
-         (SELECT * FROM per_variant WHERE variant = 'treatment') b
-)
-SELECT variant, n_users, n_converted,
-       round(n_converted::DOUBLE / n_users, 6) AS conv_rate,
-       z_score,
-       abs(z_score) >= {_AB_Z_CRIT} AS significant
-FROM per_variant CROSS JOIN z
-ORDER BY variant
-"""
-
-
-AB_TEST_SQL = _ab_test_sql()
-
-QUERIES["ab_test_report"] = ab_test_report
-ORACLES["ab_test_report"] = AB_TEST_SQL
-
-
-_EWMA_ALPHA = 0.3
-
-
-def exp_smoothing_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simple-exponential-smoothing backtest per event type.
-
-    Smooths each type's daily revenue series (level_{t} = level_{t-1}
-    + alpha * err_t, initialized at the first observation) and reports
-    the one-step-ahead mean absolute error — the standard "is a dumb
-    smoother good enough?" baseline next to the seasonal-naive
-    backtest. The recursion is inherently sequential, so it runs as an
-    expression-native ``F.aggregate`` fold over each type's time-sorted
-    (dimension-sized) daily series — identical operation order to the
-    DuckDB ``list_reduce`` twin, which makes the float recursion
-    engine-exact (rounded once, at the end).
-
-    Scale posture: the fact scan reduces to (type x day) cents with a
-    map-side-combinable aggregate; only the tiny series is collected
-    per group, and the fold is JVM codegen (no Python). Folding state
-    is one struct per group.
-    """
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("rev_cents")
-    )
-    series = daily.groupBy("event_type").agg(
-        F.sort_array(
-            F.collect_list(F.struct("day", "rev_cents"))
-        ).alias("obs")
-    )
-    first = F.element_at(F.col("obs"), 1)
-    # Field order chosen for the ORACLE, not for Spark (whose struct
-    # construction is pure): DuckDB evaluates struct_pack fields
-    # sequentially inside list_reduce, so sae — which reads the
-    # pre-update level — must come before the level field.
-    init = F.struct(
-        F.lit(0.0).alias("sae"),
-        first["rev_cents"].cast("double").alias("level"),
-        F.lit(1).cast("long").alias("n"),
-    )
-    folded = F.aggregate(
-        F.slice(F.col("obs"), 2, F.size(F.col("obs")) - 1),
-        init,
-        lambda acc, x: F.struct(
-            (
-                acc["sae"]
-                + F.abs(x["rev_cents"].cast("double") - acc["level"])
-            ).alias("sae"),
-            (
-                acc["level"]
-                + _EWMA_ALPHA
-                * (x["rev_cents"].cast("double") - acc["level"])
-            ).alias("level"),
-            (acc["n"] + 1).alias("n"),
-        ),
-    )
-    return (
-        series.select("event_type", folded.alias("st"))
-        .select(
-            "event_type",
-            F.col("st.n").alias("n_days"),
-            F.round(F.col("st.level") / 100.0, 4).alias("final_level"),
-            F.round(
-                F.col("st.sae") / (F.col("st.n") - 1) / 100.0, 4
-            ).alias("mae"),
-        )
-        .orderBy("event_type")
-    )
-
-
-EXP_SMOOTHING_SQL = f"""
-WITH daily AS (
-    SELECT event_type, date_trunc('day', ts) AS day,
-           round(sum(value) * 100)::BIGINT AS rev_cents
-    FROM events
-    GROUP BY 1, 2
-),
-series AS (
-    SELECT event_type,
-           -- sae listed BEFORE level: DuckDB list_reduce evaluates
-           -- struct_pack fields sequentially, so sae must read
-           -- acc.level before the level field overwrites it (matches
-           -- Spark's pure struct fold; probed on duckdb 1.0).
-           list(struct_pack(
-                    sae := 0.0::DOUBLE,
-                    level := rev_cents::DOUBLE,
-                    n := 1::BIGINT)
-                ORDER BY day) AS obs
-    FROM daily GROUP BY event_type
-),
-folded AS (
-    SELECT event_type,
-           list_reduce(obs, (acc, x) -> struct_pack(
-               sae := acc.sae + abs(x.level - acc.level),
-               level := acc.level + {_EWMA_ALPHA} * (x.level - acc.level),
-               n := acc.n + 1)) AS st
-    FROM series
-)
-SELECT event_type,
-       st.n AS n_days,
-       round(st.level / 100.0, 4) AS final_level,
-       round(st.sae / (st.n - 1) / 100.0, 4) AS mae
-FROM folded
-ORDER BY event_type
-"""
-
-QUERIES["exp_smoothing_backtest"] = exp_smoothing_backtest
-ORACLES["exp_smoothing_backtest"] = EXP_SMOOTHING_SQL
-
-
-_CUPED_CUTOFF = "2024-01-15"
-
-
-def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction for the A/B experiment (Deng et al.,
-    WSDM 2013): adjust each user's post-period purchase revenue by
-    their PRE-period revenue — the covariate the experiment cannot have
-    affected — via y' = y - theta (x - mean(x)), theta = cov(x,y)/var(x).
-    The standard trick that lets experimentation platforms detect the
-    same effect with a fraction of the traffic.
-
-    Everything that aggregates is INTEGER (per-user cents, global and
-    per-variant moment sums in BIGINT), so the distributed sums are
-    exact in any order; theta and the adjusted means are a fixed
-    sequence of double ops mirrored token-for-token in the oracle,
-    rounded once at the end. Zero pre-period variance degenerates to
-    theta = 0 via the same nullif/coalesce guard as the z-test.
-
-    Scale posture: one user-keyed reduction of the event stream, one
-    5-integer global moment row broadcast back, per-variant aggregates
-    — no second pass over the facts.
-    """
-    events = load_table(spark, sf_dir, "events")
-    cut = F.lit(_CUPED_CUTOFF).cast("timestamp")
-    users = (
-        events.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("ts") < cut,
-                    F.round(F.col("value") * 100).cast("long"),
-                ).otherwise(F.lit(0))
-            ).alias("x"),
-            F.sum(
-                F.when(
-                    F.col("ts") >= cut,
-                    F.round(F.col("value") * 100).cast("long"),
-                ).otherwise(F.lit(0))
-            ).alias("y"),
-        )
-        .withColumn(
-            "variant",
-            F.when(
-                T.scrambled_hash(
-                    F.concat(F.lit("ab:"), F.col("user_id").cast("string"))
-                )
-                % 2
-                == 0,
-                F.lit("control"),
-            ).otherwise(F.lit("treatment")),
-        )
-    )
-    mom = users.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    ).select(
-        F.coalesce(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-                "double"
-            )
-            / F.nullif(
-                (
-                    F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-                ).cast("double"),
-                F.lit(0.0),
-            ),
-            F.lit(0.0),
-        ).alias("theta"),
-        (F.col("sx").cast("double") / F.col("n")).alias("mean_x"),
-    )
-    per_variant = users.groupBy("variant").agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("x").alias("sxv"),
-        F.sum("y").alias("syv"),
-    )
-    return (
-        per_variant.crossJoin(F.broadcast(mom))
-        .select(
-            "variant",
-            "n_users",
-            F.round(
-                F.col("syv").cast("double") / F.col("n_users") / 100.0, 4
-            ).alias("mean_post"),
-            F.round(
-                (
-                    F.col("syv").cast("double") / F.col("n_users")
-                    - F.col("theta")
-                    * (
-                        F.col("sxv").cast("double") / F.col("n_users")
-                        - F.col("mean_x")
-                    )
-                )
-                / 100.0,
-                4,
-            ).alias("mean_adjusted"),
-            F.round(F.col("theta"), 6).alias("theta"),
-        )
-        .orderBy("variant")
-    )
-
-
-def _cuped_sql() -> str:
-    h = _scrambled_hash_sql("'ab:' || user_id::VARCHAR")
-    return f"""
-WITH users AS (
-    SELECT user_id,
-           sum(CASE WHEN ts < TIMESTAMP '{_CUPED_CUTOFF}'
-                    THEN round(value * 100)::BIGINT ELSE 0 END) AS x,
-           sum(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUTOFF}'
-                    THEN round(value * 100)::BIGINT ELSE 0 END) AS y,
-           CASE WHEN ({h}) % 2 = 0 THEN 'control' ELSE 'treatment' END
-               AS variant
-    FROM events
-    WHERE event_type = 'purchase'
-    GROUP BY user_id
-),
-mom AS (
-    SELECT coalesce(
-               (count(*) * sum(x * y) - sum(x) * sum(y))::DOUBLE
-               / nullif((count(*) * sum(x * x) - sum(x) * sum(x))::DOUBLE,
-                        0.0),
-               0.0) AS theta,
-           sum(x)::DOUBLE / count(*) AS mean_x
-    FROM users
-),
-per_variant AS (
-    SELECT variant, count(*) AS n_users,
-           sum(x)::BIGINT AS sxv, sum(y)::BIGINT AS syv
-    FROM users GROUP BY variant
-)
-SELECT variant, n_users,
-       round(syv::DOUBLE / n_users / 100.0, 4) AS mean_post,
-       round((syv::DOUBLE / n_users
-              - theta * (sxv::DOUBLE / n_users - mean_x)) / 100.0, 4)
-           AS mean_adjusted,
-       round(theta, 6) AS theta
-FROM per_variant CROSS JOIN mom
-ORDER BY variant
-"""
-
-
-AB_CUPED_SQL = _cuped_sql()
-
-QUERIES["ab_cuped_adjustment"] = ab_cuped_adjustment
-ORACLES["ab_cuped_adjustment"] = AB_CUPED_SQL
-
-
-def revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of the daily-revenue series per event type: the
-    deepest drop from a prior running peak — the KPI-regression
-    question ("how far below our best day did we fall, and when?")
-    asked of any business metric, computed exactly like the financial
-    statistic.
-
-    Pure integer arithmetic: daily cents, running peak via a cumulative
-    max window over each type's (dimension-sized) daily series, the
-    report picks each type's deepest (peak - value) with earliest-day
-    tiebreak via one row_number — engine-exact, no rounding needed
-    until the final dollar conversion.
-
-    Scale posture: one map-side-combinable daily aggregate, windows
-    over per-type daily series (30 rows per partition here; bounded by
-    calendar length at any data scale).
-    """
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("rev_cents")
-    )
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    dd = daily.select(
-        "event_type",
-        "day",
-        "rev_cents",
-        (F.max("rev_cents").over(w_cum) - F.col("rev_cents")).alias(
-            "dd_cents"
-        ),
-    )
-    w_pick = Window.partitionBy("event_type").orderBy(
-        F.desc("dd_cents"), F.asc("day")
-    )
-    return (
-        dd.withColumn("r", F.row_number().over(w_pick))
-        .filter(F.col("r") == 1)
-        .select(
-            "event_type",
-            F.round(F.col("dd_cents") / 100.0, 2).alias("max_drawdown"),
-            # DATE on both engines (DuckDB's date_trunc('day') already
-            # yields DATE; Spark's yields TIMESTAMP).
-            F.to_date("day").alias("drawdown_day"),
-            F.round(F.col("rev_cents") / 100.0, 2).alias("day_revenue"),
-        )
-        .orderBy("event_type")
-    )
-
-
-DRAWDOWN_SQL = """
-WITH daily AS (
-    SELECT event_type, date_trunc('day', ts) AS day,
-           round(sum(value) * 100)::BIGINT AS rev_cents
-    FROM events GROUP BY 1, 2
-),
-dd AS (
-    SELECT event_type, day, rev_cents,
-           max(rev_cents) OVER (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               - rev_cents AS dd_cents
-    FROM daily
-)
-SELECT event_type,
-       round(dd_cents / 100.0, 2) AS max_drawdown,
-       day::DATE AS drawdown_day,
-       round(rev_cents / 100.0, 2) AS day_revenue
-FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-                                   ORDER BY dd_cents DESC, day) AS r
-      FROM dd)
-WHERE r = 1
-ORDER BY event_type
-"""
-
-QUERIES["revenue_drawdown"] = revenue_drawdown
-ORACLES["revenue_drawdown"] = DRAWDOWN_SQL
-
-
-# --------------------------------------------------------------------------
-# Poisson bootstrap confidence interval (distributed uncertainty)
-# --------------------------------------------------------------------------
-# The canonical way to put error bars on a metric at cluster scale:
-# resampling-with-replacement is impossible in one pass, but giving
-# every row an independent Poisson(1) weight per replica is
-# distribution-equivalent for large n and needs exactly ONE scan —
-# B weighted sums with map-side combine, no data-sized shuffle (the
-# exchange is B rows). Weights come from a deterministic integer LCG
-# on (order, replica), so the draw is a pure function of the row —
-# stable under re-partitioning and reproducible by the SQL oracle —
-# and the weighted sums are exact integers (cents), so replica means
-# are engine-identical before the defensive round.
-
-_BOOT_B = 100
-# cumulative Poisson(1): P(X <= k) for k = 0..6; k = 7 is the tail
-_POISSON_CUM = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.9999167588507119,
-)
-_LCG_A = 1103515245
-_LCG_C = 12345
-_LCG_M = 2147483647
-
-
-def bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% Poisson-bootstrap CI for the mean order value:
-    (n_replicas, point_mean, ci_lo, ci_hi) in dollars. lo/hi are the
-    3rd and 98th of the B=100 sorted replica means (the rank-based
-    2.5/97.5 cut, deterministic with replica id as tiebreak)."""
-    from ..operators.spread import spread_for_compute
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    # B x n codegen rows (LCG + CASE ladder) off a compact scan — the
-    # classic parallelism-cliff shape; spread before the explode.
-    rows = spread_for_compute(orders).select(
-        "o_orderkey",
-        "cents",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(_BOOT_B - 1))
-        ).alias("b"),
-    )
-    h1 = (
-        (F.col("o_orderkey") * _BOOT_B + F.col("b")) * _LCG_A + _LCG_C
-    ) % _LCG_M
-    h2 = (h1 * _LCG_A + _LCG_C) % _LCG_M
-    u = h2.cast("double") / float(_LCG_M)
-    w = F.lit(7)
-    for k in range(len(_POISSON_CUM) - 1, -1, -1):
-        w = F.when(u < _POISSON_CUM[k], k).otherwise(w)
-    rep = (
-        rows.select("b", "cents", w.alias("w"))
-        .groupBy("b")
-        .agg(
-            F.sum(F.col("w").cast("decimal(38,0)")).alias("sw"),
-            F.sum(
-                (F.col("w") * F.col("cents")).cast("decimal(38,0)")
-            ).alias("swx"),
-        )
-    )
-    means = rep.select(
-        "b",
-        F.round(
-            F.col("swx").cast("double")
-            / F.col("sw").cast("double")
-            / 100.0,
-            4,
-        ).alias("m"),
-    )
-    from pyspark.sql import Window
-
-    ranked = means.withColumn(
-        "rn", F.row_number().over(Window.orderBy("m", "b"))
-    )
-    lo = ranked.filter(F.col("rn") == 3).select(
-        F.col("m").alias("ci_lo")
-    )
-    hi = ranked.filter(F.col("rn") == 98).select(
-        F.col("m").alias("ci_hi")
-    )
-    point = orders.agg(
-        F.round(
-            F.sum("cents").cast("double") / F.count(F.lit(1)) / 100.0, 4
-        ).alias("point_mean")
-    )
-    return (
-        point.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
-        .select(
-            F.lit(_BOOT_B).alias("n_replicas"),
-            "point_mean",
-            "ci_lo",
-            "ci_hi",
-        )
-    )
-
-
-def _bootstrap_sql() -> str:
-    cases = " ".join(
-        f"WHEN u < {t!r} THEN {k}" for k, t in enumerate(_POISSON_CUM)
-    )
-    return f"""
-WITH o AS (
-    SELECT o_orderkey, round(o_totalprice * 100)::BIGINT AS cents
-    FROM orders
-),
-drawn AS (
-    SELECT cents, b,
-           CASE {cases} ELSE 7 END AS w
-    FROM (
-        SELECT cents, bb.b AS b,
-            (((((o_orderkey * {_BOOT_B} + bb.b) * {_LCG_A} + {_LCG_C})
-               % {_LCG_M}) * {_LCG_A} + {_LCG_C}) % {_LCG_M})::DOUBLE
-            / {_LCG_M} AS u
-        FROM o, range(0, {_BOOT_B}) AS bb(b)
-    )
-),
-rep AS (
-    SELECT b, sum(w) AS sw, sum(w * cents) AS swx
-    FROM drawn GROUP BY b
-),
-means AS (
-    SELECT b, round(swx::DOUBLE / sw::DOUBLE / 100.0, 4) AS m
-    FROM rep
-),
-ranked AS (
-    SELECT m, row_number() OVER (ORDER BY m, b) AS rn FROM means
-),
-point AS (
-    SELECT round(sum(cents)::DOUBLE / count(*) / 100.0, 4)
-        AS point_mean
-    FROM o
-)
-SELECT {_BOOT_B} AS n_replicas,
-       p.point_mean,
-       (SELECT m FROM ranked WHERE rn = 3) AS ci_lo,
-       (SELECT m FROM ranked WHERE rn = 98) AS ci_hi
-FROM point p
-"""
-
-
-QUERIES["bootstrap_ci_revenue"] = bootstrap_ci_revenue
-ORACLES["bootstrap_ci_revenue"] = _bootstrap_sql()
-
-
-# --------------------------------------------------------------------------
-# Survival analysis: Kaplan–Meier return-time curve
-# --------------------------------------------------------------------------
-# Duration analytics on the event stream, with censoring done right:
-# the curve estimates P(user's next event arrives later than t
-# minutes) from inter-event gaps, where each user's FINAL open gap
-# (last event -> observation cutoff) is CENSORED — the user simply
-# had not returned yet, and counting those gaps as "never returned"
-# (or dropping them) biases any naive return-time average. The KM
-# estimator is exactly expressible: gaps are one lead() window over
-# the user-keyed stream; everything after runs on the
-# distinct-gap-minutes relation (bounded by the observation window),
-# so risk sets, event counts and the cumulative product are window
-# arithmetic on a dimension-sized table. Gap minutes are
-# floor((epoch_us_next - epoch_us) / 60e6) as explicit integer math —
-# NOT date_diff('minute'), which counts boundary crossings and
-# diverges between engines. The cumulative product runs as
-# exp(sum(ln(term))) with an explicit zero guard, because Spark's
-# log(0) is NULL while DuckDB's ln(0) is -inf.
-
-
-def kaplan_meier_return_time(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(gap_minutes, n_at_risk, n_events, survival) at every observed
-    return time: an 'event' is a user's next action arriving exactly
-    that many whole minutes after the previous one; the final open gap
-    per user is censored at the global cutoff."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id"
-    )
-    cutoff = ev.agg(F.max("ts").alias("cutoff"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    gaps = (
-        ev.withColumn("nxt", nxt)
-        .crossJoin(F.broadcast(cutoff))
-        .select(
-            (
-                (
-                    F.unix_micros(F.coalesce("nxt", "cutoff"))
-                    - F.unix_micros("ts")
-                )
-                / F.lit(60_000_000)
-            )
-            .cast("long")
-            .alias("dur"),
-            F.col("nxt").isNotNull().alias("returned"),
-        )
-    )
-    total = gaps.agg(F.count(F.lit(1)).alias("n_total"))
-    durs = (
-        gaps.groupBy("dur")
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            F.sum(F.col("returned").cast("long")).alias("n_events"),
-        )
-        .crossJoin(F.broadcast(total))
-    )
-    wprev = Window.orderBy("dur").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    at_risk = durs.withColumn(
-        "n_at_risk",
-        F.col("n_total") - F.coalesce(F.sum("n_gaps").over(wprev), F.lit(0)),
-    ).filter(F.col("n_events") > 0)
-    term = (
-        F.lit(1.0) - F.col("n_events").cast("double") / F.col("n_at_risk")
-    )
-    scored = at_risk.select(
-        F.col("dur").alias("gap_minutes"),
-        "n_at_risk",
-        "n_events",
-        term.alias("term"),
-    )
-    wcum = Window.orderBy("gap_minutes").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    has_zero = F.max((F.col("term") <= 0.0).cast("int")).over(wcum)
-    logsum = F.sum(
-        F.when(F.col("term") > 0.0, F.log("term")).otherwise(F.lit(0.0))
-    ).over(wcum)
-    return scored.select(
-        "gap_minutes",
-        "n_at_risk",
-        "n_events",
-        F.round(
-            F.when(has_zero == 1, F.lit(0.0)).otherwise(F.exp(logsum)),
-            6,
-        ).alias("survival"),
-    ).orderBy("gap_minutes")
-
-
-KAPLAN_MEIER_SQL = """
-WITH ev AS (
-    SELECT user_id, ts, event_id FROM events
-),
-cutoff AS (SELECT max(ts) AS cutoff FROM ev),
-gaps AS (
-    SELECT ((epoch_us(coalesce(
-                lead(e.ts) OVER (PARTITION BY e.user_id
-                                 ORDER BY e.ts, e.event_id),
-                c.cutoff))
-             - epoch_us(e.ts)) // 60000000)::BIGINT AS dur,
-           lead(e.ts) OVER (PARTITION BY e.user_id
-                            ORDER BY e.ts, e.event_id)
-               IS NOT NULL AS returned
-    FROM ev e CROSS JOIN cutoff c
-),
-total AS (SELECT count(*)::BIGINT AS n_total FROM gaps),
-durs AS (
-    SELECT dur, count(*)::BIGINT AS n_gaps,
-           sum(CASE WHEN returned THEN 1 ELSE 0 END)::BIGINT AS n_events
-    FROM gaps GROUP BY dur
-),
-at_risk AS (
-    SELECT d.dur, d.n_events,
-           (t.n_total - coalesce(sum(d.n_gaps) OVER (
-               ORDER BY d.dur
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS n_at_risk
-    FROM durs d CROSS JOIN total t
-),
-terms AS (
-    SELECT dur AS gap_minutes, n_at_risk, n_events,
-           1.0 - n_events::DOUBLE / n_at_risk AS term
-    FROM at_risk WHERE n_events > 0
-)
-SELECT gap_minutes, n_at_risk, n_events,
-       round(CASE WHEN max(CASE WHEN term <= 0.0 THEN 1 ELSE 0 END)
-                      OVER (ORDER BY gap_minutes
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) = 1
-             THEN 0.0
-             ELSE exp(sum(CASE WHEN term > 0.0 THEN ln(term)
-                               ELSE 0.0 END)
-                      OVER (ORDER BY gap_minutes
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW))
-             END, 6) AS survival
-FROM terms
-ORDER BY gap_minutes
-"""
-
-QUERIES["kaplan_meier_return_time"] = kaplan_meier_return_time
-ORACLES["kaplan_meier_return_time"] = KAPLAN_MEIER_SQL
-
-
-# --------------------------------------------------------------------------
-# Watermark-delay recommendation — the streaming-ops artifact that
-# SIZES the watermark every event-time pipeline in streaming/ depends
-# on: measure how late events actually arrive (event time vs the
-# running maximum event time in arrival order) and recommend the p99
-# as `withWatermark` delay. Choosing this bound by guesswork either
-# drops real data (too tight) or bloats state (too loose); this report
-# is how it's chosen from the stream itself.
-#
-# Scale shape — the running max is a PREFIX SCAN, and a naive global
-# ORDER BY window is a one-partition cliff. It decomposes exactly:
-#   running_max(i) = greatest(within-bucket running max up to i,
-#                             max over all PRIOR buckets)
-# with bucket = event_id DIV 1024: the within-bucket window partitions
-# by bucket (embarrassingly parallel), and the cross-bucket prefix
-# runs over the n/1024-sized bucket relation — the classic two-level
-# scan (Blelloch). The per-type lateness percentiles are exact order
-# statistics over type-keyed windows; at 100 TB those would ride the
-# HDR sketch instead (hdr_histogram_quantiles), trading exactness for
-# a mergeable state — noted, not needed at test SFs.
-# --------------------------------------------------------------------------
-
-_WM_BUCKET = 1024
-_WM_QS = (0.5, 0.95, 0.99)
-
-
-def watermark_delay_recommendation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        (F.col("event_id") / _WM_BUCKET).cast("long").alias("bkt"),
-    )
-    w_in = (
-        W.partitionBy("bkt")
-        .orderBy("event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    within = ev.withColumn("run_in", F.max("us").over(w_in))
-    bucket_max = ev.groupBy("bkt").agg(F.max("us").alias("bmax"))
-    w_b = W.orderBy("bkt").rowsBetween(W.unboundedPreceding, -1)
-    prior = bucket_max.select(
-        "bkt", F.max("bmax").over(w_b).alias("prior_max")
-    )
-    late = (
-        within.join(prior, "bkt")
-        .select(
-            "event_type",
-            "event_id",
-            (
-                F.greatest(
-                    F.col("run_in"),
-                    F.coalesce("prior_max", F.col("run_in")),
-                )
-                - F.col("us")
-            ).alias("late_us"),
-        )
-    )
-    w_rank = W.partitionBy("event_type").orderBy("late_us", "event_id")
-    ranked = late.withColumn("rn", F.row_number().over(w_rank))
-    counts = late.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum((F.col("late_us") > 0).cast("long")).alias("n_late"),
-        F.round(F.max("late_us") / 1e6, 3).alias("max_late_s"),
-    )
-    out = counts
-    for q in _WM_QS:
-        # k-th smallest per type: join the rank relation on the
-        # per-type k computed from counts
-        out = out.join(
-            ranked.alias(f"r{int(q * 100)}"),
-            (F.col(f"r{int(q * 100)}.event_type") == out["event_type"])
-            & (
-                F.col(f"r{int(q * 100)}.rn")
-                == F.ceil(out["n_events"] * F.lit(q))
-            ),
-        ).select(
-            out["*"],
-            F.round(F.col(f"r{int(q * 100)}.late_us") / 1e6, 3).alias(
-                f"p{int(q * 100)}_late_s"
-            ),
-        )
-    return out.select(
-        "event_type",
-        "n_events",
-        "n_late",
-        "p50_late_s",
-        "p95_late_s",
-        "p99_late_s",
-        "max_late_s",
-        F.col("p99_late_s").alias("watermark_recommend_s"),
-    ).orderBy("event_type")
-
-
-WATERMARK_DELAY_SQL = f"""
-WITH e AS (
-    SELECT event_type, event_id,
-           epoch_us(ts) AS us,
-           max(epoch_us(ts)) OVER (ORDER BY event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS run_max
-    FROM events
-), late AS (
-    SELECT event_type, event_id, run_max - us AS late_us
-    FROM e
-), ranked AS (
-    SELECT event_type, late_us,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY late_us, event_id) AS rn
-    FROM late
-), counts AS (
-    SELECT event_type,
-           count(*) AS n_events,
-           sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END)::BIGINT AS n_late,
-           round(max(late_us) / 1e6, 3) AS max_late_s
-    FROM late
-    GROUP BY event_type
-)
-SELECT c.event_type, c.n_events, c.n_late,
-       round(p50.late_us / 1e6, 3) AS p50_late_s,
-       round(p95.late_us / 1e6, 3) AS p95_late_s,
-       round(p99.late_us / 1e6, 3) AS p99_late_s,
-       c.max_late_s,
-       round(p99.late_us / 1e6, 3) AS watermark_recommend_s
-FROM counts c
-JOIN ranked p50 ON p50.event_type = c.event_type
-               AND p50.rn = ceil(c.n_events * 0.5)
-JOIN ranked p95 ON p95.event_type = c.event_type
-               AND p95.rn = ceil(c.n_events * 0.95)
-JOIN ranked p99 ON p99.event_type = c.event_type
-               AND p99.rn = ceil(c.n_events * 0.99)
-ORDER BY c.event_type
-"""
-
-QUERIES["watermark_delay_recommendation"] = watermark_delay_recommendation
-ORACLES["watermark_delay_recommendation"] = WATERMARK_DELAY_SQL
-
-
 # --------------------------------------------------------------------------
 # Markov (removal-effect) attribution — the data-driven counterpart to
-# attribution_report's last/first/linear rules (Anderl et al.,
+# last/first/linear touch rules (Anderl et al.,
 # "Mapping the customer journey", 2014; the standard "Markov chain
 # attribution" of marketing analytics): build the first-order journey
 # chain (start -> touches -> conversion/null), compute the absorption
@@ -1596,7 +294,7 @@ ORACLES["markov_attribution"] = _markov_sql()
 # --------------------------------------------------------------------------
 # Always-valid sequential A/B monitoring — mixture SPRT (Robbins 1970;
 # Johari, Koomen, Pekelis & Walsh, "Peeking at A/B Tests", KDD 2017).
-# ab_test_report's fixed-horizon z-test is only valid at ONE
+# A fixed-horizon z-test is only valid at ONE
 # pre-committed look; a dashboard that peeks daily inflates its false
 # positive rate. The mSPRT statistic is a martingale under H0, so
 # p_n = min(1, min_{m<=n} 1/Lambda_m) is a valid p-value at EVERY look.
@@ -1609,8 +307,8 @@ ORACLES["markov_attribution"] = _markov_sql()
 # (running-sum windows in day order — exact), each day's statistic is
 # an independent float expression on those integers (no float
 # accumulation), and the running min over 1/Lambda is order-exact.
-# The verdict cliff compares the ROUNDED p (6 dp) against alpha, the
-# ab_test_report convention.
+# The verdict cliff compares the ROUNDED p (6 dp) against alpha, so
+# both engines land on the same side of it.
 # --------------------------------------------------------------------------
 
 _MSPRT_TAU = 0.001

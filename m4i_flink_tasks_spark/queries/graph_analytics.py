@@ -3,9 +3,8 @@
 The reference's graph surface is hierarchy maintenance (G1-G28:
 supertype closures, breadcrumbs) — no whole-graph analytics. This module
 adds the analytics a data-platform team runs NEXT on the same entity
-graph: degree profiles, triangle counting, and common-neighbor link
-prediction, each expressed as pure DataFrame joins/aggregations so
-Catalyst/AQE pick the physical strategy.
+graph — here Adamic-Adar link prediction — expressed as pure DataFrame
+joins/aggregations so Catalyst/AQE pick the physical strategy.
 
 Graph construction: the raw "co-supplied ≥1 order" relation is
 COMPLETE on this data (every supplier pair shares some order), so the
@@ -19,22 +18,12 @@ per-order pair fan-out is O(lines²) with a small constant — at 100 TB
 the edge build shuffles lineitem once on l_orderkey, the weight
 aggregation once on the pair key, and the top-k is a per-node window
 (shuffle on node), all with map-side partial aggregation.
-
-Triangle counting uses the degree-ordered orientation (the classic
-"compact-forward" scheme, e.g. Latapy, TCS 2008; also the standard
-vertex-ordering MapReduce formulation in Suri & Vassilvitskii, WWW
-2011): orient every undirected edge from the (degree, id)-smaller
-endpoint to the larger, so each triangle is counted exactly once and
-the wedge join fans out from LOW-degree vertices only — the skewed
-high-degree hub never enumerates its neighbor pairs, which is what
-makes the join survive power-law graphs at scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql.window import Window
 
 from ..sources import load_table
@@ -107,203 +96,6 @@ def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-def _degrees(edges: DataFrame) -> DataFrame:
-    """Per-node degree over the undirected edge set."""
-    return (
-        edges.select(F.col("s1").alias("node"))
-        .unionAll(edges.select(F.col("s2").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-
-
-def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree histogram of the co-supply graph.
-
-    Two aggregations: node degree (shuffle on node), then histogram
-    (shuffle on degree — tiny). The degree profile is the first thing
-    to check before any graph workload: it tells you whether the wedge
-    join needs the degree-ordered orientation at all.
-    """
-    edges = _supplier_edges(spark, sf_dir)
-    return (
-        _degrees(edges)
-        .groupBy("degree")
-        .agg(F.count(F.lit(1)).alias("n_suppliers"))
-        .orderBy("degree")
-    )
-
-
-DEGREE_DISTRIBUTION_SQL = f"""
-WITH {_EDGES_SQL},
-deg AS (
-    SELECT node, count(*) AS degree
-    FROM (SELECT s1 AS node FROM edges
-          UNION ALL
-          SELECT s2 AS node FROM edges) both_ends
-    GROUP BY node
-)
-SELECT degree, count(*) AS n_suppliers
-FROM deg
-GROUP BY degree
-ORDER BY degree
-"""
-
-
-def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global triangle / wedge census via degree-ordered orientation.
-
-    Each undirected edge is oriented from its (degree, id)-smaller
-    endpoint to the larger; wedges are enumerated by joining oriented
-    edges head-to-tail and closed by a LeftSemi probe for the third
-    edge. Every triangle is produced exactly once. The degree map is
-    node-sized (a dimension), so both rank joins broadcast; the wedge
-    and closure joins shuffle on a single key each.
-    """
-    edges = _supplier_edges(spark, sf_dir)
-    deg = _degrees(edges)
-    # Orientation key: (degree, node) lexicographic, encoded as a
-    # single comparable struct per endpoint via two broadcast joins.
-    d1 = deg.select(
-        F.col("node").alias("s1"),
-        F.col("degree").alias("deg1"),
-    )
-    d2 = deg.select(
-        F.col("node").alias("s2"),
-        F.col("degree").alias("deg2"),
-    )
-    ranked = edges.join(F.broadcast(d1), "s1").join(F.broadcast(d2), "s2")
-    fwd = F.struct(F.col("deg1"), F.col("s1")) < F.struct(
-        F.col("deg2"), F.col("s2")
-    )
-    oriented = ranked.select(
-        F.when(fwd, F.col("s1")).otherwise(F.col("s2")).alias("lo"),
-        F.when(fwd, F.col("s2")).otherwise(F.col("s1")).alias("hi"),
-    )
-    e1 = oriented.alias("e1")
-    e2 = oriented.alias("e2")
-    wedges = e1.join(
-        e2, F.col("e1.hi") == F.col("e2.lo")
-    ).select(
-        F.col("e1.lo").alias("u"),
-        F.col("e1.hi").alias("v"),
-        F.col("e2.hi").alias("w"),
-    )
-    closing = oriented.select(
-        F.col("lo").alias("u"), F.col("hi").alias("w")
-    )
-    triangles = wedges.join(closing, ["u", "w"], "left_semi")
-    return (
-        triangles.agg(F.count(F.lit(1)).alias("n_triangles"))
-        .crossJoin(
-            F.broadcast(edges.agg(F.count(F.lit(1)).alias("n_edges")))
-        )
-        .crossJoin(F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes"))))
-        .select("n_nodes", "n_edges", "n_triangles")
-    )
-
-
-TRIANGLE_COUNT_SQL = f"""
-WITH {_EDGES_SQL},
-deg AS (
-    SELECT node, count(*) AS degree
-    FROM (SELECT s1 AS node FROM edges
-          UNION ALL
-          SELECT s2 AS node FROM edges) both_ends
-    GROUP BY node
-),
-oriented AS (
-    SELECT CASE WHEN (d1.degree, e.s1) < (d2.degree, e.s2)
-                THEN e.s1 ELSE e.s2 END AS lo,
-           CASE WHEN (d1.degree, e.s1) < (d2.degree, e.s2)
-                THEN e.s2 ELSE e.s1 END AS hi
-    FROM edges e
-    JOIN deg d1 ON d1.node = e.s1
-    JOIN deg d2 ON d2.node = e.s2
-),
-tri AS (
-    SELECT count(*) AS n_triangles
-    FROM oriented e1
-    JOIN oriented e2 ON e1.hi = e2.lo
-    WHERE EXISTS (SELECT 1 FROM oriented e3
-                  WHERE e3.lo = e1.lo AND e3.hi = e2.hi)
-)
-SELECT (SELECT count(*) FROM deg)   AS n_nodes,
-       (SELECT count(*) FROM edges) AS n_edges,
-       n_triangles
-FROM tri
-"""
-
-
-def common_neighbor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction: top supplier pairs by shared neighbors.
-
-    The wedge join enumerates length-2 paths u—v—w (u < w, canonical),
-    counts them per (u, w), and drops pairs already connected with a
-    LeftAnti probe — i.e. recommend the strongest NOT-yet-existing
-    link. Same join skeleton as the triangle census, so the same
-    degree-skew reasoning applies; top-k is a TakeOrdered, not a full
-    sort.
-    """
-    edges = _supplier_edges(spark, sf_dir)
-    # Symmetrize so every wedge center sees its full neighborhood.
-    sym = edges.select("s1", "s2").unionAll(
-        edges.select(F.col("s2").alias("s1"), F.col("s1").alias("s2"))
-    )
-    p1 = sym.alias("p1")
-    p2 = sym.alias("p2")
-    paths = p1.join(
-        p2,
-        (F.col("p1.s2") == F.col("p2.s1"))
-        & (F.col("p1.s1") < F.col("p2.s2")),
-    ).select(
-        F.col("p1.s1").alias("u"),
-        F.col("p2.s2").alias("w"),
-    )
-    counted = paths.groupBy("u", "w").agg(
-        F.count(F.lit(1)).alias("common_neighbors")
-    )
-    existing = edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("w")
-    )
-    return (
-        counted.join(existing, ["u", "w"], "left_anti")
-        .orderBy(F.desc("common_neighbors"), "u", "w")
-        .limit(10)
-        .select(
-            F.col("u").alias("suppkey_a"),
-            F.col("w").alias("suppkey_b"),
-            "common_neighbors",
-        )
-    )
-
-
-COMMON_NEIGHBOR_SQL = f"""
-WITH {_EDGES_SQL},
-sym AS (
-    SELECT s1, s2 FROM edges
-    UNION ALL
-    SELECT s2 AS s1, s1 AS s2 FROM edges
-),
-paths AS (
-    SELECT p1.s1 AS u, p2.s2 AS w
-    FROM sym p1
-    JOIN sym p2 ON p1.s2 = p2.s1 AND p1.s1 < p2.s2
-),
-counted AS (
-    SELECT u, w, count(*) AS common_neighbors
-    FROM paths
-    GROUP BY u, w
-)
-SELECT u AS suppkey_a, w AS suppkey_b, common_neighbors
-FROM counted
-WHERE NOT EXISTS (SELECT 1 FROM edges
-                  WHERE edges.s1 = counted.u AND edges.s2 = counted.w)
-ORDER BY common_neighbors DESC, u, w
-LIMIT 10
-"""
-
-
 def adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar, "Friends and
     neighbors on the Web", Social Networks 2003) beside the raw
@@ -316,8 +108,7 @@ def adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round(1e6/ln(deg))) before the per-pair sum, so the score is an
     order-free integer monoid and the ranking can never move on float
     summation order (the repo's integer-Jacobi convention); the float
-    score column is one final division. Same wedge-join skeleton and
-    TakeOrdered top-k as common_neighbor_topk."""
+    score column is one final division; the top-k is a TakeOrdered."""
     edges = _supplier_edges(spark, sf_dir)
     sym = edges.select("s1", "s2").unionAll(
         edges.select(F.col("s2").alias("s1"), F.col("s1").alias("s2"))
@@ -394,228 +185,9 @@ LIMIT 10
 
 
 QUERIES = {
-    "degree_distribution": degree_distribution,
-    "triangle_count": triangle_count,
-    "common_neighbor_topk": common_neighbor_topk,
     "adamic_adar_topk": adamic_adar_topk,
 }
 
 ORACLES = {
-    "degree_distribution": DEGREE_DISTRIBUTION_SQL,
-    "triangle_count": TRIANGLE_COUNT_SQL,
-    "common_neighbor_topk": COMMON_NEIGHBOR_SQL,
     "adamic_adar_topk": ADAMIC_ADAR_SQL,
 }
-
-
-_LPA_ROUNDS = 4
-
-
-def label_propagation_communities(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Community detection via synchronous label propagation.
-
-    Deterministic variant of Raghavan et al. (2007): every node starts
-    with its own id as label; each of the ``_LPA_ROUNDS`` synchronous
-    rounds every node adopts the most frequent label among its
-    neighbors, ties broken by the SMALLEST label. Bounded rounds (not
-    convergence-detection) keep the dataflow static — the oracle
-    unrolls the same rounds as chained CTEs, so both engines run the
-    identical synchronous schedule (classic LPA is sweep-order
-    dependent; the synchronous schedule removes that nondeterminism).
-
-    Scale posture: each round is one shuffle join (labels are
-    re-keyed by neighbor) plus one map-side-combinable count and one
-    per-node window — all on the sparsified top-k edge set whose
-    degree is bounded by construction, so a round's cost is O(edges)
-    regardless of hub skew. The report is community sizes only.
-    """
-    edges = _supplier_edges(spark, sf_dir)
-    sym = (
-        edges.select(F.col("s1").alias("u"), F.col("s2").alias("v"))
-        .unionAll(
-            edges.select(F.col("s2").alias("u"), F.col("s1").alias("v"))
-        )
-        # Truncate lineage once: every round joins against sym, and
-        # without this the final plan re-derives the top-k graph build
-        # once per round per branch (measured 6.1 s -> sub-second at
-        # sf0.1).
-        .localCheckpoint()
-    )
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    win = Window.partitionBy("node").orderBy(
-        F.desc("cnt"), F.asc("label")
-    )
-    for rnd in range(_LPA_ROUNDS):
-        counted = (
-            sym.join(labels, sym.v == labels.node)
-            .groupBy(F.col("u").alias("node_"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumnRenamed("node_", "node")
-        )
-        labels = (
-            counted.withColumn("r", F.row_number().over(win))
-            .filter(F.col("r") == 1)
-            .select("node", "label")
-        )
-        if rnd < _LPA_ROUNDS - 1:
-            # Per-round truncation keeps the plan depth constant (the
-            # standard Spark fixpoint pattern, operators/components.py);
-            # the LAST round stays lazy so the returned plan still
-            # exposes one round's join shape to the plan-shape pins.
-            labels = labels.localCheckpoint()
-    return (
-        labels.groupBy(F.col("label").alias("community"))
-        .agg(F.count(F.lit(1)).alias("size"))
-        .orderBy(F.desc("size"), "community")
-    )
-
-
-def _lpa_sql() -> str:
-    parts = [
-        _EDGES_SQL,
-        """sym AS (
-    SELECT s1 AS u, s2 AS v FROM edges
-    UNION ALL
-    SELECT s2 AS u, s1 AS v FROM edges
-)""",
-        "l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym)",
-    ]
-    for i in range(1, _LPA_ROUNDS + 1):
-        parts.append(
-            f"""c{i} AS (
-    SELECT s.u AS node, l.label, count(*) AS cnt
-    FROM sym s JOIN l{i - 1} l ON s.v = l.node
-    GROUP BY s.u, l.label
-),
-l{i} AS (
-    SELECT node, label FROM (
-        SELECT node, label,
-               row_number() OVER (PARTITION BY node
-                                  ORDER BY cnt DESC, label) AS r
-        FROM c{i})
-    WHERE r = 1
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT label AS community, count(*) AS size
-FROM l{_LPA_ROUNDS}
-GROUP BY label
-ORDER BY size DESC, community
-"""
-    )
-
-
-LPA_SQL = _lpa_sql()
-
-
-_KCORE_K = 2
-_KCORE_ROUNDS = 3
-
-
-def k_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded k-core peeling trace (k=2, 3 rounds).
-
-    Each round drops every edge with an endpoint of degree < k, the
-    distributed formulation of iterative k-core decomposition
-    (peeling); the output is the convergence trace — per-round
-    surviving node and edge counts — which is what a pipeline
-    monitoring graph densification actually records. Bounded rounds
-    keep the dataflow static and oracle-unrollable; on this top-k
-    graph the trace converges within the bound (asserted by parity
-    with the oracle's identical unrolling).
-
-    Scale posture: a round is one degree aggregate (map-side
-    combinable) plus two broadcast-or-shuffle joins of the edge set
-    against the node-degree table; no iteration reads the raw fact
-    tables again.
-    """
-    # Checkpoint the graph build once and each round's surviving edge
-    # set: the per-round stat frames and the next round's filter all
-    # re-read e, and without truncation the unioned report re-derives
-    # the whole join chain per branch (measured 71 s -> ~2 s at sf0.1).
-    e = _supplier_edges(spark, sf_dir).localCheckpoint()
-    stats = []
-    for rnd in range(_KCORE_ROUNDS + 1):
-        nodes = e.select(F.col("s1").alias("node")).unionAll(
-            e.select(F.col("s2").alias("node"))
-        )
-        stats.append(
-            e.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
-                F.broadcast(
-                    nodes.agg(
-                        F.count_distinct("node").alias("n_nodes")
-                    )
-                )
-            ).select(
-                F.lit(rnd).alias("round"), "n_nodes", "n_edges"
-            )
-        )
-        if rnd == _KCORE_ROUNDS:
-            break
-        deg = nodes.groupBy("node").agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "s1"), "s1")
-            .join(keep.withColumnRenamed("node", "s2"), "s2")
-            .select("s1", "s2")
-        )
-        if rnd < _KCORE_ROUNDS - 1:
-            # Last round stays lazy so the report plan exposes the
-            # degree-filter join shape (see plan-shape pin).
-            e = e.localCheckpoint()
-    out = stats[0]
-    for st in stats[1:]:
-        out = out.unionAll(st)
-    return out.orderBy("round")
-
-
-def _kcore_sql() -> str:
-    parts = [_EDGES_SQL, "e0 AS (SELECT s1, s2 FROM edges)"]
-    for i in range(1, _KCORE_ROUNDS + 1):
-        parts.append(
-            f"""d{i - 1} AS (
-    SELECT node, count(*) AS deg
-    FROM (SELECT s1 AS node FROM e{i - 1}
-          UNION ALL
-          SELECT s2 AS node FROM e{i - 1}) ends
-    GROUP BY node
-),
-e{i} AS (
-    SELECT e.s1, e.s2
-    FROM e{i - 1} e
-    JOIN d{i - 1} da ON da.node = e.s1 AND da.deg >= {_KCORE_K}
-    JOIN d{i - 1} db ON db.node = e.s2 AND db.deg >= {_KCORE_K}
-)"""
-        )
-    stat_rows = "\nUNION ALL\n".join(
-        f"""SELECT {i} AS round,
-       (SELECT count(DISTINCT node)
-        FROM (SELECT s1 AS node FROM e{i}
-              UNION ALL SELECT s2 FROM e{i}) en) AS n_nodes,
-       (SELECT count(*) FROM e{i}) AS n_edges"""
-        for i in range(_KCORE_ROUNDS + 1)
-    )
-    return (
-        "WITH " + ",\n".join(parts) + "\n" + stat_rows
-        + "\nORDER BY round\n"
-    )
-
-
-KCORE_SQL = _kcore_sql()
-
-
-QUERIES["label_propagation_communities"] = label_propagation_communities
-ORACLES["label_propagation_communities"] = LPA_SQL
-QUERIES["k_core_peeling"] = k_core_peeling
-ORACLES["k_core_peeling"] = KCORE_SQL

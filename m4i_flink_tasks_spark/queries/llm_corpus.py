@@ -2,34 +2,19 @@
 (north-star extension; no reference counterpart — the reference is a
 metadata-governance ETL, see SURVEY.md §2.6).
 
-Four capabilities a 100 TB pretraining-corpus pipeline runs between raw
-ingest and tokenization, all expressed so Catalyst keeps them at scan
-speed and every shuffle is a map-side-combinable aggregation:
+The stages a 100 TB pretraining-corpus pipeline runs between raw
+ingest and tokenization — deterministic sampling and splits, mixture
+sampling, BPE training and encoding, split-drift and length-batching
+reports, snapshot diffs, WARC extraction, and the build manifest — all
+expressed so Catalyst keeps them at scan speed and every shuffle is a
+map-side-combinable aggregation.
 
-- ``repetition_metrics``  — Gopher-style per-document repetition signals
-  (duplicate-token fraction, top-bigram fraction, duplicate-bigram
-  fraction). The bigram counts go through ``explode`` + two hash
-  aggregations instead of per-row O(n²) array lambdas, so cost stays
-  linear in corpus size and partial aggregation absorbs hot documents.
-- ``corpus_token_stats``  — two-pass global statistics: a token
-  document-frequency dimension (pass 1) broadcast back onto the exploded
-  corpus (pass 2) to score each document's rare-token and
-  boilerplate-token fractions. The vocabulary dimension is tiny relative
-  to the corpus (Heaps' law: ~millions of rows at 100 TB, tens of MB)
-  so the second pass is a broadcast join — no corpus-sized shuffle.
-- ``corpus_sampling_splits`` — deterministic train/val/test assignment
-  and per-language stratified downsampling via the cross-engine
-  polynomial hash (operators/text.py), so the exact same rows are
-  selected on any cluster size, any partitioning, and in the DuckDB
-  oracle. Hash-gating replaces ``sampleBy`` because reproducibility is a
-  correctness requirement for training corpora (rerunning the pipeline
-  must yield the same split).
-- ``pii_scrub``           — email/phone redaction with per-document
-  redaction counts. Patterns restricted to syntax shared by Java regex
-  (Spark) and RE2 (DuckDB oracle). The PII payloads are synthesized
-  deterministically from ``doc_id`` because the generated testdata
-  contains none — the scrub expressions themselves are the real
-  operator.
+Sampling and splits (``corpus_sampling_splits``) gate on the
+cross-engine polynomial hash (operators/text.py), so the exact same rows
+are selected on any cluster size, any partitioning, and in the DuckDB
+oracle. Hash-gating replaces ``sampleBy`` because reproducibility is a
+correctness requirement for training corpora (rerunning the pipeline
+must yield the same split).
 
 All metrics are ratios of exact integers (or fixed-precision rounds of
 them) so Spark and DuckDB agree bit-for-bit after round(…, 6).
@@ -44,7 +29,6 @@ from ..operators.local_frame import local_frame
 
 from ..operators import text as T
 from ..sources import load_table
-from ..sources.tables import table_num_rows
 
 # --------------------------------------------------------------------------
 # shared DuckDB fragments
@@ -59,206 +43,6 @@ def _poly_hash_sql(expr: str) -> str:
         f"list_transform(string_split({expr}, ''), c -> ascii(c)::BIGINT)), "
         "(acc, ch) -> (acc * 31 + ch) % 1000000007)"
     )
-
-
-# --------------------------------------------------------------------------
-# repetition metrics (Gopher-style quality signals)
-# --------------------------------------------------------------------------
-
-
-def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition signals: duplicate-token fraction,
-    top-bigram fraction (share of bigram occurrences taken by the most
-    frequent bigram), duplicate-bigram fraction (share of bigram
-    occurrences whose bigram occurs more than once).
-
-    Scale shape: the bigram counting is explode → groupBy(doc, bigram)
-    → groupBy(doc). Both aggregations are hash aggregates with map-side
-    partial combine, so a pathological document with one bigram repeated
-    10^6 times contributes one partial row per task, not a skewed
-    shuffle. The per-row alternative (array lambdas counting occurrences
-    inside each row) is O(n²) per document and dies on long documents.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
-    )
-    base = toks.select(
-        "doc_id",
-        F.size("t").alias("n_tokens"),
-        F.round(
-            1
-            - F.size(F.array_distinct("t"))
-            / F.greatest(F.size("t"), F.lit(1)),
-            6,
-        ).alias("dup_token_frac"),
-    )
-    # Bigrams via index sequence; guarded so size<2 yields an empty
-    # array (sequence(1, 0) would count DOWN, not produce empty).
-    bigrams = toks.select(
-        "doc_id",
-        F.explode_outer(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(1, size(t) - 1), "
-                "          i -> concat_ws(' ', t[i-1], t[i])) "
-                "ELSE array() END"
-            )
-        ).alias("bigram"),
-        # outer + isNotNull: avoids the inner-Generate size(...)>0
-        # guard re-computing the bigram transform per row; bigram
-        # strings are never null, so this drops exactly the
-        # empty-array docs the inner explode dropped.
-    ).filter(F.col("bigram").isNotNull())
-    bg_stats = (
-        bigrams.groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("c").alias("top_c"),
-            F.sum("c").alias("total_bg"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias(
-                "dup_bg"
-            ),
-            F.count("*").alias("distinct_bg"),
-        )
-    )
-    return (
-        base.join(bg_stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            "dup_token_frac",
-            F.round(
-                F.coalesce(F.col("top_c") / F.col("total_bg"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
-            F.round(
-                F.coalesce(F.col("dup_bg") / F.col("total_bg"), F.lit(0.0)), 6
-            ).alias("dup_bigram_frac"),
-            F.coalesce(F.col("distinct_bg"), F.lit(0).cast("long")).alias(
-                "n_distinct_bigrams"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-REPETITION_SQL = r"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-    FROM documents
-), base AS (
-    SELECT doc_id,
-           len(t) AS n_tokens,
-           round(1 - len(list_distinct(t))::DOUBLE / greatest(len(t), 1), 6)
-               AS dup_token_frac
-    FROM toks
-), bg AS (
-    SELECT doc_id,
-           unnest(list_transform(
-               range(1, greatest(len(t) - 1, 0) + 1),
-               i -> array_to_string(t[i:i+1], ' ')
-           )) AS bigram
-    FROM toks
-), cnt AS (
-    SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2
-), stats AS (
-    SELECT doc_id,
-           max(c) AS top_c,
-           sum(c) AS total_bg,
-           sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_bg,
-           count(*) AS distinct_bg
-    FROM cnt GROUP BY 1
-)
-SELECT b.doc_id, b.n_tokens, b.dup_token_frac,
-       round(coalesce(top_c::DOUBLE / total_bg, 0), 6) AS top_bigram_frac,
-       round(coalesce(dup_bg::DOUBLE / total_bg, 0), 6) AS dup_bigram_frac,
-       coalesce(distinct_bg, 0) AS n_distinct_bigrams
-FROM base b LEFT JOIN stats USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-# --------------------------------------------------------------------------
-# corpus-global token statistics (two-pass: DF dimension → per-doc scores)
-# --------------------------------------------------------------------------
-
-_RARE_DF_MAX = 2  # token is "rare" if it appears in <= 2 documents
-
-
-def corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document rare-token and boilerplate-token fractions against a
-    corpus-wide token document-frequency dimension.
-
-    Pass 1 builds ``(token, df)`` — distinct (doc, token) pairs then a
-    hash aggregate. Pass 2 explodes the corpus again and broadcast-joins
-    the dimension: the vocabulary is sublinear in corpus size (Heaps'
-    law), so at 100 TB it is still a few tens of MB and the join never
-    shuffles the corpus. "Common" = token present in >= half the corpus
-    documents (integer comparison df*2 >= n_docs: no float threshold to
-    disagree on across engines).
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = table_num_rows(sf_dir, "documents")
-    if n_docs is None:  # non-local path: one count job, still exact
-        n_docs = docs.count()
-    # outer+notnull: avoid the inner-Generate guard re-computing the
-    # tokenize per row (split elements are never null).
-    tok = docs.select(
-        "doc_id",
-        F.explode_outer(T.tokens(F.lower(F.col("text")))).alias("token"),
-    ).filter(F.col("token").isNotNull())
-    dfreq = (
-        tok.distinct().groupBy("token").agg(F.count("*").alias("df"))
-    )
-    return (
-        tok.join(F.broadcast(dfreq), "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.count_distinct("token").alias("n_distinct_tokens"),
-            F.round(F.avg("df"), 6).alias("mean_token_df"),
-            F.round(
-                F.sum(
-                    F.when(F.col("df") <= _RARE_DF_MAX, 1).otherwise(0)
-                )
-                / F.count("*"),
-                6,
-            ).alias("rare_token_frac"),
-            F.round(
-                F.sum(
-                    F.when(F.col("df") * 2 >= n_docs, 1).otherwise(0)
-                )
-                / F.count("*"),
-                6,
-            ).alias("common_token_frac"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-CORPUS_TOKEN_STATS_SQL = rf"""
-WITH tok AS (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-    FROM documents
-), dfreq AS (
-    SELECT token, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1
-), n AS (
-    SELECT count(*) AS n_docs FROM documents
-)
-SELECT doc_id,
-       count(*) AS n_tokens,
-       count(DISTINCT token) AS n_distinct_tokens,
-       round(sum(df)::DOUBLE / count(*), 6) AS mean_token_df,
-       round(sum(CASE WHEN df <= {_RARE_DF_MAX} THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 6) AS rare_token_frac,
-       round(sum(CASE WHEN df * 2 >= n_docs THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 6) AS common_token_frac
-FROM tok JOIN dfreq USING (token), n
-GROUP BY doc_id, n_docs
-ORDER BY doc_id
-"""
 
 
 # --------------------------------------------------------------------------
@@ -382,219 +166,10 @@ ORDER BY doc_id
 
 # Patterns restricted to the Java-regex ∩ RE2 common subset (character
 # classes, bounded repetition, \b): no lookaround, no backreferences.
+# The streaming corpus ingest (streaming/corpus_ingest.py) scrubs with
+# them and its DuckDB oracle embeds them.
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE_RE = r"\b\d{3}-\d{4}\b"
-
-
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redact emails and phone numbers, reporting per-doc match counts.
-
-    The testdata corpus contains no PII, so deterministic payloads are
-    synthesized from ``doc_id`` (same trick as the multimodal query's
-    codec payloads) — the redaction expressions are the operator under
-    test and run entirely in whole-stage codegen. One scan, no shuffle.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    dirty = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com or admin@mail"),
-        (F.col("doc_id") % 10).cast("string"),
-        F.lit(".org phone 555-"),
-        F.lpad(((F.col("doc_id") * 7) % 10000).cast("string"), 4, "0"),
-        F.lit(" done"),
-    )
-    return (
-        docs.select("doc_id", dirty.alias("dirty"))
-        .select(
-            "doc_id",
-            F.size(F.regexp_extract_all("dirty", F.lit(_EMAIL_RE), 0)).alias(
-                "n_emails"
-            ),
-            F.size(F.regexp_extract_all("dirty", F.lit(_PHONE_RE), 0)).alias(
-                "n_phones"
-            ),
-            F.regexp_replace(
-                F.regexp_replace("dirty", _EMAIL_RE, "<EMAIL>"),
-                _PHONE_RE,
-                "<PHONE>",
-            ).alias("scrubbed_text"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-PII_SCRUB_SQL = rf"""
-WITH dirty AS (
-    SELECT doc_id,
-           text || ' contact user' || doc_id::VARCHAR
-                || '@example.com or admin@mail' || (doc_id % 10)::VARCHAR
-                || '.org phone 555-'
-                || lpad(((doc_id * 7) % 10000)::VARCHAR, 4, '0')
-                || ' done' AS dirty
-    FROM documents
-)
-SELECT doc_id,
-       len(regexp_extract_all(dirty, '{_EMAIL_RE}')) AS n_emails,
-       len(regexp_extract_all(dirty, '{_PHONE_RE}')) AS n_phones,
-       regexp_replace(
-           regexp_replace(dirty, '{_EMAIL_RE}', '<EMAIL>', 'g'),
-           '{_PHONE_RE}', '<PHONE>', 'g') AS scrubbed_text
-FROM dirty
-ORDER BY doc_id
-"""
-
-
-# --------------------------------------------------------------------------
-# sequence packing
-# --------------------------------------------------------------------------
-
-_PACK_BUDGET = 512  # tokens per training sequence
-
-
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pack documents into fixed token-budget training sequences by
-    contiguous prefix-sum binning: within each shard, a document's
-    sequence id is ``floor(exclusive_prefix_tokens / budget)`` — the
-    standard best-effort contiguous packing where a sequence may
-    overflow by at most one document (the tokenizer truncates the
-    straddler downstream).
-
-    Scale shape: the prefix sum is a window ordered by ``doc_id``
-    WITHIN each ``source`` shard, never a global order — a global
-    prefix sum would serialize onto one partition, while per-shard
-    packing keeps every shard's window independent (training sequences
-    don't need cross-shard order). At 100 TB, shard count (or a salted
-    sub-shard key) scales with the cluster; each window task streams
-    its shard once, already co-partitioned for the per-sequence
-    aggregate that follows.
-    """
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    assigned = docs.select(
-        "doc_id",
-        "source",
-        T.token_count(F.col("text")).alias("n_tokens"),
-    ).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor(
-            F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) / _PACK_BUDGET
-        ).alias("seq_id"),
-    )
-    return (
-        assigned.groupBy("source", "seq_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.min("doc_id").alias("first_doc_id"),
-            F.max("doc_id").alias("last_doc_id"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda d: d.cast("string"),
-                ),
-                ",",
-            ).alias("doc_ids"),
-        )
-        .orderBy("source", "seq_id")
-    )
-
-
-SEQUENCE_PACKING_SQL = rf"""
-WITH sized AS (
-    SELECT doc_id, source,
-           len(string_split_regex(trim(text), '\s+')) AS n_tokens
-    FROM documents
-), assigned AS (
-    SELECT doc_id, source, n_tokens,
-           floor(coalesce(sum(n_tokens) OVER (
-               PARTITION BY source ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) / {_PACK_BUDGET})::BIGINT AS seq_id
-    FROM sized
-)
-SELECT source, seq_id,
-       count(*) AS n_docs,
-       sum(n_tokens)::BIGINT AS total_tokens,
-       min(doc_id) AS first_doc_id,
-       max(doc_id) AS last_doc_id,
-       string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS doc_ids
-FROM assigned
-GROUP BY source, seq_id
-ORDER BY source, seq_id
-"""
-
-
-# --------------------------------------------------------------------------
-# exact-size stratified sample (fixed k per stratum)
-# --------------------------------------------------------------------------
-
-_FIXED_K = 25
-
-
-def stratified_fixed_k_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """EXACTLY min(k, |stratum|) documents per language, by hash order.
-
-    Rate-gating (``corpus_sampling_splits``) yields binomial sample
-    sizes; class-balancing a training mix needs GUARANTEED counts.
-    Ordering each stratum by a salted cross-engine hash and keeping
-    ``row_number() <= k`` is a uniform without-replacement sample that
-    is a pure function of the data — stable under re-partitioning and
-    reproducible by the SQL oracle (doc_id breaks hash ties).
-
-    Scale: one shuffle on the stratum key. The window sorts each
-    stratum, which at 100 TB is wasteful for k << |stratum|; the
-    standard refinement pre-filters with an approximate per-stratum
-    k-th-hash threshold (computed from a sample, semantics unchanged
-    because the final row_number re-checks exactly) so the sort sees
-    only ~k rows per stratum. Not needed at test scale; the filter
-    would slot between the hash projection and the window.
-    """
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    h = T.poly_hash(
-        F.concat(F.lit("fixk:"), F.col("doc_id").cast("string"))
-    )
-    win = Window.partitionBy("lang").orderBy("h", "doc_id")
-    return (
-        docs.select("doc_id", "lang", h.alias("h"))
-        .withColumn("sample_rank", F.row_number().over(win))
-        .filter(F.col("sample_rank") <= _FIXED_K)
-        .select("lang", "sample_rank", "doc_id", "h")
-        .orderBy("lang", "sample_rank")
-    )
-
-
-def _fixed_k_sql() -> str:
-    h = _poly_hash_sql("'fixk:' || doc_id::VARCHAR")
-    return f"""
-WITH hashed AS (
-    SELECT doc_id, lang, {h} AS h
-    FROM documents
-),
-ranked AS (
-    SELECT lang, doc_id, h,
-           row_number() OVER (PARTITION BY lang ORDER BY h, doc_id)
-               AS sample_rank
-    FROM hashed
-)
-SELECT lang, sample_rank, doc_id, h
-FROM ranked
-WHERE sample_rank <= {_FIXED_K}
-ORDER BY lang, sample_rank
-"""
 
 
 def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,8 +298,8 @@ def temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the apportionment runs on the |languages|-row aggregate
     (driver-trivial); the pick is one keyed shuffle for the per-stratum
     row_number with the quota dimension broadcast back. At extreme
-    stratum sizes swap the full sort for the k-th-hash pre-filter
-    documented in stratified_fixed_k_sample.
+    stratum sizes swap the full sort for a k-th-hash pre-filter: keep
+    only rows whose hash falls under each stratum's k-th smallest.
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1038,12 +613,7 @@ QUERIES = {
     "bpe_corpus_encode": bpe_corpus_encode,
     "weighted_corpus_sample": weighted_corpus_sample,
     "temperature_mixture_sample": temperature_mixture_sample,
-    "repetition_metrics": repetition_metrics,
-    "corpus_token_stats": corpus_token_stats,
     "corpus_sampling_splits": corpus_sampling_splits,
-    "stratified_fixed_k_sample": stratified_fixed_k_sample,
-    "pii_scrub": pii_scrub,
-    "sequence_packing": sequence_packing,
     "corpus_build_manifest": corpus_build_manifest,
 }
 
@@ -1052,12 +622,7 @@ ORACLES = {
     "bpe_corpus_encode": _bpe_encode_sql(),
     "weighted_corpus_sample": _weighted_sample_sql(),
     "temperature_mixture_sample": _temperature_mixture_sql(),
-    "repetition_metrics": REPETITION_SQL,
-    "corpus_token_stats": CORPUS_TOKEN_STATS_SQL,
     "corpus_sampling_splits": _sampling_splits_sql(),
-    "stratified_fixed_k_sample": _fixed_k_sql(),
-    "pii_scrub": PII_SCRUB_SQL,
-    "sequence_packing": SEQUENCE_PACKING_SQL,
     "corpus_build_manifest": _corpus_build_manifest_sql(),
 }
 
@@ -1556,117 +1121,6 @@ QUERIES["warc_text_pipeline"] = warc_text_pipeline
 ORACLES["warc_text_pipeline"] = WARC_TEXT_PIPELINE_SQL
 
 
-_CRAWL_SHARDS = 8
-_CRAWL_BUDGET = 256  # tokens per packed training sequence
-
-
-def crawl_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus RELEASE path end to end: WARC record walk → WET tag
-    strip → quality gates → fixed-token-budget sequence packing → a
-    per-sequence release manifest with content checksums — what a
-    training-data team actually ships after curating a crawl.
-
-    Composes three independently-proven stages in ONE dataflow (record
-    mechanics from ``operators/warc.py``, gates from
-    ``wet_gate_records``, contiguous prefix-sum packing from
-    ``sequence_packing``'s pattern). Packing windows are per shard
-    (``doc_id % 8``, the salted sub-shard key at scale) so no
-    global order ever serializes the corpus; the manifest row carries
-    an additive mod-prime checksum of the packed records' extracted
-    text hashes, so the oracle re-derives every byte of provenance in
-    closed form — a wrong record boundary, gate verdict, pack
-    assignment, or hash anywhere upstream breaks it."""
-    from ..operators.warc import attach_warc_html_payload, extract_warc_html
-
-    docs = load_table(spark, sf_dir, "documents")
-    recs = wet_gate_records(extract_warc_html(attach_warc_html_payload(docs)))
-    kept = recs.filter(F.col("keep")).select(
-        "doc_id",
-        "rec_index",
-        "n_body_tokens",
-        "extracted_hash",
-        (F.col("doc_id") % _CRAWL_SHARDS).cast("int").alias("shard"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id", "rec_index")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    assigned = kept.withColumn(
-        "seq_id",
-        F.floor(
-            F.coalesce(F.sum("n_body_tokens").over(w), F.lit(0))
-            / _CRAWL_BUDGET
-        ),
-    )
-    # (doc_id, rec_index) orders injectively as doc_id*4 + rec_index
-    # (rec_index <= 2 by construction)
-    okey = F.col("doc_id") * 4 + F.col("rec_index")
-    return (
-        assigned.groupBy("shard", "seq_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.sum("n_body_tokens").alias("total_tokens"),
-            F.min_by("doc_id", okey).alias("first_doc_id"),
-            F.min_by("rec_index", okey).alias("first_rec_index"),
-            F.max_by("doc_id", okey).alias("last_doc_id"),
-            F.max_by("rec_index", okey).alias("last_rec_index"),
-            (F.sum("extracted_hash") % 1_000_000_007).alias(
-                "content_checksum"
-            ),
-        )
-        .orderBy("shard", "seq_id")
-    )
-
-
-CRAWL_RELEASE_SQL = f"""
-WITH recs AS (
-    SELECT doc_id, UNNEST(range(1 + doc_id % 3)) AS i FROM documents
-), facts AS (
-    SELECT doc_id, i, 5 + (doc_id + 3 * i) % 20 AS n FROM recs
-), toks AS (
-    SELECT doc_id, i, n,
-           list_transform(range(n),
-               j -> 'w' || doc_id || 'x' || i || 'n' || j) AS tk
-    FROM facts
-), ext AS (
-    SELECT doc_id, i, n,
-           'doc ' || array_to_string(tk, ' ') AS extracted,
-           array_to_string(list_slice(tk, 1, least({_HTML_BLOCK_SQL}, n)),
-                           ' ') AS anchor
-    FROM toks
-), kept AS (
-    SELECT doc_id, i, n,
-           {_WARC_POLY.format(expr='extracted')} AS h,
-           CAST(doc_id % {_CRAWL_SHARDS} AS INT) AS shard
-    FROM ext
-    WHERE n >= 8
-      AND round(length(anchor)::DOUBLE / length(extracted), 6) <= 0.6
-), assigned AS (
-    SELECT *,
-           CAST(floor(COALESCE(SUM(n) OVER (
-               PARTITION BY shard ORDER BY doc_id, i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) / {_CRAWL_BUDGET}.0) AS BIGINT) AS seq_id
-    FROM kept
-)
-SELECT shard, seq_id,
-       COUNT(*) AS n_records,
-       CAST(SUM(n) AS BIGINT) AS total_tokens,
-       arg_min(doc_id, doc_id * 4 + i) AS first_doc_id,
-       CAST(arg_min(i, doc_id * 4 + i) AS INT) AS first_rec_index,
-       arg_max(doc_id, doc_id * 4 + i) AS last_doc_id,
-       CAST(arg_max(i, doc_id * 4 + i) AS INT) AS last_rec_index,
-       CAST(SUM(h) % 1000000007 AS BIGINT) AS content_checksum
-FROM assigned
-GROUP BY shard, seq_id
-ORDER BY shard, seq_id
-"""
-
-QUERIES["crawl_release_manifest"] = crawl_release_manifest
-ORACLES["crawl_release_manifest"] = CRAWL_RELEASE_SQL
-
-
 def warc_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl ingest with the dead-letter contract closed executor-side:
     archives of ``doc_id % 17 == 3`` arrive TRUNCATED (deterministic
@@ -1710,100 +1164,6 @@ ORDER BY d.doc_id
 
 QUERIES["warc_ingest_quarantine"] = warc_ingest_quarantine
 ORACLES["warc_ingest_quarantine"] = WARC_QUARANTINE_SQL
-
-
-_URL_TLDS = ("com", "org", "net", "info", "biz")
-_URL_BLOCKLIST = ("h13", "h42", "h77")
-_LOW_TRUST_TLDS = ("info", "biz")
-
-
-def url_frontier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL/domain-level corpus curation — the gate every web-corpus
-    recipe (C4, RefinedWeb) runs BEFORE fetching or extracting text:
-    parse the crawl frontier's URLs, block listed domains, down-trust
-    spammy TLDs, and report per-domain document/token volumes for the
-    mixture decisions downstream.
-
-    The frontier URL column is synthesized deterministically from
-    doc_id (the generated testdata has no URL column; the parse and
-    gate expressions are the operator — same precedent as pii_scrub),
-    and the query then parses it back with REAL regex/string mechanics:
-    host via the authority regex, TLD and domain label via
-    substring_index, path depth by splitting the path segment. The
-    oracle never parses a URL — it restates host/TLD/depth as closed
-    forms of doc_id — so any parsing bug breaks the hash. Map-only
-    expressions + one domain-keyed aggregate (|domains| << corpus, the
-    classic low-cardinality group-by)."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    tld_arr = F.array(*[F.lit(t) for t in _URL_TLDS])
-    synth_url = F.concat(
-        F.lit("http://h"),
-        (d % 97).cast("string"),
-        F.lit("."),
-        F.element_at(tld_arr, ((d % 5) + 1).cast("int")),
-        F.when(d % 3 == 0, F.concat(F.lit("/d/"), d.cast("string"))).otherwise(
-            F.concat(
-                F.lit("/d/"), d.cast("string"),
-                F.lit("/p"), (d % 7).cast("string"),
-            )
-        ),
-    )
-    with_url = docs.select(
-        "doc_id", T.token_count(F.col("text")).alias("nt"),
-        synth_url.alias("url"),
-    )
-    host = F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
-    path = F.regexp_extract(F.col("url"), r"^https?://[^/]+(/.*)$", 1)
-    parsed = with_url.select(
-        "doc_id",
-        "nt",
-        host.alias("host"),
-        F.substring_index(host, ".", -1).alias("tld"),
-        F.substring_index(host, ".", 1).alias("label"),
-        (F.size(F.split(path, "/")) - 1).alias("path_depth"),
-    )
-    status = (
-        F.when(F.col("label").isin(*_URL_BLOCKLIST), F.lit("blocked"))
-        .when(F.col("tld").isin(*_LOW_TRUST_TLDS), F.lit("low_trust"))
-        .otherwise(F.lit("ok"))
-    )
-    return (
-        parsed.withColumn("status", status)
-        .groupBy("host", "tld", "status")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").alias("n_tokens"),
-            F.round(F.avg("path_depth"), 6).alias("avg_path_depth"),
-        )
-        .orderBy("host")
-    )
-
-
-URL_FRONTIER_SQL = r"""
-WITH base AS (
-    SELECT doc_id,
-           'h' || (doc_id % 97) AS label,
-           (['com','org','net','info','biz'])[(doc_id % 5) + 1] AS tld,
-           CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 3 END AS depth,
-           len(string_split_regex(trim(text), '\s+')) AS nt
-    FROM documents
-)
-SELECT label || '.' || tld AS host,
-       tld,
-       CASE WHEN label IN ('h13', 'h42', 'h77') THEN 'blocked'
-            WHEN tld IN ('info', 'biz') THEN 'low_trust'
-            ELSE 'ok' END AS status,
-       COUNT(*) AS n_docs,
-       CAST(SUM(nt) AS BIGINT) AS n_tokens,
-       round(avg(depth), 6) AS avg_path_depth
-FROM base
-GROUP BY 1, 2, 3
-ORDER BY host
-"""
-
-QUERIES["url_frontier_curation"] = url_frontier_curation
-ORACLES["url_frontier_curation"] = URL_FRONTIER_SQL
 
 
 # --------------------------------------------------------------------------

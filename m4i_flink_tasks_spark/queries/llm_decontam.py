@@ -1,11 +1,12 @@
 """Training-corpus hygiene queries: benchmark decontamination,
-entropy-based quality scoring, and data-mixture weighting.
+entropy-based quality scoring, and cross-split near-duplicate leakage.
 
 North-star LLM-pipeline scope (no reference analogue — the reference
 ends at metadata sync; these are the curation steps a 100 TB corpus
-needs before training). All three are expression-native single-scan
-plans; the only broadcast is the benchmark n-gram set, which is small
-by construction (eval sets are MBs against a TB-scale corpus).
+needs before training). Decontamination and entropy scoring are
+expression-native single-scan plans; the only broadcast is the
+benchmark n-gram set, which is small by construction (eval sets are MBs
+against a TB-scale corpus).
 """
 
 from __future__ import annotations
@@ -114,183 +115,16 @@ FROM stats
 ORDER BY doc_id
 """
 
-# Mixture temperature: weight ~ tokens^alpha, the standard temperature-
-# sampled data-mixing rule (alpha=1 reproduces natural proportions,
-# alpha->0 uniform; 0.5 is the common multilingual compromise).
-_MIX_ALPHA = 0.5
-
-
-def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token totals and temperature-scaled sampling weights —
-    the data-mixing table a training run consumes. The normalizer is a
-    one-row aggregate of the per-source table (#sources rows, not the
-    corpus) broadcast back as a scalar, so no single-partition window
-    sits in the plan."""
-    docs = load_table(spark, sf_dir, "documents")
-    scaled = F.pow(F.col("total_tokens").cast("double"), F.lit(_MIX_ALPHA))
-    per_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(T.token_count(F.col("text"))).alias("total_tokens"),
-    ).withColumn("_scaled", scaled)
-    norm = per_src.agg(F.sum("_scaled").alias("_norm"))
-    return (
-        per_src.crossJoin(F.broadcast(norm))
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            F.round(F.col("_scaled") / F.col("_norm"), 6).alias(
-                "mixture_weight"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-MIXTURE_WEIGHTS_SQL = f"""
-WITH s AS (
-    SELECT source,
-           count(*) AS n_docs,
-           sum(len(string_split(text, ' ')))::BIGINT AS total_tokens
-    FROM documents
-    GROUP BY source
-)
-SELECT source,
-       n_docs,
-       total_tokens,
-       round(pow(total_tokens::DOUBLE, {_MIX_ALPHA})
-             / sum(pow(total_tokens::DOUBLE, {_MIX_ALPHA})) OVER (), 6)
-           AS mixture_weight
-FROM s
-ORDER BY source
-"""
-
 
 QUERIES = {
     "benchmark_decontamination": benchmark_decontamination,
     "word_entropy_quality": word_entropy_quality,
-    "domain_mixture_weights": domain_mixture_weights,
 }
 
 ORACLES = {
     "benchmark_decontamination": DECONTAMINATION_SQL,
     "word_entropy_quality": WORD_ENTROPY_SQL,
-    "domain_mixture_weights": MIXTURE_WEIGHTS_SQL,
 }
-
-
-def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-source lexical overlap matrix: Jaccard of the distinct
-    token vocabularies for every source pair — the corpus-analysis
-    view behind mixture design and cross-split contamination checks
-    (two 'different' sources with near-identical vocabularies are one
-    domain, and a train/eval source pair overlapping heavily is a
-    leak).
-
-    Scale shape: one explode → distinct (source, token) relation
-    (vocabulary-sized, Heaps-sublinear), ONE shuffle on token for the
-    intersection self-join (token posting lists are |sources|-bounded,
-    so the join fans out at most |sources|² per token), per-source
-    vocab sizes broadcast back; |union| is computed as |a|+|b|−|∩|
-    rather than a second join. Output is |sources|²/2 rows — a report,
-    not a corpus."""
-    from ..operators.spread import spread_for_compute
-
-    # Bigram explode is CPU-dense per row BEFORE its first shuffle;
-    # guard against a compact scan's split count (r5 sf1 rehearsal:
-    # 4.1x at 10x data on a 2-split documents file).
-    docs = spread_for_compute(
-        load_table(spark, sf_dir, "documents").select("source", "text")
-    )
-    # BIGRAM vocabularies: the unigram vocabulary of this synthetic
-    # corpus is one shared pool (all Jaccards ~1.0 — a degenerate
-    # demo), while bigram sets are combinatorial and source-specific,
-    # giving the report the spread a real corpus shows.
-    toks = docs.select(
-        "source", F.split(F.trim(F.lower("text")), r"\s+").alias("t")
-    ).filter(F.size("t") >= 2)
-    vocab = (
-        toks.select(
-            "source",
-            # Deliberately INNER explode: unlike the r10 sweep sites,
-            # the plan dump (plans/r11/source_vocab_overlap_before.txt)
-            # shows Catalyst does NOT insert a size()>0 guard filter for
-            # this Generate shape, so the outer+null-filter rewrite buys
-            # nothing here (verified by before/after dumps).
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> concat(t[i-1], ' ', t[i]))"
-                )
-            ).alias("w"),
-        )
-        .distinct()
-    )
-    sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("vsize"))
-    l = vocab.select(F.col("source").alias("source_a"), "w")
-    r = vocab.select(F.col("source").alias("source_b"), "w")
-    common = (
-        l.join(r, "w")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.join(
-            F.broadcast(sizes.withColumnRenamed("source", "source_a")
-                        .withColumnRenamed("vsize", "vocab_a")),
-            "source_a",
-        )
-        .join(
-            F.broadcast(sizes.withColumnRenamed("source", "source_b")
-                        .withColumnRenamed("vsize", "vocab_b")),
-            "source_b",
-        )
-        .select(
-            "source_a",
-            "source_b",
-            "vocab_a",
-            "vocab_b",
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("vocab_a") + F.col("vocab_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-SOURCE_OVERLAP_SQL = r"""
-WITH toks AS (
-    SELECT source, string_split_regex(trim(lower(text)), '\s+') AS t
-    FROM documents
-), vocab2 AS (
-    SELECT DISTINCT source,
-           unnest(list_transform(range(1, len(t)),
-                                 i -> t[i] || ' ' || t[i + 1])) AS w
-    FROM toks WHERE len(t) >= 2
-), sizes AS (
-    SELECT source, count(*) AS vsize FROM vocab2 GROUP BY source
-), common AS (
-    SELECT l.source AS source_a, r.source AS source_b, count(*) AS n_common
-    FROM vocab2 l JOIN vocab2 r ON l.w = r.w AND l.source < r.source
-    GROUP BY 1, 2
-)
-SELECT c.source_a, c.source_b,
-       sa.vsize AS vocab_a, sb.vsize AS vocab_b,
-       c.n_common,
-       round(c.n_common / (sa.vsize + sb.vsize - c.n_common), 6) AS jaccard
-FROM common c
-JOIN sizes sa ON sa.source = c.source_a
-JOIN sizes sb ON sb.source = c.source_b
-ORDER BY c.source_a, c.source_b
-"""
-
-
-QUERIES["source_vocab_overlap"] = source_vocab_overlap
-ORACLES["source_vocab_overlap"] = SOURCE_OVERLAP_SQL
 
 
 # --------------------------------------------------------------------------
@@ -301,7 +135,7 @@ ORACLES["source_vocab_overlap"] = SOURCE_OVERLAP_SQL
 # audit for train documents that are ~the same text as a val/test
 # document (train/eval leakage inflates benchmark scores without any
 # verbatim n-gram hit). Pairs are found with the same AllPairs/PPJoin
-# prefix-filter THEOREM as ppjoin_exact_jaccard (queries/llm_dedup.py),
+# prefix-filter THEOREM (Bayardo et al. 2007; Xiao et al. 2008),
 # applied bipartite: the canonical token order (global df asc, token)
 # is computed over the UNION of both sides, so the prefix argument
 # holds for each side independently and the candidate join is
@@ -422,7 +256,7 @@ def cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # Overlap only for candidates, compound (id_eval, tok) join key —
-    # the same no-fan-out discipline as ppjoin_exact_jaccard.
+    # so no candidate fans out over its full token list.
     co = (
         cand.join(
             toks.select(F.col("doc_id").alias("id_train"), "tok"),
@@ -511,94 +345,3 @@ ORDER BY co.id_train, co.id_eval
 
 QUERIES["cross_split_leakage"] = cross_split_leakage
 ORACLES["cross_split_leakage"] = _cross_split_leakage_sql()
-
-
-# --------------------------------------------------------------------------
-# Epoch budgeting under data constraints (Muennighoff et al., "Scaling
-# Data-Constrained Language Models", NeurIPS 2023): when the token
-# budget exceeds the deduplicated corpus, domains are REPEATED — and
-# repeated tokens decay in value. The fitted law: with R repeat epochs
-# beyond the first over U unique tokens, the effective data seen is
-#     D' = U + U * R_STAR * (1 - exp(-R / R_STAR)),   R_STAR ~= 15,
-# i.e. fresh-equivalent up to ~4 epochs, asymptoting at ~16 epochs of
-# value. This query turns the mixture table into the per-domain epoch
-# PLAN a data-constrained run ships: budget allocation, epochs,
-# repeat regime, effective tokens, and budget utilization.
-# Everything runs on the #sources-sized aggregate — the corpus is
-# touched once for token totals.
-# --------------------------------------------------------------------------
-
-_BUDGET_MULT = 3.0  # train-token budget as a multiple of corpus tokens
-_R_STAR = 15.0  # fitted repeat half-value constant (Muennighoff et al.)
-
-
-def epoch_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mix = domain_mixture_weights(spark, sf_dir)
-    budget = mix.agg(
-        (F.sum("total_tokens") * F.lit(_BUDGET_MULT)).alias("_budget")
-    )
-    planned = mix.crossJoin(F.broadcast(budget)).withColumn(
-        "target_tokens",
-        F.round(F.col("_budget") * F.col("mixture_weight")).cast("long"),
-    )
-    epochs = F.col("target_tokens") / F.col("total_tokens")
-    repeats = F.greatest(epochs - 1.0, F.lit(0.0))
-    effective = F.col("total_tokens") * (
-        1.0
-        + F.lit(_R_STAR)
-        * (1.0 - F.exp(-repeats / F.lit(_R_STAR)))
-    )
-    return planned.select(
-        "source",
-        "n_docs",
-        "total_tokens",
-        "mixture_weight",
-        "target_tokens",
-        F.round(epochs, 6).alias("epochs"),
-        F.when(epochs <= 1.0, "fresh")
-        .when(epochs <= 4.0, "cheap_repeat")
-        .otherwise("diminishing")
-        .alias("repeat_regime"),
-        F.round(effective, 2).alias("effective_tokens"),
-        F.round(
-            effective / F.col("target_tokens"), 6
-        ).alias("utilization"),
-    ).orderBy("source")
-
-
-EPOCH_BUDGET_SQL = f"""
-WITH s AS (
-    SELECT source,
-           count(*) AS n_docs,
-           sum(len(string_split(text, ' ')))::BIGINT AS total_tokens
-    FROM documents
-    GROUP BY source
-), mix AS (
-    SELECT source, n_docs, total_tokens,
-           round(pow(total_tokens::DOUBLE, {_MIX_ALPHA})
-                 / sum(pow(total_tokens::DOUBLE, {_MIX_ALPHA})) OVER (), 6)
-               AS mixture_weight,
-           sum(total_tokens) OVER () * {_BUDGET_MULT} AS budget
-    FROM s
-), planned AS (
-    SELECT *, round(budget * mixture_weight)::BIGINT AS target_tokens
-    FROM mix
-)
-SELECT source, n_docs, total_tokens, mixture_weight, target_tokens,
-       round(target_tokens::DOUBLE / total_tokens, 6) AS epochs,
-       CASE WHEN target_tokens::DOUBLE / total_tokens <= 1.0 THEN 'fresh'
-            WHEN target_tokens::DOUBLE / total_tokens <= 4.0
-                THEN 'cheap_repeat'
-            ELSE 'diminishing' END AS repeat_regime,
-       round(total_tokens * (1.0 + {_R_STAR} * (1.0 - exp(
-           -greatest(target_tokens::DOUBLE / total_tokens - 1.0, 0.0)
-           / {_R_STAR}))), 2) AS effective_tokens,
-       round(total_tokens * (1.0 + {_R_STAR} * (1.0 - exp(
-           -greatest(target_tokens::DOUBLE / total_tokens - 1.0, 0.0)
-           / {_R_STAR}))) / target_tokens, 6) AS utilization
-FROM planned
-ORDER BY source
-"""
-
-QUERIES["epoch_budget_plan"] = epoch_budget_plan
-ORACLES["epoch_budget_plan"] = EPOCH_BUDGET_SQL

@@ -450,68 +450,7 @@ QUERIES["dedup_ngram_containment"] = dedup_ngram_containment
 ORACLES["dedup_ngram_containment"] = CONTAINMENT_SQL
 
 
-def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """What would near-dedup actually remove: the cluster-size
-    histogram of the LSH component graph plus the singleton mass — the
-    one-page report a curation run reads before committing a dedup
-    pass (n_removable = every cluster keeps its min-id survivor).
-
-    Pure aggregation over the components output (dimension-sized);
-    the corpus scan cost is the components query itself."""
-    cc = neardup_components(spark, sf_dir)
-    clusters = cc.select("component_id", "n_members").distinct()
-    hist = (
-        clusters.groupBy(F.col("n_members").alias("cluster_size"))
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    totals = docs.agg(F.count(F.lit(1)).alias("total_docs"))
-    clustered = cc.agg(F.count(F.lit(1)).alias("clustered_docs"))
-    singletons = (
-        totals.crossJoin(F.broadcast(clustered))
-        .select(
-            F.lit(1).cast("int").alias("cluster_size"),
-            (F.col("total_docs") - F.col("clustered_docs")).alias("n_clusters"),
-        )
-    )
-    return (
-        hist.select(F.col("cluster_size").cast("int"), "n_clusters")
-        .unionByName(singletons)
-        .select(
-            "cluster_size",
-            "n_clusters",
-            (F.col("cluster_size") * F.col("n_clusters")).alias("n_docs"),
-            ((F.col("cluster_size") - 1) * F.col("n_clusters")).alias(
-                "n_removable"
-            ),
-        )
-        .orderBy("cluster_size")
-    )
-
-
 _COMPONENTS_CORE_SQL = NEARDUP_COMPONENTS_SQL.replace("ORDER BY doc_id", "")
-
-DEDUP_IMPACT_SQL = f"""
-WITH comp AS ({_COMPONENTS_CORE_SQL}),
-clusters AS (
-    SELECT DISTINCT component_id, n_members FROM comp
-), hist AS (
-    SELECT n_members::INT AS cluster_size, count(*) AS n_clusters
-    FROM clusters GROUP BY 1
-    UNION ALL
-    SELECT 1,
-           (SELECT count(*) FROM documents) - (SELECT count(*) FROM comp)
-)
-SELECT cluster_size, n_clusters,
-       (cluster_size * n_clusters)::BIGINT AS n_docs,
-       ((cluster_size - 1) * n_clusters)::BIGINT AS n_removable
-FROM hist
-ORDER BY cluster_size
-"""
-
-
-QUERIES["dedup_impact_report"] = dedup_impact_report
-ORACLES["dedup_impact_report"] = DEDUP_IMPACT_SQL
 
 
 def image_perceptual_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,135 +635,6 @@ ORACLES["image_perceptual_neardup"] = IMAGE_NEARDUP_SQL
 _PPJOIN_T_NUM, _PPJOIN_T_DEN = 4, 5
 
 
-def ppjoin_exact_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT similarity self-join with prefix filtering (AllPairs /
-    PPJoin, Bayardo et al. 2007) — the no-false-negative complement to
-    the MinHash-LSH path: LSH candidates are probabilistic; the prefix
-    filter is a THEOREM. Docs are 3-gram shingle sets; J(A,B) >= 4/5.
-
-    Why it works: J >= t implies the overlap c >= ceil(t*|A|), so the
-    common tokens cannot all hide in A's last ceil(t*|A|)-1 tokens of a
-    canonical order — A and B must share a token inside the first
-    |A| - ceil(t*|A|) + 1 tokens (the "prefix"). Ordering every doc's
-    tokens rarest-first (global df ascending, token tiebreak) makes
-    those prefixes maximally selective, so the candidate join is on
-    rare tokens only and never enumerates all pairs.
-
-    The verify predicate is integer cross-multiplication
-    (9c >= 4(na+nb) for t=4/5), so the threshold cliff is engine-exact;
-    the DuckDB oracle runs the brute-force DEFINITION (full token
-    co-join, no prefix) — a hash match therefore proves completeness,
-    not just precision.
-
-    Scale posture: the df relation is vocabulary-sized (Heaps-sublinear,
-    broadcast); the per-doc prefix pick is a window over the doc's own
-    tokens; the candidate join carries (doc_id, token) pairs keyed by
-    RARE tokens (bounded fan-out by construction); the overlap count
-    joins only candidate pairs. This is the standard exact-join
-    counterpart deployed when dedup decisions must be auditable.
-    """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", D.shingles(F.col("text")).alias("sh")
-    )
-    toks = docs.select(
-        "doc_id", F.explode_outer("sh").alias("tok")
-    ).filter(
-        F.col("tok").isNotNull()
-    )  # shingles() already dedups per doc; outer+notnull avoids the
-    #    Generate guard re-computing the shingle transform per row
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # SHINGLE vocabulary is near-linear in corpus size (unlike a word
-    # vocabulary) — it must NOT broadcast. The df aggregate and the
-    # df-attach join share the tok key, so the exchange is reused.
-    df_rel = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    prefix = (
-        toks.join(df_rel, "tok")
-        .join(sizes, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n")
-            - F.expr(
-                f"({_PPJOIN_T_NUM} * n + {_PPJOIN_T_NUM}) "
-                f"DIV {_PPJOIN_T_DEN}"
-            )
-            + 1
-        )
-        .select("doc_id", "tok", "n")
-    )
-    # Candidate generation adds the AllPairs LENGTH filter as a join
-    # residual: J >= t forces t*|A| <= |B| <= |A|/t, so wildly
-    # different-sized docs sharing one rare token are pruned before
-    # the distinct — integer arithmetic, engine-exact.
-    cand = (
-        prefix.alias("pa")
-        .join(
-            prefix.alias("pb"),
-            (F.col("pa.tok") == F.col("pb.tok"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id"))
-            & (
-                _PPJOIN_T_DEN * F.col("pb.n")
-                >= _PPJOIN_T_NUM * F.col("pa.n")
-            )
-            & (
-                _PPJOIN_T_DEN * F.col("pa.n")
-                >= _PPJOIN_T_NUM * F.col("pb.n")
-            ),
-        )
-        .select(
-            F.col("pa.doc_id").alias("id_a"),
-            F.col("pb.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    # Overlap counts ONLY for candidate pairs, with every equality a
-    # JOIN KEY: expand each pair by side A's tokens (sum over pairs of
-    # |A| rows — bounded by the prefix filter), then hash-join on the
-    # COMPOUND (id_b, tok) key. No token-keyed all-docs join (hot
-    # shingles would fan out df_a x df_b) and no post-join filter (an
-    # |A| x |B| intermediate) can occur.
-    co = (
-        cand.join(
-            toks.select(
-                F.col("doc_id").alias("id_a"), F.col("tok")
-            ),
-            "id_a",
-        )
-        .join(
-            toks.select(
-                F.col("doc_id").alias("id_b"), F.col("tok")
-            ),
-            ["id_b", "tok"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    return (
-        co.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(
-            (_PPJOIN_T_NUM + _PPJOIN_T_DEN) * F.col("n_shared")
-            >= _PPJOIN_T_NUM * (F.col("n_a") + F.col("n_b"))
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
 PPJOIN_SQL = rf"""
 WITH words AS (
     SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
@@ -854,9 +664,6 @@ WHERE ({_PPJOIN_T_NUM + _PPJOIN_T_DEN}) * co.n_shared
       >= {_PPJOIN_T_NUM} * (sa.n + sb.n)
 ORDER BY co.id_a, co.id_b
 """
-
-QUERIES["ppjoin_exact_jaccard"] = ppjoin_exact_jaccard
-ORACLES["ppjoin_exact_jaccard"] = PPJOIN_SQL
 
 
 # --------------------------------------------------------------------------
@@ -927,176 +734,6 @@ ORDER BY doc_id
 
 QUERIES["leakage_safe_splits"] = leakage_safe_splits
 ORACLES["leakage_safe_splits"] = _leakage_safe_splits_sql()
-
-
-# --------------------------------------------------------------------------
-# Dedup threshold sensitivity curve
-# --------------------------------------------------------------------------
-# The tuning sweep a curation run does before fixing tau: at each
-# candidate threshold, how many near-dup pairs fire and how much of
-# the corpus is touched. All per-threshold work runs on the PAIR
-# relation (duplicate-bounded, far smaller than the corpus) from the
-# same MinHash-LSH candidate path as dedup_ngram_jaccard; the corpus
-# is scanned once by that path and once for the denominator count.
-
-_CURVE_THRESHOLDS = (50, 60, 70, 80, 90)  # percent
-
-
-def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(threshold_pct, n_pairs, n_docs_affected, affected_rate) for
-    each candidate tau — the removal-mass curve that picks the dedup
-    operating point."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=_JACCARD_THRESHOLD,
-        rows_hint=table_num_rows(sf_dir, "documents"),
-    )
-    ths = F.explode(
-        F.array(*[F.lit(t) for t in _CURVE_THRESHOLDS])
-    ).alias("threshold_pct")
-    qualifying = (
-        pairs.select("id_a", "id_b", "jaccard_sim", ths)
-        .filter(F.col("jaccard_sim") >= F.col("threshold_pct") / 100.0)
-    )
-    pair_counts = qualifying.groupBy("threshold_pct").agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
-    doc_counts = (
-        qualifying.select(
-            "threshold_pct",
-            F.explode(F.array("id_a", "id_b")).alias("doc_id"),
-        )
-        .distinct()
-        .groupBy("threshold_pct")
-        .agg(F.count(F.lit(1)).alias("n_docs_affected"))
-    )
-    total = docs.agg(F.count(F.lit(1)).alias("total_docs"))
-    return (
-        pair_counts.join(doc_counts, "threshold_pct")
-        .join(F.broadcast(total))
-        .select(
-            "threshold_pct",
-            "n_pairs",
-            "n_docs_affected",
-            F.round(
-                F.col("n_docs_affected")
-                / F.col("total_docs").cast("double"),
-                6,
-            ).alias("affected_rate"),
-        )
-        .orderBy("threshold_pct")
-    )
-
-
-def _dedup_curve_sql() -> str:
-    ths = ", ".join(str(t) for t in _CURVE_THRESHOLDS)
-    return f"""
-WITH pairs AS ({_PAIRS_SQL}),
-q AS (
-    SELECT t.t AS threshold_pct, p.id_a, p.id_b
-    FROM pairs p, (SELECT unnest([{ths}]) AS t) t
-    WHERE p.jaccard_sim >= t.t / 100.0
-),
-pair_counts AS (
-    SELECT threshold_pct, count(*)::BIGINT AS n_pairs
-    FROM q GROUP BY threshold_pct
-),
-doc_counts AS (
-    SELECT threshold_pct, count(DISTINCT d)::BIGINT AS n_docs_affected
-    FROM (
-        SELECT threshold_pct, unnest([id_a, id_b]) AS d FROM q
-    )
-    GROUP BY threshold_pct
-),
-total AS (SELECT count(*)::BIGINT AS total_docs FROM documents)
-SELECT p.threshold_pct, p.n_pairs, d.n_docs_affected,
-       round(d.n_docs_affected::DOUBLE / t.total_docs, 6)
-           AS affected_rate
-FROM pair_counts p
-JOIN doc_counts d ON d.threshold_pct = p.threshold_pct
-CROSS JOIN total t
-ORDER BY p.threshold_pct
-"""
-
-
-QUERIES["dedup_threshold_curve"] = dedup_threshold_curve
-ORACLES["dedup_threshold_curve"] = _dedup_curve_sql()
-
-
-# --------------------------------------------------------------------------
-# Dedup execution manifest
-# --------------------------------------------------------------------------
-# dedup_exact / neardup_components / dedup_impact_report answer "what
-# would dedup do"; this is the artifact the PASS ITSELF emits: one row
-# per document with its verdict and survivor — what downstream
-# tokenization filters on and what an audit replays. Exact duplicates
-# are a subset of the LSH components (J=1 collides in every band), so
-# the group relation is the component graph with singletons as their
-# own group; the verdict distinguishes exact copies of the survivor
-# (normalized-text equality) from near-duplicates. One corpus scan +
-# the (duplicate-bounded) components join; the survivor-text attach is
-# a survivor-keyed join, survivor-count-sized.
-
-
-def dedup_execution_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, survivor_id, verdict ∈ kept|exact_dup|near_dup),
-    survivor = min doc_id of the near-dup group (singletons keep
-    themselves)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.lower(F.trim("text")).alias("norm")
-    )
-    comp = neardup_components(spark, sf_dir).select(
-        "doc_id", "component_id"
-    )
-    grouped = docs.join(comp, "doc_id", "left").withColumn(
-        "group_id", F.coalesce("component_id", F.col("doc_id"))
-    )
-    surv = grouped.groupBy("group_id").agg(
-        F.min("doc_id").alias("survivor_id")
-    )
-    surv_norm = docs.select(
-        F.col("doc_id").alias("survivor_id"),
-        F.col("norm").alias("surv_norm"),
-    )
-    return (
-        grouped.join(surv, "group_id")
-        .join(surv_norm, "survivor_id")
-        .select(
-            "doc_id",
-            "survivor_id",
-            F.when(F.col("doc_id") == F.col("survivor_id"), "kept")
-            .when(F.col("norm") == F.col("surv_norm"), "exact_dup")
-            .otherwise("near_dup")
-            .alias("verdict"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-DEDUP_EXECUTION_SQL = f"""
-WITH RECURSIVE comp AS ({_COMPONENTS_CORE_SQL}),
-norm AS (SELECT doc_id, lower(trim(text)) AS norm FROM documents),
-grouped AS (
-    SELECT n.doc_id, n.norm,
-           coalesce(c.component_id, n.doc_id) AS group_id
-    FROM norm n LEFT JOIN comp c ON c.doc_id = n.doc_id
-),
-surv AS (
-    SELECT group_id, min(doc_id) AS survivor_id
-    FROM grouped GROUP BY group_id
-)
-SELECT g.doc_id, s.survivor_id,
-       CASE WHEN g.doc_id = s.survivor_id THEN 'kept'
-            WHEN g.norm = sn.norm THEN 'exact_dup'
-            ELSE 'near_dup' END AS verdict
-FROM grouped g
-JOIN surv s ON s.group_id = g.group_id
-JOIN norm sn ON sn.doc_id = s.survivor_id
-ORDER BY g.doc_id
-"""
-
-QUERIES["dedup_execution_manifest"] = dedup_execution_manifest
-ORACLES["dedup_execution_manifest"] = DEDUP_EXECUTION_SQL
 
 
 # --------------------------------------------------------------------------

@@ -121,46 +121,6 @@ ORDER BY id_a, id_b
 """
 
 
-def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid norm + count — the IVF coarse-quantizer build
-    step (k-means assignment stands in as the given ``label``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    sums = emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        *[
-            F.sum(F.element_at("embedding", i + 1).cast("double")).alias(f"s{i}")
-            for i in range(dim)
-        ],
-    )
-    centroid_norm = F.sqrt(
-        sum(
-            (F.col(f"s{i}") / F.col("n_vectors")) * (F.col(f"s{i}") / F.col("n_vectors"))
-            for i in range(dim)
-        )
-    )
-    return sums.select(
-        "label",
-        "n_vectors",
-        F.round(centroid_norm, 6).alias("centroid_norm"),
-    ).orderBy("label")
-
-
-_CENTROID_TERMS = " + ".join(
-    f"(sum(embedding[{i + 1}]::DOUBLE) / count(*)) * (sum(embedding[{i + 1}]::DOUBLE) / count(*))"
-    for i in range(64)
-)
-
-CENTROIDS_SQL = f"""
-SELECT label,
-       count(*) AS n_vectors,
-       round(sqrt({_CENTROID_TERMS}), 6) AS centroid_norm
-FROM embeddings
-GROUP BY label
-ORDER BY label
-"""
-
-
 def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: probe the 2 nearest coarse clusters (label = k-means
     assignment), exact cosine rerank within them — the partition-pruned
@@ -198,211 +158,6 @@ FROM embeddings, q
 WHERE vec_id != {_QUERY_VEC_ID} AND label IN (SELECT label FROM probe)
 ORDER BY cosine_sim DESC, vec_id
 LIMIT {_TOPK}
-"""
-
-
-_MQ_MOD = 97
-_MQ_TOPK = 5
-
-
-def ann_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched ANN — exact top-5 for a whole BATCH of query vectors in
-    one corpus scan: broadcast the query batch, cosine per (row, query)
-    pair inside codegen, per-query window top-k. This is the
-    serving/dedup shape (kNN for many embeddings at once); the scan
-    amortizes across queries, and at scale the broadcast batch is the
-    natural unit of query admission. Query set = vec_id % 97 == 0."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % _MQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_emb"),
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(S.cosine(F.col("embedding"), F.col("query_emb")), 6).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _MQ_TOPK)
-        .orderBy("query_id", "rank")
-    )
-
-
-ANN_MULTI_QUERY_SQL = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding AS query_emb
-    FROM embeddings WHERE vec_id % {_MQ_MOD} = 0
-), scored AS (
-    SELECT q.query_id, e.vec_id,
-           round({_cosine_sql('e.embedding', 'q.query_emb')}, 6) AS cosine_sim
-    FROM embeddings e, q
-    WHERE e.vec_id != q.query_id
-), ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine_sim DESC, vec_id) AS rank
-    FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank
-FROM ranked WHERE rank <= {_MQ_TOPK}
-ORDER BY query_id, rank
-"""
-
-
-_HN_TOPK = 5
-
-
-def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive-training hard negatives: for each query vector
-    (vec_id % 97 == 0), the top-5 most-similar vectors with a DIFFERENT
-    label — the mining step that builds contrastive pairs for embedding
-    training. Same amortized-scan shape as ``ann_multi_query_topk``
-    (broadcast query batch, one corpus scan, per-query window top-k);
-    the label predicate rides inside the scan so codegen filters
-    positives before scoring ranks."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % _MQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("query_emb"),
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("label") != F.col("query_label"))
-        .select(
-            "query_id",
-            "vec_id",
-            "label",
-            F.round(S.cosine(F.col("embedding"), F.col("query_emb")), 6).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _HN_TOPK)
-        .orderBy("query_id", "rank")
-    )
-
-
-HARD_NEGATIVE_SQL = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, label AS query_label, embedding AS query_emb
-    FROM embeddings WHERE vec_id % {_MQ_MOD} = 0
-), scored AS (
-    SELECT q.query_id, e.vec_id, e.label,
-           round({_cosine_sql('e.embedding', 'q.query_emb')}, 6) AS cosine_sim
-    FROM embeddings e, q
-    WHERE e.label != q.query_label
-), ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine_sim DESC, vec_id) AS rank
-    FROM scored
-)
-SELECT query_id, vec_id, label, cosine_sim, rank
-FROM ranked WHERE rank <= {_HN_TOPK}
-ORDER BY query_id, rank
-"""
-
-
-def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd's iteration of k-means over the embedding corpus —
-    the IVF coarse-quantizer TRAINING step (``embedding_centroids``
-    builds the codebook; this reassigns). Starting from the given
-    ``label`` assignment: compute per-label centroids (one map-side
-    partial aggregate), broadcast all k centroids, reassign every
-    vector to its max-cosine centroid inside codegen, and emit the
-    (old_label, new_label, n_vectors) movement matrix.
-
-    At 100 TB this iterates to convergence as repeated single scans —
-    centroids are always k x dim doubles (broadcastable by
-    construction), so no iteration shuffles the corpus; the oracle
-    pins one unrolled iteration."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    cents = (
-        emb.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(F.element_at("embedding", i + 1).cast("double")).alias(
-                    f"s{i}"
-                )
-                for i in range(dim)
-            ],
-        )
-        .select(
-            F.col("label").alias("c_label"),
-            F.array(
-                *[(F.col(f"s{i}") / F.col("n")) for i in range(dim)]
-            ).alias("centroid"),
-        )
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "label",
-            "c_label",
-            S.cosine(F.col("embedding"), F.col("centroid")).alias("sim"),
-        )
-        .groupBy("vec_id", "label")
-        .agg(
-            F.max_by(
-                "c_label", F.struct(F.col("sim"), (-F.col("c_label")))
-            ).alias("new_label")
-        )
-    )
-    return (
-        assigned.groupBy(
-            F.col("label").alias("old_label"), F.col("new_label")
-        )
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-        .orderBy("old_label", "new_label")
-    )
-
-
-_KM_CENT_COLS = ", ".join(
-    f"sum(embedding[{i + 1}]::DOUBLE) / count(*) AS c{i}" for i in range(64)
-)
-_KM_DOT = " + ".join(f"c{i} * e.embedding[{i + 1}]::DOUBLE" for i in range(64))
-_KM_NORM_C = " + ".join(f"c{i} * c{i}" for i in range(64))
-_KM_NORM_E = " + ".join(
-    f"e.embedding[{i + 1}]::DOUBLE * e.embedding[{i + 1}]::DOUBLE"
-    for i in range(64)
-)
-
-KMEANS_REFINE_SQL = f"""
-WITH cent AS (
-    SELECT label AS c_label, {_KM_CENT_COLS}
-    FROM embeddings GROUP BY label
-), scored AS (
-    SELECT e.vec_id, e.label, c.c_label,
-           ({_KM_DOT}) / (sqrt({_KM_NORM_C}) * sqrt({_KM_NORM_E})) AS sim
-    FROM embeddings e, cent c
-), assigned AS (
-    SELECT vec_id, label, c_label AS new_label,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY sim DESC, c_label) AS rn
-    FROM scored
-)
-SELECT label AS old_label, new_label, count(*) AS n_vectors
-FROM assigned
-WHERE rn = 1
-GROUP BY 1, 2
-ORDER BY old_label, new_label
 """
 
 
@@ -512,22 +267,14 @@ QUERIES = {
     "ann_lsh_bucketed": ann_lsh_bucketed,
     "ann_ivf_probe": ann_ivf_probe,
     "embedding_neardup_pairs": embedding_neardup_pairs,
-    "embedding_centroids": embedding_centroids,
-    "ann_multi_query_topk": ann_multi_query_topk,
-    "hard_negative_mining": hard_negative_mining,
-    "kmeans_refine": kmeans_refine,
 }
 
 ORACLES = {
     "jl_random_projection": _jl_projection_sql(),
-    "hard_negative_mining": HARD_NEGATIVE_SQL,
-    "kmeans_refine": KMEANS_REFINE_SQL,
-    "ann_multi_query_topk": ANN_MULTI_QUERY_SQL,
     "ann_brute_force_topk": ANN_BRUTE_SQL,
     "ann_lsh_bucketed": ANN_LSH_SQL,
     "ann_ivf_probe": ANN_IVF_SQL,
     "embedding_neardup_pairs": PAIRS_SQL,
-    "embedding_centroids": CENTROIDS_SQL,
 }
 
 
@@ -638,17 +385,16 @@ def _pq_assign(subs: DataFrame, cents: DataFrame, out_col: str) -> DataFrame:
 def _pq_model(
     emb: DataFrame, n_vecs: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Train the codebook (hash-seeded init + one Lloyd iteration, the
-    kmeans_refine pattern) on a deterministic 1-in-\\_PQ_TRAIN_MOD
-    sample — unless the corpus is under \\_PQ_TRAIN_FLOOR vectors, where
-    sampling would starve the centroids and everything trains — then
-    encode the FULL corpus. This is the FAISS training discipline:
-    codebooks converge on a bounded sample, so the Lloyd passes must
-    not scan 100 TB per iteration; only the single encode pass touches
-    every vector. The sample predicate is a deterministic integer LCG
-    on vec_id (no RNG, no sort), so the oracle states it verbatim;
-    callers that already know the corpus size pass ``n_vecs`` to skip
-    the count job.
+    """Train the codebook (hash-seeded init + one Lloyd iteration) on a
+    deterministic 1-in-\\_PQ_TRAIN_MOD sample — unless the corpus is
+    under \\_PQ_TRAIN_FLOOR vectors, where sampling would starve the
+    centroids and everything trains — then encode the FULL corpus. This
+    is the FAISS training discipline: codebooks converge on a bounded
+    sample, so the Lloyd passes must not scan 100 TB per iteration; only
+    the single encode pass touches every vector. The sample predicate is
+    a deterministic integer LCG on vec_id (no RNG, no sort), so the
+    oracle states it verbatim; callers that already know the corpus size
+    pass ``n_vecs`` to skip the count job.
     Returns (final centroids, codes). Every stage is a single scan plus
     a dimension-sized aggregate; nothing corpus-sized ever broadcasts."""
     from ..operators import text as T
@@ -1247,10 +993,10 @@ _SEM_TAU = 0.3
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic deduplication: pairwise cosine is computed only
-    WITHIN each k-means cluster (the given ``label`` assignment, the one
-    ``kmeans_refine`` trains), and a vector is a duplicate iff some
-    lower-id vector in its cluster sits at cosine >= tau (keep-first —
-    the same deterministic survivor rule as the text dedup family).
+    WITHIN each k-means cluster (the given ``label`` assignment), and a
+    vector is a duplicate iff some lower-id vector in its cluster sits
+    at cosine >= tau (keep-first — the same deterministic survivor rule
+    as the text dedup family).
 
     Scale posture: the paper's exact trick — the self-join is keyed by
     the cluster id, so pairwise work is bounded by the largest cluster
@@ -1425,125 +1171,6 @@ QUERIES["ann_multiprobe_topk"] = ann_multiprobe_topk
 ORACLES["semantic_dedup"] = SEMANTIC_DEDUP_SQL
 ORACLES["ann_recall_at_k"] = ANN_RECALL_SQL
 ORACLES["ann_multiprobe_topk"] = ANN_MULTIPROBE_SQL
-
-
-# Rank discounts 1/log2(rank+1) precomputed as PYTHON LITERALS and
-# embedded verbatim in both engines, so no libm log2 ulp difference can
-# exist; the only remaining float op is a 10-term product-sum of
-# identical doubles. IDCG (ideal = exact top-k order, graded gains
-# 2^rel - 1 with rel = k..1) is likewise one shared literal.
-_NDCG_DISC = {i: 1.0 / math.log2(i + 1) for i in range(1, _TOPK + 1)}
-_NDCG_IDCG = sum(
-    (2 ** (_TOPK - i + 1) - 1) * _NDCG_DISC[i] for i in range(1, _TOPK + 1)
-)
-
-
-def ann_ndcg_mrr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking-quality report for the LSH-bucketed ANN vs the exact
-    scan — NDCG@k and MRR beside ann_recall_at_k's set overlap
-    (Järvelin & Kekäläinen, TOIS 2002; the standard offline eval of an
-    approximate retriever before it replaces brute force). Graded
-    relevance of an approx hit = k − exact_rank + 1 (0 if outside the
-    exact top-k); MRR is the reciprocal rank of the first relevant
-    approx hit.
-
-    Cost shape = recall@k's: one exact scan + one bucket probe; every
-    rank window runs on a ≤ k-row relation. Output: one row."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    w_rank = Window.orderBy(F.desc("cosine_sim"), "vec_id")
-    exact = (
-        S.brute_force_topk(emb, _QUERY_VEC_ID, _TOPK)
-        .select("vec_id", "cosine_sim")
-        .withColumn("rank_e", F.row_number().over(w_rank))
-        .drop("cosine_sim")
-    )
-    approx = (
-        S.lsh_bucketed_topk(emb, _QUERY_VEC_ID, _TOPK, bits=_GATE_LSH_BITS)
-        .select("vec_id", "cosine_sim")
-        .withColumn("rank_a", F.row_number().over(w_rank))
-        .drop("cosine_sim")
-    )
-    disc = F.element_at(
-        F.create_map(
-            *[
-                F.lit(x)
-                for i in range(1, _TOPK + 1)
-                for x in (i, _NDCG_DISC[i])
-            ]
-        ),
-        F.col("rank_a"),
-    )
-    rel = F.coalesce(F.lit(_TOPK) + 1 - F.col("rank_e"), F.lit(0))
-    scored = approx.join(exact, "vec_id", "left").select(
-        rel.alias("rel"), disc.alias("disc"), "rank_a"
-    )
-    # coalesce(.., 0): if the LSH probe returns ZERO candidates the sums
-    # run over an empty relation — the report must read recall/ndcg = 0,
-    # not NULL (mrr already falls out of the coalesced 1/first_hit).
-    report = scored.agg(
-        F.coalesce(
-            F.sum((F.col("rel") > 0).cast("long")), F.lit(0).cast("long")
-        ).alias("n_hits"),
-        F.coalesce(
-            F.sum(
-                (F.pow(F.lit(2.0), F.col("rel")) - 1) * F.col("disc")
-            ),
-            F.lit(0.0),
-        ).alias("dcg"),
-        F.min(F.when(F.col("rel") > 0, F.col("rank_a"))).alias(
-            "first_hit"
-        ),
-    )
-    return report.select(
-        F.lit(_TOPK).alias("k"),
-        "n_hits",
-        F.round(F.col("n_hits") / F.lit(_TOPK), 6).alias("recall"),
-        F.round(F.col("dcg") / F.lit(_NDCG_IDCG), 6).alias("ndcg"),
-        F.round(
-            F.coalesce(1.0 / F.col("first_hit"), F.lit(0.0)), 6
-        ).alias("mrr"),
-    )
-
-
-_NDCG_DISC_CASE = " ".join(
-    f"WHEN {i} THEN {_NDCG_DISC[i]!r}" for i in range(1, _TOPK + 1)
-)
-
-ANN_NDCG_SQL = f"""
-WITH exact_topk AS ({ANN_BRUTE_SQL.strip()}),
-approx_topk AS ({ANN_LSH_SQL.strip()}),
-exact_r AS (
-    SELECT vec_id,
-           row_number() OVER (ORDER BY cosine_sim DESC, vec_id) AS rank_e
-    FROM exact_topk
-), approx_r AS (
-    SELECT vec_id,
-           row_number() OVER (ORDER BY cosine_sim DESC, vec_id) AS rank_a
-    FROM approx_topk
-), scored AS (
-    SELECT coalesce({_TOPK} + 1 - e.rank_e, 0) AS rel,
-           CASE a.rank_a {_NDCG_DISC_CASE} END AS disc,
-           a.rank_a
-    FROM approx_r a LEFT JOIN exact_r e USING (vec_id)
-), agg AS (
-    SELECT coalesce(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END), 0)::BIGINT
-               AS n_hits,
-           coalesce(sum((pow(2.0, rel) - 1) * disc), 0.0) AS dcg,
-           min(CASE WHEN rel > 0 THEN rank_a END) AS first_hit
-    FROM scored
-)
-SELECT {_TOPK} AS k,
-       n_hits,
-       round(n_hits / {_TOPK}.0, 6) AS recall,
-       round(dcg / {_NDCG_IDCG!r}, 6) AS ndcg,
-       round(coalesce(1.0 / first_hit, 0.0), 6) AS mrr
-FROM agg
-"""
-
-QUERIES["ann_ndcg_mrr_report"] = ann_ndcg_mrr_report
-ORACLES["ann_ndcg_mrr_report"] = ANN_NDCG_SQL
 
 
 def embedding_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1937,56 +1564,7 @@ ORDER BY component, pos
 """
 
 
-def pca_projection_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA APPLIED: every vector's coordinates on the top-2 principal
-    axes — the projection/whitening step itself (outlier triage, 2-D
-    drift maps, the rotation input OPQ-style quantizers train on).
-
-    The model (mu, v1, v2) is dimension-sized driver state from the
-    same covariance pass; the projection is ONE corpus scan with the
-    centered dot products as 64-term codegen expressions — no joins,
-    no shuffle besides the output sort. At 100 TB this is the map-only
-    pass you fuse into whatever scan comes next."""
-    G, mu = _pca_cov_and_mu(spark, sf_dir)
-    v1, _lam1, v2, _lam2 = pca_components(G)
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def score(v: list[float]):
-        return sum(
-            (F.element_at("embedding", i + 1).cast("double") - mu[i])
-            * v[i]
-            for i in range(_PCA_DIM)
-        )
-
-    return emb.select(
-        "vec_id",
-        "label",
-        F.round(score(v1), 6).alias("pc1"),
-        F.round(score(v2), 6).alias("pc2"),
-    ).orderBy("vec_id")
-
-
-def _pca_projection_sql() -> str:
-    d = _PCA_DIM
-    return f"""{_pca_cov_sql_front()}{_pca_eigen_sql_core()},
-mus AS (SELECT list(m ORDER BY i) AS mu FROM mu)
-SELECT e.vec_id, e.label,
-       round(list_dot_product(
-           list_transform(range(1, {d + 1}),
-                          i -> e.embedding[i]::DOUBLE - mus.mu[i]),
-           c1f.v), 6) AS pc1,
-       round(list_dot_product(
-           list_transform(range(1, {d + 1}),
-                          i -> e.embedding[i]::DOUBLE - mus.mu[i]),
-           c2f.v), 6) AS pc2
-FROM embeddings e, c1f, c2f, mus
-ORDER BY e.vec_id
-"""
-
-
 QUERIES["embedding_pca_power"] = embedding_pca_power
-QUERIES["pca_projection_scores"] = pca_projection_scores
-ORACLES["pca_projection_scores"] = _pca_projection_sql()
 ORACLES["embedding_pca_power"] = _pca_power_sql()
 
 
@@ -1998,7 +1576,7 @@ ORACLES["embedding_pca_power"] = _pca_power_sql()
 # vector by cosine to its cluster centroid and mark the most
 # prototypical fraction per cluster for pruning. The self-supervised
 # prototype is the k-means centroid (here the given ``label``
-# assignment, the repo's k-means stand-in, as in embedding_centroids).
+# assignment, the repo's k-means stand-in).
 #
 # Scale shape: centroids are ONE map-side-combinable aggregate with a
 # dimension-sized output (k x 64 doubles, broadcast back); scoring is a

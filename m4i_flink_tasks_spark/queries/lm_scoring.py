@@ -187,349 +187,15 @@ ORDER BY doc_id
 """
 
 
-_KN_D = 0.75
-
-
-def kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document perplexity under an interpolated Kneser-Ney bigram
-    LM (Kneser & Ney, ICASSP 1995; Chen & Goodman 1998 eq. 4.25) — the
-    smoothing every real n-gram LM (KenLM/CCNet scoring) uses instead
-    of ngram_lm_perplexity's add-one baseline:
-
-        p(w2|w1) = max(c(w1,w2) − d, 0)/c(w1·)
-                   + d·N1+(w1·)/c(w1·) · N1+(·w2)/N1+(··)
-
-    with d = 0.75, context count c(w1·) = Σ c(w1,w2), N1+ the distinct
-    follower / predecessor / bigram-type counts — the continuation
-    probability is what separates KN from every count-ratio smoother.
-
-    Plan shape mirrors the add-one scorer exactly: the corpus-sized
-    work is the occurrence explode + one shuffle join on the bigram
-    key; the context and continuation tables are vocabulary-sized
-    broadcasts and the type total is one scalar."""
-    from ..operators.spread import spread_for_compute
-
-    docs = spread_for_compute(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("t")
-    ).filter(F.size("t") >= 2)
-    # explode_outer + isNotNull: an inner Generate gets a Catalyst
-    # size(...)>0 guard that re-evaluates the whole bigram transform
-    # (and the collapsed split) per row in a separate operator; struct
-    # elements are never null, so the null-filter drops exactly the
-    # empty-array rows the inner form dropped.
-    occ = (
-        toks.select(
-            "doc_id",
-            F.explode_outer(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> struct(t[i-1] AS w1, t[i] AS w2))"
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("b").isNotNull())
-        .select("doc_id", "b.w1", "b.w2")
-    )
-
-    bigrams = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-    ctx = occ.groupBy("w1").agg(
-        F.count(F.lit(1)).alias("c1"),
-        F.countDistinct("w2").alias("n1f"),
-    )
-    cont = bigrams.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p"))
-    types = bigrams.agg(F.count(F.lit(1)).cast("double").alias("nb"))
-
-    d = F.lit(_KN_D)
-    p = (
-        F.greatest(F.col("cb") - d, F.lit(0.0)) / F.col("c1")
-        + d * F.col("n1f") / F.col("c1") * (F.col("n1p") / F.col("nb"))
-    )
-    scored = (
-        occ.join(bigrams, ["w1", "w2"])
-        .join(F.broadcast(ctx), "w1")
-        .join(F.broadcast(cont), "w2")
-        .join(F.broadcast(types))
-        .select("doc_id", F.log(p).alias("logp"))
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(F.exp(-F.avg("logp")), 4).alias("ppl_kn"),
-    )
-    tile = F.ntile(_BUCKETS).over(Window.orderBy("ppl_kn", "doc_id"))
-    bucket = (
-        F.when(tile == 1, "head").when(tile == 2, "middle").otherwise("tail")
-    )
-    return per_doc.select(
-        "doc_id", "n_bigrams", "ppl_kn", bucket.alias("lm_bucket")
-    ).orderBy("doc_id")
-
-
-KNESER_NEY_SQL = rf"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-    FROM documents
-), toks2 AS (
-    SELECT * FROM toks WHERE len(t) >= 2
-), occ AS (
-    SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-    FROM toks2, unnest(range(1, len(t))) AS u(i)
-), bigrams AS (
-    SELECT w1, w2, count(*) AS cb FROM occ GROUP BY w1, w2
-), ctx AS (
-    SELECT w1, count(*) AS c1, count(DISTINCT w2) AS n1f
-    FROM occ GROUP BY w1
-), cont AS (
-    SELECT w2, count(*) AS n1p FROM bigrams GROUP BY w2
-), types AS (
-    SELECT count(*)::DOUBLE AS nb FROM bigrams
-), scored AS (
-    SELECT occ.doc_id,
-           ln(greatest(cb - {_KN_D}, 0.0) / c1
-              + {_KN_D} * n1f / c1 * (n1p / types.nb)) AS logp
-    FROM occ
-    JOIN bigrams USING (w1, w2)
-    JOIN ctx USING (w1)
-    JOIN cont USING (w2)
-    CROSS JOIN types
-), per_doc AS (
-    SELECT doc_id, count(*) AS n_bigrams,
-           round(exp(-avg(logp)), 4) AS ppl_kn
-    FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams, ppl_kn,
-       CASE ntile(3) OVER (ORDER BY ppl_kn, doc_id)
-            WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-       END AS lm_bucket
-FROM per_doc
-ORDER BY doc_id
-"""
-
-
 QUERIES = {
     "ngram_lm_perplexity": ngram_lm_perplexity,
     "lm_head_sample": lm_head_sample,
-    "kneser_ney_perplexity": kneser_ney_perplexity,
 }
 
 ORACLES = {
     "ngram_lm_perplexity": NGRAM_LM_SQL,
     "lm_head_sample": _lm_head_sample_sql(),
-    "kneser_ney_perplexity": KNESER_NEY_SQL,
 }
-
-
-_N_STAGES = 4
-
-
-def curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum ordering: assign every document an easy→hard training
-    stage (quartile of the bigram-LM perplexity, the standard
-    difficulty proxy) and emit the per-stage manifest a staged training
-    run consumes — doc counts, token mass, and the perplexity band.
-
-    Ranks the ROUNDED ppl with doc_id tiebreak (round-before-rank
-    rule). ntile is a global sort here; at 100 TB the same cut is two
-    scans — percentile boundaries via the quantile sketch, then a
-    scan-stage CASE on the broadcast cut points — with this query as
-    the semantics contract."""
-    scored = ngram_lm_perplexity(spark, sf_dir)
-    stage = F.ntile(_N_STAGES).over(Window.orderBy("ppl", "doc_id"))
-    return (
-        scored.select("doc_id", "n_bigrams", "ppl", stage.alias("stage"))
-        .groupBy("stage")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_bigrams").alias("n_bigrams_total"),
-            F.min("ppl").alias("ppl_min"),
-            F.max("ppl").alias("ppl_max"),
-            F.round(F.avg("ppl"), 4).alias("ppl_avg"),
-        )
-        .orderBy("stage")
-    )
-
-
-CURRICULUM_SQL = f"""
-WITH scored AS ({NGRAM_LM_SQL.replace("ORDER BY doc_id", "")}),
-staged AS (
-    SELECT doc_id, n_bigrams, ppl,
-           ntile({_N_STAGES}) OVER (ORDER BY ppl, doc_id) AS stage
-    FROM scored
-)
-SELECT stage, count(*) AS n_docs,
-       sum(n_bigrams)::BIGINT AS n_bigrams_total,
-       min(ppl) AS ppl_min, max(ppl) AS ppl_max,
-       round(avg(ppl), 4) AS ppl_avg
-FROM staged
-GROUP BY stage
-ORDER BY stage
-"""
-
-
-QUERIES["curriculum_shards"] = curriculum_shards
-ORACLES["curriculum_shards"] = CURRICULUM_SQL
-
-
-# --------------------------------------------------------------------------
-# Held-out perplexity evaluation (the data-selection feedback loop)
-# --------------------------------------------------------------------------
-# ngram_lm_perplexity trains and scores on the same corpus — the
-# FILTERING shape. This is the EVALUATION shape a data-selection
-# experiment actually runs: fit the model on the train split only,
-# score the held-out splits, and report per-document perplexity plus
-# the out-of-vocabulary rate (the quantity that explains a ppl move).
-# Unseen bigrams survive through add-one smoothing with cb = 0 (and
-# cu = 0 for an unseen context word), so the score is defined for
-# every held-out document; the bigram attach becomes a LEFT join.
-# Same scale shape as the base query — two train-side hash aggregates,
-# one bigram-keyed shuffle on the eval side, vocabulary broadcast.
-
-
-def heldout_perplexity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-held-out-document bigram-LM perplexity under the TRAIN-split
-    model, with OOV-bigram accounting. Splits = the deterministic
-    hash-gated corpus_sampling_splits assignment."""
-    from ..operators.spread import spread_for_compute
-    from .llm_corpus import corpus_sampling_splits
-
-    splits = corpus_sampling_splits(spark, sf_dir).select(
-        "doc_id", "split"
-    )
-    docs = spread_for_compute(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).join(splits, "doc_id")
-    toks = docs.select(
-        "doc_id",
-        "split",
-        F.split(F.trim(F.lower("text")), r"\s+").alias("t"),
-    ).filter(F.size("t") >= 2)
-
-    # outer + isNotNull: see ngram_lm_perplexity occ comment.
-    occ = (
-        toks.select(
-            "doc_id",
-            "split",
-            F.explode_outer(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> struct(t[i-1] AS w1, t[i] AS w2))"
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("b").isNotNull())
-        .select("doc_id", "split", "b.w1", "b.w2")
-    )
-
-    train_toks = toks.filter(F.col("split") == "train")
-    unigrams = (
-        train_toks.select(F.explode_outer("t").alias("w"))
-        .filter(F.col("w").isNotNull())
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
-    )
-    vocab_size = unigrams.agg(
-        F.count(F.lit(1)).cast("double").alias("v")
-    )
-    bigrams = (
-        occ.filter(F.col("split") == "train")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-
-    eval_occ = occ.filter(F.col("split") != "train")
-    scored = (
-        eval_occ.join(bigrams, ["w1", "w2"], "left")
-        .join(
-            F.broadcast(unigrams.withColumnRenamed("w", "w1")),
-            "w1",
-            "left",
-        )
-        .join(F.broadcast(vocab_size))
-        .select(
-            "doc_id",
-            "split",
-            F.coalesce("cb", F.lit(0)).alias("cb0"),
-            (
-                F.log(
-                    (F.coalesce("cb", F.lit(0)) + 1)
-                    / (F.coalesce("cu", F.lit(0)) + F.col("v"))
-                )
-            ).alias("logp"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id", "split")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum((F.col("cb0") == 0).cast("long")).alias("n_oov_bigrams"),
-            F.round(F.exp(-F.avg("logp")), 4).alias("ppl"),
-        )
-        .select(
-            "doc_id",
-            "split",
-            "n_bigrams",
-            "n_oov_bigrams",
-            F.round(
-                F.col("n_oov_bigrams") / F.col("n_bigrams").cast("double"),
-                6,
-            ).alias("oov_rate"),
-            "ppl",
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _heldout_ppl_sql() -> str:
-    from .llm_corpus import _sampling_splits_sql
-
-    splits = _sampling_splits_sql().replace("ORDER BY doc_id", "")
-    return rf"""
-WITH split_out AS ({splits}),
-toks AS (
-    SELECT d.doc_id, s.split,
-           string_split_regex(trim(lower(d.text)), '\s+') AS t
-    FROM documents d JOIN split_out s ON s.doc_id = d.doc_id
-), toks2 AS (
-    SELECT * FROM toks WHERE len(t) >= 2
-), occ AS (
-    SELECT doc_id, split, t[i] AS w1, t[i + 1] AS w2
-    FROM toks2, unnest(range(1, len(t))) AS u(i)
-), unigrams AS (
-    SELECT w, count(*) AS cu
-    FROM (SELECT unnest(t) AS w FROM toks2 WHERE split = 'train')
-    GROUP BY w
-), v AS (
-    SELECT count(*)::DOUBLE AS v FROM unigrams
-), bigrams AS (
-    SELECT w1, w2, count(*) AS cb
-    FROM occ WHERE split = 'train' GROUP BY w1, w2
-), scored AS (
-    SELECT o.doc_id, o.split,
-           coalesce(b.cb, 0) AS cb0,
-           ln((coalesce(b.cb, 0) + 1)
-              / (coalesce(u.cu, 0) + v.v)) AS logp
-    FROM occ o
-    LEFT JOIN bigrams b ON b.w1 = o.w1 AND b.w2 = o.w2
-    LEFT JOIN unigrams u ON u.w = o.w1
-    CROSS JOIN v
-    WHERE o.split <> 'train'
-)
-SELECT doc_id, split,
-       count(*)::BIGINT AS n_bigrams,
-       sum(CASE WHEN cb0 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_oov_bigrams,
-       round(sum(CASE WHEN cb0 = 0 THEN 1 ELSE 0 END)::DOUBLE / count(*),
-             6) AS oov_rate,
-       round(exp(-avg(logp)), 4) AS ppl
-FROM scored
-GROUP BY doc_id, split
-ORDER BY doc_id
-"""
-
-
-QUERIES["heldout_perplexity_eval"] = heldout_perplexity_eval
-ORACLES["heldout_perplexity_eval"] = _heldout_ppl_sql()
 
 
 # --------------------------------------------------------------------------
@@ -540,7 +206,10 @@ ORACLES["heldout_perplexity_eval"] = _heldout_ppl_sql()
 # (corpus_build_manifest's gate chain: rule filters + perplexity cut +
 # classifier keep), score both models on the same held-out splits, and
 # report corpus-level perplexity side by side. Two model fits and two
-# scoring passes, each with the heldout_perplexity_eval scale shape;
+# scoring passes, each the base query's scale shape (two train-side hash
+# aggregates, one bigram-keyed shuffle on the eval side, vocabulary
+# broadcast); unseen bigrams survive through add-one smoothing, so the
+# bigram attach is a LEFT join;
 # the curated doc set arrives as a doc_id semi-join (broadcast-sized
 # against the corpus at any scale, duplicate of the manifest's own
 # output relation).

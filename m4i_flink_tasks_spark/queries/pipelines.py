@@ -1236,8 +1236,8 @@ def stream_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental OLS (streaming/regression_state.py): the
     (nation, month) cents cells are ADDITIVE integer state — exact for
     any batch split — and the slope readout runs the identical integer-
-    moment arithmetic as the batch revenue_trend_slopes, so a per-row-
-    cents batch SQL oracles the stream bit-for-bit."""
+    moment arithmetic as a one-shot batch OLS, so a per-row-cents batch
+    SQL oracles the stream bit-for-bit."""
     from ..streaming.regression_state import run_stream_trend_slopes
 
     return run_stream_trend_slopes(
@@ -1534,8 +1534,7 @@ def stream_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, codebook = run_stream_pq_index_store(
         spark, sf_dir, _workdir("pq_probe")
     )
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     emb = load_table(spark, sf_dir, "embeddings")
     q_subs = _pq_subvectors(emb.filter(F.col("vec_id") == _QUERY_VEC_ID))
     return _adc_rank(
@@ -2358,14 +2357,13 @@ def stream_chained_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _chained_sql() -> str:
     """Compose the chained-topology oracle from the four jobs' existing
     batch oracles, each re-rooted on the accepted-feed CTE (string
-    substitution with occurrence-count asserts so drift in a base
+    substitution with occurrence-count checks so drift in a base
     oracle fails loudly here, not as a silent hash mismatch)."""
     from .sketches import _scrambled_hash_sql
 
     def subst(sql: str, old: str, new: str, n: int) -> str:
-        assert sql.count(old) == n, (
-            f"oracle drift: expected {n}x {old!r} in base SQL"
-        )
+        if sql.count(old) != n:
+            raise RuntimeError(f"oracle drift: expected {n}x {old!r} in base SQL")
         return sql.replace(old, new)
 
     state_sql = subst(PUBLISH_STATE_SQL, "FROM events", "FROM feed", 1)

@@ -1,9 +1,8 @@
-"""Data profiling and constraint validation (deequ/dbt-test-style).
+"""Data profiling and privacy audits over the TPC-H and event tables.
 
-The operational counterpart of the analytics queries: before a 100 TB
-corpus is trusted, a pipeline profiles it (per-column null rates,
-cardinalities, extremes, dominant values) and asserts its contracts
-(key uniqueness, referential integrity, value ranges). The reference
+The operational counterpart of the analytics queries: the z-order
+clustering key, the t-closeness privacy audit, the numeric correlation
+matrix, and the differential-privacy histogram release. The reference
 has no analogue — its only validation is the per-record structure
 check (P4); these are driver-added capabilities, expression-native and
 oracle-checked.
@@ -15,185 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-
-_PROFILE_COLS = ("doc_id", "text", "lang", "source", "n_chars")
-
-
-def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One profile row per column of ``documents``: null count, exact
-    distinct count, min/max (as strings, so one schema fits every
-    column), and the dominant value with its frequency.
-
-    Plan: the unpivot (``stack``) turns the scan into (column, value)
-    pairs — one pass over the table regardless of column count — and
-    both aggregates (per-column stats, per-(column,value) counts for
-    the mode) group on keys with column-count-bounded cardinality.
-    The mode's tie is broken by value so the profile is deterministic.
-    At scale the exact distinct count is the expensive aggregate;
-    the KMV sketch (queries/sketches.py) is the drop-in when an
-    estimate suffices."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = docs.select(
-        F.expr(
-            "stack({n}, {args}) as (col_name, value)".format(
-                n=len(_PROFILE_COLS),
-                args=", ".join(
-                    f"'{c}', cast({c} as string)" for c in _PROFILE_COLS
-                ),
-            )
-        )
-    )
-    stats = pairs.groupBy("col_name").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
-            "n_nulls"
-        ),
-        F.countDistinct("value").alias("n_distinct"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-    by_count = Window.partitionBy("col_name").orderBy(
-        F.col("cnt").desc(), F.col("value")
-    )
-    mode = (
-        pairs.filter(F.col("value").isNotNull())
-        .groupBy("col_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rn", F.row_number().over(by_count))
-        .filter(F.col("rn") == 1)
-        .select(
-            "col_name",
-            F.col("value").alias("top_value"),
-            F.col("cnt").alias("top_count"),
-        )
-    )
-    return (
-        stats.join(mode, "col_name")
-        .orderBy("col_name")
-    )
-
-
-TABLE_PROFILE_SQL = f"""
-WITH pairs AS (
-    {" UNION ALL ".join(
-        f"SELECT '{c}' AS col_name, {c}::VARCHAR AS value FROM documents"
-        for c in _PROFILE_COLS
-    )}
-), stats AS (
-    SELECT col_name,
-           count(*) AS n_rows,
-           count(*) FILTER (value IS NULL) AS n_nulls,
-           count(DISTINCT value) AS n_distinct,
-           min(value) AS min_value,
-           max(value) AS max_value
-    FROM pairs
-    GROUP BY col_name
-), mode AS (
-    SELECT col_name, value AS top_value, cnt AS top_count
-    FROM (
-        SELECT col_name, value, count(*) AS cnt,
-               row_number() OVER (PARTITION BY col_name
-                                  ORDER BY count(*) DESC, value) AS rn
-        FROM pairs
-        WHERE value IS NOT NULL
-        GROUP BY col_name, value
-    )
-    WHERE rn = 1
-)
-SELECT col_name, n_rows, n_nulls, n_distinct, min_value, max_value,
-       top_value, top_count
-FROM stats JOIN mode USING (col_name)
-ORDER BY col_name
-"""
-
-
-def integrity_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract assertions over the relational tables, one row per
-    check with its violation count — the dbt-test / deequ shape. Each
-    check is a single aggregate or anti-join (orphan FKs surface as
-    left-anti rows, never a row-explosion), unioned into one result so
-    a scheduler gates on ``max(n_violations) == 0``."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-
-    def check(name: str, df: DataFrame) -> DataFrame:
-        return df.select(
-            F.lit(name).alias("check_name"),
-            F.count(F.lit(1)).alias("n_violations"),
-        )
-
-    dup_orders = check(
-        "orders_pk_unique",
-        orders.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1),
-    )
-    orphan_orders = check(
-        "orders_custkey_fk",
-        orders.join(
-            customer,
-            orders.o_custkey == customer.c_custkey,
-            "left_anti",
-        ),
-    )
-    orphan_lineitem = check(
-        "lineitem_orderkey_fk",
-        lineitem.join(
-            orders, lineitem.l_orderkey == orders.o_orderkey, "left_anti"
-        ),
-    )
-    bad_price = check(
-        "orders_totalprice_positive",
-        orders.filter(F.col("o_totalprice") <= 0),
-    )
-    bad_qty = check(
-        "lineitem_quantity_range",
-        lineitem.filter(
-            (F.col("l_quantity") < 1) | (F.col("l_quantity") > 50)
-        ),
-    )
-    bad_dates = check(
-        "lineitem_ship_after_order",
-        lineitem.join(
-            orders, lineitem.l_orderkey == orders.o_orderkey
-        ).filter(F.col("l_shipdate") < F.col("o_orderdate")),
-    )
-    out = dup_orders
-    for c in (orphan_orders, orphan_lineitem, bad_price, bad_qty, bad_dates):
-        out = out.unionByName(c)
-    return out.orderBy("check_name")
-
-
-INTEGRITY_CHECKS_SQL = """
-SELECT 'orders_pk_unique' AS check_name,
-       count(*) AS n_violations
-FROM (SELECT o_orderkey FROM orders GROUP BY 1 HAVING count(*) > 1)
-UNION ALL
-SELECT 'orders_custkey_fk',
-       count(*)
-FROM orders o WHERE NOT EXISTS
-    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-UNION ALL
-SELECT 'lineitem_orderkey_fk',
-       count(*)
-FROM lineitem l WHERE NOT EXISTS
-    (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-UNION ALL
-SELECT 'orders_totalprice_positive',
-       count(*)
-FROM orders WHERE o_totalprice <= 0
-UNION ALL
-SELECT 'lineitem_quantity_range',
-       count(*)
-FROM lineitem WHERE l_quantity < 1 OR l_quantity > 50
-UNION ALL
-SELECT 'lineitem_ship_after_order',
-       count(*)
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate < o.o_orderdate
-ORDER BY check_name
-"""
 
 
 def zorder_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,274 +56,12 @@ LIMIT 500
 
 
 QUERIES = {
-    "table_profile": table_profile,
-    "integrity_checks": integrity_checks,
     "zorder_mapping": zorder_mapping,
 }
 
 ORACLES = {
-    "table_profile": TABLE_PROFILE_SQL,
-    "integrity_checks": INTEGRITY_CHECKS_SQL,
     "zorder_mapping": _zorder_sql(),
 }
-
-
-def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostics — the report read before choosing a
-    join strategy (broadcast / salt / AQE skew-split): per candidate
-    key, the cardinality, the heaviest key's share, the top-10 keys'
-    share, and how many keys run hotter than 2x/4x the mean. All
-    ratios are rationals of exact counts, so the report is
-    engine-exact.
-
-    Scale shape: one map-side-combinable count per key column plus
-    dimension-sized top-k extractions — the same pass a skew-aware
-    planner (AQE) makes, surfaced as data."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-
-    def stats(df: DataFrame, col: str, name: str) -> DataFrame:
-        counts = df.groupBy(F.col(col).alias("k")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        top10 = counts.orderBy(F.desc("c"), "k").limit(10)
-        agg = counts.agg(
-            F.sum("c").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_keys"),
-            F.max("c").alias("max_count"),
-        )
-        t10 = top10.agg(F.sum("c").alias("top10_count"))
-        hot = counts.join(F.broadcast(agg.select("n_rows", "n_keys")), how="cross")
-        hot_agg = hot.agg(
-            F.sum(
-                F.when(
-                    F.col("c") * F.col("n_keys") > 2 * F.col("n_rows"), 1
-                ).otherwise(0)
-            ).alias("n_keys_gt_2x"),
-            F.sum(
-                F.when(
-                    F.col("c") * F.col("n_keys") > 4 * F.col("n_rows"), 1
-                ).otherwise(0)
-            ).alias("n_keys_gt_4x"),
-        )
-        return (
-            agg.join(t10, how="cross")
-            .join(F.broadcast(hot_agg), how="cross")
-            .select(
-                F.lit(name).alias("join_key"),
-                "n_rows",
-                "n_keys",
-                "max_count",
-                F.round(F.col("max_count") / F.col("n_rows"), 6).alias(
-                    "max_share"
-                ),
-                F.round(F.col("top10_count") / F.col("n_rows"), 6).alias(
-                    "top10_share"
-                ),
-                F.col("n_keys_gt_2x").cast("long").alias("n_keys_gt_2x"),
-                F.col("n_keys_gt_4x").cast("long").alias("n_keys_gt_4x"),
-            )
-        )
-
-    return (
-        stats(lineitem, "l_suppkey", "lineitem.l_suppkey")
-        .unionByName(stats(lineitem, "l_partkey", "lineitem.l_partkey"))
-        .unionByName(stats(orders, "o_custkey", "orders.o_custkey"))
-        .orderBy("join_key")
-    )
-
-
-def _skew_stats_sql(table: str, col: str, name: str) -> str:
-    return f"""
-SELECT '{name}' AS join_key,
-       (SELECT count(*) FROM {table}) AS n_rows,
-       (SELECT count(DISTINCT {col}) FROM {table}) AS n_keys,
-       (SELECT max(c) FROM (SELECT count(*) AS c FROM {table} GROUP BY {col})) AS max_count,
-       round((SELECT max(c) FROM (SELECT count(*) AS c FROM {table} GROUP BY {col}))::DOUBLE
-             / (SELECT count(*) FROM {table}), 6) AS max_share,
-       round((SELECT sum(c) FROM (SELECT count(*) AS c FROM {table}
-                                  GROUP BY {col} ORDER BY c DESC LIMIT 10))::DOUBLE
-             / (SELECT count(*) FROM {table}), 6) AS top10_share,
-       (SELECT count(*) FROM (SELECT count(*) AS c FROM {table} GROUP BY {col})
-        WHERE c * (SELECT count(DISTINCT {col}) FROM {table})
-              > 2 * (SELECT count(*) FROM {table})) AS n_keys_gt_2x,
-       (SELECT count(*) FROM (SELECT count(*) AS c FROM {table} GROUP BY {col})
-        WHERE c * (SELECT count(DISTINCT {col}) FROM {table})
-              > 4 * (SELECT count(*) FROM {table})) AS n_keys_gt_4x
-"""
-
-
-JOIN_SKEW_SQL = (
-    _skew_stats_sql("lineitem", "l_suppkey", "lineitem.l_suppkey")
-    + " UNION ALL "
-    + _skew_stats_sql("lineitem", "l_partkey", "lineitem.l_partkey")
-    + " UNION ALL "
-    + _skew_stats_sql("orders", "o_custkey", "orders.o_custkey")
-    + " ORDER BY join_key"
-)
-
-QUERIES["join_skew_report"] = join_skew_report
-ORACLES["join_skew_report"] = JOIN_SKEW_SQL
-
-
-_KANON_K = 5
-
-
-def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-anonymity audit over quasi-identifiers — the privacy gate a
-    dataset release runs before publication.
-
-    Quasi-identifier class = (nation, market segment, account-balance
-    thousand-bucket); the bucket is integer arithmetic on rounded cents
-    so the class boundary is engine-exact. The report aggregates class
-    SIZES into anonymity bands (unique / 2..k-1 / k..2k-1 / >=2k) with
-    the row counts at risk — bounded output at any scale, unlike a
-    violating-class listing.
-
-    Scale posture: two map-side-combinable aggregates (rows -> classes
-    -> bands); nothing joins, nothing sorts more than 4 rows. Suppress
-    / generalize decisions consume this report; the class relation
-    itself stays distributed.
-    """
-    customer = load_table(spark, sf_dir, "customer")
-    classes = (
-        customer.select(
-            "c_nationkey",
-            "c_mktsegment",
-            (
-                F.round(F.col("c_acctbal") * 100).cast("long")
-                / F.lit(100_000)
-            )
-            .cast("long")
-            .alias("bal_bucket"),
-        )
-        .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
-        .agg(F.count(F.lit(1)).alias("class_size"))
-    )
-    band = (
-        F.when(F.col("class_size") == 1, "1 unique")
-        .when(F.col("class_size") < _KANON_K, f"2 under-k (<{_KANON_K})")
-        .when(
-            F.col("class_size") < 2 * _KANON_K,
-            f"3 k-anonymous (<{2 * _KANON_K})",
-        )
-        .otherwise(f"4 comfortable (>={2 * _KANON_K})")
-    )
-    return (
-        classes.groupBy(band.alias("band"))
-        .agg(
-            F.count(F.lit(1)).alias("n_classes"),
-            F.sum("class_size").alias("n_rows"),
-            F.min("class_size").alias("min_class"),
-            F.max("class_size").alias("max_class"),
-        )
-        .orderBy("band")
-    )
-
-
-K_ANONYMITY_SQL = f"""
-WITH classes AS (
-    SELECT c_nationkey, c_mktsegment,
-           round(c_acctbal * 100)::BIGINT // 100000 AS bal_bucket,
-           count(*) AS class_size
-    FROM customer
-    GROUP BY 1, 2, 3
-)
-SELECT CASE
-         WHEN class_size = 1 THEN '1 unique'
-         WHEN class_size < {_KANON_K} THEN '2 under-k (<{_KANON_K})'
-         WHEN class_size < {2 * _KANON_K} THEN '3 k-anonymous (<{2 * _KANON_K})'
-         ELSE '4 comfortable (>={2 * _KANON_K})'
-       END AS band,
-       count(*) AS n_classes,
-       sum(class_size)::BIGINT AS n_rows,
-       min(class_size) AS min_class,
-       max(class_size) AS max_class
-FROM classes
-GROUP BY band
-ORDER BY band
-"""
-
-QUERIES["k_anonymity_audit"] = k_anonymity_audit
-ORACLES["k_anonymity_audit"] = K_ANONYMITY_SQL
-
-
-_LDIV_L = 3
-
-
-def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct l-diversity audit (Machanavajjhala et al., "l-Diversity:
-    Privacy Beyond k-Anonymity", TKDD 2007) — the companion gate to
-    k_anonymity_audit: a class can be large (k-anonymous) yet still
-    leak if every member shares the SENSITIVE value, so the release
-    gate also requires >= l distinct sensitive values per class.
-
-    Quasi-identifier class = (nation, account-balance thousand-bucket),
-    sensitive attribute = market segment. Report = classes and rows per
-    diversity band (homogeneous / under-l / l-diverse) — bounded output
-    at any scale, same two map-side-combinable aggregates as the
-    k-anonymity report (the distinct count rides the same shuffle as
-    the class group-by)."""
-    customer = load_table(spark, sf_dir, "customer")
-    classes = (
-        customer.select(
-            "c_nationkey",
-            (
-                F.round(F.col("c_acctbal") * 100).cast("long")
-                / F.lit(100_000)
-            )
-            .cast("long")
-            .alias("bal_bucket"),
-            "c_mktsegment",
-        )
-        .groupBy("c_nationkey", "bal_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("class_size"),
-            F.countDistinct("c_mktsegment").alias("l_distinct"),
-        )
-    )
-    band = (
-        F.when(F.col("l_distinct") == 1, "1 homogeneous")
-        .when(F.col("l_distinct") < _LDIV_L, f"2 under-l (<{_LDIV_L})")
-        .otherwise(f"3 l-diverse (>={_LDIV_L})")
-    )
-    return (
-        classes.groupBy(band.alias("band"))
-        .agg(
-            F.count(F.lit(1)).alias("n_classes"),
-            F.sum("class_size").alias("n_rows"),
-            F.min("l_distinct").alias("min_l"),
-            F.max("l_distinct").alias("max_l"),
-        )
-        .orderBy("band")
-    )
-
-
-L_DIVERSITY_SQL = f"""
-WITH classes AS (
-    SELECT c_nationkey,
-           round(c_acctbal * 100)::BIGINT // 100000 AS bal_bucket,
-           count(*) AS class_size,
-           count(DISTINCT c_mktsegment) AS l_distinct
-    FROM customer
-    GROUP BY 1, 2
-)
-SELECT CASE
-         WHEN l_distinct = 1 THEN '1 homogeneous'
-         WHEN l_distinct < {_LDIV_L} THEN '2 under-l (<{_LDIV_L})'
-         ELSE '3 l-diverse (>={_LDIV_L})'
-       END AS band,
-       count(*) AS n_classes,
-       sum(class_size)::BIGINT AS n_rows,
-       min(l_distinct) AS min_l,
-       max(l_distinct) AS max_l
-FROM classes
-GROUP BY band
-ORDER BY band
-"""
-
-QUERIES["l_diversity_audit"] = l_diversity_audit
-ORACLES["l_diversity_audit"] = L_DIVERSITY_SQL
 
 
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,134 +312,6 @@ def _corr_sql() -> str:
 
 QUERIES["numeric_correlation_matrix"] = numeric_correlation_matrix
 ORACLES["numeric_correlation_matrix"] = _corr_sql()
-
-
-# --------------------------------------------------------------------------
-# Robust outlier audit (median / MAD)
-# --------------------------------------------------------------------------
-# Mean/stddev outlier rules break on the very rows they should catch
-# (the outliers move the mean); the robust rule is |x - median| >
-# 3 * 1.4826 * MAD. Both medians are LOWER medians over integer cents
-# (rank (n+1)//2), so every comparison is exact integer arithmetic on
-# both engines and the threshold is the rational 10000*|x-med| >
-# 44478*mad — no float anywhere until the report's rate column.
-# Scale shape: two nation-keyed window passes (25 balanced groups;
-# each pass one keyed exchange) + a broadcast-sized group report. For
-# high-cardinality or skewed groups the 100 TB swap is the two-pass
-# histogram selection of exact_median_twopass per group — same
-# semantics, no per-group sort.
-
-_MAD_SCALE_NUM = 44478   # 3 * 1.4826 * 10^4  (consistency constant)
-_MAD_SCALE_DEN = 10000
-
-
-def mad_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation robust outlier audit of order totals: n_orders,
-    lower-median cents, MAD cents, outlier count and rate under the
-    3-sigma-equivalent MAD rule."""
-    from pyspark.sql import Window
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    x = (
-        orders.select(
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("pc"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(F.col("c_nationkey").alias("nationkey"), "pc")
-    )
-    w = Window.partitionBy("nationkey").orderBy("pc")
-    med = (
-        x.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("nationkey")))
-        .filter(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .select("nationkey", F.col("pc").alias("med"), "n")
-    )
-    dev = x.join(med, "nationkey").select(
-        "nationkey", "pc", "med", F.abs(F.col("pc") - F.col("med")).alias("ad")
-    )
-    wd = Window.partitionBy("nationkey").orderBy("ad")
-    mad = (
-        dev.withColumn("rn", F.row_number().over(wd))
-        .join(med.select("nationkey", "n"), "nationkey")
-        .filter(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .select("nationkey", F.col("ad").alias("mad"))
-    )
-    flagged = dev.join(mad, "nationkey").withColumn(
-        "is_outlier",
-        _MAD_SCALE_DEN * F.col("ad") > _MAD_SCALE_NUM * F.col("mad"),
-    )
-    return (
-        flagged.groupBy("nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.first("med").alias("median_cents"),
-            F.first("mad").alias("mad_cents"),
-            F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
-        )
-        .select(
-            "nationkey",
-            "n_orders",
-            "median_cents",
-            "mad_cents",
-            "n_outliers",
-            F.round(
-                F.col("n_outliers") / F.col("n_orders").cast("double"), 6
-            ).alias("outlier_rate"),
-        )
-        .orderBy("nationkey")
-    )
-
-
-MAD_OUTLIER_SQL = f"""
-WITH x AS (
-    SELECT c.c_nationkey AS nationkey,
-           round(o.o_totalprice * 100)::BIGINT AS pc
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-),
-ranked AS (
-    SELECT nationkey, pc,
-           row_number() OVER (PARTITION BY nationkey ORDER BY pc) AS rn,
-           count(*) OVER (PARTITION BY nationkey) AS n
-    FROM x
-),
-med AS (
-    SELECT nationkey, pc AS med, n
-    FROM ranked WHERE rn = (n + 1) // 2
-),
-dev AS (
-    SELECT x.nationkey, x.pc, m.med, abs(x.pc - m.med) AS ad, m.n
-    FROM x JOIN med m ON m.nationkey = x.nationkey
-),
-dev_ranked AS (
-    SELECT nationkey, ad, n,
-           row_number() OVER (PARTITION BY nationkey ORDER BY ad) AS rn
-    FROM dev
-),
-mad AS (
-    SELECT nationkey, ad AS mad
-    FROM dev_ranked WHERE rn = (n + 1) // 2
-)
-SELECT d.nationkey,
-       count(*)::BIGINT AS n_orders,
-       any_value(d.med) AS median_cents,
-       any_value(m.mad) AS mad_cents,
-       sum(CASE WHEN {_MAD_SCALE_DEN} * d.ad > {_MAD_SCALE_NUM} * m.mad
-                THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-       round(sum(CASE WHEN {_MAD_SCALE_DEN} * d.ad
-                          > {_MAD_SCALE_NUM} * m.mad
-                      THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
-           AS outlier_rate
-FROM dev d JOIN mad m ON m.nationkey = d.nationkey
-GROUP BY d.nationkey
-ORDER BY d.nationkey
-"""
-
-QUERIES["mad_outlier_report"] = mad_outlier_report
-ORACLES["mad_outlier_report"] = MAD_OUTLIER_SQL
 
 
 # --------------------------------------------------------------------------

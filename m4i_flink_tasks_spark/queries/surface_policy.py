@@ -131,7 +131,6 @@ HEAVY_LLM_FAMILIES: dict[str, tuple[str, ...]] = {
     ),
     "embedding_pca": (
         "embedding_pca_power",
-        "pca_projection_scores",
         "stream_embedding_pca",
     ),
     "hdr_sketch": (

@@ -1,61 +1,23 @@
-"""Warehouse-completeness queries: SCD2 dimension build, pivot,
-decile analysis, funnel sequencing, and calendar gap-fill.
+"""Warehouse-layout queries: the bucketed SMB join, the Pareto
+frontier, and the table-maintenance layer (compaction planning,
+zone-map and manifest pruning), plus the SCD2 oracle the streaming
+dimension build (``streaming/scd2.py``) is checked against.
 
-These are the remaining classic warehouse shapes a user migrating an
-analytics workload expects from an engine (SURVEY §2.6 notes the
-reference has no SQL surface at all — window functions, pivots, and
-set-based history tracking are all driver-added capabilities). Every
-query is expression-native (window functions + hash aggregates, no
-Python in the hot path) and oracle-checked against DuckDB.
+Every query is expression-native (window functions + hash aggregates,
+no Python in the hot path) and oracle-checked against DuckDB.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..sources import load_table
 
 
-# --------------------------------------------------------------------------
-# SCD2 (type-2 slowly changing dimension) build
-# --------------------------------------------------------------------------
-
-
-def scd2_user_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build a type-2 dimension of each user's event-type "status"
-    history from the raw event stream: consecutive duplicates collapse,
-    each surviving change gets ``valid_from``/``valid_to`` (NULL = the
-    current row) and a version number.
-
-    The standard warehouse history-tracking shape: one
-    ``lag``-to-detect-change window + one ``lead``-for-interval window,
-    both over the same (user, time) partitioning, so the whole build is
-    a single shuffle on user_id regardless of history length. At scale
-    the dimension lands in a keyed store and new events extend it
-    incrementally with the same expressions inside a MERGE.
-    """
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", F.col("event_type").alias("status")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = events.withColumn("prev", F.lag("status").over(w)).filter(
-        F.col("prev").isNull() | (F.col("prev") != F.col("status"))
-    )
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        changes.select(
-            "user_id",
-            "status",
-            F.unix_millis("ts").alias("valid_from_ms"),
-            F.unix_millis(F.lead("ts").over(w2)).alias("valid_to_ms"),
-            F.row_number().over(w2).alias("version"),
-        )
-        .orderBy("user_id", "version")
-    )
-
-
+# Type-2 slowly changing dimension over the event stream: one row per
+# status change with its validity interval. The DuckDB oracle of
+# ``stream_scd2_dimension``.
 SCD2_SQL = """
 WITH changes AS (
     SELECT user_id, ts, event_id, event_type AS status
@@ -78,913 +40,9 @@ ORDER BY user_id, version
 """
 
 
-# --------------------------------------------------------------------------
-# pivot (nation × order-year revenue matrix)
-# --------------------------------------------------------------------------
+QUERIES = {}
 
-_PIVOT_YEARS = tuple(range(1992, 1999))
-
-
-def revenue_pivot_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order revenue pivoted to one column per order year, one row per
-    customer nation — ``groupBy().pivot()`` with the year list given
-    EXPLICITLY: Spark otherwise runs an extra distinct-scan job to
-    discover the pivot values, and the output column order would
-    depend on data. Explicit values keep the plan to one scan + one
-    shuffle and the schema static, which is also what the oracle's
-    conditional aggregation reproduces."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    joined = (
-        orders.join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == cust.c_custkey,
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            "n_name",
-            F.year("o_orderdate").alias("yr"),
-            "o_totalprice",
-        )
-    )
-    pivoted = (
-        joined.groupBy("n_name")
-        .pivot("yr", list(_PIVOT_YEARS))
-        .agg(F.round(F.sum("o_totalprice"), 2))
-    )
-    renamed = pivoted.select(
-        "n_name",
-        *[F.col(str(y)).alias(f"y{y}") for y in _PIVOT_YEARS],
-    )
-    return renamed.orderBy("n_name")
-
-
-REVENUE_PIVOT_SQL = (
-    "SELECT n_name,\n"
-    + ",\n".join(
-        f"       round(sum(o_totalprice) FILTER (year(o_orderdate) = {y}),"
-        f" 2) AS y{y}"
-        for y in _PIVOT_YEARS
-    )
-    + """
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-ORDER BY n_name
-"""
-)
-
-
-# --------------------------------------------------------------------------
-# decile analysis (ntile / distribution windows)
-# --------------------------------------------------------------------------
-
-
-def customer_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers ranked into revenue deciles (ntile over total spend,
-    ties broken by key for determinism), then per-decile summary — the
-    standard cohort/LTV segmentation shape. Two shuffles total: the
-    per-customer aggregate, then the decile assignment; the ntile
-    window is a single global ordering, which at 100 TB becomes a
-    range-partitioned sort (Spark plans exactly that) rather than a
-    single-partition bottleneck only if the per-customer relation is
-    still large — here it is customers, already 1/30th of orders."""
-    orders = load_table(spark, sf_dir, "orders")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    w = Window.orderBy(F.col("revenue").desc(), F.col("o_custkey"))
-    deciled = per_cust.withColumn("decile", F.ntile(10).over(w))
-    return (
-        deciled.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("n_orders").alias("n_orders"),
-            F.round(F.sum("revenue"), 2).alias("total_revenue"),
-            F.round(F.min("revenue"), 2).alias("min_revenue"),
-            F.round(F.max("revenue"), 2).alias("max_revenue"),
-        )
-        .orderBy("decile")
-    )
-
-
-REVENUE_DECILES_SQL = """
-WITH per_cust AS (
-    SELECT o_custkey,
-           round(sum(o_totalprice), 2) AS revenue,
-           count(*) AS n_orders
-    FROM orders
-    GROUP BY o_custkey
-), deciled AS (
-    SELECT *,
-           ntile(10) OVER (ORDER BY revenue DESC, o_custkey) AS decile
-    FROM per_cust
-)
-SELECT decile,
-       count(*) AS n_customers,
-       sum(n_orders)::BIGINT AS n_orders,
-       round(sum(revenue), 2) AS total_revenue,
-       round(min(revenue), 2) AS min_revenue,
-       round(max(revenue), 2) AS max_revenue
-FROM deciled
-GROUP BY decile
-ORDER BY decile
-"""
-
-
-# --------------------------------------------------------------------------
-# funnel sequencing (ordered multi-step conversion)
-# --------------------------------------------------------------------------
-
-
-def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view → click → purchase funnel per user: each stage's
-    timestamp must follow the previous stage's (a click before the
-    first view does not count). Three bounded aggregates, each joined
-    back broadcast (the per-user relation is keys, not events); no
-    self-join of the event table against itself. Users who never
-    viewed are excluded; later stages are NULL where the funnel
-    stalls."""
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    # each stage frame is per-user (tiny) but feeds BOTH the next
-    # stage's gate and the final join — persist so the event scan
-    # behind it runs once, not once per consumer (explain showed the
-    # view aggregate's scan replicated 3x without this)
-    v = (
-        events.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("view_ts"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .join(F.broadcast(v), "user_id")
-        .filter(F.col("ts") > F.col("view_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .join(F.broadcast(c), "user_id")
-        .filter(F.col("ts") > F.col("click_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ts"))
-    )
-    return (
-        v.join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id",
-            F.unix_millis("view_ts").alias("first_view_ms"),
-            F.unix_millis("click_ts").alias("first_click_after_ms"),
-            F.unix_millis("purchase_ts").alias("first_purchase_after_ms"),
-        )
-        .orderBy("user_id")
-    )
-
-
-EVENT_FUNNEL_SQL = """
-WITH v AS (
-    SELECT user_id, min(ts) AS view_ts
-    FROM events WHERE event_type = 'view' GROUP BY user_id
-), c AS (
-    SELECT e.user_id, min(e.ts) AS click_ts
-    FROM events e JOIN v ON e.user_id = v.user_id
-    WHERE e.event_type = 'click' AND e.ts > v.view_ts
-    GROUP BY e.user_id
-), p AS (
-    SELECT e.user_id, min(e.ts) AS purchase_ts
-    FROM events e JOIN c ON e.user_id = c.user_id
-    WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-    GROUP BY e.user_id
-)
-SELECT v.user_id,
-       epoch_ms(view_ts) AS first_view_ms,
-       epoch_ms(click_ts) AS first_click_after_ms,
-       epoch_ms(purchase_ts) AS first_purchase_after_ms
-FROM v LEFT JOIN c ON v.user_id = c.user_id
-       LEFT JOIN p ON v.user_id = p.user_id
-ORDER BY v.user_id
-"""
-
-
-# --------------------------------------------------------------------------
-# calendar gap-fill (resample + cumulative)
-# --------------------------------------------------------------------------
-
-
-def daily_activity_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user daily event counts with MISSING days zero-filled from a
-    generated calendar spine, plus a per-user running total — the
-    time-series resample shape dashboards and feature pipelines need
-    (a groupBy alone silently omits empty buckets).
-
-    The spine is users × days built with ``sequence`` + ``explode``
-    from a one-row min/max aggregate — rows generated, not stored, and
-    the explode is partition-parallel. The left join back to the
-    day-aggregated facts is a shuffle of (users × days) rows, which is
-    the OUTPUT size — no plan reads the raw events more than once."""
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(
-        "user_id", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    bounds = events.agg(
-        F.to_date(F.min("ts")).alias("d0"), F.to_date(F.max("ts")).alias("d1")
-    )
-    users = events.select("user_id").distinct()
-    spine = users.crossJoin(F.broadcast(bounds)).select(
-        "user_id",
-        F.explode(
-            F.sequence("d0", "d1", F.expr("interval 1 day"))
-        ).alias("day"),
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    return (
-        spine.join(daily, ["user_id", "day"], "left")
-        .select(
-            "user_id",
-            "day",
-            F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        )
-        .withColumn("cum_events", F.sum("n_events").over(w))
-        .select(
-            "user_id",
-            F.unix_date("day").alias("day_num"),
-            "n_events",
-            "cum_events",
-        )
-        .orderBy("user_id", "day_num")
-    )
-
-
-GAP_FILL_SQL = """
-WITH bounds AS (
-    SELECT min(ts::DATE) AS d0, max(ts::DATE) AS d1 FROM events
-), spine AS (
-    SELECT u.user_id, s.day::DATE AS day
-    FROM (SELECT DISTINCT user_id FROM events) u,
-         bounds,
-         unnest(generate_series(bounds.d0, bounds.d1,
-                                INTERVAL 1 DAY)) AS s(day)
-), daily AS (
-    SELECT user_id, ts::DATE AS day, count(*) AS n_events
-    FROM events
-    GROUP BY 1, 2
-)
-SELECT s.user_id,
-       date_diff('day', DATE '1970-01-01', s.day) AS day_num,
-       coalesce(d.n_events, 0) AS n_events,
-       (sum(coalesce(d.n_events, 0))
-           OVER (PARTITION BY s.user_id ORDER BY s.day))::BIGINT AS cum_events
-FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
-ORDER BY s.user_id, day_num
-"""
-
-
-# --------------------------------------------------------------------------
-# point-in-time dimension lookup (temporal join against SCD2 intervals)
-# --------------------------------------------------------------------------
-
-
-def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every error event, the user's activity status AT that moment
-    — the temporal-dimension lookup every SCD2 dimension exists to
-    serve. The dimension is the status history built from the NON-error
-    events; the fact side is the errors.
-
-    Plan: because SCD2 intervals are contiguous per key, the interval
-    join ``valid_from <= ts < valid_to`` is exactly an as-of join on
-    ``valid_from`` — so this reuses ``operators.asof.asof_join``'s
-    union trick: ONE shuffle on user_id and a linear window pass,
-    versus the naive range join the oracle runs (which explodes the
-    (fact × dim-rows-per-user) product before pruning). The oracle
-    checking equality IS the proof the rewrite is semantics-preserving.
-
-    Changes are deduplicated to one per (user, instant) keeping the
-    highest event_id ("final status at that instant") so the as-of
-    carry is deterministic under equal timestamps.
-    """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (
-        events.filter(F.col("event_type") != "error")
-        .select(
-            "user_id", "ts", "event_id",
-            F.col("event_type").alias("status"),
-        )
-        .withColumn("prev", F.lag("status").over(w))
-        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("status")))
-        .groupBy("user_id", "ts")
-        .agg(F.max(F.struct("event_id", "status")).alias("_last"))
-        .select(
-            "user_id",
-            "ts",
-            F.col("_last.status").alias("status"),
-            F.unix_millis("ts").alias("status_since_ms"),
-        )
-    )
-    errors = events.filter(F.col("event_type") == "error").select(
-        "user_id", "ts", "event_id"
-    )
-    from ..operators.asof import asof_join
-
-    joined = asof_join(
-        errors,
-        changes,
-        on=["user_id"],
-        left_time="ts",
-        right_time="ts",
-        value_cols=["status", "status_since_ms"],
-        strict=False,
-        suffix="",
-    )
-    return joined.select(
-        "user_id",
-        F.col("event_id").alias("error_event_id"),
-        F.unix_millis("ts").alias("error_ts_ms"),
-        F.col("status").alias("status_at_error"),
-        "status_since_ms",
-    ).orderBy("user_id", "error_event_id")
-
-
-SCD2_POINT_IN_TIME_SQL = """
-WITH collapsed AS (
-    SELECT user_id, ts, event_id, event_type AS status
-    FROM (
-        SELECT user_id, ts, event_id, event_type,
-               lag(event_type) OVER w AS prev
-        FROM events
-        WHERE event_type <> 'error'
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    WHERE prev IS NULL OR prev <> event_type
-), changes AS (
-    SELECT user_id, ts,
-           max_by(status, event_id) AS status,
-           epoch_ms(ts) AS status_since_ms
-    FROM collapsed
-    GROUP BY user_id, ts
-), intervals AS (
-    SELECT user_id, ts AS valid_from, status, status_since_ms,
-           lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS valid_to
-    FROM changes
-)
-SELECT e.user_id,
-       e.event_id AS error_event_id,
-       epoch_ms(e.ts) AS error_ts_ms,
-       i.status AS status_at_error,
-       i.status_since_ms
-FROM events e
-LEFT JOIN intervals i
-  ON e.user_id = i.user_id
- AND i.valid_from <= e.ts
- AND (i.valid_to IS NULL OR e.ts < i.valid_to)
-WHERE e.event_type = 'error'
-ORDER BY e.user_id, error_event_id
-"""
-
-
-# --------------------------------------------------------------------------
-# cohort retention matrix
-# --------------------------------------------------------------------------
-
-
-def weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic product-analytics cohort matrix: users grouped by
-    first-active week, tracked by how many are active N weeks later.
-    Two aggregates (first-seen per user, active user-weeks) joined on
-    the user key — the cohort assignment broadcasts because it is one
-    row per user, already reduced from the event volume. Week index is
-    integer arithmetic on epoch days, identical in both engines."""
-    events = load_table(spark, sf_dir, "events")
-    weekly = events.select(
-        "user_id", (F.unix_date(F.to_date("ts")) / 7).cast("long").alias("week")
-    ).distinct()
-    cohorts = weekly.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    return (
-        weekly.join(F.broadcast(cohorts), "user_id")
-        .select(
-            "cohort_week",
-            (F.col("week") - F.col("cohort_week")).alias("weeks_since"),
-            "user_id",
-        )
-        .groupBy("cohort_week", "weeks_since")
-        .agg(F.countDistinct("user_id").alias("n_active"))
-        .orderBy("cohort_week", "weeks_since")
-    )
-
-
-WEEKLY_RETENTION_SQL = """
-WITH weekly AS (
-    SELECT DISTINCT user_id,
-           date_diff('day', DATE '1970-01-01', ts::DATE) // 7 AS week
-    FROM events
-), cohorts AS (
-    SELECT user_id, min(week) AS cohort_week FROM weekly GROUP BY user_id
-)
-SELECT c.cohort_week,
-       w.week - c.cohort_week AS weeks_since,
-       count(DISTINCT w.user_id) AS n_active
-FROM weekly w JOIN cohorts c ON w.user_id = c.user_id
-GROUP BY 1, 2
-ORDER BY cohort_week, weeks_since
-"""
-
-
-# --------------------------------------------------------------------------
-# rolling z-score anomaly detection
-# --------------------------------------------------------------------------
-
-_Z_WINDOW = 7  # trailing days
-_Z_THRESHOLD = 2.0
-
-
-def daily_anomaly_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Days whose event volume deviates from the trailing 7-day mean by
-    more than 2 sample standard deviations — the rolling z-score
-    monitor every ingestion pipeline runs. One aggregate to daily
-    grain, then a single ordered window per metric (here: global daily
-    counts, so the window is one tiny partition; per-key monitors
-    partition by the key and scale out). The frame EXCLUDES the
-    current day (trailing stats), so an anomaly cannot suppress
-    itself."""
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    w = (
-        Window.orderBy("day")
-        .rowsBetween(-_Z_WINDOW, -1)
-    )
-    scored = daily.select(
-        F.unix_date("day").alias("day_num"),
-        "n_events",
-        F.count(F.lit(1)).over(w).alias("n_trailing"),
-        F.round(F.avg("n_events").over(w), 6).alias("trailing_mean"),
-        F.round(F.stddev_samp("n_events").over(w), 6).alias("trailing_std"),
-    ).filter(F.col("n_trailing") == _Z_WINDOW)
-    z = F.round(
-        (F.col("n_events") - F.col("trailing_mean"))
-        / F.col("trailing_std"),
-        6,
-    )
-    return (
-        scored.select(
-            "day_num",
-            "n_events",
-            "trailing_mean",
-            "trailing_std",
-            z.alias("zscore"),
-            (F.abs(z) > _Z_THRESHOLD).alias("is_anomaly"),
-        )
-        .orderBy("day_num")
-    )
-
-
-ANOMALY_ZSCORES_SQL = f"""
-WITH daily AS (
-    SELECT ts::DATE AS day, count(*) AS n_events
-    FROM events
-    GROUP BY 1
-), scored AS (
-    SELECT date_diff('day', DATE '1970-01-01', day) AS day_num,
-           n_events,
-           count(*) OVER w AS n_trailing,
-           round(avg(n_events) OVER w, 6) AS trailing_mean,
-           round(stddev_samp(n_events) OVER w, 6) AS trailing_std
-    FROM daily
-    WINDOW w AS (ORDER BY day ROWS BETWEEN {_Z_WINDOW} PRECEDING
-                 AND 1 PRECEDING)
-)
-SELECT day_num,
-       n_events,
-       trailing_mean,
-       trailing_std,
-       round((n_events - trailing_mean) / trailing_std, 6) AS zscore,
-       abs(round((n_events - trailing_mean) / trailing_std, 6))
-           > {_Z_THRESHOLD} AS is_anomaly
-FROM scored
-WHERE n_trailing = {_Z_WINDOW}
-ORDER BY day_num
-"""
-
-
-# --------------------------------------------------------------------------
-# histogram (width-bucket binned aggregation)
-# --------------------------------------------------------------------------
-
-_HIST_BUCKET = 10_000.0
-
-
-def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-price histogram at a fixed bucket width — binning is a
-    scan-stage projection (floor division), so the whole histogram is
-    one map-side-combinable aggregate; no sort, no window."""
-    orders = load_table(spark, sf_dir, "orders")
-    bucket = F.floor(F.col("o_totalprice") / F.lit(_HIST_BUCKET)).cast("long")
-    return (
-        orders.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("min_price"),
-            F.round(F.max("o_totalprice"), 2).alias("max_price"),
-        )
-        .withColumn("bucket_low", F.col("bucket") * _HIST_BUCKET)
-        .drop("bucket")
-        .orderBy("bucket_low")
-    )
-
-
-PRICE_HISTOGRAM_SQL = f"""
-SELECT count(*) AS n_orders,
-       round(min(o_totalprice), 2) AS min_price,
-       round(max(o_totalprice), 2) AS max_price,
-       floor(o_totalprice / {_HIST_BUCKET}) * {_HIST_BUCKET} AS bucket_low
-FROM orders
-GROUP BY floor(o_totalprice / {_HIST_BUCKET})
-ORDER BY bucket_low
-"""
-
-
-def ship_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-to-ship latency distribution in weekly buckets, per
-    linestatus — the fulfillment-SLA profile. The latency is a
-    scan-stage datediff against the broadcast-joined order date, so
-    the histogram is one fact scan + one map-side-combinable aggregate
-    (orders is the smaller side and broadcasts; lineitem never
-    shuffles for the join)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    lat_days = F.datediff("l_shipdate", "o_orderdate")
-    return (
-        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            "l_linestatus",
-            F.floor(lat_days / 7).cast("long").alias("latency_week"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.min(lat_days).alias("min_days"),
-            F.max(lat_days).alias("max_days"),
-        )
-        .orderBy("l_linestatus", "latency_week")
-    )
-
-
-SHIP_LATENCY_SQL = """
-SELECT l_linestatus,
-       CAST(floor(date_diff('day', o_orderdate, l_shipdate) / 7.0)
-            AS BIGINT)                                    AS latency_week,
-       count(*)                                           AS n_lines,
-       min(date_diff('day', o_orderdate, l_shipdate))     AS min_days,
-       max(date_diff('day', o_orderdate, l_shipdate))     AS max_days
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1, 2
-ORDER BY l_linestatus, latency_week
-"""
-
-
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-type transition counts and probabilities —
-    the sequence-analytics pass behind behavior models and funnels.
-
-    One window (lag over the per-user event order — the same keyed
-    shuffle every sequence feature shares) pairs each event with its
-    predecessor; transition counts are a tiny |types|² aggregate, and
-    the row-normalized probabilities ride a second window over that
-    dimension-sized relation. Determinism: ties in event order break
-    on event_id, probabilities round before output.
-    """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        events.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
-    row_total = Window.partitionBy("from_type")
-    return pairs.select(
-        "from_type",
-        "to_type",
-        "n_transitions",
-        F.round(
-            F.col("n_transitions") / F.sum("n_transitions").over(row_total),
-            6,
-        ).alias("p_transition"),
-    ).orderBy("from_type", "to_type")
-
-
-TRANSITION_MATRIX_SQL = """
-WITH pairs AS (
-    SELECT lag(event_type) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS from_type,
-           event_type AS to_type
-    FROM events
-), counted AS (
-    SELECT from_type, to_type, count(*) AS n_transitions
-    FROM pairs WHERE from_type IS NOT NULL
-    GROUP BY from_type, to_type
-)
-SELECT from_type, to_type, n_transitions,
-       round(n_transitions::DOUBLE
-             / sum(n_transitions) OVER (PARTITION BY from_type), 6)
-           AS p_transition
-FROM counted
-ORDER BY from_type, to_type
-"""
-
-
-QUERIES = {
-    "ship_latency_histogram": ship_latency_histogram,
-    "event_transition_matrix": event_transition_matrix,
-    "scd2_user_status": scd2_user_status,
-    "scd2_point_in_time": scd2_point_in_time,
-    "weekly_retention": weekly_retention,
-    "daily_anomaly_zscores": daily_anomaly_zscores,
-    "price_histogram": price_histogram,
-    "revenue_pivot_by_year": revenue_pivot_by_year,
-    "customer_revenue_deciles": customer_revenue_deciles,
-    "event_funnel": event_funnel,
-    "daily_activity_gap_fill": daily_activity_gap_fill,
-}
-
-ORACLES = {
-    "ship_latency_histogram": SHIP_LATENCY_SQL,
-    "event_transition_matrix": TRANSITION_MATRIX_SQL,
-    "scd2_user_status": SCD2_SQL,
-    "scd2_point_in_time": SCD2_POINT_IN_TIME_SQL,
-    "weekly_retention": WEEKLY_RETENTION_SQL,
-    "daily_anomaly_zscores": ANOMALY_ZSCORES_SQL,
-    "price_histogram": PRICE_HISTOGRAM_SQL,
-    "revenue_pivot_by_year": REVENUE_PIVOT_SQL,
-    "customer_revenue_deciles": REVENUE_DECILES_SQL,
-    "event_funnel": EVENT_FUNNEL_SQL,
-    "daily_activity_gap_fill": GAP_FILL_SQL,
-}
-
-
-def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention — the BI classic: users grouped by first-active
-    day (the events table spans days, so daily cohorts), then for each
-    (cohort, day-offset) the share of the cohort still active. One
-    aggregate to first-activity, one distinct-activity aggregate, one
-    broadcast-joined ratio — all map-side combinable; the matrix is
-    dimension-sized (days x offsets)."""
-    events = load_table(spark, sf_dir, "events")
-    acts = events.select(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).distinct()
-    first = acts.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    joined = acts.join(first, "user_id").select(
-        "user_id",
-        F.unix_millis("cohort_day").alias("cohort_ms"),
-        F.datediff(F.col("day"), F.col("cohort_day")).alias("day_offset"),
-    )
-    cohort_sizes = first.groupBy(
-        F.unix_millis("cohort_day").alias("cohort_ms")
-    ).agg(F.count(F.lit(1)).alias("cohort_size"))
-    cells = joined.groupBy("cohort_ms", "day_offset").agg(
-        F.count_distinct("user_id").alias("n_active")
-    )
-    return (
-        cells.join(F.broadcast(cohort_sizes), "cohort_ms")
-        .select(
-            "cohort_ms",
-            "day_offset",
-            "n_active",
-            "cohort_size",
-            F.round(
-                F.col("n_active") / F.col("cohort_size"), 6
-            ).alias("retention"),
-        )
-        .orderBy("cohort_ms", "day_offset")
-    )
-
-
-RETENTION_SQL = """
-WITH acts AS (
-    SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events
-),
-first AS (
-    SELECT user_id, min(day) AS cohort_day FROM acts GROUP BY user_id
-),
-sizes AS (
-    SELECT epoch_ms(cohort_day) AS cohort_ms, count(*) AS cohort_size
-    FROM first GROUP BY 1
-),
-cells AS (
-    SELECT epoch_ms(f.cohort_day) AS cohort_ms,
-           date_diff('day', f.cohort_day, a.day) AS day_offset,
-           count(DISTINCT a.user_id) AS n_active
-    FROM acts a JOIN first f USING (user_id)
-    GROUP BY 1, 2
-)
-SELECT c.cohort_ms,
-       c.day_offset::INT AS day_offset,
-       c.n_active,
-       s.cohort_size,
-       round(c.n_active::DOUBLE / s.cohort_size, 6) AS retention
-FROM cells c JOIN sizes s USING (cohort_ms)
-ORDER BY cohort_ms, day_offset
-"""
-
-QUERIES["user_retention_cohorts"] = user_retention_cohorts
-ORACLES["user_retention_cohorts"] = RETENTION_SQL
-
-
-def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation — recency / frequency / monetary
-    quintiles (ntile over deterministically tie-broken orderings),
-    reported as the segment-cell matrix with counts and average spend.
-    One per-customer aggregate, three windows over the customer
-    dimension, one dimension-sized (<=125 cells) report."""
-    orders = load_table(spark, sf_dir, "orders")
-    max_date = orders.agg(F.max("o_orderdate")).collect()[0][0]
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.datediff(F.lit(max_date), F.max("o_orderdate")).alias(
-            "recency_days"
-        ),
-        F.count(F.lit(1)).alias("frequency"),
-        # integer cents: exact ntile ordering and exact cell averages
-        # (a rounded-dollar double can land on a half-cent boundary and
-        # flip between engines)
-        F.round(F.sum("o_totalprice") * 100).cast("long").alias(
-            "monetary_cents"
-        ),
-    )
-    w_r = Window.orderBy("recency_days", "o_custkey")
-    w_f = Window.orderBy(F.desc("frequency"), "o_custkey")
-    w_m = Window.orderBy(F.desc("monetary_cents"), "o_custkey")
-    scored = per_cust.select(
-        "o_custkey",
-        "monetary_cents",
-        F.ntile(5).over(w_r).alias("r_score"),
-        F.ntile(5).over(w_f).alias("f_score"),
-        F.ntile(5).over(w_m).alias("m_score"),
-    )
-    return (
-        scored.groupBy("r_score", "f_score", "m_score")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.avg("monetary_cents") / 100, 4).alias(
-                "avg_monetary"
-            ),
-        )
-        .orderBy("r_score", "f_score", "m_score")
-    )
-
-
-RFM_SQL = """
-WITH per_cust AS (
-    SELECT o_custkey,
-           date_diff('day', max(o_orderdate),
-                     (SELECT max(o_orderdate) FROM orders)) AS recency_days,
-           count(*) AS frequency,
-           round(sum(o_totalprice) * 100)::BIGINT AS monetary_cents
-    FROM orders GROUP BY o_custkey
-),
-scored AS (
-    SELECT o_custkey, monetary_cents,
-           ntile(5) OVER (ORDER BY recency_days, o_custkey) AS r_score,
-           ntile(5) OVER (ORDER BY frequency DESC, o_custkey) AS f_score,
-           ntile(5) OVER (ORDER BY monetary_cents DESC, o_custkey) AS m_score
-    FROM per_cust
-)
-SELECT r_score, f_score, m_score,
-       count(*) AS n_customers,
-       round(avg(monetary_cents) / 100, 4) AS avg_monetary
-FROM scored
-GROUP BY 1, 2, 3
-ORDER BY r_score, f_score, m_score
-"""
-
-QUERIES["rfm_segments"] = rfm_segments
-ORACLES["rfm_segments"] = RFM_SQL
-
-
-def revenue_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation monthly revenue OLS trend (slope in dollars/month).
-
-    The classic "is this market growing?" report: monthly revenue per
-    customer nation, least-squares slope over the month index. The
-    slope is computed from INTEGER moments — x = months-since-epoch,
-    y = revenue cents, slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx*Sx) — so
-    the distributed sums are exact whole numbers in any addition order
-    and the single floating division is engine-identical (a direct
-    ``regr_slope`` would accumulate doubles in engine-specific order).
-
-    Scale posture: one fact shuffle to the (nation, month) grain
-    (map-side combinable), then the moment aggregate runs on the
-    dimension-sized series; the nation dim broadcasts into the first
-    join. Intermediates fit long arithmetic: at 100 TB, month-cents
-    sums stay < 2^56 per nation-month and n*Sxy < 2^63 for any
-    realistic calendar span.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    monthly = (
-        orders.join(
-            F.broadcast(
-                customer.select("c_custkey", "c_nationkey")
-            ),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .groupBy(
-            "c_nationkey",
-            (
-                (F.year("o_orderdate") - 1970) * 12
-                + F.month("o_orderdate")
-                - 1
-            ).alias("x"),
-        )
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("y_cents")
-        )
-    )
-    moments = monthly.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_months"),
-        F.sum("x").alias("sx"),
-        F.sum("y_cents").alias("sy"),
-        F.sum(F.col("x") * F.col("y_cents")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    return (
-        moments.join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            moments.c_nationkey == F.col("n_nationkey"),
-        )
-        .select(
-            "n_name",
-            "n_months",
-            F.round(
-                (
-                    F.col("n_months") * F.col("sxy")
-                    - F.col("sx") * F.col("sy")
-                ).cast("double")
-                / (
-                    F.col("n_months") * F.col("sxx")
-                    - F.col("sx") * F.col("sx")
-                )
-                / 100.0,
-                6,
-            ).alias("slope_per_month"),
-            F.round(F.col("sy") / F.col("n_months") / 100.0, 4).alias(
-                "avg_monthly_revenue"
-            ),
-        )
-        .orderBy("n_name")
-    )
-
-
-TREND_SQL = """
-WITH monthly AS (
-    SELECT c.c_nationkey,
-           (year(o.o_orderdate) - 1970) * 12 + month(o.o_orderdate) - 1 AS x,
-           round(sum(o.o_totalprice) * 100)::BIGINT AS y_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY 1, 2
-),
-moments AS (
-    SELECT c_nationkey,
-           count(*)::BIGINT AS n_months,
-           sum(x)::BIGINT AS sx,
-           sum(y_cents)::BIGINT AS sy,
-           sum(x * y_cents)::BIGINT AS sxy,
-           sum(x * x)::BIGINT AS sxx
-    FROM monthly GROUP BY c_nationkey
-)
-SELECT n.n_name,
-       m.n_months,
-       round((m.n_months * m.sxy - m.sx * m.sy)::DOUBLE
-             / (m.n_months * m.sxx - m.sx * m.sx) / 100.0, 6) AS slope_per_month,
-       round(m.sy::DOUBLE / m.n_months / 100.0, 4) AS avg_monthly_revenue
-FROM moments m JOIN nation n ON m.c_nationkey = n.n_nationkey
-ORDER BY n.n_name
-"""
-
-QUERIES["revenue_trend_slopes"] = revenue_trend_slopes
-ORACLES["revenue_trend_slopes"] = TREND_SQL
+ORACLES = {}
 
 
 _BUCKETS = 8
@@ -1273,93 +331,6 @@ ORACLES["compaction_plan"] = COMPACTION_PLAN_SQL
 
 
 _VACUUM_RETAIN = 3  # snapshots kept per partition beyond the current one
-
-
-def vacuum_retention_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vacuum plan over a versioned-file inventory — the third leg of
-    the table-maintenance triad beside compaction_plan and
-    zone_map_pruning_report (Delta VACUUM / Iceberg expire_snapshots):
-    per partition, versions older than the newest ``_VACUUM_RETAIN``
-    are reclaimable; the plan lists every version with its file count,
-    bytes, eligibility, and the partition's reclaimable totals — the
-    artifact the delete job consumes and the audit log keeps.
-
-    Inventory synthesis follows the compaction/zone-map convention
-    (month partition, suppkey-derived file id; version = orderkey mod
-    6 models successive snapshot writes). Plan shape: one
-    map-side-combinable aggregate to the (partition, version) grain,
-    then windows over the version-count-sized relation — the rewrite
-    parallelism is per-partition, same as compaction."""
-    li = load_table(spark, sf_dir, "lineitem")
-    inv = (
-        li.select(
-            F.date_format("l_shipdate", "yyyy-MM").alias("part_key"),
-            (F.col("l_orderkey") % 6).cast("int").alias("version"),
-            (F.col("l_suppkey") % 8).alias("file_id"),
-        )
-        .groupBy("part_key", "version")
-        .agg(
-            F.countDistinct("file_id").cast("int").alias("n_files"),
-            (F.count(F.lit(1)) * _FILE_ROW_BYTES).alias("size_bytes"),
-        )
-    )
-    wp = Window.partitionBy("part_key")
-    flagged = inv.select(
-        "part_key",
-        "version",
-        "n_files",
-        "size_bytes",
-        (
-            F.col("version")
-            <= F.max("version").over(wp) - F.lit(_VACUUM_RETAIN)
-        ).alias("reclaimable"),
-    )
-    return flagged.select(
-        "part_key",
-        "version",
-        "n_files",
-        "size_bytes",
-        "reclaimable",
-        F.sum(
-            F.when(F.col("reclaimable"), F.col("size_bytes")).otherwise(
-                F.lit(0)
-            )
-        )
-        .over(wp)
-        .alias("part_reclaim_bytes"),
-        F.sum(F.when(F.col("reclaimable"), 1).otherwise(0))
-        .over(wp)
-        .cast("int")
-        .alias("part_reclaim_versions"),
-    ).orderBy("part_key", "version")
-
-
-VACUUM_PLAN_SQL = f"""
-WITH inv AS (
-    SELECT strftime(l_shipdate, '%Y-%m') AS part_key,
-           (l_orderkey % 6)::INT AS version,
-           count(DISTINCT l_suppkey % 8)::INT AS n_files,
-           {_FILE_ROW_BYTES} * count(*) AS size_bytes
-    FROM lineitem
-    GROUP BY 1, 2
-), flagged AS (
-    SELECT part_key, version, n_files, size_bytes,
-           version <= max(version) OVER (PARTITION BY part_key)
-                       - {_VACUUM_RETAIN} AS reclaimable
-    FROM inv
-)
-SELECT part_key, version, n_files, size_bytes, reclaimable,
-       sum(CASE WHEN reclaimable THEN size_bytes ELSE 0 END)
-           OVER (PARTITION BY part_key)::BIGINT AS part_reclaim_bytes,
-       sum(CASE WHEN reclaimable THEN 1 ELSE 0 END)
-           OVER (PARTITION BY part_key)::INT AS part_reclaim_versions
-FROM flagged
-ORDER BY part_key, version
-"""
-
-QUERIES["vacuum_retention_plan"] = vacuum_retention_plan
-ORACLES["vacuum_retention_plan"] = VACUUM_PLAN_SQL
-
 
 _ZONE_LO, _ZONE_HI = 30000, 35000  # ~5%-selective price band probe
 

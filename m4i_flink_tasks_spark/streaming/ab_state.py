@@ -99,8 +99,7 @@ def run_stream_sequential_ab(
         os.path.join(workdir, "ckpt_ab"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return msprt_from_users(
         state.select("user_id", "day", "converted")
     )

@@ -137,7 +137,8 @@ def probe_topk(
         bit_sample_bucket(F.col("query_emb"), bits).alias("lsh_bucket"),
     )
     candidates = store.current_for_keys(qrow.select("lsh_bucket"))
-    assert candidates is not None
+    if candidates is None:
+        raise RuntimeError(f"index {store.root} holds no probed bucket")
     return (
         candidates.join(
             F.broadcast(qrow.select("lsh_bucket", "query_emb")),

@@ -76,8 +76,7 @@ def run_stream_audio_ingest(
         os.path.join(workdir, "ckpt_audio_ingest"),
     )
 
-    final = catalog.current()
-    assert final is not None
+    final = catalog.require_current()
     # same rounding projection as the batch query's declared columns
     return final.select(
         "doc_id",

@@ -94,8 +94,7 @@ def run_stream_hybrid_rrf(
         os.path.join(workdir, "ckpt_bm25_index"),
     )
 
-    doclen = doclen_store.current()
-    assert doclen is not None
+    doclen = doclen_store.require_current()
     postings = postings_store.current()
     if postings is None:
         postings = spark.createDataFrame(

@@ -85,7 +85,6 @@ def run_stream_conformal_gate(
         os.path.join(workdir, "ckpt_conformal"),
     )
 
-    cal = cal_store.current()
-    test = test_store.current()
-    assert cal is not None and test is not None
+    cal = cal_store.require_current()
+    test = test_store.require_current()
     return conformal_report_from(cal, test)

@@ -63,8 +63,9 @@ def stage_documents(
 
 def score_and_scrub(docs: DataFrame) -> DataFrame:
     """The per-document curation projection — identical expressions to
-    the batch queries (language_id / quality_scores / pii_scrub /
-    document_fingerprints), one scan, no shuffle."""
+    the batch queries (language_id / quality_scores /
+    document_fingerprints) plus the email/phone scrub, one scan, no
+    shuffle."""
     from ..queries.llm_corpus import _EMAIL_RE, _PHONE_RE
 
     return docs.select(
@@ -142,8 +143,7 @@ def run_corpus_ingest(
         os.path.join(workdir, "ckpt_ingest"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return final.select(
         "doc_id",
         "predicted_lang",

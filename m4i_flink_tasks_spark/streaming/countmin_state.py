@@ -74,8 +74,7 @@ def run_stream_countmin_freq(
         os.path.join(workdir, "ckpt_cm"),
     )
 
-    counters = store.current()
-    assert counters is not None
+    counters = store.require_current()
     # top keys + exact counts from the bounded staged replay (the
     # verification columns); estimates from the maintained sketch
     staged = spark.read.schema(ORDERS_STREAM_SCHEMA).parquet(staging)

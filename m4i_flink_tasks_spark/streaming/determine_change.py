@@ -358,10 +358,7 @@ def run_determine_change_entities(
         os.path.join(workdir, "ckpt_determine_change_entities"),
     )
 
-    final = out_store.current()
-    if final is None:
-        raise RuntimeError("determine_change: store empty after the run")
-    return final
+    return out_store.require_current()
 
 
 def run_determine_change(
@@ -391,7 +388,4 @@ def run_determine_change(
         os.path.join(workdir, "ckpt_determine_change"),
     )
 
-    final = store.current()
-    if final is None:
-        raise RuntimeError("determine_change: store empty after the run")
-    return final
+    return store.require_current()

@@ -78,6 +78,5 @@ def run_stream_dp_release(
         os.path.join(workdir, "ckpt_dp"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return dp_release_from_counts(state)

@@ -80,6 +80,5 @@ def run_stream_selfjoin_size(
         os.path.join(workdir, "ckpt_f2"),
     )
 
-    counts = store.current()
-    assert counts is not None
+    counts = store.require_current()
     return f2_report_from_counts(counts)

@@ -120,9 +120,7 @@ def run_get_entity(
         os.path.join(workdir, "ckpt_get_entity"),
     )
 
-    final = store.current()
-    if final is None:
-        raise RuntimeError("get_entity: store empty after the run")
+    final = store.require_current()
     dead = dead_store.current()
     if dead is None:
         dead = spark.createDataFrame(

@@ -103,6 +103,5 @@ def run_stream_hdr_quantiles(
         os.path.join(workdir, "ckpt_hdr"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return hdr_quantile_readout(state)

@@ -169,8 +169,7 @@ def run_stream_heavy_hitters(
         os.path.join(workdir, "ckpt_mg"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return (
         final.select(
             "lang",

@@ -71,8 +71,7 @@ def run_stream_hll_distinct(
         os.path.join(workdir, "ckpt_hll"),
     )
 
-    regs = store.current()
-    assert regs is not None
+    regs = store.require_current()
     return _hll_estimate(regs, ["g"]).withColumnRenamed(
         "g", "o_orderpriority"
     ).orderBy("o_orderpriority")

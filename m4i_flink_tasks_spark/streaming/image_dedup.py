@@ -96,8 +96,7 @@ def run_stream_image_dedup(
         os.path.join(workdir, "ckpt_imgdedup"),
     )
 
-    groups = store.current()
-    assert groups is not None
+    groups = store.require_current()
     # readout: pure doc->hash recompute over the bounded replay,
     # joined to the maintained (collapsed, broadcastable) group state
     staged = spark.read.schema(IMAGE_STREAM_SCHEMA).parquet(staging)

@@ -119,8 +119,7 @@ merge_partials = monoid_combine(
 
 def _view(store: BucketedParquetUpsertStore) -> DataFrame:
     """The maintained view in ``q1_pricing_summary``'s exact shape."""
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return final.select(
         "l_returnflag",
         "l_linestatus",

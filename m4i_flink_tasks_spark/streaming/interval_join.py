@@ -93,9 +93,7 @@ def _replay_matches(
         sink,
         os.path.join(workdir, checkpoint_name),
     )
-    final = store.current()
-    assert final is not None
-    return final
+    return store.require_current()
 
 
 def run_interval_join(
@@ -165,8 +163,7 @@ def run_interval_join_left(
         os.path.join(workdir, "ckpt_lj_signup"),
     )
 
-    signups = signup_store.current()
-    assert signups is not None
+    signups = signup_store.require_current()
     unmatched = signups.join(
         matches.select("signup_event_id"), "signup_event_id", "left_anti"
     ).select(

@@ -168,7 +168,8 @@ def ivfpq_probe_topk(
         F.round(_pq_sqdist(F.col("qsub"), F.col("cent")), 6).alias("ld"),
     )
     cell_codes = store.current_for_keys(probed.select("label"))
-    assert cell_codes is not None
+    if cell_codes is None:
+        raise RuntimeError(f"index {store.root} holds no probed cell")
     per_s = (
         cell_codes.join(F.broadcast(lut), ["label", "s", "code"])
         .groupBy("vec_id")

@@ -155,11 +155,9 @@ def run_stream_markov_attribution(
         os.path.join(workdir, "ckpt_markov"),
     )
 
-    counts = counts_store.current()
-    assert counts is not None
+    counts = counts_store.require_current()
     trans = {(r["s"], r["t"]): r["n"] for r in counts.collect()}
-    touches = touch_store.current()
-    assert touches is not None
+    touches = touch_store.require_current()
     tails = (
         touches.filter(F.col("last_st") != "conv")
         .groupBy("last_st")

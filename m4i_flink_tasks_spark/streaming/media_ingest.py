@@ -81,8 +81,7 @@ def run_stream_media_ingest(
         os.path.join(workdir, "ckpt_media_ingest"),
     )
 
-    final = catalog.current()
-    assert final is not None
+    final = catalog.require_current()
     return final.select(
         "doc_id",
         "container",

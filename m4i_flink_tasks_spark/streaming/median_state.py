@@ -106,6 +106,5 @@ def run_stream_exact_median(
         os.path.join(workdir, "ckpt_median"),
     )
 
-    hist = store.current()
-    assert hist is not None
+    hist = store.require_current()
     return median_readout(hist)

@@ -95,6 +95,5 @@ def run_stream_numeric_profile(
         os.path.join(workdir, "ckpt_moments"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return corr_from_moments(state.drop("k"))

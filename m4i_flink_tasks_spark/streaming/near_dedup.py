@@ -224,6 +224,4 @@ def run_stream_near_dedup(
         os.path.join(workdir, "ckpt_near_dedup"),
     )
 
-    final = out_store.current()
-    assert final is not None
-    return final
+    return out_store.require_current()

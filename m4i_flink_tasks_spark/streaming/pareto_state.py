@@ -123,8 +123,7 @@ def run_stream_pareto_frontier(
         os.path.join(workdir, "ckpt_pareto"),
     )
 
-    frontier = store.current()
-    assert frontier is not None
+    frontier = store.require_current()
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",

@@ -81,7 +81,8 @@ def _batch_moments(batch: DataFrame) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            assert len(pdf) <= 1 << 20, "Arrow chunk too large for int64 Gram"
+            if len(pdf) > 1 << 20:
+                raise ValueError("Arrow chunk too large for int64 Gram")
             Q = np.vstack(pdf["q"].to_numpy()).astype(np.int64)
             g = Q.T @ Q
             s = Q.sum(axis=0)
@@ -153,6 +154,5 @@ def run_stream_embedding_pca(
         os.path.join(workdir, "ckpt_pca"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return pca_from_moment_rows(spark, state.collect())

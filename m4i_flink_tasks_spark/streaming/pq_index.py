@@ -65,8 +65,7 @@ def run_stream_pq_index(
     store, _codebook = run_stream_pq_index_store(
         spark, sf_dir, workdir, n_files, max_files_per_trigger
     )
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return state.orderBy("vec_id")
 
 

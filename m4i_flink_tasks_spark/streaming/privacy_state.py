@@ -87,8 +87,7 @@ def run_stream_t_closeness(
         os.path.join(workdir, "ckpt_tclose"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return t_closeness_from_cells(
         state.select("c_nationkey", "bal_bucket", "c_mktsegment", "cnt")
     )

@@ -145,9 +145,7 @@ def run_publish_state(
         os.path.join(workdir, "ckpt_publish_state"),
     )
 
-    final = store.current()
-    if final is None:
-        raise RuntimeError("publish_state: store empty after the run")
+    final = store.require_current()
     dead = dead_store.current()
     if dead is None:
         dead = spark.createDataFrame(

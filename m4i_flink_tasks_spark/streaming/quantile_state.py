@@ -158,8 +158,7 @@ def run_stream_quantile_sample(
         os.path.join(workdir, "ckpt_qs"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return quantiles_of(final)
 
 

@@ -1,8 +1,9 @@
 """Streaming SCD2: incremental type-2 dimension maintenance.
 
-The streaming form of ``queries/warehouse.py``'s ``scd2_user_status``:
-events arrive in time-ordered micro-batches and each batch extends the
-per-user status history in place — close the open row when the status
+Type-2 history of each user's status (one row per status change with
+its validity interval), maintained incrementally: events arrive in
+time-ordered micro-batches and each batch extends the per-user status
+history in place — close the open row when the status
 changed, append the new change row, renumber versions. State is kept
 as the dimension ROWS themselves in the bucketed store keyed by
 user_id, so the merge touches only the buckets holding users present
@@ -10,14 +11,15 @@ in the batch.
 
 Maintenance strategy: for touched buckets the combine re-derives the
 affected users' histories from (stored change points ∪ new batch
-change points) with the same lag/lead/row_number expressions the batch
-query proves. Stored rows are themselves collapsed change points, and
-ingest is time-ordered (staged topic replay), so re-collapsing change
-points plus strictly-later events is exactly equivalent to collapsing
-the full raw history — the equality test against the one-shot batch
-query pins that. Cost per batch: touched buckets' rows + the batch,
-never the store; the 100 TB swap-in is the identical expressions in a
-Delta MERGE over the dimension's key-bucketed layout.
+change points) with the same lag/lead/row_number expressions as the
+one-shot batch build (``queries/warehouse.py`` ``SCD2_SQL``). Stored
+rows are themselves collapsed change points, and ingest is time-ordered
+(staged topic replay), so re-collapsing change points plus
+strictly-later events is exactly equivalent to collapsing the full raw
+history — the oracle-parity row of ``stream_scd2_dimension`` pins that.
+Cost per batch: touched buckets' rows + the batch, never the store;
+the 100 TB swap-in is the identical expressions in a Delta MERGE over
+the dimension's key-bucketed layout.
 
 Out-of-order arrivals are NOT handled here by design — a late event
 older than a user's last change point would need the batch query's
@@ -105,8 +107,7 @@ def run_stream_scd2(
         os.path.join(workdir, "ckpt_scd2"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return final.select(
         "user_id", "status", "valid_from_ms", "valid_to_ms", "version"
     )

@@ -182,6 +182,5 @@ def run_stream_semantic_dedup(
         os.path.join(workdir, "ckpt_semantic_dedup"),
     )
 
-    final = out_store.current()
-    assert final is not None
+    final = out_store.require_current()
     return final.select("vec_id", "label", "nn_sim", "is_dup")

@@ -143,8 +143,7 @@ def run_stream_sessions(
         os.path.join(workdir, "ckpt_sessions"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return (
         final.select(
             "user_id",

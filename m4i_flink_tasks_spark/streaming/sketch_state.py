@@ -147,8 +147,7 @@ def run_stream_distinct_sketch(
         os.path.join(workdir, "ckpt_sketch"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     # A sketch with fewer than k hashes (a partial stream) has no k-th
     # hash: NULL estimate, as the oracle's max(CASE WHEN rn = k ...).
     kth = F.try_element_at("sketch", F.lit(k))
@@ -216,8 +215,7 @@ def run_stream_windowed_distinct(
         os.path.join(workdir, "ckpt_wdu"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     size = F.size("sketch")
     est = F.when(size < k, size.cast("long")).otherwise(
         F.expr(f"({k - 1} * {T.HASH_MOD}L) div element_at(sketch, {k})")

@@ -91,9 +91,8 @@ def span_stats_readout(
     total_store: BucketedParquetUpsertStore,
 ) -> DataFrame:
     """The batch query's exact output shape, recomputed from state."""
-    counts = count_store.current()
-    totals = total_store.current()
-    assert counts is not None and totals is not None
+    counts = count_store.require_current()
+    totals = total_store.require_current()
     rep = (
         counts.groupBy("h")
         .agg(F.count(F.lit(1)).alias("nd"))

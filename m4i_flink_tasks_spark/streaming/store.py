@@ -16,9 +16,13 @@ key buckets (hash-bucket partitioning + per-bucket version pointers),
 which is the posture that survives state growth. The production
 swap-in for either is Delta Lake / Iceberg ``MERGE`` — identical
 logical contract (keyed upsert + delete, snapshot isolation), with
-file-level pruning so a merge touches only matching files. The
-pipeline code depends only on ``merge``/``delete``/``current``, so
-that swap is a one-class change.
+file-level pruning so a merge touches only matching files. A swap-in
+must carry the bucketed store's whole caller surface, not just
+``merge``/``delete``/``current``: the pipelines also call
+``merge_many``, ``current_for_keys``, ``touched_buckets`` with
+``current_for_buckets``, ``has_state``, ``last_batch_id``,
+``require_current`` and the time-travel trio ``history`` /
+``read_version`` / ``vacuum``.
 
 The bucketed store has ONE writer: ``merge``, ``merge_many``,
 ``delete`` and compaction write segments through ``_write_segments``
@@ -394,6 +398,15 @@ class BucketedParquetUpsertStore:
         """
         key = self._pointer_key()
         return None if key is None else self._snapshot_for(key, whole=True)[0]
+
+    def require_current(self) -> DataFrame:
+        """``current()`` for a caller whose run must have committed: a
+        sink reading back what it wrote. Raises ``RuntimeError`` naming
+        the store root when no version is committed."""
+        df = self.current()
+        if df is None:
+            raise RuntimeError(f"store {self.root} is empty: no version committed")
+        return df
 
     def _pointer_key(self) -> tuple | None:
         """``(inode, mtime_ns, state)`` of ``_CURRENT`` (stat'ed before

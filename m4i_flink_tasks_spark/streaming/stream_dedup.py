@@ -97,8 +97,7 @@ def run_stream_dedup(
         os.path.join(workdir, "ckpt_dedup"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return final.select(
         "event_id",
         "user_id",

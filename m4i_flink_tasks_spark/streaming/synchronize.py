@@ -169,6 +169,5 @@ def run_synchronize(
         os.path.join(workdir, "ckpt_synchronize"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return finalize_docs(final)

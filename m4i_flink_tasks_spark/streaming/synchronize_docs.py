@@ -313,7 +313,4 @@ def run_synchronize_appsearch(
         os.path.join(workdir, "ckpt_synchronize_docs"),
     )
 
-    final = store.current()
-    if final is None:
-        raise RuntimeError("synchronize_docs: doc store empty after the run")
-    return final
+    return store.require_current()

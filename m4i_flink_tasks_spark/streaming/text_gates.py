@@ -74,9 +74,7 @@ def _run_doc_report_stream(
         os.path.join(workdir, f"ckpt_{store_name}"),
     )
 
-    final = store.current()
-    assert final is not None
-    return final
+    return store.require_current()
 
 
 def run_stream_gopher_rules(

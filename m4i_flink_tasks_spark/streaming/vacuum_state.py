@@ -1,8 +1,8 @@
 """Streaming vacuum/retention plan over the LIVE store's version log.
 
-``vacuum_retention_plan`` (queries/warehouse.py) plans retention over a
-SYNTHESIZED version inventory. This twin closes the loop the r7 verdict
-asked for: the stream upserts real micro-batches into a
+Retention is planned over the store's real version log, not a
+synthesized version inventory: the stream upserts real micro-batches
+into a
 :class:`~m4i_flink_tasks_spark.streaming.store.BucketedParquetUpsertStore`,
 then the plan is read from the store's OWN committed snapshot log
 (``history()``) and per-version time travel (``read_version()``), the
@@ -36,7 +36,7 @@ version, collected — a version-count-bounded (<= epochs) driver-side
 assembly, the same altitude as the compaction plan the rewrite job
 consumes. Physical consistency (which version DIRECTORIES vacuum may
 delete) depends on the store's xxhash64 bucket map, which no SQL
-oracle can restate — it is asserted in-process instead (loud failure,
+oracle can restate — it is checked in-process instead (loud failure,
 never a silent hash mismatch) and pinned by tests/test_vacuum_state.py.
 
 No reference analogue (the reference maintains no store of its own —
@@ -133,21 +133,23 @@ def run_stream_vacuum_plan(
         try:
             # One staged file per trigger => exactly one epoch per batch.
             eps = [r[0] for r in rows.select("epoch").distinct().collect()]
-            assert len(eps) == 1, f"batch {batch_id} mixed epochs {eps}"
+            if len(eps) != 1:
+                raise RuntimeError(f"batch {batch_id} mixed epochs {eps}")
             # The oracle's whole premise is the IDENTITY micro-batch id
             # == store version == epoch VALUE — a gapped epoch sequence
             # (an epoch with zero orders) would silently desynchronize
             # store versions from epoch values and surface only as a
             # confusing oracle hash mismatch. Fail loudly in-process.
-            assert eps[0] == batch_id, (
-                f"batch {batch_id} carries epoch {eps[0]}: the epoch "
-                "sequence has a gap, store versions no longer equal "
-                "epoch values"
-            )
+            if eps[0] != batch_id:
+                raise RuntimeError(
+                    f"batch {batch_id} carries epoch {eps[0]}: the epoch "
+                    "sequence has a gap, store versions no longer equal "
+                    "epoch values"
+                )
             # Every batch must touch all buckets (hundreds of customer
             # keys vs 4 xxhash64 buckets) — this is what makes the
             # post-vacuum DIRECTORY layout deterministic (each retained
-            # snapshot references only its own version dir). Assert it
+            # snapshot references only its own version dir). Check it
             # loudly rather than let a data change surface as a silent
             # oracle mismatch.
             touched = (
@@ -159,9 +161,10 @@ def run_stream_vacuum_plan(
                 .distinct()
                 .count()
             )
-            assert touched == _N_BUCKETS, (
-                f"batch {batch_id} touched {touched}/{_N_BUCKETS} buckets"
-            )
+            if touched != _N_BUCKETS:
+                raise RuntimeError(
+                    f"batch {batch_id} touched {touched}/{_N_BUCKETS} buckets"
+                )
             store.merge(rows.drop("epoch"), batch_id=batch_id)
         finally:
             rows.unpersist()
@@ -173,7 +176,8 @@ def run_stream_vacuum_plan(
     )
 
     history = store.history()
-    assert history, "no committed versions"
+    if not history:
+        raise RuntimeError(f"store {store.root} has no committed versions")
     current_version = history[-1]["version"]
 
     # Per-version readout via REAL time travel — one distributed
@@ -202,12 +206,20 @@ def run_stream_vacuum_plan(
     for h in history:
         v = h["version"]
         expired = v <= current_version - _VACUUM_RETAIN
-        assert (v not in survivors) == expired, (v, survivors)
+        if (v not in survivors) != expired:
+            raise RuntimeError(
+                f"vacuum kept the wrong snapshots: version {v}, "
+                f"survivors {sorted(survivors)}"
+            )
         # all-buckets-touched => retained snapshots reference only their
         # own version dirs, so vacuum must physically delete exactly the
-        # expired ones (the xxhash64-dependent half, asserted in-process
+        # expired ones (the xxhash64-dependent half, checked in-process
         # because no SQL oracle can restate the bucket map).
-        assert os.path.isdir(store._version_path(v)) == (not expired), v
+        if os.path.isdir(store._version_path(v)) == expired:
+            raise RuntimeError(
+                f"vacuum left version {v}'s directory in the wrong state "
+                f"(expired={expired})"
+            )
 
     dicts = [
         {

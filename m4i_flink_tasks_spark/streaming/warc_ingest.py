@@ -75,8 +75,7 @@ def run_stream_warc_ingest(
         os.path.join(workdir, "ckpt_warc"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return state.orderBy("doc_id", "rec_index")
 
 
@@ -132,9 +131,8 @@ def run_stream_warc_quarantine(
         os.path.join(workdir, "ckpt_quarantine"),
     )
 
-    ok = ok_store.current()
-    dead = dead_store.current()
-    assert ok is not None and dead is not None
+    ok = ok_store.require_current()
+    dead = dead_store.require_current()
     return ok.unionByName(dead).orderBy("doc_id")
 
 
@@ -177,6 +175,5 @@ def run_stream_warc_text(
         os.path.join(workdir, "ckpt_wet"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return state.orderBy("doc_id", "rec_index")

@@ -140,8 +140,7 @@ def run_stream_weighted_sample(
         os.path.join(workdir, "ckpt_wrs"),
     )
 
-    final = store.current()
-    assert final is not None
+    final = store.require_current()
     return sample_rows(final)
 
 

@@ -81,9 +81,7 @@ def _maintained_windows(
         os.path.join(workdir, checkpoint_name),
         output_mode="update",
     )
-    final = store.current()
-    assert final is not None
-    return final
+    return store.require_current()
 
 
 def run_windowed_counts(

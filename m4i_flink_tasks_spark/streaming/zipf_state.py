@@ -75,8 +75,7 @@ def run_stream_zipf_fit(
         os.path.join(workdir, "ckpt_zipf"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return zipf_from_freqs(
         state.select("tok", F.col("freq").cast("long").alias("freq"))
     )

@@ -103,6 +103,5 @@ def run_stream_zone_map_state(
         os.path.join(workdir, "ckpt_zone"),
     )
 
-    state = store.current()
-    assert state is not None
+    state = store.require_current()
     return inventory_readout(state, _ZONE_LO, _ZONE_HI)

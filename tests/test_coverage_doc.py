@@ -304,3 +304,68 @@ def test_no_redundant_proof_beside_a_kept_row():
     assert not redundant, (
         f"extras listed beside a kept row in a Proof cell: {sorted(redundant)}"
     )
+
+
+def _identifier_uses(tree):
+    """``(line, name)`` for every name an AST uses: loads, attributes
+    and imported names."""
+    import ast
+
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append((node.lineno, node.id))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.lineno, node.attr))
+        elif isinstance(node, ast.alias):
+            out.append((node.lineno, node.name.rsplit(".", 1)[-1]))
+    return out
+
+
+def test_no_orphan_definitions_in_queries():
+    """Every top-level function, class and constant in ``queries/*.py``
+    is used by something other than its own definition: the package,
+    ``tests/``, ``tools/`` or ``bench.py``. A deleted query must take
+    its helpers and oracle SQL with it."""
+    import ast
+    import glob
+
+    root = os.path.dirname(_DOC)
+    pkg = os.path.join(root, "m4i_flink_tasks_spark")
+    files = (
+        glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        + glob.glob(os.path.join(root, "tests", "*.py"))
+        + glob.glob(os.path.join(root, "tools", "*.py"))
+        + [os.path.join(root, "bench.py")]
+    )
+    uses = {}
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            uses[path] = _identifier_uses(ast.parse(fh.read(), path))
+    elsewhere = {}  # name -> files using it
+    for path, found in uses.items():
+        for _, name in found:
+            elsewhere.setdefault(name, set()).add(path)
+    orphans = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries", "*.py"))):
+        with open(path, encoding="utf-8") as fh:
+            body = ast.parse(fh.read(), path).body
+        for node in body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            for name in names:
+                if name in {"QUERIES", "ORACLES"} or name.startswith("__"):
+                    continue
+                used = elsewhere.get(name, set()) - {path} or any(
+                    n == name and not node.lineno <= line <= node.end_lineno
+                    for line, n in uses[path]
+                )
+                if not used:
+                    orphans.append(f"{os.path.basename(path)}:{node.lineno} {name}")
+    assert not orphans, "definitions nothing uses:\n" + "\n".join(orphans)

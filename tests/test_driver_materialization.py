@@ -29,7 +29,6 @@ Bounds, per (module, function):
   llm_similarity.mmr_rerank           top-N (=20) candidate table
   sketches.exact_median_twopass       value-domain bucket histogram
   sketches.hdr_histogram_quantiles    <= 90 buckets/decade sketch
-  warehouse.rfm_segments              5^3 RFM segment cells
   entity_resolution._pattern_counts   1 row (the 8 agreement-pattern
                                       counts) — the shared histogram
                                       readout of the EM queries; EM
@@ -65,7 +64,6 @@ _ALLOWED = {
     ("queries/llm_similarity.py", "mmr_rerank"),
     ("queries/sketches.py", "exact_median_twopass"),
     ("queries/sketches.py", "hdr_histogram_quantiles"),
-    ("queries/warehouse.py", "rfm_segments"),
     ("queries/entity_resolution.py", "_pattern_counts"),
 }
 

@@ -248,16 +248,6 @@ def test_exactly_one_aggregate_exchange_for_q1(plans):
     assert n_exchanges <= 2, f"q1 has {n_exchanges} exchanges:\n{plan}"
 
 
-def test_scd2_is_single_key_shuffle(plans):
-    """Both SCD2 windows (lag change-detect, lead/version) share one
-    user_id hash partitioning; anything beyond that plus the
-    presentational final sort means the windows stopped sharing their
-    sort."""
-    tree = plans["scd2_user_status"].split("\n\n")[0]
-    n = tree.count("Exchange")
-    assert n <= 2, f"scd2 has {n} exchanges:\n{tree}"
-
-
 def test_bloom_screen_stays_broadcast(plans):
     """The position set (<= m rows) and the dim must broadcast; a
     sort-merge join here means the screen itself started shuffling the
@@ -265,72 +255,6 @@ def test_bloom_screen_stays_broadcast(plans):
     plan = plans["bloom_semijoin_reduction"]
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
-
-
-def test_pagerank_reuses_cached_edges(plans):
-    """The purchase-graph edge relation must come from the persisted
-    cache in every consumer — a plan without it recomputes the
-    lineitem ⋈ orders join per consumer. (The power-iteration variant
-    returns a checkpointed relation whose plan is the final RDD scan,
-    so the invariant is only visible in the single-step plan.)"""
-    assert "InMemoryTableScan" in plans["pagerank_step"]
-
-
-def test_pivot_is_single_aggregate_shuffle(plans):
-    """Explicit pivot values: one scan, broadcast dims, one hash
-    exchange for the n_name aggregate (plus the presentational sort)."""
-    plan = plans["revenue_pivot_by_year"]
-    assert "SortMergeJoin" not in plan
-    n_hash = plan.count("Exchange hashpartitioning")
-    assert n_hash <= 1, f"pivot has {n_hash} hash exchanges"
-
-
-def test_triangle_census_broadcasts_degree_map(plans):
-    """The degree map is node-sized (a dimension): both rank joins in
-    the triangle census must broadcast, and nothing may fall back to a
-    cartesian/nested-loop — the wedge and closure joins hash-partition
-    on their single keys."""
-    plan = plans["triangle_count"]
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-    tree = plan.split("\n\n")[0]
-    # The only sanctioned nested-loops are the two one-row census
-    # attachments (edge count, node count) cross-joined onto the
-    # single-row triangle aggregate.
-    n_bnlj = tree.count("BroadcastNestedLoopJoin")
-    assert n_bnlj <= 2, f"triangle census has {n_bnlj} nested-loop joins"
-
-
-def test_common_neighbor_topk_is_takeordered(plans):
-    """Top-k link prediction must plan TakeOrderedAndProject — a full
-    global sort of the candidate pairs would materialize O(wedges)
-    rows through a single-partition exchange."""
-    plan = plans["common_neighbor_topk"]
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_text_ranking_broadcasts_vocabulary(plans):
-    """TF-IDF / BM25 score joins attach vocabulary-sized (df) and
-    single-row (corpus stats) relations — all must broadcast; the token
-    stream is shuffled once for the TF aggregate and never again for a
-    join."""
-    for name in ("tfidf_top_terms", "bm25_search"):
-        plan = plans[name]
-        assert "BroadcastHashJoin" in plan, f"{name}: df join not broadcast"
-        assert "SortMergeJoin" not in plan, f"{name}: token stream re-shuffled"
-    assert "TakeOrderedAndProject" in plans["bm25_search"]
-
-
-def test_range_frame_single_shuffle(plans):
-    """The trailing-30-day RANGE window must cost exactly one hash
-    exchange (the o_custkey partitioning) plus the presentational final
-    sort — a second hash exchange means the frame stopped riding the
-    partition sort."""
-    tree = plans["rolling_30d_customer_revenue"].split("\n\n")[0]
-    n_hash = tree.count("Exchange hashpartitioning")
-    assert n_hash <= 1, f"range frame has {n_hash} hash exchanges:\n{tree}"
-    assert "Window" in tree
 
 
 def test_lm_scoring_broadcasts_the_model(plans):
@@ -428,16 +352,6 @@ def test_dsir_ratio_table_broadcasts(plans):
     assert "CartesianProduct" not in plan
 
 
-def test_source_overlap_is_single_token_shuffle(plans):
-    """The intersection self-join keys on the token; the vocab-size
-    relations rejoin broadcast. No nested loop may appear — the
-    |sources|-bounded posting lists are what keep the join linear."""
-    plan = plans["source_vocab_overlap"]
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_containment_shares_the_lsh_candidate_shape(plans):
     """Containment scoring must keep the Jaccard pass's plan posture:
     band-bucket equi-join candidates, no quadratic fallback."""
@@ -532,15 +446,6 @@ def test_anomaly_scoring_single_aggregate_plus_window(plans):
     assert "Window" in plan
 
 
-def test_skew_report_joins_only_one_row_aggregates(plans):
-    """Every join in the report glues one-row aggregates (broadcast
-    nested loop on single-row sides is the correct scalar-combine
-    plan); no sort-merge join may touch the per-key counts."""
-    plan = plans["join_skew_report"]
-    assert "SortMergeJoin" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_markup_extraction_is_pure_expressions(plans):
     """Markup build + tag-strip + anchor capture are all JVM string
     expressions — no Python of any kind, no join, no shuffle beyond
@@ -548,75 +453,6 @@ def test_markup_extraction_is_pure_expressions(plans):
     plan = plans["markup_text_extraction"]
     assert "EvalPython" not in plan
     assert "Join" not in plan
-
-
-def test_cooccurrence_pair_join_is_keyed(plans):
-    """The basket pair join must key on the order (equi-join); the
-    supplier-count rejoins broadcast. No cartesian candidates."""
-    plan = plans["supplier_cooccurrence_rules"]
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_retention_and_rfm_stay_jvm_side(plans):
-    for name in ("user_retention_cohorts", "rfm_segments"):
-        plan = plans[name]
-        assert "EvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_lpa_rounds_are_keyed_joins(plans):
-    """Each label-propagation round must re-key labels with a hash join
-    (shuffle or broadcast) — never a cartesian — and the per-node argmax
-    stays a window over the keyed counts, all JVM-side."""
-    plan = plans["label_propagation_communities"]
-    assert "CartesianProduct" not in plan
-    assert plan.count("Join type: Cross") == 0
-    assert "EvalPython" not in plan
-
-
-def test_kcore_trace_combines_only_one_row_aggregates(plans):
-    """The per-round (n_edges x n_nodes) stat combine is a broadcast of
-    one-row aggregates; the edge-filter joins themselves must stay keyed
-    (hash joins on the node id), never cartesian."""
-    plan = plans["k_core_peeling"]
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_postings_cap_is_window_before_collect(plans):
-    """The posting-list cap must be a per-term row_number window BEFORE
-    the collect_list (bounded executor state) — and the whole build
-    stays JVM-side with no cartesian."""
-    plan = plans["inverted_postings"]
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    # TakeOrdered for the top-terms report, not a global sort+limit.
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_ab_test_combines_one_row_frames(plans):
-    """The z-statistic joins one-row per-variant frames (broadcast
-    nested loop on single-row sides); the user reduction is a single
-    keyed aggregate with no sort-merge join."""
-    plan = plans["ab_test_report"]
-    assert "EvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_trend_slopes_broadcast_dims(plans):
-    """Customer and nation dims broadcast into the single fact shuffle;
-    moment arithmetic stays in whole-stage codegen."""
-    plan = plans["revenue_trend_slopes"]
-    assert "EvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_k_anonymity_is_two_aggregates_no_join(plans):
-    plan = plans["k_anonymity_audit"]
-    assert "EvalPython" not in plan
-    assert "Join" not in plan.replace("JoinSelection", "")
 
 
 def test_entity_clusters_report_is_takeordered(plans):
@@ -644,30 +480,12 @@ def test_bucketed_join_has_no_exchange_or_sort_below_smj(plans):
     assert "SelectedBucketsCount: 8 out of 8" in plan
 
 
-def test_exp_smoothing_fold_is_jvm_native(plans):
-    """The sequential smoothing recursion must be an expression fold
-    over the dimension-sized series — no Python, no cartesian."""
-    plan = plans["exp_smoothing_backtest"]
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_pareto_frontier_never_materializes_pairs(plans):
     """The skyline must run as aggregate + window + broadcast join-back
     — no dominance self-join (cartesian) and no Python."""
     plan = plans["pareto_frontier_parts"]
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_banded_range_join_is_hash_not_nested_loop(plans):
-    """The tier interval join must run as a broadcast HASH join on the
-    band key with a residual filter — the nested-loop plan a naive
-    BETWEEN join produces is the thing this query exists to avoid."""
-    plan = plans["price_tier_revenue"]
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
 
@@ -692,16 +510,6 @@ def test_schema_evolution_read_is_one_scan_one_aggregate(plans):
     assert "HashAggregate" in plan
 
 
-def test_ppjoin_candidates_are_token_keyed(plans):
-    """The exact-similarity join must generate candidates through the
-    prefix-token equi-join (hash joins only) — the brute-force pair
-    enumeration exists solely in the oracle."""
-    plan = plans["ppjoin_exact_jaccard"]
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_quarantine_parse_is_jvm_native(plans):
     """The PERMISSIVE JSON parse and quarantine split must stay
     JVM-side: one scan, one aggregate, no Python, no join."""
@@ -709,16 +517,6 @@ def test_quarantine_parse_is_jvm_native(plans):
     assert "EvalPython" not in plan
     assert "Join" not in plan
     assert "HashAggregate" in plan
-
-
-def test_cuped_and_drawdown_stay_jvm_side(plans):
-    """The CUPED moments and the drawdown windows must be pure
-    expressions over dimension-sized relations: no Python, no
-    cartesian beyond the one-row moment broadcast."""
-    for name in ("ab_cuped_adjustment", "revenue_drawdown"):
-        plan = plans[name]
-        assert "EvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
 
 
 def test_compaction_plan_shares_one_window_exchange(plans):
@@ -927,22 +725,12 @@ def test_classifier_auc_rank_window_is_score_domain_bounded(plans, spark, sf_dir
 #   tokenizer_fertility_by_language   language-count relation
 #   selection_ablation_report  one row per ablation arm
 #   sequential_ab_msprt        one row per calendar day
-#   daily_anomaly_zscores      one row per calendar day
-#   watermark_delay_recommendation    event_id/1024 bucket maxima +
-#                              per-type rank relations (documented
-#                              two-level prefix decomposition)
 #   corpus_build_manifest      one row per pipeline stage
-#   kaplan_meier_return_time   distinct return-delay days
-#   nation_revenue_distribution /
-#   pareto_frontier_parts      nation- / part-count dimensions
-#   customer_revenue_deciles / rfm_segments   per-customer aggregate
-#                              (the dimension a CRM ranks; at larger
-#                              scale the same decile thresholds come
-#                              from the bounded two-pass selection)
-#   ngram_lm_perplexity / kneser_ney_perplexity / lm_head_sample /
-#   curriculum_shards / temperature_mixture_sample   per-document
-#                              score relation (ntile bucketing of the
-#                              corpus catalog, not of token-level data)
+#   pareto_frontier_parts      part-count dimension
+#   ngram_lm_perplexity / lm_head_sample /
+#   temperature_mixture_sample   per-document score relation (ntile
+#                              bucketing of the corpus catalog, not of
+#                              token-level data)
 #   conformal_keep_gate        nonconformity-DISTINCT relation for the
 #                              quantile-rank cumsum (<= 1e6 + 1 rows at
 #                              any corpus size — scores are 6-dp-rounded
@@ -951,21 +739,13 @@ _GLOBAL_RANK_BOUNDED = {
     "classifier_auc_report",
     "conformal_keep_gate",
     "corpus_build_manifest",
-    "curriculum_shards",
-    "customer_revenue_deciles",
-    "daily_anomaly_zscores",
-    "kaplan_meier_return_time",
-    "kneser_ney_perplexity",
     "lm_head_sample",
-    "nation_revenue_distribution",
     "ngram_lm_perplexity",
     "pareto_frontier_parts",
-    "rfm_segments",
     "selection_ablation_report",
     "sequential_ab_msprt",
     "temperature_mixture_sample",
     "tokenizer_fertility_by_language",
-    "watermark_delay_recommendation",
     "zipf_fit",
 }
 

@@ -51,6 +51,18 @@ def test_bucketed_matches_flat_store_semantics(spark):
     assert _rows(b) == _rows(f)
 
 
+def test_require_current_raises_on_an_empty_store(spark):
+    """A sink that reads back what it wrote fails loudly, naming the
+    store, when nothing was committed; ``current()`` itself stays None."""
+    root = tempfile.mkdtemp(prefix="m4i_bstore_empty_")
+    store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=4)
+    assert store.current() is None
+    with pytest.raises(RuntimeError, match=root):
+        store.require_current()
+    store.merge(_mk(spark, [(1, "a")]))
+    assert sorted(map(tuple, store.require_current().collect())) == [(1, "a")]
+
+
 def test_merge_rewrites_only_touched_buckets(spark):
     root = tempfile.mkdtemp(prefix="m4i_bstore_touch_")
     store = BucketedParquetUpsertStore(spark, root, ["k"], n_buckets=8)

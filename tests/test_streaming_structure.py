@@ -3,7 +3,8 @@
 staged-file mtimes. Every pipeline calls those, so a new twin cannot
 grow its own readStream/writeStream or staging block back. Likewise
 the bucketed store keeps ONE segment writer, and job 4's doc kernels
-set their columns in one projection each."""
+set their columns in one projection each. And no integrity guard in
+the package is a bare ``assert``, which ``python -O`` strips."""
 
 from __future__ import annotations
 
@@ -152,3 +153,24 @@ def test_doc_kernels_set_columns_in_one_projection():
 
         visit(tree, False)
     assert not found, "\n".join(found)
+
+
+def test_no_assert_statements_in_the_package():
+    """Integrity guards raise: ``python -O`` removes ``assert``
+    statements, so a guard written as one stops guarding in an optimized
+    run. Stores read back after a run use ``require_current()``."""
+    root = os.path.dirname(os.path.dirname(streaming.__file__))
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [
+                f"{os.path.relpath(path, root)}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Assert)
+            ]
+    assert not found, "bare asserts:\n" + "\n".join(found)
