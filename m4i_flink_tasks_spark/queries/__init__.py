@@ -27,8 +27,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import (
+    analytic_windows,
     behavior,
     cdc,
+    collocations,
     doc_lifecycle,
     doc_maintenance,
     entity_resolution,
@@ -50,6 +52,7 @@ from . import (
     sketches,
     state_store,
     streaming_like,
+    text_ranking,
     warehouse,
 )
 
@@ -71,11 +74,14 @@ _MODULES = (
     llm_similarity,
     llm_text,
     lm_scoring,
+    text_ranking,
+    collocations,
     llm_corpus,
     llm_decontam,
     llm_multimodal,
     sketches,
     warehouse,
+    analytic_windows,
     behavior,
     profiling,
     quality_classifier,

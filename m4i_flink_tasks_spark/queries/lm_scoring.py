@@ -187,14 +187,137 @@ ORDER BY doc_id
 """
 
 
+_KN_D = 0.75
+
+
+def kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document perplexity under an interpolated Kneser-Ney bigram
+    LM (Kneser & Ney, ICASSP 1995; Chen & Goodman 1998 eq. 4.25) — the
+    smoothing every real n-gram LM (KenLM/CCNet scoring) uses instead
+    of ngram_lm_perplexity's add-one baseline:
+
+        p(w2|w1) = max(c(w1,w2) − d, 0)/c(w1·)
+                   + d·N1+(w1·)/c(w1·) · N1+(·w2)/N1+(··)
+
+    with d = 0.75, context count c(w1·) = Σ c(w1,w2), N1+ the distinct
+    follower / predecessor / bigram-type counts — the continuation
+    probability is what separates KN from every count-ratio smoother.
+
+    Plan shape mirrors the add-one scorer exactly: the corpus-sized
+    work is the occurrence explode + one shuffle join on the bigram
+    key; the context and continuation tables are vocabulary-sized
+    broadcasts and the type total is one scalar."""
+    from ..operators.spread import spread_for_compute
+
+    docs = spread_for_compute(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    toks = docs.select(
+        "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("t")
+    ).filter(F.size("t") >= 2)
+    # explode_outer + isNotNull: an inner Generate gets a Catalyst
+    # size(...)>0 guard that re-evaluates the whole bigram transform
+    # (and the collapsed split) per row in a separate operator; struct
+    # elements are never null, so the null-filter drops exactly the
+    # empty-array rows the inner form dropped.
+    occ = (
+        toks.select(
+            "doc_id",
+            F.explode_outer(
+                F.expr(
+                    "transform(sequence(1, size(t) - 1), "
+                    "i -> struct(t[i-1] AS w1, t[i] AS w2))"
+                )
+            ).alias("b"),
+        )
+        .filter(F.col("b").isNotNull())
+        .select("doc_id", "b.w1", "b.w2")
+    )
+
+    bigrams = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
+    ctx = occ.groupBy("w1").agg(
+        F.count(F.lit(1)).alias("c1"),
+        F.countDistinct("w2").alias("n1f"),
+    )
+    cont = bigrams.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p"))
+    types = bigrams.agg(F.count(F.lit(1)).cast("double").alias("nb"))
+
+    d = F.lit(_KN_D)
+    p = (
+        F.greatest(F.col("cb") - d, F.lit(0.0)) / F.col("c1")
+        + d * F.col("n1f") / F.col("c1") * (F.col("n1p") / F.col("nb"))
+    )
+    scored = (
+        occ.join(bigrams, ["w1", "w2"])
+        .join(F.broadcast(ctx), "w1")
+        .join(F.broadcast(cont), "w2")
+        .join(F.broadcast(types))
+        .select("doc_id", F.log(p).alias("logp"))
+    )
+    per_doc = scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.round(F.exp(-F.avg("logp")), 4).alias("ppl_kn"),
+    )
+    tile = F.ntile(_BUCKETS).over(Window.orderBy("ppl_kn", "doc_id"))
+    bucket = (
+        F.when(tile == 1, "head").when(tile == 2, "middle").otherwise("tail")
+    )
+    return per_doc.select(
+        "doc_id", "n_bigrams", "ppl_kn", bucket.alias("lm_bucket")
+    ).orderBy("doc_id")
+
+
+KNESER_NEY_SQL = rf"""
+WITH toks AS (
+    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
+    FROM documents
+), toks2 AS (
+    SELECT * FROM toks WHERE len(t) >= 2
+), occ AS (
+    SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+    FROM toks2, unnest(range(1, len(t))) AS u(i)
+), bigrams AS (
+    SELECT w1, w2, count(*) AS cb FROM occ GROUP BY w1, w2
+), ctx AS (
+    SELECT w1, count(*) AS c1, count(DISTINCT w2) AS n1f
+    FROM occ GROUP BY w1
+), cont AS (
+    SELECT w2, count(*) AS n1p FROM bigrams GROUP BY w2
+), types AS (
+    SELECT count(*)::DOUBLE AS nb FROM bigrams
+), scored AS (
+    SELECT occ.doc_id,
+           ln(greatest(cb - {_KN_D}, 0.0) / c1
+              + {_KN_D} * n1f / c1 * (n1p / types.nb)) AS logp
+    FROM occ
+    JOIN bigrams USING (w1, w2)
+    JOIN ctx USING (w1)
+    JOIN cont USING (w2)
+    CROSS JOIN types
+), per_doc AS (
+    SELECT doc_id, count(*) AS n_bigrams,
+           round(exp(-avg(logp)), 4) AS ppl_kn
+    FROM scored GROUP BY doc_id
+)
+SELECT doc_id, n_bigrams, ppl_kn,
+       CASE ntile(3) OVER (ORDER BY ppl_kn, doc_id)
+            WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
+       END AS lm_bucket
+FROM per_doc
+ORDER BY doc_id
+"""
+
+
 QUERIES = {
     "ngram_lm_perplexity": ngram_lm_perplexity,
     "lm_head_sample": lm_head_sample,
+    "kneser_ney_perplexity": kneser_ney_perplexity,
 }
 
 ORACLES = {
     "ngram_lm_perplexity": NGRAM_LM_SQL,
     "lm_head_sample": _lm_head_sample_sql(),
+    "kneser_ney_perplexity": KNESER_NEY_SQL,
 }
 
 

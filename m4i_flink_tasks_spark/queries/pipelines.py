@@ -1236,8 +1236,8 @@ def stream_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental OLS (streaming/regression_state.py): the
     (nation, month) cents cells are ADDITIVE integer state — exact for
     any batch split — and the slope readout runs the identical integer-
-    moment arithmetic as a one-shot batch OLS, so a per-row-cents batch
-    SQL oracles the stream bit-for-bit."""
+    moment arithmetic as the batch revenue_trend_slopes, so a per-row-
+    cents batch SQL oracles the stream bit-for-bit."""
     from ..streaming.regression_state import run_stream_trend_slopes
 
     return run_stream_trend_slopes(

@@ -1,28 +1,42 @@
-"""BM25 scoring over ``documents`` — the lexical side of the hybrid RRF
-retrieval (``queries/hybrid_retrieval.py``) and the scorer the
-streaming BM25 index (``streaming/bm25_index.py``) reads out through.
-The module registers no query of its own.
+"""Text ranking over ``documents``: TF-IDF term weighting and BM25
+retrieval — the search-engine layer a corpus pipeline feeds.
 
-Dataflow: tokenize (explode) → per-(doc, term) TF shuffle → the query
-terms' postings → score against the vocabulary-sized document-frequency
-and corpus-size relations, which reach the score join as broadcasts.
+The reference has no text surface at all; this extends the north-star
+LLM-pipeline family (SURVEY §2 extensions) with the two canonical
+ranking functions, both as pure DataFrame dataflow:
+
+    tokenize (explode) → per-(doc, term) TF shuffle → vocabulary-sized
+    DF relation broadcast back → score → per-doc top-k window / global
+    top-k TakeOrdered.
 
 Float discipline: scores are ``round(x, 6)``-ed BEFORE ranking on both
 engines, so a final-ulp difference between Java's ``Math.log`` and
 DuckDB's ``ln`` cannot reorder the top-k; remaining ties break on the
-doc_id key.
+term / doc_id key.
+
+Scale notes (100 TB posture):
+- the token explode is map-side only (no shuffle until the TF
+  aggregate, which combines partially);
+- document-frequency and corpus-size relations are vocabulary-sized /
+  single-row — both reach the score join as broadcasts, the token
+  stream is never re-shuffled;
+- per-doc top-k is a window over the doc_id partitioning the TF
+  aggregate already produced; global top-10 is TakeOrdered, not a sort.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..sources import load_table
 
+_TOP_TERMS_PER_DOC = 3
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 _BM25_QUERY = ("spark", "join", "window")
+_BM25_TOP_DOCS = 10
 
 
 def _term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,6 +71,69 @@ tf AS (
     WHERE term <> ''
     GROUP BY doc_id, term
 )
+"""
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 characteristic terms per document by TF-IDF.
+
+    IDF = ln(N / df) over the whole corpus; the df relation is
+    vocabulary-sized, so it broadcasts. Ranking uses the ROUNDED score
+    (see module docstring) with the term as tie-break.
+    """
+    tf = _term_frequencies(spark, sf_dir)
+    df_rel = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    n_docs = (
+        load_table(spark, sf_dir, "documents")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
+    scored = (
+        tf.join(F.broadcast(df_rel), "term")
+        .crossJoin(F.broadcast(n_docs))
+        .withColumn(
+            "tfidf",
+            F.round(
+                F.col("tf")
+                * F.log(F.col("n_docs") / F.col("df")),
+                6,
+            ),
+        )
+    )
+    win = Window.partitionBy("doc_id").orderBy(
+        F.desc("tfidf"), F.asc("term")
+    )
+    return (
+        scored.withColumn("term_rank", F.row_number().over(win))
+        .filter(F.col("term_rank") <= _TOP_TERMS_PER_DOC)
+        .select("doc_id", "term_rank", "term", "tf", "df", "tfidf")
+        .orderBy("doc_id", "term_rank")
+    )
+
+
+TFIDF_SQL = f"""
+WITH {_TF_SQL},
+df_rel AS (
+    SELECT term, count(*) AS df FROM tf GROUP BY term
+),
+n AS (
+    SELECT count(*) AS n_docs FROM documents
+),
+scored AS (
+    SELECT tf.doc_id, tf.term, tf.tf, df_rel.df,
+           round(tf.tf * ln(n.n_docs::DOUBLE / df_rel.df), 6) AS tfidf
+    FROM tf
+    JOIN df_rel USING (term)
+    CROSS JOIN n
+),
+ranked AS (
+    SELECT *, row_number() OVER (PARTITION BY doc_id
+                                 ORDER BY tfidf DESC, term) AS term_rank
+    FROM scored
+)
+SELECT doc_id, term_rank, term, tf, df, tfidf
+FROM ranked
+WHERE term_rank <= {_TOP_TERMS_PER_DOC}
+ORDER BY doc_id, term_rank
 """
 
 
@@ -104,10 +181,142 @@ def bm25_from_index(postings: DataFrame, doclen: DataFrame) -> DataFrame:
 
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, bm25, n_query_terms_hit) scored relation for the
-    fixed query, PRE-limit — the lexical side of the hybrid RRF fusion
-    (``queries/hybrid_retrieval.py``). Bounded by the query
+    fixed query, PRE-limit — shared by ``bm25_search`` and the hybrid
+    RRF fusion (``queries/hybrid_retrieval.py``). Bounded by the query
     terms' posting lists, never corpus-sized."""
     tf = _term_frequencies(spark, sf_dir)
     doclen = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     postings = tf.filter(F.col("term").isin(*_BM25_QUERY))
     return bm25_from_index(postings, doclen)
+
+
+def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 retrieval for a fixed three-term query; top-10 documents.
+
+    Okapi BM25 with k1=1.2, b=0.75 and the standard smoothed IDF
+    ln(1 + (N - df + 0.5)/(df + 0.5)). Only postings of the query
+    terms survive the first filter, so the score join touches a
+    |query|·|matching docs| sliver of the TF relation; doc lengths
+    ride the same TF aggregate (no second corpus scan).
+    """
+    return (
+        bm25_scores(spark, sf_dir)
+        .orderBy(F.desc("bm25"), F.asc("doc_id"))
+        .limit(_BM25_TOP_DOCS)
+    )
+
+
+def _bm25_sql() -> str:
+    terms = ", ".join(f"'{t}'" for t in _BM25_QUERY)
+    return f"""
+WITH {_TF_SQL},
+doclen AS (
+    SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
+),
+df_rel AS (
+    SELECT term, count(*) AS df FROM tf GROUP BY term
+),
+corpus AS (
+    SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM doclen
+),
+scored AS (
+    SELECT tf.doc_id,
+           ln(1.0 + (corpus.n_docs - df_rel.df + 0.5)
+                    / (df_rel.df + 0.5))
+           * tf.tf * ({_BM25_K1} + 1.0)
+           / (tf.tf + {_BM25_K1}
+              * (1.0 - {_BM25_B}
+                 + {_BM25_B} * doclen.dl / corpus.avgdl)) AS part
+    FROM tf
+    JOIN df_rel USING (term)
+    JOIN doclen USING (doc_id)
+    CROSS JOIN corpus
+    WHERE tf.term IN ({terms})
+)
+SELECT doc_id,
+       round(sum(part), 6) AS bm25,
+       count(*)            AS n_query_terms_hit
+FROM scored
+GROUP BY doc_id
+ORDER BY bm25 DESC, doc_id
+LIMIT {_BM25_TOP_DOCS}
+"""
+
+
+QUERIES = {
+    "tfidf_top_terms": tfidf_top_terms,
+    "bm25_search": bm25_search,
+}
+
+ORACLES = {
+    "tfidf_top_terms": TFIDF_SQL,
+    "bm25_search": _bm25_sql(),
+}
+
+
+_POSTINGS_CAP = 20
+_POSTINGS_TOP_TERMS = 50
+
+
+def inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inverted-index build: capped posting lists for the highest-df
+    terms — the physical artifact a search / retrieval layer serves.
+
+    Per term: document frequency, corpus frequency, and the posting
+    list CAPPED to the first ``_POSTINGS_CAP`` doc_ids. The cap is
+    enforced with a per-term ``row_number`` window BEFORE the
+    ``collect_list``, so no executor ever materializes a stop-word's
+    full posting list (at 100 TB a frequent term's postings are larger
+    than any single task's memory; the window keeps per-task state at
+    one row). The window and the stats aggregate shuffle on the same
+    ``term`` key, so the exchange is reused. Output is the top
+    ``_POSTINGS_TOP_TERMS`` terms by df (integer ordering, term
+    tiebreak) — TakeOrdered, never a global sort.
+    """
+    tf = _term_frequencies(spark, sf_dir)
+    stats = tf.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"),
+        F.sum("tf").alias("cf"),
+    )
+    win = Window.partitionBy("term").orderBy("doc_id")
+    capped = (
+        tf.withColumn("r", F.row_number().over(win))
+        .filter(F.col("r") <= _POSTINGS_CAP)
+        .groupBy("term")
+        .agg(
+            F.array_join(
+                F.sort_array(F.collect_list("doc_id")), ","
+            ).alias("postings")
+        )
+    )
+    return (
+        stats.join(capped, "term")
+        .select("term", "df", "cf", "postings")
+        .orderBy(F.desc("df"), "term")
+        .limit(_POSTINGS_TOP_TERMS)
+    )
+
+
+POSTINGS_SQL = f"""
+WITH {_TF_SQL},
+stats AS (
+    SELECT term, count(*) AS df, sum(tf)::BIGINT AS cf
+    FROM tf GROUP BY term
+),
+capped AS (
+    SELECT term,
+           array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
+    FROM (SELECT term, doc_id,
+                 row_number() OVER (PARTITION BY term ORDER BY doc_id) AS r
+          FROM tf)
+    WHERE r <= {_POSTINGS_CAP}
+    GROUP BY term
+)
+SELECT term, df, cf, postings
+FROM stats JOIN capped USING (term)
+ORDER BY df DESC, term
+LIMIT {_POSTINGS_TOP_TERMS}
+"""
+
+QUERIES["inverted_postings"] = inverted_postings
+ORACLES["inverted_postings"] = POSTINGS_SQL

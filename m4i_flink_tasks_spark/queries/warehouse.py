@@ -1,7 +1,8 @@
-"""Warehouse-layout queries: the bucketed SMB join, the Pareto
-frontier, and the table-maintenance layer (compaction planning,
-zone-map and manifest pruning), plus the SCD2 oracle the streaming
-dimension build (``streaming/scd2.py``) is checked against.
+"""Warehouse queries: revenue deciles and per-nation trend slopes, the
+bucketed SMB join, the Pareto frontier, and the table-maintenance layer
+(compaction planning, zone-map and manifest pruning), plus the SCD2
+oracle the streaming dimension build (``streaming/scd2.py``) is
+checked against.
 
 Every query is expression-native (window functions + hash aggregates,
 no Python in the hot path) and oracle-checked against DuckDB.
@@ -43,6 +44,174 @@ ORDER BY user_id, version
 QUERIES = {}
 
 ORACLES = {}
+
+
+# --------------------------------------------------------------------------
+# decile analysis (ntile / distribution windows)
+# --------------------------------------------------------------------------
+
+
+def customer_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customers ranked into revenue deciles (ntile over total spend,
+    ties broken by key for determinism), then per-decile summary — the
+    standard cohort/LTV segmentation shape. Two shuffles total: the
+    per-customer aggregate, then the decile assignment; the ntile
+    window is a single global ordering, which at 100 TB becomes a
+    range-partitioned sort (Spark plans exactly that) rather than a
+    single-partition bottleneck only if the per-customer relation is
+    still large — here it is customers, already 1/30th of orders."""
+    orders = load_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+    w = Window.orderBy(F.col("revenue").desc(), F.col("o_custkey"))
+    deciled = per_cust.withColumn("decile", F.ntile(10).over(w))
+    return (
+        deciled.groupBy("decile")
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum("n_orders").alias("n_orders"),
+            F.round(F.sum("revenue"), 2).alias("total_revenue"),
+            F.round(F.min("revenue"), 2).alias("min_revenue"),
+            F.round(F.max("revenue"), 2).alias("max_revenue"),
+        )
+        .orderBy("decile")
+    )
+
+
+REVENUE_DECILES_SQL = """
+WITH per_cust AS (
+    SELECT o_custkey,
+           round(sum(o_totalprice), 2) AS revenue,
+           count(*) AS n_orders
+    FROM orders
+    GROUP BY o_custkey
+), deciled AS (
+    SELECT *,
+           ntile(10) OVER (ORDER BY revenue DESC, o_custkey) AS decile
+    FROM per_cust
+)
+SELECT decile,
+       count(*) AS n_customers,
+       sum(n_orders)::BIGINT AS n_orders,
+       round(sum(revenue), 2) AS total_revenue,
+       round(min(revenue), 2) AS min_revenue,
+       round(max(revenue), 2) AS max_revenue
+FROM deciled
+GROUP BY decile
+ORDER BY decile
+"""
+
+QUERIES["customer_revenue_deciles"] = customer_revenue_deciles
+ORACLES["customer_revenue_deciles"] = REVENUE_DECILES_SQL
+
+
+def revenue_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation monthly revenue OLS trend (slope in dollars/month).
+
+    The classic "is this market growing?" report: monthly revenue per
+    customer nation, least-squares slope over the month index. The
+    slope is computed from INTEGER moments — x = months-since-epoch,
+    y = revenue cents, slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx*Sx) — so
+    the distributed sums are exact whole numbers in any addition order
+    and the single floating division is engine-identical (a direct
+    ``regr_slope`` would accumulate doubles in engine-specific order).
+
+    Scale posture: one fact shuffle to the (nation, month) grain
+    (map-side combinable), then the moment aggregate runs on the
+    dimension-sized series; the nation dim broadcasts into the first
+    join. Intermediates fit long arithmetic: at 100 TB, month-cents
+    sums stay < 2^56 per nation-month and n*Sxy < 2^63 for any
+    realistic calendar span.
+    """
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    monthly = (
+        orders.join(
+            F.broadcast(
+                customer.select("c_custkey", "c_nationkey")
+            ),
+            orders.o_custkey == F.col("c_custkey"),
+        )
+        .groupBy(
+            "c_nationkey",
+            (
+                (F.year("o_orderdate") - 1970) * 12
+                + F.month("o_orderdate")
+                - 1
+            ).alias("x"),
+        )
+        .agg(
+            F.round(F.sum("o_totalprice") * 100)
+            .cast("long")
+            .alias("y_cents")
+        )
+    )
+    moments = monthly.groupBy("c_nationkey").agg(
+        F.count(F.lit(1)).alias("n_months"),
+        F.sum("x").alias("sx"),
+        F.sum("y_cents").alias("sy"),
+        F.sum(F.col("x") * F.col("y_cents")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    return (
+        moments.join(
+            F.broadcast(nation.select("n_nationkey", "n_name")),
+            moments.c_nationkey == F.col("n_nationkey"),
+        )
+        .select(
+            "n_name",
+            "n_months",
+            F.round(
+                (
+                    F.col("n_months") * F.col("sxy")
+                    - F.col("sx") * F.col("sy")
+                ).cast("double")
+                / (
+                    F.col("n_months") * F.col("sxx")
+                    - F.col("sx") * F.col("sx")
+                )
+                / 100.0,
+                6,
+            ).alias("slope_per_month"),
+            F.round(F.col("sy") / F.col("n_months") / 100.0, 4).alias(
+                "avg_monthly_revenue"
+            ),
+        )
+        .orderBy("n_name")
+    )
+
+
+TREND_SQL = """
+WITH monthly AS (
+    SELECT c.c_nationkey,
+           (year(o.o_orderdate) - 1970) * 12 + month(o.o_orderdate) - 1 AS x,
+           round(sum(o.o_totalprice) * 100)::BIGINT AS y_cents
+    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    GROUP BY 1, 2
+),
+moments AS (
+    SELECT c_nationkey,
+           count(*)::BIGINT AS n_months,
+           sum(x)::BIGINT AS sx,
+           sum(y_cents)::BIGINT AS sy,
+           sum(x * y_cents)::BIGINT AS sxy,
+           sum(x * x)::BIGINT AS sxx
+    FROM monthly GROUP BY c_nationkey
+)
+SELECT n.n_name,
+       m.n_months,
+       round((m.n_months * m.sxy - m.sx * m.sy)::DOUBLE
+             / (m.n_months * m.sxx - m.sx * m.sx) / 100.0, 6) AS slope_per_month,
+       round(m.sy::DOUBLE / m.n_months / 100.0, 4) AS avg_monthly_revenue
+FROM moments m JOIN nation n ON m.c_nationkey = n.n_nationkey
+ORDER BY n.n_name
+"""
+
+QUERIES["revenue_trend_slopes"] = revenue_trend_slopes
+ORACLES["revenue_trend_slopes"] = TREND_SQL
 
 
 _BUCKETS = 8

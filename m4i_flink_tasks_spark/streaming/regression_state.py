@@ -1,9 +1,9 @@
 """Streaming incremental OLS trend: per-nation regression maintained
 from an order stream as ADDITIVE integer month-cells.
 
-The batch form is a one-shot OLS over (nation, month) revenue; here
-the (nation, month) revenue cells are maintained as keyed state across
-micro-batches and the OLS moments / slope are a pure READOUT of
+The batch twin is ``queries/warehouse.py`` ``revenue_trend_slopes``;
+here the (nation, month) revenue cells are maintained as keyed state
+across micro-batches and the OLS moments / slope are a pure READOUT of
 that state. Because the per-cell value is a sum of per-ROW integer
 cents, the combine is exact addition — associative, commutative, and
 idempotent under replay via the store's batch_id fencing — so the

@@ -1,22 +1,147 @@
 """Edge-case pins for the corpus-curation family (queries/llm_corpus.py).
 
 The oracle-parity gate proves the whole-corpus hash at every SF; these
-tests pin the sampling, split, PII-pattern and drift semantics on
-crafted inputs and invariants the generated corpus doesn't exercise, so
-a future refactor can't drift on the edges while staying hash-equal on
-the happy path.
+tests pin the per-row semantics on crafted inputs the generated corpus
+doesn't contain (empty text, single token, fully-repeated text, exact
+budget boundaries) so a future refactor can't drift on the edges while
+staying hash-equal on the happy path.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from m4i_flink_tasks_spark.operators import text as T
 from m4i_flink_tasks_spark.queries.llm_corpus import (
+    _PACK_BUDGET,
     _SAMPLE_RATES,
     _EMAIL_RE,
     _PHONE_RE,
 )
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    )
+
+
+# --------------------------------------------------------------------------
+# repetition metrics
+# --------------------------------------------------------------------------
+
+
+def _repetition_over(spark, rows):
+    """Run the repetition dataflow over crafted docs (same expressions
+    as the query, which is bound to load_table)."""
+    docs = _docs(spark, rows)
+    toks = docs.select("doc_id", T.tokens(F.lower(F.col("text"))).alias("t"))
+    base = toks.select(
+        "doc_id",
+        F.size("t").alias("n_tokens"),
+        F.round(
+            1 - F.size(F.array_distinct("t")) / F.greatest(F.size("t"), F.lit(1)),
+            6,
+        ).alias("dup_token_frac"),
+    )
+    bigrams = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(t) >= 2 THEN transform(sequence(1, size(t) - 1),"
+                " i -> concat_ws(' ', t[i-1], t[i])) ELSE array() END"
+            )
+        ).alias("bigram"),
+    )
+    bg = (
+        bigrams.groupBy("doc_id", "bigram")
+        .agg(F.count("*").alias("c"))
+        .groupBy("doc_id")
+        .agg(
+            F.max("c").alias("top_c"),
+            F.sum("c").alias("total_bg"),
+        )
+    )
+    out = base.join(bg, "doc_id", "left").select(
+        "doc_id",
+        "n_tokens",
+        "dup_token_frac",
+        F.round(
+            F.coalesce(F.col("top_c") / F.col("total_bg"), F.lit(0.0)), 6
+        ).alias("top_bigram_frac"),
+    )
+    return {r["doc_id"]: r.asDict() for r in out.collect()}
+
+
+def test_repetition_fully_repeated_doc(spark):
+    got = _repetition_over(
+        spark,
+        [
+            (1, "spam spam spam spam", "en", "s"),
+            (2, "a b c d", "en", "s"),
+        ],
+    )
+    # 4 tokens, 1 distinct -> dup fraction 0.75; every bigram identical.
+    assert got[1]["dup_token_frac"] == 0.75
+    assert got[1]["top_bigram_frac"] == 1.0
+    # all-distinct doc: no duplication, 3 distinct bigrams of count 1.
+    assert got[2]["dup_token_frac"] == 0.0
+    assert got[2]["top_bigram_frac"] == pytest.approx(1 / 3, abs=1e-6)
+
+
+def test_repetition_degenerate_docs_do_not_vanish(spark):
+    # one-token and empty docs have no bigrams: the left join must keep
+    # them with zeroed fractions rather than dropping the rows.
+    got = _repetition_over(
+        spark, [(1, "lonely", "en", "s"), (2, "", "en", "s")]
+    )
+    assert got[1]["n_tokens"] == 1
+    assert got[1]["top_bigram_frac"] == 0.0
+    assert set(got) == {1, 2}
+
+
+# --------------------------------------------------------------------------
+# sequence packing
+# --------------------------------------------------------------------------
+
+
+def _pack(spark, sizes, budget=_PACK_BUDGET):
+    """Assign crafted per-doc token counts through the same exclusive
+    prefix-sum binning expression the query uses."""
+    from pyspark.sql import Window
+
+    rows = [(i, n, "src") for i, n in enumerate(sizes)]
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long, source string")
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    out = df.select(
+        "doc_id",
+        F.floor(
+            F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) / budget
+        ).alias("seq_id"),
+    )
+    return [r["seq_id"] for r in out.orderBy("doc_id").collect()]
+
+
+def test_packing_exact_budget_boundary(spark):
+    # 256+256 fill sequence 0 exactly; the next doc starts sequence 1.
+    assert _pack(spark, [256, 256, 10], budget=512) == [0, 0, 1]
+
+
+def test_packing_overflow_straddles_by_at_most_one_doc(spark):
+    # 500 then 300: the 300 starts inside sequence 0 (exclusive prefix
+    # 500 < 512) and straddles — documented best-effort contract.
+    assert _pack(spark, [500, 300, 300], budget=512) == [0, 0, 1]
+
+
+def test_packing_oversized_doc_owns_its_sequences(spark):
+    # a 1200-token doc at prefix 0 sits in sequence 0; the follower
+    # starts at prefix 1200 -> sequence 2 (floor(1200/512)).
+    assert _pack(spark, [1200, 10], budget=512) == [0, 2]
 
 
 # --------------------------------------------------------------------------
@@ -137,6 +262,82 @@ def test_pii_patterns_scrub_and_count(spark):
     assert "555-12345" in by_id[2]["s"] and "<PHONE>" in by_id[2]["s"]
     assert by_id[3]["e"] == 0 and by_id[3]["p"] == 0
     assert by_id[3]["s"] == "clean text only"
+
+
+# --------------------------------------------------------------------------
+# property tests (hypothesis): packing + repetition laws
+# --------------------------------------------------------------------------
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+_PROP_SETTINGS = settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@_PROP_SETTINGS
+@given(
+    sizes=st.lists(st.integers(min_value=0, max_value=700), min_size=1, max_size=24),
+    budget=st.integers(min_value=1, max_value=600),
+)
+def test_packing_laws(spark, sizes, budget):
+    """For any doc-size list and budget: every doc lands in exactly one
+    sequence, sequence ids are monotone in doc order, and a sequence's
+    token total minus its LAST doc never exceeds the budget (the
+    overflow-by-at-most-one-straddler contract). Cross-checked against
+    a driver-side reference fold."""
+    bins = _pack(spark, sizes, budget=budget)
+    assert len(bins) == len(sizes)
+    assert bins == sorted(bins)
+    # reference: exclusive prefix sum // budget
+    prefix, expect = 0, []
+    for n in sizes:
+        expect.append(prefix // budget)
+        prefix += n
+    assert bins == expect
+    # per-sequence totals: removing the straddler (last doc of the
+    # sequence) must leave <= budget tokens
+    from collections import defaultdict
+
+    per_seq = defaultdict(list)
+    for n, b in zip(sizes, bins):
+        per_seq[b].append(n)
+    for b, docs in per_seq.items():
+        assert sum(docs[:-1]) <= budget
+
+
+@_PROP_SETTINGS
+@given(
+    words=st.lists(
+        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
+        min_size=0,
+        max_size=12,
+    )
+)
+def test_repetition_matches_reference_fold(spark, words):
+    """dup_token_frac and top_bigram_frac agree with a plain-Python
+    reference on arbitrary word sequences (incl. empty and 1-token)."""
+    text = " ".join(words)
+    got = _repetition_over(spark, [(1, text, "en", "s")])[1]
+    toks = text.strip().lower().split() if text.strip() else [""]
+    # Spark's split('', '\\s+') yields [''] — mirror that
+    assert got["n_tokens"] == len(toks)
+    assert got["dup_token_frac"] == pytest.approx(
+        1 - len(set(toks)) / max(len(toks), 1), abs=1e-6
+    )
+    bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+    if bigrams:
+        from collections import Counter
+
+        top = Counter(bigrams).most_common(1)[0][1]
+        assert got["top_bigram_frac"] == pytest.approx(
+            top / len(bigrams), abs=1e-6
+        )
+    else:
+        assert got["top_bigram_frac"] == 0.0
 
 
 def test_split_drift_psi_structure_and_nonnegativity(spark, sf_dir):

@@ -257,6 +257,38 @@ def test_bloom_screen_stays_broadcast(plans):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
+def test_pagerank_reuses_cached_edges(plans):
+    """The purchase-graph edge relation must come from the persisted
+    cache in every consumer — a plan without it recomputes the
+    lineitem ⋈ orders join per consumer. (The power-iteration variant
+    returns a checkpointed relation whose plan is the final RDD scan,
+    so the invariant is only visible in the single-step plan.)"""
+    assert "InMemoryTableScan" in plans["pagerank_step"]
+
+
+def test_text_ranking_broadcasts_vocabulary(plans):
+    """TF-IDF / BM25 score joins attach vocabulary-sized (df) and
+    single-row (corpus stats) relations — all must broadcast; the token
+    stream is shuffled once for the TF aggregate and never again for a
+    join."""
+    for name in ("tfidf_top_terms", "bm25_search"):
+        plan = plans[name]
+        assert "BroadcastHashJoin" in plan, f"{name}: df join not broadcast"
+        assert "SortMergeJoin" not in plan, f"{name}: token stream re-shuffled"
+    assert "TakeOrderedAndProject" in plans["bm25_search"]
+
+
+def test_range_frame_single_shuffle(plans):
+    """The trailing-30-day RANGE window must cost exactly one hash
+    exchange (the o_custkey partitioning) plus the presentational final
+    sort — a second hash exchange means the frame stopped riding the
+    partition sort."""
+    tree = plans["rolling_30d_customer_revenue"].split("\n\n")[0]
+    n_hash = tree.count("Exchange hashpartitioning")
+    assert n_hash <= 1, f"range frame has {n_hash} hash exchanges:\n{tree}"
+    assert "Window" in tree
+
+
 def test_lm_scoring_broadcasts_the_model(plans):
     """Bigram-LM pass 2: the unigram dimension broadcasts as a hash
     join and the 1-row vocab-size scalar broadcasts as the standard
@@ -455,6 +487,34 @@ def test_markup_extraction_is_pure_expressions(plans):
     assert "Join" not in plan
 
 
+def test_cooccurrence_pair_join_is_keyed(plans):
+    """The basket pair join must key on the order (equi-join); the
+    supplier-count rejoins broadcast. No cartesian candidates."""
+    plan = plans["supplier_cooccurrence_rules"]
+    assert "CartesianProduct" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
+def test_postings_cap_is_window_before_collect(plans):
+    """The posting-list cap must be a per-term row_number window BEFORE
+    the collect_list (bounded executor state) — and the whole build
+    stays JVM-side with no cartesian."""
+    plan = plans["inverted_postings"]
+    assert "EvalPython" not in plan
+    assert "CartesianProduct" not in plan
+    # TakeOrdered for the top-terms report, not a global sort+limit.
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_trend_slopes_broadcast_dims(plans):
+    """Customer and nation dims broadcast into the single fact shuffle;
+    moment arithmetic stays in whole-stage codegen."""
+    plan = plans["revenue_trend_slopes"]
+    assert "EvalPython" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
 def test_entity_clusters_report_is_takeordered(plans):
     """The survivorship report caps rows via TakeOrdered (never a global
     sort) and stays JVM-side; the block/match joins live behind the
@@ -486,6 +546,16 @@ def test_pareto_frontier_never_materializes_pairs(plans):
     plan = plans["pareto_frontier_parts"]
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
+def test_banded_range_join_is_hash_not_nested_loop(plans):
+    """The tier interval join must run as a broadcast HASH join on the
+    band key with a residual filter — the nested-loop plan a naive
+    BETWEEN join produces is the thing this query exists to avoid."""
+    plan = plans["price_tier_revenue"]
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
 
@@ -726,8 +796,13 @@ def test_classifier_auc_rank_window_is_score_domain_bounded(plans, spark, sf_dir
 #   selection_ablation_report  one row per ablation arm
 #   sequential_ab_msprt        one row per calendar day
 #   corpus_build_manifest      one row per pipeline stage
-#   pareto_frontier_parts      part-count dimension
-#   ngram_lm_perplexity / lm_head_sample /
+#   nation_revenue_distribution /
+#   pareto_frontier_parts      nation- / part-count dimensions
+#   customer_revenue_deciles   per-customer aggregate (the dimension a
+#                              CRM ranks; at larger scale the same
+#                              decile thresholds come from the bounded
+#                              two-pass selection)
+#   ngram_lm_perplexity / kneser_ney_perplexity / lm_head_sample /
 #   temperature_mixture_sample   per-document score relation (ntile
 #                              bucketing of the corpus catalog, not of
 #                              token-level data)
@@ -739,7 +814,10 @@ _GLOBAL_RANK_BOUNDED = {
     "classifier_auc_report",
     "conformal_keep_gate",
     "corpus_build_manifest",
+    "customer_revenue_deciles",
+    "kneser_ney_perplexity",
     "lm_head_sample",
+    "nation_revenue_distribution",
     "ngram_lm_perplexity",
     "pareto_frontier_parts",
     "selection_ablation_report",

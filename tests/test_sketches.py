@@ -145,6 +145,26 @@ def test_bloom_screen_sound_and_useful(spark):
     assert abs(truth.rev - row.matched_revenue) < 0.01
 
 
+def test_pagerank_mass_conserved(spark):
+    """Over ALL nodes (pre-top-k), one damped iteration must conserve
+    probability mass: sum(rank') = 1 up to fixed-point truncation
+    (each `div` floors away < 1/SCALE per term)."""
+    from m4i_flink_tasks_spark.queries.graph import pagerank_full
+
+    full = pagerank_full(spark, SF01)
+    row = full.agg(
+        F.sum("rank").alias("mass"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    assert row.n > 1000
+    assert abs(row.mass - 1.0) < 1e-3
+    # suppliers (no in-edges) all share the dangling-only floor rank;
+    # customers sit strictly above the teleport floor
+    floor = 0.15 / row.n
+    ranks = full.collect()
+    assert all(r.rank >= floor * 0.999 for r in ranks)
+    assert any(r.in_scaled > 0 for r in ranks)
+
+
 def test_stream_sketch_equals_batch(spark, sf_dir):
     """Mergeability across micro-batches: the streamed per-priority
     sketch state must yield the SAME k-th hash and estimate as the
