@@ -54,7 +54,8 @@ HEAVY = (
     # the Arrow/BLAS Gram fix, SCALE.md nineteenth wave) and the
     # bipartite exact leakage join (pairwise stress-law bound — wall
     # tracks the generator's co-pair volume, not an algorithmic
-    # defect; same law as ppjoin_exact_jaccard).
+    # defect; tools/leakage_pair_law.py measures that volume, SCALE.md
+    # twentieth wave).
     "embedding_pca_power",
     "cross_split_leakage",
 )

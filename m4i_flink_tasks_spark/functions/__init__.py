@@ -5,8 +5,6 @@ from .hierarchy import (
     TYPE_EDGES,
     breadcrumb_paths_df,
     supertype_closure_df,
-    transitive_closure,
-    type_edges_df,
 )
 
 __all__ = [
@@ -16,6 +14,4 @@ __all__ = [
     "TYPE_EDGES",
     "breadcrumb_paths_df",
     "supertype_closure_df",
-    "transitive_closure",
-    "type_edges_df",
 ]

@@ -15,7 +15,6 @@ closure loop costs milliseconds and the broadcast is trivially small; the
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Direct supertype edges (child -> supertype). Mirrors the reference's
 # Atlas EntityDef.super_types graph: the m4i base types and the
@@ -63,50 +62,9 @@ BUSINESS_SOURCE_TYPES: tuple[str, ...] = (
 )
 
 
-def type_edges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(TYPE_EDGES), "typename string, supertype string"
-    )
-
-
-def transitive_closure(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
-    """G1 as an iterative self-join to fixpoint.
-
-    Semi-naive iteration: frontier(i+1) = frontier(i) ⋈ edges, stop when
-    the frontier is empty. Depth ≤ DAG height, so the loop runs a handful
-    of times; each iteration is a broadcast join on a tiny table.
-
-    Returns distinct (typename, supertype) pairs — the strict closure
-    (no reflexive rows).
-    """
-    closure = edges.select("typename", "supertype").distinct().localCheckpoint()
-    frontier = closure
-    for _ in range(max_iterations):
-        step = (
-            frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                F.col("f.supertype") == F.col("e.typename"),
-            )
-            .select(
-                F.col("f.typename").alias("typename"),
-                F.col("e.supertype").alias("supertype"),
-            )
-            .distinct()
-        )
-        new = step.join(closure, ["typename", "supertype"], "left_anti").localCheckpoint()
-        if new.isEmpty():
-            break
-        closure = closure.union(new).distinct().localCheckpoint()
-        frontier = new
-    else:
-        raise RuntimeError("type DAG deeper than max_iterations (cycle?)")
-    return closure
-
-
 def _py_closure(edges) -> dict[str, set[str]]:
-    """Driver-side transitive closure of a STATIC type DAG — the same
-    semi-naive fixpoint as :func:`transitive_closure`, in plain Python.
+    """Driver-side transitive closure of a STATIC type DAG: a
+    fixpoint over the edge pairs, in plain Python.
 
     The type graph is compile-time data (TYPE_EDGES /
     HIERARCHY_MAPPING, O(10) rows); running the Spark fixpoint loop on
@@ -115,8 +73,6 @@ def _py_closure(edges) -> dict[str, set[str]]:
     docstore tests call it once per batch/invocation. Python computes
     it in microseconds and `local_frame` ships it as a LocalRelation,
     so every consumer's broadcast build reads plan-time local data.
-    :func:`transitive_closure` stays as the generic operator for
-    data-derived edge frames.
     """
     anc: dict[str, set[str]] = {}
     for child, parent in edges:

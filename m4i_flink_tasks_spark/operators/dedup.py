@@ -57,21 +57,6 @@ def minhash_signature(shingle_hash_col: Column, k: int = MINHASH_K) -> Column:
     return F.array(*[perm_min(j) for j in range(k)])
 
 
-def lsh_band_keys(signature: Column, bands: int = 4, rows: int = 4) -> Column:
-    """Fold each band of the signature into one bucket key; a pair of
-    docs is an LSH candidate iff they share any (band_idx, key)."""
-    return F.array(
-        *[
-            F.aggregate(
-                F.slice(signature, b * rows + 1, rows),
-                F.lit(0).cast("long"),
-                lambda acc, v: (acc * 31 + v) % HASH_MOD,
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Set Jaccard over two (distinct-element) arrays."""
     inter = F.size(F.array_intersect(a, b))
@@ -148,7 +133,8 @@ def _poly_hash_strs(strs: list[str]):
 
 def _minhash_bands_batch(texts, n: int, k: int, bands: int, rows: int):
     """Per-document shingle hashes + LSH band keys, plain-int arithmetic
-    identical to the column-expression form (and the DuckDB oracle).
+    identical to the signature's column-expression form (and the DuckDB
+    oracle).
 
     Vectorized (guide §4.2): shingle strings are gathered per doc in
     Python, but the polynomial char hash, the k affine permutations +
@@ -304,8 +290,9 @@ def minhash_frame(
     higher-order-function lambdas interpretively (outside whole-stage
     codegen), which measured ~50ms/doc — the vectorized batch loop is
     ~100× faster and keeps bit-identical integer arithmetic. The
-    expression forms (shingle_hashes/minhash_signature/lsh_band_keys)
-    remain the semantic reference and are pinned to the UDF by tests.
+    expression forms (shingle_hashes/minhash_signature) remain the
+    semantic reference for the signature and are pinned to the UDF by
+    tests.
     """
     @F.pandas_udf("struct<sh: array<bigint>, bands: array<bigint>>")
     def minhash_udf(texts: pd.Series) -> pd.DataFrame:

@@ -9,8 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.local_frame import local_frame
-
 from ..operators.asof import asof_join
 from ..sources import load_table
 
@@ -346,78 +344,6 @@ ORDER BY event_type
 """
 
 
-# Non-aligned tier bounds (dollars) so the banding demo is the GENERAL
-# case: a tier can span several bands and a band several tiers.
-_PRICE_TIERS = (
-    ("budget", 0, 150_000),
-    ("mid", 150_000, 280_000),
-    ("premium", 280_000, 600_000),
-)
-_BAND_DOLLARS = 50_000
-
-
-def price_tier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join turned equi join via banding — the standard rewrite
-    for interval-dimension joins that Spark would otherwise plan as a
-    broadcast nested loop with a BETWEEN residual over every row.
-
-    Each tier interval explodes into the integer bands it covers
-    (dimension-side, a handful of rows); the fact side computes its
-    band with integer division; the join is then a plain broadcast
-    HASH join on the band key with the BETWEEN as a residual filter —
-    per fact row the candidate tiers are only those sharing its band,
-    not the whole dimension. No nested loop appears in the plan
-    (pinned). Same answer as the naive theta join by construction; the
-    oracle runs the naive form.
-    """
-    tiers = local_frame(
-        spark,
-        [
-            (name, lo, hi, band)
-            for name, lo, hi in _PRICE_TIERS
-            for band in range(lo // _BAND_DOLLARS, (hi - 1) // _BAND_DOLLARS + 1)
-        ],
-        "tier string, lo long, hi long, band long",
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_totalprice",
-        (F.col("o_totalprice").cast("long") / F.lit(_BAND_DOLLARS))
-        .cast("long")
-        .alias("band"),
-    )
-    return (
-        orders.join(F.broadcast(tiers), "band")
-        .filter(
-            (F.col("o_totalprice") >= F.col("lo"))
-            & (F.col("o_totalprice") < F.col("hi"))
-        )
-        .groupBy("tier")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-        .orderBy("tier")
-    )
-
-
-_TIER_VALUES = ",\n           ".join(
-    f"('{name}', {lo}, {hi})" for name, lo, hi in _PRICE_TIERS
-)
-
-PRICE_TIER_SQL = f"""
-WITH tiers(tier, lo, hi) AS (
-    VALUES {_TIER_VALUES}
-)
-SELECT t.tier,
-       count(*) AS n_orders,
-       round(sum(o.o_totalprice), 2) AS revenue
-FROM orders o JOIN tiers t
-  ON o.o_totalprice >= t.lo AND o.o_totalprice < t.hi
-GROUP BY t.tier
-ORDER BY t.tier
-"""
-
 QUERIES = {
     "set_operations": set_operations,
     "rollup_order_totals": rollup_order_totals,
@@ -426,7 +352,6 @@ QUERIES = {
     "direct_change_classifier": direct_change_classifier,
     "asof_join_orders_events": asof_join_orders_events,
     "skew_salted_join": skew_salted_join,
-    "price_tier_revenue": price_tier_revenue,
 }
 
 ORACLES = {
@@ -437,5 +362,4 @@ ORACLES = {
     "direct_change_classifier": DIRECT_CHANGE_SQL,
     "asof_join_orders_events": ASOF_JOIN_SQL,
     "skew_salted_join": SKEW_SALTED_JOIN_SQL,
-    "price_tier_revenue": PRICE_TIER_SQL,
 }

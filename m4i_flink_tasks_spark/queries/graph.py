@@ -273,99 +273,6 @@ def _purchase_graph(
     return edges, outdeg, nodes, totals
 
 
-def pagerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One PageRank iteration from uniform init over the supplier →
-    customer purchase graph (distinct pairs from lineitem ⋈ orders) —
-    the iterative-graph-analytics shape (centrality over the metadata
-    graph) the reference's entity graph would need at scale.
-
-    Scale shape: the only large shuffle is the lineitem ⋈ orders join
-    on orderkey (AQE-planned); the out-degree table is one row per
-    supplier — broadcast back onto the edges; node count and dangling
-    count are one-row aggregates cross-joined as broadcast scalars.
-    Further iterations reuse the same edge relation — at 100 TB the
-    edges are the thing to cache/bucket, and each iteration is one
-    narrow join + one aggregation, exactly this plan re-run.
-
-    Numerics: contributions are fixed-point BIGINTs
-    (``SCALE div outdeg``), so partial-sum order cannot perturb the
-    result — integer addition is associative, where a float
-    sum's grouping varies with partitioning and would break both the
-    cross-engine oracle and run-to-run determinism on a cluster. The
-    single float division happens once per output row on identical
-    integers. rank' = (1-d)/N + d*(Σ 1/outdeg(u) + D/N)/N with
-    D dangling nodes' uniform-rank mass redistributed.
-    """
-    edges, outdeg, nodes, totals = _purchase_graph(spark, sf_dir)
-    contrib = edges.join(F.broadcast(outdeg), "src").select(
-        "dst", F.expr(f"{_PR_SCALE}L div outdeg").alias("c")
-    )
-    in_scaled = contrib.groupBy(F.col("dst").alias("node")).agg(
-        F.sum("c").alias("in_scaled")
-    )
-    ranked = (
-        nodes.join(in_scaled, "node", "left")
-        .select(
-            "node", F.coalesce("in_scaled", F.lit(0)).alias("in_scaled")
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    dang = F.expr(f"(n_nodes - n_src) * {_PR_SCALE}L div n_nodes")
-    rank = F.round(
-        (F.lit(0.15) / F.col("n_nodes"))
-        + (
-            F.lit(0.85)
-            * ((F.col("in_scaled") + dang) / F.lit(float(_PR_SCALE)))
-        )
-        / F.col("n_nodes"),
-        9,
-    )
-    return ranked.select("node", "in_scaled", rank.alias("rank"))
-
-
-def pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 slice of :func:`pagerank_full` — see that docstring for
-    the plan and numerics."""
-    return (
-        pagerank_full(spark, sf_dir)
-        .orderBy(F.col("rank").desc(), F.col("node"))
-        .limit(_PR_TOP)
-    )
-
-
-PAGERANK_STEP_SQL = f"""
-WITH edges AS (
-    SELECT DISTINCT 'S' || l_suppkey::VARCHAR AS src,
-           'C' || o_custkey::VARCHAR AS dst
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), outdeg AS (
-    SELECT src, count(*) AS outdeg FROM edges GROUP BY src
-), nodes AS (
-    SELECT src AS node FROM edges
-    UNION
-    SELECT dst AS node FROM edges
-), totals AS (
-    SELECT (SELECT count(*) FROM nodes) AS n_nodes,
-           (SELECT count(*) FROM outdeg) AS n_src
-), in_scaled AS (
-    SELECT dst AS node, sum({_PR_SCALE} // outdeg)::BIGINT AS in_scaled
-    FROM edges JOIN outdeg USING (src)
-    GROUP BY dst
-)
-SELECT node,
-       coalesce(in_scaled, 0) AS in_scaled,
-       round((0.15::DOUBLE / n_nodes)
-             + (0.85::DOUBLE * ((coalesce(in_scaled, 0)
-                                 + (n_nodes - n_src) * {_PR_SCALE}
-                                   // n_nodes)
-                                / {_PR_SCALE}::DOUBLE))
-               / n_nodes, 9) AS rank
-FROM nodes LEFT JOIN in_scaled USING (node), totals
-ORDER BY rank DESC, node
-LIMIT {_PR_TOP}
-"""
-
-
 _PR_N_ITER = 3
 
 
@@ -492,7 +399,6 @@ LIMIT {_PR_TOP}"""
 
 QUERIES = {
     "type_hierarchy_ops": type_hierarchy_ops,
-    "pagerank_step": pagerank_step,
     "pagerank_power_iterations": pagerank_power_iterations,
     "supertype_closure": supertype_closure,
     "source_type_classification": source_type_classification,
@@ -502,7 +408,6 @@ QUERIES = {
 
 ORACLES = {
     "type_hierarchy_ops": TYPE_HIERARCHY_OPS_SQL,
-    "pagerank_step": PAGERANK_STEP_SQL,
     "pagerank_power_iterations": _pagerank_power_sql(),
     "supertype_closure": SUPERTYPE_CLOSURE_SQL,
     "source_type_classification": SOURCE_TYPE_SQL,

@@ -36,12 +36,87 @@ from pyspark.sql.window import Window
 from ..operators import similarity as S
 from ..sources import load_table
 from .llm_similarity import _cosine_sql
-from .text_ranking import _BM25_QUERY, _TF_SQL, bm25_scores
 
 _RRF_K = 60
 _ARM_N = 50
 _FUSED_TOP = 10
 _QUERY_VEC_ID = 0  # the semantic arm's query document (llm_similarity)
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+_BM25_QUERY = ("spark", "join", "window")
+
+
+def bm25_from_index(postings: DataFrame, doclen: DataFrame) -> DataFrame:
+    """BM25 scoring from an INDEX representation — shared by the batch
+    lexical arm (which derives both relations from one TF pass) and the
+    streaming inverted-index twin (``streaming/bm25_index.py``), whose
+    insert-only state holds exactly these two relations:
+
+    - ``postings``: (term, doc_id, tf) restricted to the query terms —
+      per-term df re-derives from it (a query term's df is the length
+      of its own posting list, so full-vocabulary df state is never
+      needed);
+    - ``doclen``: (doc_id, dl) — the catalog the corpus stats (n_docs,
+      avgdl) aggregate from.
+
+    The vocabulary-sized df and one-row corpus relations reach the
+    score join as broadcasts. Scores are ``round(x, 6)``-ed BEFORE
+    ranking on both engines, so a final-ulp difference between Java's
+    ``Math.log`` and DuckDB's ``ln`` cannot reorder the top-k."""
+    df_rel = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    corpus = doclen.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+    )
+    idf = F.log(
+        1.0
+        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    tf_part = (
+        F.col("tf")
+        * (_BM25_K1 + 1.0)
+        / (
+            F.col("tf")
+            + _BM25_K1
+            * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+        )
+    )
+    return (
+        postings.join(F.broadcast(df_rel), "term")
+        .join(doclen, "doc_id")
+        .crossJoin(F.broadcast(corpus))
+        .groupBy("doc_id")
+        .agg(
+            F.round(F.sum(idf * tf_part), 6).alias("bm25"),
+            F.count(F.lit(1)).alias("n_query_terms_hit"),
+        )
+    )
+
+
+def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, bm25, n_query_terms_hit) lexical arm for the fixed
+    query, PRE-limit: whitespace tokenization, one (doc_id, term) TF
+    shuffle, then :func:`bm25_from_index` over the query terms' posting
+    lists — bounded by those lists, never corpus-sized. The
+    tokenize+explode is CPU-dense pre-shuffle, so the scan is
+    spread-guarded."""
+    from ..operators.spread import spread_for_compute
+
+    docs = spread_for_compute(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    # outer explode: null rows fail the != '' filter; avoids the
+    # Generate guard re-computing the split.
+    tokens = docs.select(
+        "doc_id",
+        F.explode_outer(
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+        ).alias("term"),
+    ).filter(F.col("term") != "")
+    tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    doclen = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    postings = tf.filter(F.col("term").isin(*_BM25_QUERY))
+    return bm25_from_index(postings, doclen)
 
 
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,8 +166,15 @@ def rrf_fused(lex_scores: DataFrame, emb: DataFrame) -> DataFrame:
 
 def _rrf_sql() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_QUERY)
-    return f"""
-WITH {_TF_SQL},
+    return rf"""
+WITH tf AS (
+    SELECT doc_id, term, count(*) AS tf
+    FROM (SELECT doc_id,
+                 unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          FROM documents)
+    WHERE term <> ''
+    GROUP BY doc_id, term
+),
 doclen AS (
     SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
 ),

@@ -3,12 +3,11 @@
 metadata-governance ETL, see SURVEY.md §2.6).
 
 The stages a 100 TB pretraining-corpus pipeline runs between raw
-ingest and tokenization — repetition signals, deterministic sampling
-and splits, mixture sampling, sequence packing, BPE training and
-encoding, split-drift and length-batching reports, snapshot diffs,
-WARC extraction, and the build manifest — all expressed so Catalyst
-keeps them at scan speed and every shuffle is a map-side-combinable
-aggregation.
+ingest and tokenization — deterministic sampling and splits, mixture
+sampling, BPE training and encoding, split-drift and length-batching
+reports, snapshot diffs, WARC extraction, and the build manifest — all
+expressed so Catalyst keeps them at scan speed and every shuffle is a
+map-side-combinable aggregation.
 
 Sampling and splits (``corpus_sampling_splits``) gate on the
 cross-engine polynomial hash (operators/text.py), so the exact same rows
@@ -44,124 +43,6 @@ def _poly_hash_sql(expr: str) -> str:
         f"list_transform(string_split({expr}, ''), c -> ascii(c)::BIGINT)), "
         "(acc, ch) -> (acc * 31 + ch) % 1000000007)"
     )
-
-
-# --------------------------------------------------------------------------
-# repetition metrics (Gopher-style quality signals)
-# --------------------------------------------------------------------------
-
-
-def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition signals: duplicate-token fraction,
-    top-bigram fraction (share of bigram occurrences taken by the most
-    frequent bigram), duplicate-bigram fraction (share of bigram
-    occurrences whose bigram occurs more than once).
-
-    Scale shape: the bigram counting is explode → groupBy(doc, bigram)
-    → groupBy(doc). Both aggregations are hash aggregates with map-side
-    partial combine, so a pathological document with one bigram repeated
-    10^6 times contributes one partial row per task, not a skewed
-    shuffle. The per-row alternative (array lambdas counting occurrences
-    inside each row) is O(n²) per document and dies on long documents.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
-    )
-    base = toks.select(
-        "doc_id",
-        F.size("t").alias("n_tokens"),
-        F.round(
-            1
-            - F.size(F.array_distinct("t"))
-            / F.greatest(F.size("t"), F.lit(1)),
-            6,
-        ).alias("dup_token_frac"),
-    )
-    # Bigrams via index sequence; guarded so size<2 yields an empty
-    # array (sequence(1, 0) would count DOWN, not produce empty).
-    bigrams = toks.select(
-        "doc_id",
-        F.explode_outer(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(1, size(t) - 1), "
-                "          i -> concat_ws(' ', t[i-1], t[i])) "
-                "ELSE array() END"
-            )
-        ).alias("bigram"),
-        # outer + isNotNull: avoids the inner-Generate size(...)>0
-        # guard re-computing the bigram transform per row; bigram
-        # strings are never null, so this drops exactly the
-        # empty-array docs the inner explode dropped.
-    ).filter(F.col("bigram").isNotNull())
-    bg_stats = (
-        bigrams.groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("c").alias("top_c"),
-            F.sum("c").alias("total_bg"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias(
-                "dup_bg"
-            ),
-            F.count("*").alias("distinct_bg"),
-        )
-    )
-    return (
-        base.join(bg_stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            "dup_token_frac",
-            F.round(
-                F.coalesce(F.col("top_c") / F.col("total_bg"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
-            F.round(
-                F.coalesce(F.col("dup_bg") / F.col("total_bg"), F.lit(0.0)), 6
-            ).alias("dup_bigram_frac"),
-            F.coalesce(F.col("distinct_bg"), F.lit(0).cast("long")).alias(
-                "n_distinct_bigrams"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-REPETITION_SQL = r"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-    FROM documents
-), base AS (
-    SELECT doc_id,
-           len(t) AS n_tokens,
-           round(1 - len(list_distinct(t))::DOUBLE / greatest(len(t), 1), 6)
-               AS dup_token_frac
-    FROM toks
-), bg AS (
-    SELECT doc_id,
-           unnest(list_transform(
-               range(1, greatest(len(t) - 1, 0) + 1),
-               i -> array_to_string(t[i:i+1], ' ')
-           )) AS bigram
-    FROM toks
-), cnt AS (
-    SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2
-), stats AS (
-    SELECT doc_id,
-           max(c) AS top_c,
-           sum(c) AS total_bg,
-           sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_bg,
-           count(*) AS distinct_bg
-    FROM cnt GROUP BY 1
-)
-SELECT b.doc_id, b.n_tokens, b.dup_token_frac,
-       round(coalesce(top_c::DOUBLE / total_bg, 0), 6) AS top_bigram_frac,
-       round(coalesce(dup_bg::DOUBLE / total_bg, 0), 6) AS dup_bigram_frac,
-       coalesce(distinct_bg, 0) AS n_distinct_bigrams
-FROM base b LEFT JOIN stats USING (doc_id)
-ORDER BY doc_id
-"""
 
 
 # --------------------------------------------------------------------------
@@ -289,94 +170,6 @@ ORDER BY doc_id
 # them and its DuckDB oracle embeds them.
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE_RE = r"\b\d{3}-\d{4}\b"
-
-
-# --------------------------------------------------------------------------
-# sequence packing
-# --------------------------------------------------------------------------
-
-_PACK_BUDGET = 512  # tokens per training sequence
-
-
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pack documents into fixed token-budget training sequences by
-    contiguous prefix-sum binning: within each shard, a document's
-    sequence id is ``floor(exclusive_prefix_tokens / budget)`` — the
-    standard best-effort contiguous packing where a sequence may
-    overflow by at most one document (the tokenizer truncates the
-    straddler downstream).
-
-    Scale shape: the prefix sum is a window ordered by ``doc_id``
-    WITHIN each ``source`` shard, never a global order — a global
-    prefix sum would serialize onto one partition, while per-shard
-    packing keeps every shard's window independent (training sequences
-    don't need cross-shard order). At 100 TB, shard count (or a salted
-    sub-shard key) scales with the cluster; each window task streams
-    its shard once, already co-partitioned for the per-sequence
-    aggregate that follows.
-    """
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    assigned = docs.select(
-        "doc_id",
-        "source",
-        T.token_count(F.col("text")).alias("n_tokens"),
-    ).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor(
-            F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) / _PACK_BUDGET
-        ).alias("seq_id"),
-    )
-    return (
-        assigned.groupBy("source", "seq_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.min("doc_id").alias("first_doc_id"),
-            F.max("doc_id").alias("last_doc_id"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda d: d.cast("string"),
-                ),
-                ",",
-            ).alias("doc_ids"),
-        )
-        .orderBy("source", "seq_id")
-    )
-
-
-SEQUENCE_PACKING_SQL = rf"""
-WITH sized AS (
-    SELECT doc_id, source,
-           len(string_split_regex(trim(text), '\s+')) AS n_tokens
-    FROM documents
-), assigned AS (
-    SELECT doc_id, source, n_tokens,
-           floor(coalesce(sum(n_tokens) OVER (
-               PARTITION BY source ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) / {_PACK_BUDGET})::BIGINT AS seq_id
-    FROM sized
-)
-SELECT source, seq_id,
-       count(*) AS n_docs,
-       sum(n_tokens)::BIGINT AS total_tokens,
-       min(doc_id) AS first_doc_id,
-       max(doc_id) AS last_doc_id,
-       string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS doc_ids
-FROM assigned
-GROUP BY source, seq_id
-ORDER BY source, seq_id
-"""
 
 
 def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,9 +613,7 @@ QUERIES = {
     "bpe_corpus_encode": bpe_corpus_encode,
     "weighted_corpus_sample": weighted_corpus_sample,
     "temperature_mixture_sample": temperature_mixture_sample,
-    "repetition_metrics": repetition_metrics,
     "corpus_sampling_splits": corpus_sampling_splits,
-    "sequence_packing": sequence_packing,
     "corpus_build_manifest": corpus_build_manifest,
 }
 
@@ -831,9 +622,7 @@ ORACLES = {
     "bpe_corpus_encode": _bpe_encode_sql(),
     "weighted_corpus_sample": _weighted_sample_sql(),
     "temperature_mixture_sample": _temperature_mixture_sql(),
-    "repetition_metrics": REPETITION_SQL,
     "corpus_sampling_splits": _sampling_splits_sql(),
-    "sequence_packing": SEQUENCE_PACKING_SQL,
     "corpus_build_manifest": _corpus_build_manifest_sql(),
 }
 

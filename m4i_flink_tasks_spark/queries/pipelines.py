@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -1236,8 +1236,8 @@ def stream_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental OLS (streaming/regression_state.py): the
     (nation, month) cents cells are ADDITIVE integer state — exact for
     any batch split — and the slope readout runs the identical integer-
-    moment arithmetic as the batch revenue_trend_slopes, so a per-row-
-    cents batch SQL oracles the stream bit-for-bit."""
+    moment arithmetic as a one-shot batch OLS, so a per-row-cents batch
+    SQL oracles the stream bit-for-bit."""
     from ..streaming.regression_state import run_stream_trend_slopes
 
     return run_stream_trend_slopes(
@@ -2104,37 +2104,47 @@ def stream_chained_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     acc = out["enriched"].select("event_id", F.lit(1).alias("_acc"))
     dead1 = out["dead_get_entity"]
 
-    def report(surface: str, agg_df: DataFrame) -> DataFrame:
-        return agg_df.select(
-            F.lit(surface).alias("surface"),
-            "n_rows",
-            "content_checksum",
-            "n_violations",
-        )
+    def report(
+        surface: str,
+        df: DataFrame,
+        tag: str,
+        fields: list,
+        violation: Column,
+        *,
+        present: Column | None = None,
+        empty_checksum: int | None = None,
+    ) -> DataFrame:
+        """One report row over ``df``: the rows where ``present`` holds
+        (all rows when None), the hash-sum of their ``tag``-prefixed
+        ``fields`` (NULL over no rows unless ``empty_checksum`` is
+        given, as in the oracle) and the rows where ``violation``
+        holds."""
+        row_hash = T.scrambled_hash(F.concat_ws("|", F.lit(tag), *fields))
+        if present is None:
+            n_rows = F.count(F.lit(1))
+        else:
+            n_rows = F.count(F.when(present, 1))
+            row_hash = F.when(present, row_hash)
+        checksum = F.sum(row_hash)
+        if empty_checksum is not None:
+            checksum = F.coalesce(checksum, F.lit(empty_checksum)).cast("long")
+        return df.agg(
+            n_rows.alias("n_rows"),
+            checksum.alias("content_checksum"),
+            F.count(F.when(violation, 1)).alias("n_violations"),
+        ).select(F.lit(surface).alias("surface"), "*")
 
+    def txt(col: str) -> Column:
+        return F.col(col).cast("string")
+
+    outside_feed = F.col("_acc").isNull()
     enriched = out["enriched"].join(
         dead1.select("event_id", F.lit(1).alias("_d")), "event_id", "left"
     )
     r_enriched = report(
-        "enriched",
-        enriched.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                T.scrambled_hash(
-                    F.concat_ws(
-                        "|",
-                        F.lit("ge:"),
-                        F.col("event_id").cast("string"),
-                        F.col("user_id").cast("string"),
-                        "envelope",
-                    )
-                )
-            ).alias("content_checksum"),
-            F.coalesce(
-                F.sum(F.when(F.col("_d").isNotNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        "enriched", enriched, "ge:",
+        [txt("event_id"), txt("user_id"), "envelope"],
+        F.col("_d").isNotNull(),
     )
 
     raw_op = (
@@ -2151,117 +2161,37 @@ def stream_chained_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     r_dead1 = report(
-        "dead_get_entity",
-        raw_op.agg(
-            F.coalesce(F.sum("_dd"), F.lit(0)).cast("long").alias("n_rows"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("_dd").isNotNull(),
-                        T.scrambled_hash(
-                            F.concat_ws(
-                                "|",
-                                F.lit("d1:"),
-                                F.col("event_id").cast("string"),
-                                "job",
-                                "description",
-                            )
-                        ),
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("content_checksum"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("_acc").isNull() & F.col("_dd").isNull(), 1
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        "dead_get_entity", raw_op, "d1:",
+        [txt("event_id"), "job", "description"],
+        outside_feed & F.col("_dd").isNull(),
+        present=F.col("_dd").isNotNull(),
+        empty_checksum=0,
     )
 
-    state = out["entity_state"].join(acc, "event_id", "left")
     r_state = report(
-        "entity_state",
-        state.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                T.scrambled_hash(
-                    F.concat_ws(
-                        "|",
-                        F.lit("ps:"),
-                        "doc_id",
-                        F.col("guid").cast("string"),
-                        F.col("update_time_ms").cast("string"),
-                        F.col("event_id").cast("string"),
-                        "event_type",
-                        "props",
-                    )
-                )
-            ).alias("content_checksum"),
-            F.coalesce(
-                F.sum(F.when(F.col("_acc").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        "entity_state", out["entity_state"].join(acc, "event_id", "left"),
+        "ps:",
+        ["doc_id", txt("guid"), txt("update_time_ms"), txt("event_id"),
+         "event_type", "props"],
+        outside_feed,
     )
 
-    dead2 = out["dead_publish_state"].join(acc, "event_id", "left")
     r_dead2 = report(
         "dead_publish_state",
-        dead2.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.coalesce(
-                F.sum(
-                    T.scrambled_hash(
-                        F.concat_ws(
-                            "|",
-                            F.lit("d2:"),
-                            F.col("event_id").cast("string"),
-                            F.col("timestamp_ms").cast("string"),
-                            "original_notification",
-                            "job",
-                            "description",
-                        )
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("content_checksum"),
-            F.coalesce(
-                F.sum(F.when(F.col("_acc").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        out["dead_publish_state"].join(acc, "event_id", "left"),
+        "d2:",
+        [txt("event_id"), txt("timestamp_ms"), "original_notification", "job",
+         "description"],
+        outside_feed,
+        empty_checksum=0,
     )
 
-    diffs = out["diffs"].join(acc, "event_id", "left")
     r_diffs = report(
-        "determined_changes",
-        diffs.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                T.scrambled_hash(
-                    F.concat_ws(
-                        "|",
-                        F.lit("dc:"),
-                        F.col("event_id").cast("string"),
-                        F.col("user_id").cast("string"),
-                        "change_kind",
-                        "inserted_attrs",
-                        "changed_attrs",
-                        "deleted_attrs",
-                        "added_rels",
-                        "deleted_rels",
-                    )
-                )
-            ).alias("content_checksum"),
-            F.coalesce(
-                F.sum(F.when(F.col("_acc").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        "determined_changes", out["diffs"].join(acc, "event_id", "left"),
+        "dc:",
+        [txt("event_id"), txt("user_id"), "change_kind", "inserted_attrs",
+         "changed_attrs", "deleted_attrs", "added_rels", "deleted_rels"],
+        outside_feed,
     )
 
     feed_users = (
@@ -2273,75 +2203,23 @@ def stream_chained_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("_fu"),
         )
     )
-    docs = (
-        out["docs"]
-        .select(
-            "guid",
-            "typename",
-            "name",
-            "referenceablequalifiedname",
-            "sourcetype",
-            F.coalesce(F.array_join("m4isourcetype", "|"), F.lit("")).alias(
-                "m4ist"
-            ),
-            F.coalesce(F.array_join("supertypenames", "|"), F.lit("")).alias(
-                "supers"
-            ),
-            F.coalesce("definition", F.lit("")).alias("defn"),
-            F.coalesce("email", F.lit("")).alias("eml"),
-            F.coalesce("parentguid", F.lit("")).alias("pg"),
-            F.coalesce(F.array_join("breadcrumbguid", "|"), F.lit("")).alias(
-                "bg"
-            ),
-            F.coalesce(F.array_join("breadcrumbname", "|"), F.lit("")).alias(
-                "bn"
-            ),
-            F.coalesce(F.array_join("breadcrumbtype", "|"), F.lit("")).alias(
-                "bt"
-            ),
-            F.coalesce("deriveddataownerguid", F.lit("")).alias("ddo"),
-            F.coalesce("deriveddomainleadguid", F.lit("")).alias("ddl"),
-        )
-        .join(feed_users, F.col("guid") == F.col("_eguid"), "left")
-    )
+    def joined(col: str) -> Column:
+        return F.coalesce(F.array_join(col, "|"), F.lit(""))
+
+    def blank(col: str) -> Column:
+        return F.coalesce(col, F.lit(""))
+
     r_docs = report(
         "docstore",
-        docs.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                T.scrambled_hash(
-                    F.concat_ws(
-                        "|",
-                        F.lit("sy:"),
-                        "guid",
-                        "typename",
-                        "name",
-                        "referenceablequalifiedname",
-                        "sourcetype",
-                        "m4ist",
-                        "supers",
-                        "defn",
-                        "eml",
-                        "pg",
-                        "bg",
-                        "bn",
-                        "bt",
-                        "ddo",
-                        "ddl",
-                    )
-                )
-            ).alias("content_checksum"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("guid").startswith("E")
-                        & F.col("_fu").isNull(),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            ).cast("long").alias("n_violations"),
-        ),
+        out["docs"].join(feed_users, F.col("guid") == F.col("_eguid"), "left"),
+        "sy:",
+        ["guid", "typename", "name", "referenceablequalifiedname",
+         "sourcetype", joined("m4isourcetype"), joined("supertypenames"),
+         blank("definition"), blank("email"), blank("parentguid"),
+         joined("breadcrumbguid"), joined("breadcrumbname"),
+         joined("breadcrumbtype"), blank("deriveddataownerguid"),
+         blank("deriveddomainleadguid")],
+        F.col("guid").startswith("E") & F.col("_fu").isNull(),
     )
 
     return (

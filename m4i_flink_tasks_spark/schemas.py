@@ -121,16 +121,6 @@ ENTITY_MESSAGE = StructType(
     ]
 )
 
-# Dead-letter record (DeadLetterBoxMessage.py:12-18)
-DEAD_LETTER = StructType(
-    [
-        StructField("timestamp", DoubleType()),
-        StructField("original_notification", StringType()),
-        StructField("job", StringType()),
-        StructField("description", StringType()),
-    ]
-)
-
 # Denormalized App Search document (FIXTURES §6; create_doc
 # synchronize_app_search.py:565-592, fixture :207-221)
 APP_SEARCH_DOC = StructType(

@@ -102,9 +102,3 @@ def table_num_rows(sf_dir: str, name: str) -> int | None:
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so SQL-form queries can run."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -5,7 +5,7 @@ the incremental form of ``queries/hybrid_retrieval.py``.
 Index maintenance IS the streaming half of every search stack: new
 documents must become retrievable without rebuilding the index. The
 maintained state is exactly the index representation the shared
-scorer (``text_ranking.bm25_from_index``) consumes:
+scorer (``hybrid_retrieval.bm25_from_index``) consumes:
 
 - ``doclen``: one (doc_id, dl) row per document — the catalog the
   corpus statistics (n_docs, avgdl) aggregate from; insert-only,
@@ -68,8 +68,11 @@ def run_stream_hybrid_rrf(
     n_files: int = 4,
     max_files_per_trigger: int | None = 2,
 ) -> DataFrame:
-    from ..queries.hybrid_retrieval import rrf_fused
-    from ..queries.text_ranking import _BM25_QUERY, bm25_from_index
+    from ..queries.hybrid_retrieval import (
+        _BM25_QUERY,
+        bm25_from_index,
+        rrf_fused,
+    )
 
     staging = stage_documents(
         spark, sf_dir, os.path.join(workdir, "staging_docs"), n_files

@@ -1,7 +1,7 @@
 """Streaming incremental OLS trend: per-nation regression maintained
 from an order stream as ADDITIVE integer month-cells.
 
-The batch twin is ``queries/warehouse.py`` ``revenue_trend_slopes``;
+The batch form is the one-shot OLS of ``stream_trend_slopes``' oracle;
 here the (nation, month) revenue cells are maintained as keyed state
 across micro-batches and the OLS moments / slope are a pure READOUT of
 that state. Because the per-cell value is a sum of per-ROW integer
@@ -74,8 +74,8 @@ def batch_partial(batch: DataFrame, nation_dim: DataFrame) -> DataFrame:
 
 
 def slope_readout(cells: DataFrame, nation: DataFrame) -> DataFrame:
-    """Identical moment arithmetic to the batch twin: integer sums,
-    one float division, rounded once."""
+    """Identical moment arithmetic to the one-shot batch OLS: integer
+    sums, one float division, rounded once."""
     moments = cells.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_months"),
         F.sum("x").alias("sx"),

@@ -753,29 +753,13 @@ class BucketedParquetUpsertStore:
             return state, batch, None
         if touched_buckets is not None:
             # A caller-supplied subset would silently drop stale bucket
-            # rows from the map — keep the cheap shape check always on,
-            # and the (one extra job) subset re-check behind a debug conf.
+            # rows from the map. Only the shape is checked here; the
+            # caller guarantees the set (see merge's docstring).
             if touched_buckets != sorted(touched_buckets) or not all(
                 isinstance(b, int) and 0 <= b < self.n_buckets
                 for b in touched_buckets
             ):
                 raise ValueError("touched_buckets must be sorted bucket ints")
-            if (
-                self.spark.conf.get(
-                    "spark.m4i.store.validateTouchedBuckets", "false"
-                ).lower()
-                == "true"
-            ):
-                keyed = batch.select(*self.key_cols)
-                if touch_keys is not None:
-                    keyed = keyed.unionByName(touch_keys.select(*self.key_cols))
-                missed = set(self._touched_buckets(keyed)) - set(touched_buckets)
-                if missed:
-                    raise ValueError(
-                        f"touched_buckets misses buckets {sorted(missed)} "
-                        "actually hit by the batch — the merge would "
-                        "corrupt the store"
-                    )
             touched = touched_buckets
         else:
             keyed = batch.select(*self.key_cols)

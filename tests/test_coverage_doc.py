@@ -306,9 +306,9 @@ def test_no_redundant_proof_beside_a_kept_row():
     )
 
 
-def _identifier_uses(tree):
+def _identifier_uses(tree, *, imports=True):
     """``(line, name)`` for every name an AST uses: loads, attributes
-    and imported names."""
+    and (unless ``imports`` is false) imported names."""
     import ast
 
     out = []
@@ -317,40 +317,52 @@ def _identifier_uses(tree):
             out.append((node.lineno, node.id))
         elif isinstance(node, ast.Attribute):
             out.append((node.lineno, node.attr))
-        elif isinstance(node, ast.alias):
+        elif imports and isinstance(node, ast.alias):
             out.append((node.lineno, node.name.rsplit(".", 1)[-1]))
     return out
 
 
+# Package definitions kept with no caller, each with its reason.
+_ORPHAN_KEEP = {
+    # COVERAGE.md S2: the Kafka-sink swap-in for the store sink the
+    # container runs (no broker here, so nothing calls it).
+    "kafka_events_writer",
+}
+
+
 def test_no_orphan_definitions_in_queries():
-    """Every top-level function, class and constant in ``queries/*.py``
-    is used by something other than its own definition: the package,
-    ``tests/``, ``tools/`` or ``bench.py``. A deleted query must take
-    its helpers and oracle SQL with it."""
+    """Every top-level function, class and constant of the package is
+    used by something other than its own definition: the package,
+    ``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
+    ``__spark_entry__.py``. A package ``__init__`` that only imports
+    or ``__all__``-lists a name does not count as a use. A deleted
+    query must take its helpers and oracle SQL with it."""
     import ast
     import glob
 
     root = os.path.dirname(_DOC)
     pkg = os.path.join(root, "m4i_flink_tasks_spark")
-    files = (
-        glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
-        + glob.glob(os.path.join(root, "tests", "*.py"))
-        + glob.glob(os.path.join(root, "tools", "*.py"))
-        + [os.path.join(root, "bench.py")]
-    )
-    uses = {}
+    defining = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+    files = defining + [
+        *glob.glob(os.path.join(root, "tests", "*.py")),
+        *glob.glob(os.path.join(root, "tools", "*.py")),
+        *glob.glob(os.path.join(root, "perfbench", "*.py")),
+        os.path.join(root, "bench.py"),
+        os.path.join(root, "__spark_entry__.py"),
+    ]
+    trees, uses = {}, {}
     for path in files:
         with open(path, encoding="utf-8") as fh:
-            uses[path] = _identifier_uses(ast.parse(fh.read(), path))
+            trees[path] = ast.parse(fh.read(), path)
+        reexport = path.startswith(pkg) and path.endswith("__init__.py")
+        uses[path] = _identifier_uses(trees[path], imports=not reexport)
     elsewhere = {}  # name -> files using it
     for path, found in uses.items():
         for _, name in found:
             elsewhere.setdefault(name, set()).add(path)
     orphans = []
-    for path in sorted(glob.glob(os.path.join(pkg, "queries", "*.py"))):
-        with open(path, encoding="utf-8") as fh:
-            body = ast.parse(fh.read(), path).body
-        for node in body:
+    for path in defining:
+        for node in trees[path].body:
             if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
                 names = [node.name]
             elif isinstance(node, ast.Assign):
@@ -360,12 +372,17 @@ def test_no_orphan_definitions_in_queries():
             else:
                 continue
             for name in names:
-                if name in {"QUERIES", "ORACLES"} or name.startswith("__"):
+                if (
+                    name in {"QUERIES", "ORACLES"}
+                    or name in _ORPHAN_KEEP
+                    or name.startswith("__")
+                ):
                     continue
                 used = elsewhere.get(name, set()) - {path} or any(
                     n == name and not node.lineno <= line <= node.end_lineno
                     for line, n in uses[path]
                 )
                 if not used:
-                    orphans.append(f"{os.path.basename(path)}:{node.lineno} {name}")
+                    rel = os.path.relpath(path, pkg)
+                    orphans.append(f"{rel}:{node.lineno} {name}")
     assert not orphans, "definitions nothing uses:\n" + "\n".join(orphans)

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import math
 
-import pyspark.sql.functions as F
 import pytest
 
 from m4i_flink_tasks_spark.queries import _merged_queries
@@ -33,60 +32,6 @@ def test_t_closeness_bands_partition_the_table(spark, sf_dir, queries):
             assert r["max_tvd"] <= 0.1 + 1e-9
         elif r["band"].startswith("3"):
             assert r["min_tvd"] > 0.2 - 1e-9
-
-
-def test_kneser_ney_distribution_sums_to_one(spark, sf_dir):
-    """The defining KN invariant: for any context w1, summing
-    p(w2|w1) over the continuation vocabulary gives exactly 1 —
-    discount mass (d x distinct followers / context count) equals the
-    interpolation weight handed to the continuation distribution.
-    Checked for the three highest-count contexts."""
-    from m4i_flink_tasks_spark.operators.spread import spread_for_compute
-    from m4i_flink_tasks_spark.queries.lm_scoring import _KN_D
-    from m4i_flink_tasks_spark.sources import load_table
-
-    docs = spread_for_compute(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    toks = docs.select(
-        F.split(F.trim(F.lower("text")), r"\s+").alias("t")
-    ).filter(F.size("t") >= 2)
-    occ = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i-1] AS w1, t[i] AS w2))"
-            )
-        ).alias("b")
-    ).select("b.w1", "b.w2")
-    bigrams = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-    ctx = occ.groupBy("w1").agg(
-        F.count(F.lit(1)).alias("c1"),
-        F.countDistinct("w2").alias("n1f"),
-    )
-    cont = bigrams.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p"))
-    nb = bigrams.count()
-    top_ctx = [
-        r["w1"] for r in ctx.orderBy(F.desc("c1"), "w1").limit(3).collect()
-    ]
-    ctx_map = {
-        r["w1"]: (r["c1"], r["n1f"])
-        for r in ctx.filter(F.col("w1").isin(top_ctx)).collect()
-    }
-    for w1 in top_ctx:
-        c1, n1f = ctx_map[w1]
-        seen = {
-            r["w2"]: r["cb"]
-            for r in bigrams.filter(F.col("w1") == w1).collect()
-        }
-        total = 0.0
-        for r in cont.collect():
-            cb = seen.get(r["w2"], 0)
-            total += (
-                max(cb - _KN_D, 0.0) / c1
-                + _KN_D * n1f / c1 * (r["n1p"] / nb)
-            )
-        assert math.isclose(total, 1.0, rel_tol=1e-9), (w1, total)
 
 
 def test_msprt_p_value_is_always_valid_shaped(spark, sf_dir, queries):

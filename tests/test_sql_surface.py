@@ -36,9 +36,6 @@ PORTABLE = (
     "rollup_order_totals",
     "cube_lineitem_stats",
     "top_orders_per_customer",
-    "customer_revenue_deciles",
-    "price_tier_revenue",
-    "revenue_trend_slopes",
     "pareto_frontier_parts",
 )
 
